@@ -15,6 +15,66 @@ from validatelite_spark.plans.schema_payload import (
     run_two_phase,
 )
 
+_COUNT = {"type": "integer", "minimum": 0}
+_CHECK = {
+    "type": "object",
+    "required": ["status"],
+    "properties": {
+        "status": {"enum": ["PASSED", "FAILED", "SKIPPED", "UNKNOWN"]},
+        "failure_code": {"enum": ["NONE", "FIELD_MISSING",
+                                  "TYPE_MISMATCH"]},
+        "skip_reason": {"enum": ["FIELD_MISSING"]},
+        "failed_records": _COUNT,
+    },
+    "additionalProperties": False,
+}
+#: the ``vlite schema --output json`` payload contract: top-level keys,
+#: the rule and check status enums, and the per-field check matrix
+SCHEMA_RESULTS_CONTRACT = {
+    "type": "object",
+    "required": ["status", "source", "rules_file", "rules_count",
+                 "summary", "results", "fields"],
+    "properties": {
+        "status": {"enum": ["ok"]},
+        "source": {"type": "string"},
+        "rules_file": {"type": "string"},
+        "rules_count": _COUNT,
+        "summary": {
+            "type": "object",
+            "required": ["total_rules", "passed_rules", "failed_rules",
+                         "skipped_rules", "total_failed_records",
+                         "execution_time_s"],
+            "properties": {
+                "total_rules": _COUNT, "passed_rules": _COUNT,
+                "failed_rules": _COUNT, "skipped_rules": _COUNT,
+                "total_failed_records": _COUNT,
+                "execution_time_s": {"type": "number", "minimum": 0},
+            },
+        },
+        "results": {"type": "array", "items": {
+            "type": "object",
+            "required": ["rule_id", "status"],
+            "properties": {
+                "status": {"enum": ["PASSED", "FAILED", "ERROR",
+                                    "SKIPPED"]},
+                "skip_reason": {"enum": ["FIELD_MISSING"]},
+            },
+        }},
+        "fields": {"type": "array", "items": {
+            "type": "object",
+            "required": ["column", "checks"],
+            "properties": {
+                "column": {"type": "string"},
+                "checks": {"type": "object",
+                           "additionalProperties": _CHECK},
+            },
+            "additionalProperties": False,
+        }},
+        "schema_extras": {"type": "array", "items": {"type": "string"}},
+    },
+    "additionalProperties": False,
+}
+
 
 class TestDesiredTypeMatrix:
     def test_compatible_no_rules(self):
@@ -105,13 +165,11 @@ class TestTwoPhase:
             run_two_phase(spark, {"users": users}, bad)
 
     def test_json_payload_matches_reference_contract(self, spark, users):
-        """The aggregated schema JSON validates against the reference's
-        published contract (docs/schemas/schema_results.schema.json) on
-        a multi-table fixture with a missing table, a missing field,
+        """The aggregated schema JSON validates against the payload
+        contract (``SCHEMA_RESULTS_CONTRACT``: the shape the reference's
+        docs/schemas/schema_results.schema.json publishes) on a
+        multi-table fixture with a missing table, a missing field,
         skipped rules, and strict-mode extras."""
-        import json
-        from pathlib import Path
-
         import jsonschema
 
         from validatelite_spark.plans.schema_payload import (
@@ -136,10 +194,8 @@ class TestTwoPhase:
         payload = build_json_payload(
             "testsrc", "rules.json", out, plans, 1.23)
 
-        contract = json.loads(Path(
-            "/root/reference/docs/schemas/schema_results.schema.json"
-        ).read_text())
-        jsonschema.validate(payload, contract)  # raises on any drift
+        # raises on any drift
+        jsonschema.validate(payload, SCHEMA_RESULTS_CONTRACT)
 
         # matrix semantics: qualified columns (multi-table), existence/
         # type split, skip reasons, strict extras

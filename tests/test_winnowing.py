@@ -81,9 +81,17 @@ class TestFingerprints:
 
 
 class TestPairs:
-    def test_shared_counts(self, spark, docs):
+    @pytest.mark.parametrize("key_type", ["long", "string"])
+    def test_shared_counts(self, spark, key_type):
+        """Long keys take the packed-key count, string keys the
+        two-column one; both must match the reference."""
         from validatelite_spark.operators.winnowing import winnow_pairs
-        ref = {k: {f for f, _ in ref_winnow(t)} for k, t in TEXTS.items()}
+        key = int if key_type == "long" else str
+        docs = spark.createDataFrame(
+            [(key(k), t) for k, t in TEXTS.items()],
+            f"doc_id {key_type}, text string")
+        ref = {key(k): {f for f, _ in ref_winnow(t)}
+               for k, t in TEXTS.items()}
         want = {}
         ids = sorted(ref)
         for i, a in enumerate(ids):
@@ -93,4 +101,4 @@ class TestPairs:
                     want[(a, b)] = s
         got = {(r["id1"], r["id2"]): r["shared"]
                for r in winnow_pairs(docs, min_shared=1).collect()}
-        assert got == want and (1, 2) in got
+        assert got == want and (key(1), key(2)) in got

@@ -9,12 +9,13 @@ hot path), designed for the 100 TB shape:
   partition) → join back keeps the min-key doc. The shuffle key is the
   digest (uniform across DISTINCT texts; the hot key is the copy count
   of one page, which the partial aggregate absorbs).
-- **ngram-jaccard**: word n-gram shingles → explode → self-equi-join on
-  shingle → pair-count aggregation → exact Jaccard filter. The join is an
-  equi-join on the shingle string, so Catalyst shuffles both sides by
-  shingle — and a document-frequency cap drops stop-shingles (a shingle
-  in >df_cap docs contributes O(df²) candidate pairs; capping bounds the
-  blow-up, the standard web-dedup trick).
+- **ngram-jaccard** (and **containment**): word n-gram shingles →
+  explode → ``_cooccurrence`` (group docs per shingle, expand ordered
+  pairs inside each group — no self-join) → pair-count aggregation →
+  exact score filter. A document-frequency cap drops stop-shingles (a
+  shingle in >df_cap docs contributes O(df²) candidate pairs; capping
+  bounds the blow-up, the standard web-dedup trick). Winnowing
+  fingerprints and exact-substring seeds share the same primitive.
 - **minhash-lsh**: k=bands*rows xxhash64 min-hashes per doc → band
   buckets → candidate pairs from same-bucket docs → *exact Jaccard
   verification* of candidates only. Output equals the exhaustive
@@ -36,8 +37,9 @@ import logging
 import re as _re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, ShortType
 
 from validatelite_spark.functions.textquality import fingerprint, tokens
 
@@ -48,7 +50,7 @@ logger = logging.getLogger(__name__)
 #: expansion — one such shingle at web scale otherwise collects ALL its
 #: doc ids into one collect_list array and expands O(df²) pairs inside a
 #: single task. 2k bounds the worst per-shingle expansion at ~2M pairs
-#: (streamed, never one giant row — see ``_pairs_from_exploded``) and is
+#: (streamed, never one giant row — see ``_expand_pairs``) and is
 #: still ~80x above the max df observed in the sf0.1 corpus (25), so
 #: small-scale results are exact while the 100 TB path is bounded by
 #: construction; near-dup pairs produced by a shingle shared across 2k+
@@ -245,8 +247,10 @@ def _shingle_table(df: DataFrame, text_col: str, key_col: str,
 
 def _persist_shingles(t: DataFrame, storage_level: str = "MEMORY_AND_DISK",
                       staging_dir: str | None = None) -> DataFrame:
-    """Materialization seam for the exploded/shingled intermediate that
-    feeds two downstream passes (signatures + verification).
+    """Materialization seam for an intermediate that feeds two
+    downstream passes — the shingle table (cap scan + pair expansion +
+    sizes, or signatures + verification), and every other
+    ``_cooccurrence`` member table.
 
     ``staging_dir`` set → write-and-reread a staged parquet: the 100 TB
     path, where even a disk-backed executor cache of the shingle table
@@ -263,41 +267,59 @@ def _persist_shingles(t: DataFrame, storage_level: str = "MEMORY_AND_DISK",
     return t.persist(getattr(StorageLevel, storage_level))
 
 
-def _pairs_from_exploded(ex: DataFrame, sizes: DataFrame,
-                         threshold: float) -> DataFrame:
-    """Common-shingle pair counts → exact Jaccard ≥ threshold pairs.
-    ``ex``: (k, s) exploded shingles; ``sizes``: (k, sz).
+def _cooccurrence(members: DataFrame, group: str, member: str | Column,
+                  df_cap: int | None, op: str) -> DataFrame:
+    """Ordered ``(id1, id2)`` member pairs that share a ``group`` value
+    — the one co-occurrence primitive behind n-gram Jaccard and
+    containment, winnowing and exact-substring seeds.
 
-    Physical shape: instead of a shingle self-join (which amplifies hot
-    shingles quadratically THROUGH the join), group docs per shingle and
-    expand ordered pairs inside the (usually tiny) per-shingle array —
-    one groupBy(shingle) + one groupBy(pair), no join on the fat side.
-    Singleton shingles (the vast majority) never leave the first agg.
+    Physical shape: instead of a self-join on the group key (which
+    amplifies hot groups quadratically THROUGH the join), collect the
+    sorted member list per group and expand ordered pairs inside it
+    (``_expand_pairs``) — one groupBy(group), no join on the fat side.
+    Singleton groups (the vast majority) never leave the first agg.
+    ``member`` may be a struct column (pairs then compare field-wise);
+    the caller filters or projects the struct fields itself.
 
-    The pair expansion is TWO chained generators, not one flattened
-    array: posexplode the doc list to (i, id1), then explode the i+1..
-    suffix as id2. Each generated row holds at most one df_cap-sized
-    array (~16 KB at the default cap), and the O(df²) pairs stream
-    through whole-stage codegen into the partial aggregate — a single
-    at-cap shingle never materializes its df²/2 pair structs inside one
-    row (the round-2 OOM hazard: flatten() builds the entire nested
-    array in memory before explode sees it)."""
-    per_shingle = (
-        ex.groupBy("s")
-        .agg(F.sort_array(F.collect_list("k")).alias("ks"))
-        .filter(F.size("ks") > 1)
-    )
-    common = _pair_common_counts(per_shingle, sizes)
-    return _jaccard_from_common(common, sizes, threshold)
+    ``df_cap`` bounds the rows per group — documents for shingle and
+    fingerprint sets, occurrences for positional grams. Groups over it
+    are found in ONE eager job on the row table, before collect_list,
+    so a boilerplate group never builds its giant member array in an
+    aggregation buffer. They are collected to the driver, reported in
+    one warning (truncation is never silent) and removed by a broadcast
+    anti-join that is added only when something is dropped. The caller
+    materializes ``members`` (``_persist_shingles``) when the cap scan
+    and the expansion both read it."""
+    if df_cap is not None:
+        hot = (members.groupBy(group).count()
+               .filter(F.col("count") > df_cap).select(group).collect())
+        if hot:
+            logger.warning(
+                "%s: dropped %d keys with more than df_cap=%d rows "
+                "before pairing", op, len(hot), df_cap)
+            hot = members.sparkSession.createDataFrame(
+                hot, members.select(group).schema)
+            members = members.join(F.broadcast(hot), group, "left_anti")
+    groups = (members.groupBy(group)
+              .agg(F.sort_array(F.collect_list(member)).alias("ks"))
+              .filter(F.size("ks") > 1))
+    return _expand_pairs(groups)
 
 
-def _pair_common_counts(per_group: DataFrame, sizes: DataFrame) -> DataFrame:
-    """(id1, id2, common) — co-occurrence counts over the expanded
+def _key_stats(keys: DataFrame) -> Row:
+    """``(lo, hi, n)`` of the ``k`` column in one eager aggregate — the
+    packed-count gate of ``_pair_counts`` and a size-gated broadcast
+    share it."""
+    return keys.agg(F.min("k").alias("lo"), F.max("k").alias("hi"),
+                    F.count(F.lit(1)).alias("n")).first()
+
+
+def _pair_counts(pairs: DataFrame, name: str, stats: Row) -> DataFrame:
+    """``(id1, id2, <name>)`` — co-occurrence counts over the expanded
     pair stream.
 
-    When the doc key is an integer in [0, 2^31) (checked with one
-    cheap min/max aggregate over the persisted sizes table), the
-    count aggregates over ONE packed 64-bit key
+    When the key is an integer in [0, 2^31) (``stats`` from
+    ``_key_stats``), the count aggregates over ONE packed 64-bit key
     (``id1 << 32 | id2``) instead of a two-column key and unpacks on
     the (much smaller per-group) aggregate output: the pair table can
     reach ~10^8 rows for a dense corpus, and halving the grouping
@@ -305,29 +327,22 @@ def _pair_common_counts(per_group: DataFrame, sizes: DataFrame) -> DataFrame:
     sf1.0 expansion+count. Non-integral or out-of-range keys keep the
     two-column aggregate — identical output either way (the pack is
     injective on the gated domain)."""
-    pairs = _expand_pairs(per_group)
-    from pyspark.sql.types import IntegerType, LongType, ShortType
-
-    ktype = sizes.schema["k"].dataType
-    packable = isinstance(ktype, (IntegerType, LongType, ShortType))
-    if packable:
-        b = sizes.agg(F.min("k").alias("lo"), F.max("k").alias("hi")) \
-            .collect()[0]
-        packable = (b["lo"] is not None and b["lo"] >= 0
-                    and b["hi"] < 2 ** 31)
-    if not packable:
-        return (pairs.groupBy("id1", "id2")
-                .agg(F.count(F.lit(1)).alias("common")))
+    ktype = pairs.schema["id1"].dataType
+    if not (isinstance(ktype, (IntegerType, LongType, ShortType))
+            and stats["lo"] is not None and stats["lo"] >= 0
+            and stats["hi"] < 2 ** 31):
+        return pairs.groupBy("id1", "id2").agg(
+            F.count(F.lit(1)).alias(name))
     packed = pairs.select(
         (F.shiftleft(F.col("id1").cast("long"), 32)
          + F.col("id2").cast("long")).alias("p"))
-    agg = packed.groupBy("p").agg(F.count(F.lit(1)).alias("common"))
+    agg = packed.groupBy("p").agg(F.count(F.lit(1)).alias(name))
     # unpack on the aggregate output, restoring the caller's key type
     return agg.select(
         F.shiftrightunsigned(F.col("p"), 32).cast(ktype).alias("id1"),
         F.col("p").bitwiseAND(F.lit(4294967295)).cast(ktype)
         .alias("id2"),
-        "common")
+        name)
 
 
 def _expand_pairs(groups: DataFrame, star_over: int | None = None,
@@ -380,8 +395,7 @@ def _log_oversized_buckets(per_bucket: DataFrame, cap: int,
     """Count buckets past ``bucket_cap`` (star-edge mode) and warn —
     a reduced candidate-pair list must never be silent. Caches the
     per-bucket frame so the logging count and the pair expansion share
-    one aggregation pass (same idiom as ngram_jaccard's hot-shingle
-    log)."""
+    one aggregation pass."""
     per_bucket = per_bucket.cache()
     n_big = per_bucket.filter(F.size("ks") > cap).count()
     if n_big:
@@ -393,18 +407,25 @@ def _log_oversized_buckets(per_bucket: DataFrame, cap: int,
     return per_bucket
 
 
-def _jaccard_from_common(common: DataFrame, sizes: DataFrame,
-                         threshold: float,
-                         broadcast_sizes: bool | None = None) -> DataFrame:
-    """(id1, id2, common) + (k, sz) → exact Jaccard ≥ threshold pairs.
+def _jaccard() -> Column:
+    """|A ∩ B| / |A ∪ B| over ``_scored_pairs``' columns."""
+    return F.col("common") / (F.col("sz1") + F.col("sz2") - F.col("common"))
+
+
+def _scored_pairs(common: DataFrame, sizes: DataFrame, name: str,
+                  score: Column, threshold: float,
+                  broadcast_sizes: bool | None = None) -> DataFrame:
+    """(id1, id2, common) + (k, sz) → ``(id1, id2, <name>)`` pairs whose
+    ``score`` (over ``common``, ``sz1``, ``sz2``; rounded to 6 places
+    after the 1e-9 tie epsilon) is ≥ threshold.
 
     The candidate-pair table can dwarf the corpus (114M rows at sf1.0
     for 2.5k surviving pairs) while ``sizes`` is ONE small row per doc
     — a sort-merge join would re-shuffle the fat pair table twice just
     to attach two ints. The sizes side is therefore broadcast when it
-    fits (size-gated like ``keep_representatives``: one cheap count on
-    the already-persisted shingle table; at corpus scales past the
-    threshold the shuffled join returns, semantics identical)."""
+    fits (size-gated like ``keep_representatives``: ``None`` counts the
+    sizes table once; at corpus scales past the threshold the shuffled
+    join returns, semantics identical)."""
     if broadcast_sizes is None:
         broadcast_sizes = sizes.count() <= KEEP_BROADCAST_THRESHOLD
     sa = sizes.select(F.col("k").alias("id1"), F.col("sz").alias("sz1"))
@@ -413,14 +434,28 @@ def _jaccard_from_common(common: DataFrame, sizes: DataFrame,
         sa, sb = F.broadcast(sa), F.broadcast(sb)
     return (
         common.join(sa, "id1").join(sb, "id2")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common")
-                    / (F.col("sz1") + F.col("sz2") - F.col("common"))
-                    + F.lit(1e-9), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
+        .withColumn(name, F.round(score + F.lit(1e-9), 6))
+        .filter(F.col(name) >= threshold)
+        .select("id1", "id2", name)
     )
+
+
+def _shingle_pairs(df, text_col, key_col, n, df_cap, storage_level,
+                   staging_dir, op, name, score, threshold):
+    """Shared body of the exhaustive n-gram pair metrics: persisted
+    shingle table → ``_cooccurrence`` over (shingle, doc) → packed
+    common-shingle counts → ``score`` over the per-doc set sizes. One
+    aggregate over the sizes table feeds both the packed-key gate and
+    the sizes broadcast gate."""
+    t = _persist_shingles(_shingle_table(df, text_col, key_col, n),
+                          storage_level, staging_dir)
+    sizes = t.select("k", "sz")
+    stats = _key_stats(sizes)
+    pairs = _cooccurrence(t.select("k", F.explode("sh").alias("s")),
+                          "s", "k", df_cap, op)
+    return _scored_pairs(_pair_counts(pairs, "common", stats), sizes,
+                         name, score, threshold,
+                         stats["n"] <= KEEP_BROADCAST_THRESHOLD)
 
 
 # --------------------------------------------------------- ngram-jaccard
@@ -431,7 +466,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.7,
     df_cap: int | None = DEFAULT_DF_CAP,
-    log_dropped: bool = True,
     storage_level: str = "MEMORY_AND_DISK",
     staging_dir: str | None = None,
 ) -> DataFrame:
@@ -439,42 +473,17 @@ def ngram_jaccard_pairs(
 
     ``df_cap``: drop shingles appearing in more than df_cap docs before
     pairing — ON by default (DEFAULT_DF_CAP): a web-scale stop-shingle
-    otherwise expands O(df²) pairs in one task. Pass None for the exact
-    uncapped variant (oracle anchor / tiny inputs only).
-    ``log_dropped``: when capping, count and log the dropped stop-shingles
-    (one cheap extra agg over the cached shingle table) — silent
-    truncation would read as full coverage.
+    otherwise expands O(df²) pairs in one task. The dropped count is
+    always logged — silent truncation would read as full coverage.
+    Pass None for the exact uncapped variant (oracle anchor / tiny
+    inputs only).
     ``storage_level``/``staging_dir``: where the shingle table (which
-    feeds the pair expansion AND both size joins) materializes — see
-    ``_persist_shingles``; at 100 TB stage it to the shared FS."""
-    ex, sizes = _capped_exploded(df, text_col, key_col, n, df_cap,
-                                 log_dropped, storage_level, staging_dir,
-                                 "ngram_jaccard_pairs")
-    return _pairs_from_exploded(ex, sizes, threshold)
-
-
-def _capped_exploded(df, text_col, key_col, n, df_cap, log_dropped,
-                     storage_level, staging_dir, op_name):
-    """Shared candidate feed for the exhaustive pair metrics:
-    (exploded (k, s) with stop-shingles capped, (k, sz) sizes)."""
-    t = _persist_shingles(_shingle_table(df, text_col, key_col, n),
-                          storage_level, staging_dir)
-    ex = t.select("k", F.explode("sh").alias("s"))
-    if df_cap is not None:
-        hot = (ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-               .filter(F.col("df") > df_cap).select("s"))
-        if log_dropped:
-            # cache so the logging count and the anti-join share one
-            # df-aggregation pass instead of recomputing it
-            hot = hot.cache()
-            n_hot = hot.count()
-            if n_hot:
-                logger.warning(
-                    "%s: dropped %d stop-shingles with "
-                    "doc frequency > %d before pairing",
-                    op_name, n_hot, df_cap)
-        ex = ex.join(F.broadcast(hot), "s", "left_anti")
-    return ex, t.select("k", "sz")
+    feeds the cap scan, the pair expansion AND both size joins)
+    materializes — see ``_persist_shingles``; at 100 TB stage it to the
+    shared FS. The caller owns that one persisted table."""
+    return _shingle_pairs(df, text_col, key_col, n, df_cap, storage_level,
+                          staging_dir, "ngram_jaccard_pairs", "jaccard",
+                          _jaccard(), threshold)
 
 
 def ngram_containment_pairs(
@@ -484,7 +493,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     df_cap: int | None = DEFAULT_DF_CAP,
-    log_dropped: bool = True,
     storage_level: str = "MEMORY_AND_DISK",
     staging_dir: str | None = None,
 ) -> DataFrame:
@@ -497,33 +505,10 @@ def ngram_containment_pairs(
     ≈ 1. One row per unordered pair (id1 < id2, ``containment``
     column); same physical shape, stop-shingle cap, and persistence
     seams as ``ngram_jaccard_pairs``."""
-    ex, sizes = _capped_exploded(df, text_col, key_col, n, df_cap,
-                                 log_dropped, storage_level, staging_dir,
-                                 "ngram_containment_pairs")
-    per_shingle = (
-        ex.groupBy("s")
-        .agg(F.sort_array(F.collect_list("k")).alias("ks"))
-        .filter(F.size("ks") > 1)
-    )
-    common = (_expand_pairs(per_shingle)
-              .groupBy("id1", "id2").agg(F.count(F.lit(1)).alias("common")))
-    # size-gated broadcast of the per-doc sizes — same rationale as
-    # _jaccard_from_common (the pair table dwarfs the sizes table)
-    bcast = sizes.count() <= KEEP_BROADCAST_THRESHOLD
-    sa = sizes.select(F.col("k").alias("id1"), F.col("sz").alias("sz1"))
-    sb = sizes.select(F.col("k").alias("id2"), F.col("sz").alias("sz2"))
-    if bcast:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    return (
-        common.join(sa, "id1").join(sb, "id2")
-        .withColumn(
-            "containment",
-            F.round(F.col("common")
-                    / F.least(F.col("sz1"), F.col("sz2"))
-                    + F.lit(1e-9), 6))
-        .filter(F.col("containment") >= threshold)
-        .select("id1", "id2", "containment")
-    )
+    return _shingle_pairs(
+        df, text_col, key_col, n, df_cap, storage_level, staging_dir,
+        "ngram_containment_pairs", "containment",
+        F.col("common") / F.least(F.col("sz1"), F.col("sz2")), threshold)
 
 
 # ----------------------------------------------------------- minhash-lsh
@@ -570,7 +555,6 @@ def minhash_lsh_pairs(
     bands: int = 32,
     rows_per_band: int = 3,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-    log_oversized: bool = True,
     storage_level: str = "MEMORY_AND_DISK",
     staging_dir: str | None = None,
 ) -> DataFrame:
@@ -604,7 +588,7 @@ def minhash_lsh_pairs(
     per_bucket = (bands_df.groupBy("band", "sig")
                   .agg(F.sort_array(F.collect_list("k")).alias("ks"))
                   .filter(F.size("ks") > 1))
-    if bucket_cap is not None and log_oversized:
+    if bucket_cap is not None:
         per_bucket = _log_oversized_buckets(per_bucket, bucket_cap,
                                             "minhash_lsh_pairs")
     candidates = _expand_pairs(per_bucket, bucket_cap,
@@ -622,7 +606,8 @@ def minhash_lsh_pairs(
         .join(e2, ["id2", "s"])             # keep shingles id2 also has
         .groupBy("id1", "id2").agg(F.count(F.lit(1)).alias("common"))
     )
-    return _jaccard_from_common(common, t.select("k", "sz"), threshold)
+    return _scored_pairs(common, t.select("k", "sz"), "jaccard",
+                         _jaccard(), threshold)
 
 
 # ------------------------------------------- incremental exact-fp index
@@ -831,7 +816,7 @@ def incremental_minhash_pairs(
              .groupBy("k")
              .agg(F.max(F.struct("__new", "sz")).alias("__w"))
              .select("k", F.col("__w.sz").alias("sz")))
-    return _jaccard_from_common(common, sizes, threshold)
+    return _scored_pairs(common, sizes, "jaccard", _jaccard(), threshold)
 
 
 # ---------------------------------------------------------------- simhash
@@ -906,7 +891,6 @@ def simhash_candidates(
     blocks: int | None = None,
     verify: bool = True,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-    log_oversized: bool = True,
 ) -> DataFrame:
     """Exact hamming<=max_distance pairs from a ``(k, sh)`` signature
     table via pigeonhole banding + exact verify.
@@ -968,7 +952,7 @@ def simhash_candidates(
     per_bucket = (banded.groupBy("band", *key_cols)
                   .agg(F.sort_array(F.collect_list("e")).alias("ks"))
                   .filter(F.size("ks") > 1))
-    if bucket_cap is not None and log_oversized:
+    if bucket_cap is not None:
         per_bucket = _log_oversized_buckets(per_bucket, bucket_cap,
                                             "simhash_candidates")
     pairs = _expand_pairs(per_bucket, bucket_cap, respread=False)

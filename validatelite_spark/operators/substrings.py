@@ -18,13 +18,13 @@ resolution knob, equivalent to the paper's 50-token threshold).
 Scale shape (100 TB):
 - the positional-gram table is one row per corpus WORD (linear, the
   same order as the shingle explode the MinHash path already stages);
-- hot grams (boilerplate sentences shared by millions of pages) are
-  dropped at ``df_cap`` occurrences exactly like ``DEFAULT_DF_CAP``
-  stop-shingles — a gram over the cap contributes O(df²) seed pairs
-  and zero dedup signal (logged, never silent);
-- seed-pair expansion reuses the chained-generator shape
-  (posexplode + suffix-slice explode) — a capped gram's pair set
-  streams through whole-stage codegen, never one giant row;
+- seed matching is ``dedup._cooccurrence`` over (gram, (doc, pos))
+  occurrences, the primitive the n-gram pair metrics use: hot grams
+  (boilerplate sentences shared by millions of pages) are dropped at
+  ``df_cap`` occurrences exactly like ``DEFAULT_DF_CAP`` stop-shingles
+  — a gram over the cap contributes O(df²) seed pairs and zero dedup
+  signal (logged, never silent) — and a capped gram's pair set streams
+  through the chained generators, never one giant row;
 - run merging is a window PARTITIONED BY (id1, id2, diagonal) — group
   size is bounded by the shorter document's length, not the corpus;
 - span merging / scrubbing are per-document windows + one aggregate
@@ -37,16 +37,16 @@ Lee et al. 2022 §3.1 (ExactSubstr, public).
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from validatelite_spark.functions.textquality import tokens
-from validatelite_spark.operators.dedup import DEFAULT_DF_CAP
+from validatelite_spark.operators.dedup import (
+    DEFAULT_DF_CAP,
+    _cooccurrence,
+    _persist_shingles,
+)
 from validatelite_spark.operators.winnowing import _grams_arrow
-
-logger = logging.getLogger(__name__)
 
 
 def positional_grams(df: DataFrame, text_col: str = "text",
@@ -76,56 +76,19 @@ def positional_grams(df: DataFrame, text_col: str = "text",
             .select("k", (F.col("pos0") + 1).alias("pos"), "g"))
 
 
-def _seed_pairs(pg: DataFrame, df_cap: int | None,
-                log_dropped: bool) -> DataFrame:
-    """Cross-document seed matches (id1, p1, id2, p2) with id1 < id2.
-
-    Same physical shape as ``dedup._pairs_from_exploded``: group
-    occurrences per gram (singleton grams — the vast majority — never
-    leave the partial aggregate), then expand ordered pairs through two
-    chained generators so an at-cap gram streams its O(df²) pairs
-    instead of materializing them in one row. Seeds are unique by
+def _seed_pairs(pg: DataFrame, df_cap: int | None, op: str) -> DataFrame:
+    """Cross-document seed matches (id1, p1, id2, p2) with id1 < id2:
+    ``dedup._cooccurrence`` over (gram, struct(k, pos)) occurrences,
+    keeping pairs from two different documents. Seeds are unique by
     construction — one gram per (doc, position) — so no distinct() is
-    needed afterwards.
-
-    The hot-gram cap is applied on the EXPLODED table (occurrence-count
-    aggregate → broadcast anti-join) BEFORE collect_list, so a
-    boilerplate gram with millions of occurrences never materializes
-    its giant occurrence array in the aggregation buffer (the
-    ``dedup._capped_exploded`` shape, per ADVICE r05); the gram table
-    is persisted because the count pass and the collect pass both
-    consume it, and the logging count reads the already-tiny hot list
-    instead of re-running the corpus-wide aggregate."""
+    needed afterwards. The gram table is persisted when capping,
+    because the cap scan and the expansion both read it."""
     if df_cap is not None:
-        pg = pg.persist()
-        hot = (pg.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
-               .filter(F.col("__df") > df_cap).select("g").cache())
-        n_hot = hot.count()
-        if n_hot and log_dropped:
-            logger.warning(
-                "exact_substring_pairs: dropping %d stop-grams with "
-                "more than df_cap=%d occurrences (boilerplate — "
-                "near-zero dedup signal, O(df^2) seed cost)",
-                n_hot, df_cap)
-        if n_hot:
-            pg = pg.join(F.broadcast(hot), "g", "left_anti")
-    occ = (pg.groupBy("g")
-           .agg(F.sort_array(F.collect_list(F.struct("k", "pos")))
-                .alias("ms"))
-           .filter(F.size("ms") > 1))
-    # re-spread before the chained-generator expansion: AQE coalesces
-    # the per-gram table by its bytes and cannot see the O(df²) seed
-    # blow-up above it (same fix, same rationale as
-    # dedup._expand_pairs)
-    par = occ.sparkSession.sparkContext.defaultParallelism
-    occ = occ.repartition(4 * par)
-    return (occ
-            .select(F.posexplode("ms").alias("i", "m1"), "ms")
-            .select("m1", F.explode(F.expr("slice(ms, i + 2, size(ms))"))
-                    .alias("m2"))
-            .filter(F.col("m1.k") != F.col("m2.k"))
-            .select(F.col("m1.k").alias("id1"), F.col("m1.pos").alias("p1"),
-                    F.col("m2.k").alias("id2"), F.col("m2.pos").alias("p2")))
+        pg = _persist_shingles(pg)
+    pairs = _cooccurrence(pg, "g", F.struct("k", "pos"), df_cap, op)
+    return (pairs.filter(F.col("id1.k") != F.col("id2.k"))
+            .select(F.col("id1.k").alias("id1"), F.col("id1.pos").alias("p1"),
+                    F.col("id2.k").alias("id2"), F.col("id2.pos").alias("p2")))
 
 
 def _diagonal_runs(seeds: DataFrame, n: int) -> DataFrame:
@@ -152,7 +115,6 @@ def exact_substring_pairs(
     n: int = 8,
     min_words: int = 15,
     df_cap: int | None = DEFAULT_DF_CAP,
-    log_dropped: bool = True,
     arrow: bool = True,
 ) -> DataFrame:
     """Document pairs sharing an exact word run of >= ``min_words``
@@ -165,7 +127,8 @@ def exact_substring_pairs(
     scale raise both (n=15, min_words=50) so the seed table carries
     fewer, longer grams."""
     pg = positional_grams(df, text_col, key_col, n, arrow=arrow)
-    runs = _diagonal_runs(_seed_pairs(pg, df_cap, log_dropped), n)
+    runs = _diagonal_runs(
+        _seed_pairs(pg, df_cap, "exact_substring_pairs"), n)
     return (runs.groupBy("id1", "id2")
             .agg(F.max("run_words").alias("overlap_words"),
                  F.sum(F.when(F.col("run_words") >= min_words, 1)
@@ -194,7 +157,7 @@ def duplicate_spans(
     or adjacent spans within a document are merged (gaps-and-islands on
     the running max end) so the scrub step cuts each word once."""
     pg = positional_grams(df, text_col, key_col, n, arrow=arrow)
-    runs = _diagonal_runs(_seed_pairs(pg, df_cap, False), n)
+    runs = _diagonal_runs(_seed_pairs(pg, df_cap, "duplicate_spans"), n)
     spans = (runs.filter(F.col("run_words") >= min_words)
              .select(F.col("id2").alias("k"),
                      F.col("p2_start").alias("start"),

@@ -25,21 +25,24 @@ Scale shape: the window is partitioned BY DOCUMENT and ordered by
 position — parallelism is the document count, one task never holds
 more than one document's n-grams (bounded by doc length; the 2^20
 position clamp documents the supported doc size). Candidate pairing
-reuses the capped per-fingerprint group expansion
-(``dedup._expand_pairs`` chained generators), never a fat self-join.
+is ``dedup._cooccurrence`` over (fingerprint, doc) — the capped
+per-group chained-generator expansion, never a fat self-join — and
+the shared counts use the packed-key ``dedup._pair_counts``.
 """
 
 from __future__ import annotations
-
-import logging
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from validatelite_spark.operators.dedup import DEFAULT_DF_CAP, _expand_pairs
-
-logger = logging.getLogger(__name__)
+from validatelite_spark.operators.dedup import (
+    DEFAULT_DF_CAP,
+    _cooccurrence,
+    _key_stats,
+    _pair_counts,
+    _persist_shingles,
+)
 
 _POS_MOD = 1 << 20  # max supported n-grams per document
 
@@ -139,29 +142,16 @@ def winnow_pairs(
     docs are dropped with a logged count (boilerplate n-grams — same
     stop-shingle contract as ``ngram_jaccard_pairs``).
 
-    The fingerprint table feeds both the hot-fp aggregate and the
-    anti-join; AQE does not reuse that exchange, so ``storage_level``
-    persists the (selected, ~2/window of the grams) table once instead
-    of re-running the corpus-wide window+UDF selection per consumer."""
+    The fingerprint table feeds the key-range aggregate, the hot-fp
+    scan and the pair expansion; AQE does not reuse that exchange, so
+    ``storage_level`` persists the (selected, ~2/window of the grams)
+    table once instead of re-running the corpus-wide window+UDF
+    selection per consumer. None → no persist."""
     fps = (winnow_fingerprints(df, text_col, key_col, n, window)
            .select("k", "fp").distinct())
-    if storage_level is not None and df_cap is not None:
-        from pyspark import StorageLevel
-
-        fps = fps.persist(getattr(StorageLevel, storage_level))
-    if df_cap is not None:
-        hot = (fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
-               .filter(F.col("df") > df_cap).select("fp").cache())
-        n_hot = hot.count()
-        if n_hot:
-            logger.warning(
-                "winnow_pairs: dropped %d fingerprints with doc "
-                "frequency > %d before pairing", n_hot, df_cap)
-        fps = fps.join(F.broadcast(hot), "fp", "left_anti")
-    groups = (fps.groupBy("fp")
-              .agg(F.sort_array(F.collect_list("k")).alias("ks"))
-              .filter(F.size("ks") > 1))
-    return (_expand_pairs(groups)
-            .groupBy("id1", "id2")
-            .agg(F.count(F.lit(1)).alias("shared"))
+    if storage_level is not None:
+        fps = _persist_shingles(fps, storage_level)
+    stats = _key_stats(fps)
+    pairs = _cooccurrence(fps, "fp", "k", df_cap, "winnow_pairs")
+    return (_pair_counts(pairs, "shared", stats)
             .filter(F.col("shared") >= min_shared))
