@@ -33,6 +33,7 @@ from validatelite_spark.functions.textquality import (
     symbol_ratio,
     token_count,
 )
+from validatelite_spark.sources.reader import spread as _spread
 
 # --------------------------------------------------------------- helpers
 
@@ -43,16 +44,10 @@ def _utc(spark: SparkSession) -> None:
 
 
 #: tables whose queries do heavy per-row map work (regex signals,
-#: shingling UDFs, vector math). The benchmark parquet files arrive as a
-#: SINGLE ROW GROUP — Spark cannot split a row group, so no
-#: maxPartitionBytes/minPartitionNum setting ever parallelizes the scan
-#: and every projection/partial-agg above it runs on ONE core. Spread
-#: once right after the read (guide §2.5: "input skew — one huge
-#: unsplittable file … repartition immediately after the read"). The
-#: repartition is CONDITIONAL on the scan actually under-parallelizing,
-#: so at production scale (many row groups per file) it is a no-op, and
-#: the target count derives from the session's parallelism, not a
-#: constant.
+#: shingling UDFs, vector math) on a SINGLE-ROW-GROUP parquet — spread
+#: right after the read (``sources.reader.spread``). A query opts out
+#: with ``spread=False`` where the exchange costs more than the one-core
+#: scan saves (ROADMAP direction 2 has the measurements).
 _SPREAD_TABLES = {"documents"}
 
 
@@ -60,19 +55,7 @@ def _read(spark: SparkSession, sf_dir: str, table: str,
           spread: bool = True) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if spread and table in _SPREAD_TABLES:
-        par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par // 2:
-            # The always-true nondeterministic filter is a PUSHDOWN
-            # FENCE: without it Catalyst pushes every downstream
-            # deterministic predicate below this exchange, and a filter
-            # on a derived signal (e.g. isnotnull(quality_score))
-            # re-expands the whole expression tree on the unsplittable
-            # single-row-group scan — measured 16.1 s → 1.4 s on
-            # calibration_curve at sf1.0. Predicates cannot be
-            # reordered before a nondeterministic one, so everything
-            # evaluates above the spread, in parallel.
-            df = (df.repartition(par)
-                  .filter(F.monotonically_increasing_id() >= 0))
+        df = _spread(df)
     return df
 
 

@@ -2,8 +2,12 @@
 """Cluster entrypoint for end-to-end corpus curation.
 
 Submitted via ``scripts/submit_job.sh`` (swap the job path), or run
-directly for local smoke tests. The full training-data chain over a
-Common-Crawl-shaped table (BASELINE.json input_hint — url/text/lang):
+directly for local smoke tests. On a cluster add
+``--conf spark.checkpoint.dir=<shared-FS path>`` so iterative operators
+checkpoint reliably (``session.checkpoint``); the cached intermediates
+of ``curate`` are released by ``spark.catalog.clearCache()``. The full
+training-data chain over a Common-Crawl-shaped table (BASELINE.json
+input_hint — url/text/lang):
 
 1. canonical-URL dedup (``operators/dedup.url_dedup``) when the input
    has a ``url`` column — the crawl pipeline's first dedup stage;

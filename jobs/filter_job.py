@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Cluster entrypoint for the quality-filter pipeline.
 
-Submitted via ``scripts/submit_job.sh`` (spark-submit --py-files zip).
+Submitted via ``scripts/submit_job.sh`` (spark-submit --py-files zip);
+on a cluster add ``--conf spark.checkpoint.dir=<shared-FS path>`` so any
+iterative operator checkpoints reliably (``session.checkpoint``).
 Reads a pages table (parquet path or Iceberg table identifier), runs the
 checkpointed quality filter, writes annotated+scrubbed output and the
 per-rule metrics table next to it. Resumable: re-submit after a failure

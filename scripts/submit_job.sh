@@ -8,7 +8,11 @@
 #
 # Locally this runs against local[*]; on a real cluster pass e.g.
 #   --master yarn --deploy-mode cluster --num-executors 200 \
-#   --executor-cores 5 --executor-memory 16g
+#   --executor-cores 5 --executor-memory 16g \
+#   --conf spark.checkpoint.dir=hdfs:///tmp/vlite-checkpoints
+# spark.checkpoint.dir (a shared-FS path) makes the iterative operators'
+# per-round checkpoints (dedup groups, PageRank) reliable; without it
+# they checkpoint into executor storage, which an executor loss drops.
 set -euo pipefail
 REPO_DIR="$(cd "$(dirname "$0")/.." && pwd)"
 INPUT="${1:?input path}"; OUTPUT="${2:?output path}"; shift 2 || true

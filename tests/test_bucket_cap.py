@@ -1,6 +1,5 @@
 """Round-5 candidate-stage guards (VERDICT r4 #1/#2/#5): oversized LSH
-buckets emit star edges instead of O(B²) all-pairs, the shingle-table
-materialization is a real seam (disk / staged parquet), and SimHash
+buckets emit star edges instead of O(B²) all-pairs, and SimHash
 banding auto-selects by corpus size.
 
 The planted scenario is the one the verdict names: a genuine near-dup
@@ -91,27 +90,6 @@ class TestMinhashStarBuckets:
                 r.doc_id for r in dedup.keep_representatives(
                     docs, groups).collect())
         assert kept[2] == kept[None]
-
-
-class TestShingleSeam:
-    def test_staged_parquet_path(self, spark, sf_dir, tmp_path):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        stage = str(tmp_path / "shingle_stage")
-        a = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-            docs, threshold=0.7).collect()))
-        b = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-            docs, threshold=0.7, staging_dir=stage).collect()))
-        assert a == b and a
-        # the stage really was written and re-read
-        assert spark.read.parquet(stage).columns == ["k", "sh", "sz"]
-
-    def test_disk_only_level(self, cluster_docs):
-        got = sorted(map(tuple, dedup.minhash_lsh_pairs(
-            cluster_docs, storage_level="DISK_ONLY",
-            bucket_cap=5).collect()))
-        want = sorted(map(tuple, dedup.minhash_lsh_pairs(
-            cluster_docs, bucket_cap=5).collect()))
-        assert got == want
 
 
 class TestAutoBlocks:

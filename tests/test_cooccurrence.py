@@ -1,16 +1,27 @@
 """The shared co-occurrence primitive (``dedup._cooccurrence``) as seen
 through its drop-cap callers: each leaves only its own base table
-persisted, and dropping an over-cap group is always reported."""
+persisted, and dropping an over-cap group is always reported. Every
+operator that caches an intermediate is released by
+``spark.catalog.clearCache()``."""
 
 from __future__ import annotations
 
 import logging
 
 import pytest
+from pyspark.sql import functions as F
 
-from validatelite_spark.operators.dedup import ngram_jaccard_pairs
+from validatelite_spark.operators.dedup import (
+    minhash_lsh_pairs,
+    ngram_jaccard_pairs,
+    simhash_pairs,
+)
+from validatelite_spark.operators.dsir import dsir_weights
+from validatelite_spark.operators.keywords import domain_top_terms
+from validatelite_spark.operators.rollup import time_rollup
 from validatelite_spark.operators.substrings import exact_substring_pairs
 from validatelite_spark.operators.winnowing import winnow_pairs
+from validatelite_spark.pipeline.curation import curate
 
 N_DOCS = 10
 
@@ -63,3 +74,30 @@ def test_over_cap_group_always_reported(hot_docs, op, new_persisted,
     assert warned[0].startswith(f"{op}: dropped 1 ")
     # the dropped phrase was the only link between documents
     assert rows == []
+
+
+#: every operator that caches an intermediate, over the documents table
+CACHING = {
+    **OPERATORS,
+    "minhash_lsh_pairs": minhash_lsh_pairs,
+    "simhash_pairs": simhash_pairs,
+    "domain_top_terms": domain_top_terms,
+    "dsir_weights": lambda docs: dsir_weights(
+        docs.filter(F.col("doc_id") % 2 == 0),
+        docs.filter(F.col("doc_id") % 2 == 1)),
+    "time_rollup": lambda docs: time_rollup(docs.select(
+        F.timestamp_seconds(F.col("doc_id") * 3600).alias("ts"),
+        F.col("n_chars").alias("value"))),
+    "curate": lambda docs: curate(
+        docs.sparkSession, docs, 3000,
+        benchmark_texts=docs.limit(5).select("doc_id", "text")),
+}
+
+
+@pytest.mark.parametrize("op", sorted(CACHING))
+def test_clear_cache_releases_everything(spark, sf_dir, op,
+                                         new_persisted):
+    CACHING[op](spark.read.parquet(f"{sf_dir}/documents.parquet")).collect()
+    assert new_persisted()
+    spark.catalog.clearCache()
+    assert not new_persisted()

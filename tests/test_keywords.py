@@ -81,9 +81,6 @@ class TestDomainTopTerms:
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("InMemoryTableScan") >= 3
-        # (no inverse assertion: once cached, Spark's CacheManager
-        # substitutes the fragment into ANY matching plan in the
-        # session, including storage_level=None calls)
 
     def test_rank_ties_deterministic(self, spark):
         from validatelite_spark.operators.keywords import domain_top_terms

@@ -3,7 +3,8 @@
 Pins the three plan properties the engine's design depends on:
 column pruning reaches the parquet scan (never read ``html`` unless a
 rule needs it), filters push down to the scan, and N merged rules cost
-exactly ONE scan with map-side partial aggregation."""
+exactly ONE scan with map-side partial aggregation; and each text
+operator's gram UDF is evaluated once per document."""
 
 from __future__ import annotations
 
@@ -11,6 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from validatelite_spark.core.rules import enum, length, not_null, range_rule
+from validatelite_spark.operators.dedup import _shingle_table
+from validatelite_spark.operators.substrings import positional_grams
+from validatelite_spark.operators.winnowing import winnow_fingerprints
 from validatelite_spark.pipeline.pages import synthesize_pages
 from validatelite_spark.pipeline.quality import QualityPipeline
 from validatelite_spark.plans.compiler import compile_rule
@@ -68,3 +72,16 @@ class TestPlanShape:
         win_inputs = plan.split("Window")[1] if "Window" in plan else ""
         assert "TakeOrderedAndProject" in win_inputs, (
             "rank window must consume the k-row limit, not the full join")
+
+
+@pytest.mark.parametrize("build", [
+    lambda d: _shingle_table(d, "text", "doc_id", 3),
+    positional_grams,
+    winnow_fingerprints,
+], ids=["shingle_table", "positional_grams", "winnow_fingerprints"])
+def test_gram_udf_evaluated_once(spark, sf_dir, build):
+    # the size(...) > 0 filter above each gram projection (explicit, or
+    # the one Spark infers for the explode) must not carry a second copy
+    # of the Arrow UDF below the projection
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert plan_of(build(docs)).count("ArrowEvalPython") == 1

@@ -112,7 +112,7 @@ def train_bpe(
         raise ValueError("num_merges must be >= 1")
     words = (word_frequencies(df, text_col, lowercase)
              .withColumn("seq", _initial_seq(F.col("word"))))
-    words = words.persist()
+    words = words.cache()
     merges: list[tuple[str, str, int]] = []
     try:
         for it in range(num_merges):
@@ -125,9 +125,9 @@ def train_bpe(
             merges.append((left, right, int(top[0]["cnt"])))
             nxt = apply_merge(words, left, right)
             if (it + 1) % checkpoint_every == 0:
-                # re-materialize: truncates the growing
-                # regexp_replace lineage chain
-                nxt = nxt.persist()
+                # re-materialize: later rounds read the cached table
+                # instead of replaying the growing regexp_replace chain
+                nxt = nxt.cache()
                 nxt.count()
                 words.unpersist()
             words = nxt

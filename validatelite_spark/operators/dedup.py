@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, ShortType
 
 from validatelite_spark.functions.textquality import fingerprint, tokens
+from validatelite_spark.session import checkpoint
+from validatelite_spark.sources.reader import spread
 
 logger = logging.getLogger(__name__)
 
@@ -203,7 +205,12 @@ def shingles_arrow(n: int = 3):
     n-grams of lowercased ASCII-whitespace tokens, distinct, first-
     occurrence order) but built in tight Python per batch instead of a
     CodegenFallback higher-order-function chain interpreted per row
-    (BENCH.md lesson 2: transform/slice/concat_ws don't codegen)."""
+    (BENCH.md lesson 2: transform/slice/concat_ws don't codegen).
+
+    Marked nondeterministic although it is a pure function: that is
+    what stops Catalyst from copying the call into a filter pushed
+    below the projection (``size(sh) > 0``, or the one it infers for
+    an explode), which evaluated the UDF twice per document."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
@@ -222,7 +229,7 @@ def shingles_arrow(n: int = 3):
                 for i in range(len(toks) - n + 1))))
         return pd.Series(out)
 
-    return sh
+    return sh.asNondeterministic()
 
 
 def _shingle_table(df: DataFrame, text_col: str, key_col: str,
@@ -232,39 +239,13 @@ def _shingle_table(df: DataFrame, text_col: str, key_col: str,
     pure-Column expression (no-Python contexts)."""
     sh = (shingles_arrow(n)(F.col(text_col)) if arrow
           else shingles(F.col(text_col), n))
-    # a small parquet loads as one input split → the (expensive)
-    # shingling projection runs single-threaded; spread it when the
-    # source is under-parallel (downstream aggs shuffle regardless)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par // 2:
-        df = df.repartition(par)
+    # the (expensive) shingling projection is spread when the source is
+    # under-parallel (downstream aggs shuffle regardless)
     return (
-        df.select(F.col(key_col).alias("k"), sh.alias("sh"))
+        spread(df).select(F.col(key_col).alias("k"), sh.alias("sh"))
         .withColumn("sz", F.size("sh"))
         .filter(F.col("sz") > 0)
     )
-
-
-def _persist_shingles(t: DataFrame, storage_level: str = "MEMORY_AND_DISK",
-                      staging_dir: str | None = None) -> DataFrame:
-    """Materialization seam for an intermediate that feeds two
-    downstream passes — the shingle table (cap scan + pair expansion +
-    sizes, or signatures + verification), and every other
-    ``_cooccurrence`` member table.
-
-    ``staging_dir`` set → write-and-reread a staged parquet: the 100 TB
-    path, where even a disk-backed executor cache of the shingle table
-    (bigger than the corpus itself) is the wrong residency — a staged
-    table lives on the shared FS, survives executor loss, and can be
-    reused across jobs. Otherwise ``persist(storage_level)``
-    (``MEMORY_AND_DISK`` default == ``.cache()`` for DataFrames;
-    ``DISK_ONLY`` for memory-tight clusters)."""
-    if staging_dir is not None:
-        t.write.mode("overwrite").parquet(staging_dir)
-        return t.sparkSession.read.parquet(staging_dir)
-    from pyspark import StorageLevel
-
-    return t.persist(getattr(StorageLevel, storage_level))
 
 
 def _cooccurrence(members: DataFrame, group: str, member: str | Column,
@@ -288,8 +269,8 @@ def _cooccurrence(members: DataFrame, group: str, member: str | Column,
     aggregation buffer. They are collected to the driver, reported in
     one warning (truncation is never silent) and removed by a broadcast
     anti-join that is added only when something is dropped. The caller
-    materializes ``members`` (``_persist_shingles``) when the cap scan
-    and the expansion both read it."""
+    caches ``members`` when the cap scan and the expansion both read
+    it."""
     if df_cap is not None:
         hot = (members.groupBy(group).count()
                .filter(F.col("count") > df_cap).select(group).collect())
@@ -440,15 +421,15 @@ def _scored_pairs(common: DataFrame, sizes: DataFrame, name: str,
     )
 
 
-def _shingle_pairs(df, text_col, key_col, n, df_cap, storage_level,
-                   staging_dir, op, name, score, threshold):
-    """Shared body of the exhaustive n-gram pair metrics: persisted
-    shingle table → ``_cooccurrence`` over (shingle, doc) → packed
+def _shingle_pairs(df, text_col, key_col, n, df_cap, op, name, score,
+                   threshold):
+    """Shared body of the exhaustive n-gram pair metrics: cached
+    shingle table (it feeds the cap scan, the pair expansion AND both
+    size joins) → ``_cooccurrence`` over (shingle, doc) → packed
     common-shingle counts → ``score`` over the per-doc set sizes. One
     aggregate over the sizes table feeds both the packed-key gate and
     the sizes broadcast gate."""
-    t = _persist_shingles(_shingle_table(df, text_col, key_col, n),
-                          storage_level, staging_dir)
+    t = _shingle_table(df, text_col, key_col, n).cache()
     sizes = t.select("k", "sz")
     stats = _key_stats(sizes)
     pairs = _cooccurrence(t.select("k", F.explode("sh").alias("s")),
@@ -466,8 +447,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.7,
     df_cap: int | None = DEFAULT_DF_CAP,
-    storage_level: str = "MEMORY_AND_DISK",
-    staging_dir: str | None = None,
 ) -> DataFrame:
     """Exhaustive near-dup pairs by exact n-gram Jaccard.
 
@@ -476,14 +455,11 @@ def ngram_jaccard_pairs(
     otherwise expands O(df²) pairs in one task. The dropped count is
     always logged — silent truncation would read as full coverage.
     Pass None for the exact uncapped variant (oracle anchor / tiny
-    inputs only).
-    ``storage_level``/``staging_dir``: where the shingle table (which
-    feeds the cap scan, the pair expansion AND both size joins)
-    materializes — see ``_persist_shingles``; at 100 TB stage it to the
-    shared FS. The caller owns that one persisted table."""
-    return _shingle_pairs(df, text_col, key_col, n, df_cap, storage_level,
-                          staging_dir, "ngram_jaccard_pairs", "jaccard",
-                          _jaccard(), threshold)
+    inputs only). The shingle table stays cached;
+    ``spark.catalog.clearCache()`` releases it."""
+    return _shingle_pairs(df, text_col, key_col, n, df_cap,
+                          "ngram_jaccard_pairs", "jaccard", _jaccard(),
+                          threshold)
 
 
 def ngram_containment_pairs(
@@ -493,8 +469,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     df_cap: int | None = DEFAULT_DF_CAP,
-    storage_level: str = "MEMORY_AND_DISK",
-    staging_dir: str | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup pairs by n-gram CONTAINMENT
     (Broder 1997's other resemblance measure): containment =
@@ -503,11 +477,11 @@ def ngram_containment_pairs(
     quote or syndicated article embedded in a much longer page has
     tiny Jaccard (union is dominated by the long page) but containment
     ≈ 1. One row per unordered pair (id1 < id2, ``containment``
-    column); same physical shape, stop-shingle cap, and persistence
-    seams as ``ngram_jaccard_pairs``."""
+    column); same physical shape, stop-shingle cap, and cached shingle
+    table as ``ngram_jaccard_pairs``."""
     return _shingle_pairs(
-        df, text_col, key_col, n, df_cap, storage_level, staging_dir,
-        "ngram_containment_pairs", "containment",
+        df, text_col, key_col, n, df_cap, "ngram_containment_pairs",
+        "containment",
         F.col("common") / F.least(F.col("sz1"), F.col("sz2")), threshold)
 
 
@@ -555,8 +529,6 @@ def minhash_lsh_pairs(
     bands: int = 32,
     rows_per_band: int = 3,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-    storage_level: str = "MEMORY_AND_DISK",
-    staging_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact-Jaccard verification.
 
@@ -575,12 +547,9 @@ def minhash_lsh_pairs(
     design, and all-pairs is O(B²) there) emit star edges instead —
     see DEFAULT_BUCKET_CAP; ``dedup_groups`` output is preserved, the
     raw pair list within oversized buckets is reduced (logged). None →
-    uncapped (oracle anchor).
-    ``storage_level``/``staging_dir``: shingle-table materialization
-    seam (feeds the signature pass AND the verification join) — see
-    ``_persist_shingles``."""
-    t = _persist_shingles(_shingle_table(df, text_col, key_col, n),
-                          storage_level, staging_dir)
+    uncapped (oracle anchor). The shingle table (it feeds the signature
+    pass AND the verification join) stays cached."""
+    t = _shingle_table(df, text_col, key_col, n).cache()
     ex = t.select("k", F.explode("sh").alias("s"))
     # one posexplode over an array of band hashes — a single pass instead
     # of a `bands`-way union of scans
@@ -672,8 +641,6 @@ def minhash_index_write(
     n: int = 3,
     bands: int = 32,
     rows_per_band: int = 3,
-    storage_level: str = "MEMORY_AND_DISK",
-    staging_dir: str | None = None,
 ) -> None:
     """Persist the corpus-side MinHash dedup index so NEW batches can be
     deduped against the corpus WITHOUT re-shingling it — the production
@@ -686,15 +653,13 @@ def minhash_index_write(
     sidecar pinning (n, bands, rows_per_band) so a probe can never use
     mismatched hashing. Index size is O(corpus shingles) — the same
     data the one-shot path shuffles, now paid once instead of per batch.
-    ``storage_level``/``staging_dir``: materialization seam for the
-    shingle table feeding all three writes (``_persist_shingles``).
+    The shingle table feeding all three writes is cached for the call.
     """
     import json
 
     from validatelite_spark.sources import fsutil
 
-    t = _persist_shingles(_shingle_table(df, text_col, key_col, n),
-                          storage_level, staging_dir)
+    t = _shingle_table(df, text_col, key_col, n).cache()
     ex = t.select("k", F.explode("sh").alias("s"))
     _band_table(ex, bands, rows_per_band).write.mode(
         "overwrite").parquet(f"{path}/bands")
@@ -1006,7 +971,6 @@ def dedup_groups(
     id1: str = "id1",
     id2: str = "id2",
     max_iters: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, group_id).
 
@@ -1017,34 +981,23 @@ def dedup_groups(
     near-dup components are cliques-ish, so typically 2-3.
 
     Scale shape: one shuffle per round (edges ⋈ labels then
-    groupBy(v).min), label table is (id, id) only, and each round
-    materializes so the plan/lineage does not grow with iterations (the
-    standard iterative-algorithm hygiene). ``checkpoint_dir``: when
-    given, rounds checkpoint reliably to that directory via
-    ``df.checkpoint()`` (shared-FS path on a real cluster — survives
-    executor loss); when None, ``localCheckpoint`` (executor memory —
-    right for local mode, lost with an executor at cluster scale).
-    Returns only vertices that appear in ``pairs`` — docs with no
-    near-dup are their own group by definition."""
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _mat(df):
-            return df.checkpoint(eager=True)
-    else:
-        def _mat(df):
-            return df.localCheckpoint()
-
+    groupBy(v).min), label table is (id, id) only, and each round is a
+    ``session.checkpoint`` so the plan/lineage does not grow with
+    iterations (the standard iterative-algorithm hygiene; reliable when
+    the session sets ``spark.checkpoint.dir``). Returns only vertices
+    that appear in ``pairs`` — docs with no near-dup are their own
+    group by definition."""
     # materialize the (possibly expensive) pair plan ONCE — the
     # bidirectional union below would otherwise recompute it twice
-    pairs = _mat(pairs.select(id1, id2))
-    edges = _mat(pairs.select(F.col(id1).alias("src"),
-                              F.col(id2).alias("dst"))
-                 .union(pairs.select(F.col(id2).alias("src"),
-                                     F.col(id1).alias("dst")))
-                 .distinct())
-    labels = _mat(edges.select(F.col("src").alias("v")).distinct()
-                  .withColumn("label", F.col("v")))
+    pairs = checkpoint(pairs.select(id1, id2))
+    edges = checkpoint(pairs.select(F.col(id1).alias("src"),
+                                    F.col(id2).alias("dst"))
+                       .union(pairs.select(F.col(id2).alias("src"),
+                                           F.col(id1).alias("dst")))
+                       .distinct())
+    labels = checkpoint(edges.select(F.col("src").alias("v")).distinct()
+                        .withColumn("label", F.col("v")))
+
     def _label_sum(lbl):
         # exact decimal sum — the convergence witness. Labels only ever
         # DECREASE (the min-aggregate includes each vertex's own label
@@ -1059,8 +1012,8 @@ def dedup_groups(
     def _round(labels, prev_sum):
         msgs = (edges.join(labels.withColumnRenamed("v", "src"), "src")
                 .select(F.col("dst").alias("v"), "label"))
-        new = _mat(labels.unionByName(msgs)
-                   .groupBy("v").agg(F.min("label").alias("label")))
+        new = checkpoint(labels.unionByName(msgs)
+                         .groupBy("v").agg(F.min("label").alias("label")))
         new_sum = _label_sum(new)
         return new, new_sum, int(prev_sum != new_sum)
 

@@ -154,7 +154,7 @@ def dsir_weights(
     persisted and SHARED between the model fit and the scoring join —
     one gram-extraction pass over the crawl, not two."""
     raw_bk = hashed_gram_buckets(raw, text_col, id_col,
-                                 n_buckets).persist()
+                                 n_buckets).cache()
     lam = dsir_log_ratios(target, raw, text_col, id_col, n_buckets,
                           alpha, raw_buckets=raw_bk)
     sums = (raw_bk
@@ -198,7 +198,7 @@ def dsir_resample(
     sizes all select the SAME documents. Ties at the rounded score
     break by id; the cut is TakeOrderedAndProject (no global sort)."""
     raw_bk = hashed_gram_buckets(raw, text_col, id_col,
-                                 n_buckets).persist()
+                                 n_buckets).cache()
     lam = dsir_log_ratios(target, raw, text_col, id_col, n_buckets,
                           alpha, raw_buckets=raw_bk)
     sums = (raw_bk

@@ -61,7 +61,6 @@ def domain_top_terms(
     min_df: int = 1,
     stopwords=None,
     round_to: int = 6,
-    storage_level: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Top-``top_k`` terms per domain by smoothed TF-IDF:
     (domain, term, tf, tfidf). ``min_df`` drops terms seen in fewer
@@ -72,16 +71,12 @@ def domain_top_terms(
     The (domain, term, tf) table feeds THREE consumers (domain
     frequency, the N-domains scalar, and the scoring join) and AQE
     does NOT reuse the exchange across them — unpersisted, the
-    corpus-wide explode+aggregate runs three times (measured).
-    ``storage_level`` persists the vocab-sized table once instead
-    (None to disable in no-cache contexts)."""
+    corpus-wide explode+aggregate runs three times (measured). The
+    vocab-sized table is cached once instead."""
     tf = domain_term_counts(df, text_col, by)
     if stopwords:
         tf = tf.filter(~F.col("term").isin(list(stopwords)))
-    if storage_level is not None:
-        from pyspark import StorageLevel
-
-        tf = tf.persist(getattr(StorageLevel, storage_level))
+    tf = tf.cache()
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if min_df > 1:
         dfreq = dfreq.filter(F.col("df") >= min_df)

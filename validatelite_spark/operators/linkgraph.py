@@ -22,9 +22,10 @@ Scale shape (the canonical Spark iterative-graph hygiene):
   driver-side graph;
 - the dangling-mass scalar stays IN-PLAN via a broadcast 1-row cross
   join (no per-iteration collect);
-- each round re-materializes the rank table (``localCheckpoint`` or a
-  reliable ``checkpoint_dir`` on a shared FS — same seam as
-  ``dedup.dedup_groups``), so lineage does not grow with iterations;
+- each round re-materializes the rank table (``session.checkpoint``:
+  reliable when the session sets ``spark.checkpoint.dir`` on a shared
+  FS, local otherwise — same seam as ``dedup.dedup_groups``), so
+  lineage does not grow with iterations;
 - ranks are rounded ONLY at the end (6 dp, +1e-9 — CLAUDE.md rule 2):
   double summation order differs per partitioning, but the ~1e-15
   drift is far under the rounding grid, so results are reproducible
@@ -43,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from validatelite_spark.session import checkpoint
+
 
 def pagerank(
     edges: DataFrame,
@@ -51,7 +54,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     round_to: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, rank) after ``iters`` power iterations over the distinct
     directed edge set. Self-loops and duplicate edges are dropped
@@ -62,31 +64,22 @@ def pagerank(
     if iters < 1:
         raise ValueError("iters must be >= 1")
     spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _mat(df):
-            return df.checkpoint(eager=True)
-    else:
-        def _mat(df):
-            return df.localCheckpoint()
-
-    e = _mat(edges.select(F.col(src).alias("src"),
-                          F.col(dst).alias("dst"))
-             .filter(F.col("src").isNotNull()
-                     & F.col("dst").isNotNull()
-                     & (F.col("src") != F.col("dst")))
-             .distinct())
-    nodes = _mat(e.select(F.col("src").alias("node"))
-                 .union(e.select(F.col("dst").alias("node")))
-                 .distinct())
-    deg = _mat(e.groupBy(F.col("src").alias("node"))
-               .agg(F.count(F.lit(1)).alias("deg")))
+    e = checkpoint(edges.select(F.col(src).alias("src"),
+                                F.col(dst).alias("dst"))
+                   .filter(F.col("src").isNotNull()
+                           & F.col("dst").isNotNull()
+                           & (F.col("src") != F.col("dst")))
+                   .distinct())
+    nodes = checkpoint(e.select(F.col("src").alias("node"))
+                       .union(e.select(F.col("dst").alias("node")))
+                       .distinct())
+    deg = checkpoint(e.groupBy(F.col("src").alias("node"))
+                     .agg(F.count(F.lit(1)).alias("deg")))
     n_nodes = nodes.count()
     if n_nodes == 0:
         return spark.createDataFrame([], "node string, rank double")
     base = (1.0 - damping) / n_nodes
-    ranks = _mat(nodes.withColumn("rank", F.lit(1.0 / n_nodes)))
+    ranks = checkpoint(nodes.withColumn("rank", F.lit(1.0 / n_nodes)))
 
     for _ in range(iters):
         with_deg = ranks.join(deg, "node", "left")
@@ -99,7 +92,7 @@ def pagerank(
             .agg(F.sum("share").alias("m")))
         dang = (with_deg.filter(F.col("deg").isNull())
                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")))
-        ranks = _mat(
+        ranks = checkpoint(
             nodes.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dang))
             .select("node",

@@ -41,12 +41,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from validatelite_spark.functions.textquality import tokens
-from validatelite_spark.operators.dedup import (
-    DEFAULT_DF_CAP,
-    _cooccurrence,
-    _persist_shingles,
-)
+from validatelite_spark.operators.dedup import DEFAULT_DF_CAP, _cooccurrence
 from validatelite_spark.operators.winnowing import _grams_arrow
+from validatelite_spark.sources.reader import spread
 
 
 def positional_grams(df: DataFrame, text_col: str = "text",
@@ -67,10 +64,7 @@ def positional_grams(df: DataFrame, text_col: str = "text",
                 F.sequence(F.lit(1), F.size(w) - n + 1),
                 lambda i: F.array_join(F.slice(w, i, F.lit(n)), " ")),
         ).otherwise(F.array().cast("array<string>"))
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par // 2:
-        df = df.repartition(par)
-    return (df.select(F.col(key_col).alias("k"), gs.alias("gs"))
+    return (spread(df).select(F.col(key_col).alias("k"), gs.alias("gs"))
             .filter(F.size("gs") > 0)
             .select("k", F.posexplode("gs").alias("pos0", "g"))
             .select("k", (F.col("pos0") + 1).alias("pos"), "g"))
@@ -81,10 +75,10 @@ def _seed_pairs(pg: DataFrame, df_cap: int | None, op: str) -> DataFrame:
     ``dedup._cooccurrence`` over (gram, struct(k, pos)) occurrences,
     keeping pairs from two different documents. Seeds are unique by
     construction — one gram per (doc, position) — so no distinct() is
-    needed afterwards. The gram table is persisted when capping,
-    because the cap scan and the expansion both read it."""
+    needed afterwards. The gram table is cached when capping, because
+    the cap scan and the expansion both read it."""
     if df_cap is not None:
-        pg = _persist_shingles(pg)
+        pg = pg.cache()
     pairs = _cooccurrence(pg, "g", F.struct("k", "pos"), df_cap, op)
     return (pairs.filter(F.col("id1.k") != F.col("id2.k"))
             .select(F.col("id1.k").alias("id1"), F.col("id1.pos").alias("p1"),

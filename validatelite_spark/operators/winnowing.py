@@ -41,7 +41,6 @@ from validatelite_spark.operators.dedup import (
     _cooccurrence,
     _key_stats,
     _pair_counts,
-    _persist_shingles,
 )
 
 _POS_MOD = 1 << 20  # max supported n-grams per document
@@ -58,7 +57,8 @@ def _grams_arrow(n: int):
     consumed by ``substring_scrub``, which cuts spans out of the
     Column-path ``tokens()`` sequence — a Unicode-only separator
     (U+00A0 etc.) would shift every later position and scrub the wrong
-    words (ADVICE r05 #1). Matches ``shingles_arrow``'s convention."""
+    words (ADVICE r05 #1). Matches ``shingles_arrow``'s convention,
+    including the nondeterministic marking."""
     from validatelite_spark.operators.dedup import _WS_ASCII
 
     @F.pandas_udf("array<string>")
@@ -72,7 +72,7 @@ def _grams_arrow(n: int):
             out.append([" ".join(toks[i:i + n])
                         for i in range(len(toks) - n + 1)])
         return pd.Series(out)
-    return g
+    return g.asNondeterministic()
 
 
 def winnow_fingerprints(
@@ -134,7 +134,6 @@ def winnow_pairs(
     window: int = 4,
     min_shared: int = 2,
     df_cap: int | None = DEFAULT_DF_CAP,
-    storage_level: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """(id1, id2, shared): unordered document pairs sharing at least
     ``min_shared`` distinct winnowed fingerprint hashes — the local
@@ -144,13 +143,10 @@ def winnow_pairs(
 
     The fingerprint table feeds the key-range aggregate, the hot-fp
     scan and the pair expansion; AQE does not reuse that exchange, so
-    ``storage_level`` persists the (selected, ~2/window of the grams)
-    table once instead of re-running the corpus-wide window+UDF
-    selection per consumer. None → no persist."""
+    the (selected, ~2/window of the grams) table is cached once instead
+    of re-running the corpus-wide window+UDF selection per consumer."""
     fps = (winnow_fingerprints(df, text_col, key_col, n, window)
-           .select("k", "fp").distinct())
-    if storage_level is not None:
-        fps = _persist_shingles(fps, storage_level)
+           .select("k", "fp").distinct().cache())
     stats = _key_stats(fps)
     pairs = _cooccurrence(fps, "fp", "k", df_cap, "winnow_pairs")
     return (_pair_counts(pairs, "shared", stats)

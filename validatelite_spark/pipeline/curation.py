@@ -72,7 +72,6 @@ def curate(
     decon_n: int = 8,
     decon_min_hits: int = 1,
     bench_text_col: str | None = None,
-    persist_intermediate: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """[url-decontaminate →] quality-filter → exact-dedup →
     [n-gram-decontaminate →] per-``lang_col`` token budget.
@@ -101,24 +100,20 @@ def curate(
       as running dedup physically first). Both legs precede the token
       budget, which must only count surviving docs.
 
-    ``persist_intermediate``: storage level for the kept-survivors
-    materialization seam in front of the token budget (whose prefix
-    sums branch their input four ways); None restores the historical
-    fully-lazy single-plan composition."""
+    The kept survivors (and, with ``benchmark_texts``, the deduped
+    frame) stay cached; ``spark.catalog.clearCache()`` releases them."""
     cfg = PipelineConfig(allowed_langs=allowed_langs, text_column=text_col)
     rules = _standard_rules(text_col, allowed_langs)
     d = docs
     if benchmark_urls is not None:
         d = url_decontaminate(d, benchmark_urls, url_col)
     uniq = exact_dedup(d, text_col, key_col)
-    if benchmark_texts is not None and persist_intermediate is not None:
+    if benchmark_texts is not None:
         # the deduped frame feeds BOTH the rule projection and the
         # n-gram decontamination leg — without a seam the one
         # materialization job evaluates the url-decon + dedup chain
         # twice (once per branch)
-        from pyspark import StorageLevel
-
-        uniq = uniq.persist(getattr(StorageLevel, persist_intermediate))
+        uniq = uniq.cache()
     ann = QualityPipeline(spark, cfg, rules).annotate(uniq)
     kept = ann.filter("keep").select(*docs.columns)
     if benchmark_texts is not None:
@@ -130,20 +125,15 @@ def curate(
                                  min_hits=decon_min_hits,
                                  bench_text_col=bench_text_col)
         kept = kept.join(cont.select(key_col), key_col, "left_anti")
-    if persist_intermediate is not None:
-        # The token budget's two-phase prefix sums reference their
-        # input from FOUR branches (group bounds, per-bucket sums,
-        # bucket offsets, the main stream) — without a materialization
-        # seam each branch re-runs the whole scan → dedup → regex-keep
-        # chain (8 parquet scans / 36 regexp evaluations in the sf1.0
-        # physical plan). Persisting the kept survivors evaluates the
-        # expensive projection once; pass None to keep the historical
-        # fully-lazy single-plan form (the DuckDB oracle replays the
-        # logical order either way — output is identical).
-        from pyspark import StorageLevel
-
-        kept = kept.persist(getattr(StorageLevel, persist_intermediate))
-    return token_budget_filter(kept, token_budget, token_col,
+    # The token budget's two-phase prefix sums reference their input
+    # from FOUR branches (group bounds, per-bucket sums, bucket
+    # offsets, the main stream) — without a materialization seam each
+    # branch re-runs the whole scan → dedup → regex-keep chain (8
+    # parquet scans / 36 regexp evaluations in the sf1.0 physical
+    # plan). Caching the kept survivors evaluates the expensive
+    # projection once (the DuckDB oracle replays the logical order
+    # either way — output is identical).
+    return token_budget_filter(kept.cache(), token_budget, token_col,
                                by=lang_col, order_col=token_col,
                                key_col=key_col)
 

@@ -5,14 +5,18 @@ Defaults chosen for the 100 TB design point (SURVEY.md §4): AQE on
 (every UDF stage is pandas/Arrow — input_hint mandates vectorized-only),
 UTC session timezone (oracle parity with DuckDB), shuffle partitions
 sized to cores for local mode (a real cluster submit overrides via
-spark-submit --conf).
+spark-submit --conf). Local-mode defaults are sized to the host: one
+task slot per usable CPU and a driver heap of a quarter of physical
+memory.
+
+``checkpoint(df)`` is the one lineage cut for iterative operators.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 #: glibc malloc tuning for every Python worker (inherited via fork):
@@ -29,6 +33,32 @@ _WORKER_ENV = {
 }
 
 
+def _host_heap() -> str:
+    """A quarter of the host's physical memory, in whole gigabytes."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(line.split()[1]) for line in fh
+                  if line.startswith("MemTotal:"))
+    return f"{max(1, kb // 2**22)}g"
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and cut its lineage — the one per-round
+    materialization of an iterative operator (connected components,
+    PageRank), so the plan does not grow with the iterations, and the
+    snapshot of a frame whose plan reads a path the caller is about to
+    append to (an append re-caches every cached plan over that path).
+
+    Reliable ``df.checkpoint(eager=True)`` when the session has a
+    checkpoint directory (a cluster run sets ``spark.checkpoint.dir``
+    to a shared-FS path, which survives executor loss); otherwise
+    ``localCheckpoint()`` in executor storage, right for local mode.
+    An intermediate that is only READ by several branches is a
+    ``cache()`` instead, released by ``spark.catalog.clearCache()``."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint()
+
+
 def get_spark(
     app_name: str = "vlite-spark",
     cpus: int | None = None,
@@ -37,7 +67,8 @@ def get_spark(
 ) -> SparkSession:
     for k, v in _WORKER_ENV.items():
         os.environ.setdefault(k, v)
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS",
+                                        len(os.sched_getaffinity(0))))
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -49,16 +80,18 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # 20g default (env-overridable): local mode runs `cpus`
-        # CONCURRENT tasks in one JVM, and a high-cardinality hash
-        # aggregate (the candidate-pair counters) holds ~100-200 MB of
-        # execution memory PER TASK — the old 8g heap left 4.8g of
+        # a quarter of host memory (env-overridable): local mode runs
+        # `cpus` CONCURRENT tasks in one JVM, and a high-cardinality
+        # hash aggregate (the candidate-pair counters) holds ~100-200 MB
+        # of execution memory PER TASK — an 8g heap left 4.8g of
         # unified memory for 32 tasks, right at the spill edge
         # (observed: TaskMemoryManager 256 MB page-allocation failures
-        # + GCLocker retry stalls at sf1.0). A real cluster sets
-        # executor memory via spark-submit; this default only sizes
-        # the local driver-executor to its host.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "20g"))
+        # + GCLocker retry stalls at sf1.0), while a fixed 20g
+        # overcommits a 16 GB host. A real cluster sets executor
+        # memory via spark-submit; this default only sizes the local
+        # driver-executor to its host.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _host_heap())
         # cap tungsten pages below G1's humongous-object threshold:
         # default page sizing requested 256 MB chunks whose
         # allocation-while-GC stalls ("Retried waiting for GCLocker")

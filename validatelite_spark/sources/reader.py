@@ -19,6 +19,7 @@ import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _EXT_FORMAT = {
     ".parquet": "parquet",
@@ -85,6 +86,28 @@ def read_source(
     if fmt == "orc":
         return reader.options(**options).orc(path)
     return reader.options(**options).parquet(path)
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over the session's task slots when its scan
+    is under-parallel (fewer partitions than half the slots); otherwise
+    ``df`` unchanged.
+
+    A single-row-group parquet loads as ONE split that no
+    maxPartitionBytes setting divides, so every projection and partial
+    aggregate above it runs on one core. The always-true
+    nondeterministic filter after the exchange is a PUSHDOWN FENCE:
+    Catalyst cannot move a predicate across it, so a downstream filter
+    on a derived signal evaluates above the spread, in parallel,
+    instead of re-expanding its whole expression tree on the one-task
+    scan (measured 16.1 s → 1.4 s on calibration_curve at sf1.0). The
+    target count derives from the session, and at production scale
+    (many row groups per file) this is a no-op."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par // 2:
+        df = (df.repartition(par)
+              .filter(F.monotonically_increasing_id() >= 0))
+    return df
 
 
 def _read_jdbc(spark: SparkSession, url: str, **options: str) -> DataFrame:

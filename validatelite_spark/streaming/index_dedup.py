@@ -49,6 +49,7 @@ from validatelite_spark.operators.dedup import (dedup_groups,
                                                 keep_representatives,
                                                 minhash_index_append,
                                                 minhash_lsh_pairs)
+from validatelite_spark.session import checkpoint
 from validatelite_spark.sources import fsutil
 
 
@@ -93,9 +94,13 @@ def index_dedup_batch(
                                       key_col, threshold)
     dup_ids = pairs.select(F.col("id2").alias(key_col)).distinct()
     kept = batch.join(dup_ids, key_col, "left_anti")
-    # localCheckpoint: `kept` feeds TWO writes below; without it the
-    # whole candidate join + verify would recompute per write
-    kept = kept.localCheckpoint()
+    # `kept` feeds TWO writes below; without a materialization the
+    # whole candidate join + verify would recompute per write. It is a
+    # checkpoint, not a cache(): its plan reads the index, and Spark
+    # re-caches every cached plan over a path that is appended to, so
+    # the index append would recompute a cached `kept` against the
+    # index it is extending.
+    kept = checkpoint(kept)
     kept.write.mode("append").parquet(output_path)
     minhash_index_append(kept, index_path, text_col, key_col)
     if batch_id is not None:
