@@ -23,16 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-_CLK_TCK = os.sysconf("SC_CLK_TCK")
-
-
-def _steal_ticks() -> int:
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8])
-    except (OSError, IndexError, ValueError):
-        return 0
+from bench import _steal_sec, _steal_ticks  # noqa: E402
 
 
 def main() -> None:
@@ -79,7 +70,7 @@ def main() -> None:
             else:
                 df.collect()
             samples.append(round(time.time() - t0, 3))
-            steals.append(round((_steal_ticks() - s0) / _CLK_TCK, 3))
+            steals.append(_steal_sec(s0))
             spark.sparkContext.setJobDescription(None)
             if args.explain_dir and i == 0:
                 os.makedirs(args.explain_dir, exist_ok=True)

@@ -25,16 +25,18 @@ Usage: python scripts/scaling_bench.py [n_docs] [N] [repeats] → one JSON line
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
+#: repo root: the worker imports the package and bench.py's steal helper
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[4])
 
-def steal():
-    return int(open("/proc/stat").readline().split()[8])
-
+from bench import _steal_sec, _steal_ticks
 from validatelite_spark.session import get_spark
 from validatelite_spark.pipeline import QualityPipeline, synthesize_pages
 
@@ -44,9 +46,9 @@ pipe = QualityPipeline(spark)
 
 def run_once(n):
     pages = synthesize_pages(spark, n, partitions=cpus * 4)
-    s0, t0 = steal(), time.time()
+    s0, t0 = _steal_ticks(), time.time()
     pipe.run(pages)   # one fused scan: flags + keep + scrub + metrics
-    return time.time() - t0, (steal() - s0) / 100.0
+    return time.time() - t0, _steal_sec(s0)
 
 run_once(max(n_docs // 20, 1000))          # warmup: JIT + codegen
 runs = [run_once(n_docs) for _ in range(repeats)]
@@ -62,7 +64,8 @@ spark.stop()
 
 def run_level(cpus: int, n_docs: int, repeats: int = 3) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", WORKER, str(cpus), str(n_docs), str(repeats)],
+        [sys.executable, "-c", WORKER, str(cpus), str(n_docs), str(repeats),
+         ROOT],
         capture_output=True, text=True, timeout=3000)
     if out.returncode != 0:
         raise RuntimeError(f"worker failed: {out.stderr[-2000:]}")

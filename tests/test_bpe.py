@@ -119,6 +119,19 @@ class TestEncode:
                          .alias("t")).collect()
         assert r["t"] == ["z", "q", EOW]
 
+    def test_word_boundaries_match_training(self, spark):
+        # encoding must split text into exactly the words training
+        # counted: U+00A0 is not a separator, edge \n/\r are
+        df = spark.createDataFrame(
+            [("ab\u00a0cd ab\u00a0cd",), ("\nx y\r\n",)], "text string")
+        trained = {r["word"] for r in
+                   word_frequencies(df, "text").collect()}
+        encoded = set()
+        for r in df.select(bpe_encode(F.col("text"), [])
+                           .alias("t")).collect():
+            encoded.update("".join(r["t"]).split(EOW)[:-1])
+        assert encoded == trained == {"ab\u00a0cd", "x", "y"}
+
     def test_null_text(self, spark):
         df = spark.createDataFrame([(None,)], "text string")
         (r,) = df.select(bpe_encode(F.col("text"), [])

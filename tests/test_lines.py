@@ -305,13 +305,14 @@ class TestChunkBuilderParity:
     same chunk strings as the pure-Column transform/slice/concat_ws
     chain it replaced, on the real documents corpus."""
 
-    def test_chunks_match_column_chain(self, spark):
+    def test_chunks_match_column_chain(self, spark, edge_ws_docs):
         from pyspark.sql import functions as F
 
-        from validatelite_spark.functions.textquality import tokens
+        from validatelite_spark.functions.textquality import tokens, words
 
-        docs = spark.read.parquet(
+        docs = (spark.read.parquet(
             "/root/testdata/sf0.01/documents.parquet")
+            .select("doc_id", "text").unionByName(edge_ws_docs))
         w = 8
         toks = tokens(F.col("text"))
         n_chunks = F.ceil(F.size(toks) / F.lit(w)).cast("int")
@@ -325,7 +326,6 @@ class TestChunkBuilderParity:
                .select("doc_id", col_chunks.alias("c")).collect()}
 
         from pyspark.sql.functions import pandas_udf
-        from validatelite_spark.operators.dedup import _WS_ASCII
 
         @pandas_udf("array<string>")
         def chunks_arrow(texts: pd.Series) -> pd.Series:
@@ -334,7 +334,7 @@ class TestChunkBuilderParity:
                 if t is None:
                     out.append([])
                     continue
-                tk = [x for x in _WS_ASCII.split(t.lower()) if x]
+                tk = words(t)
                 out.append([" ".join(tk[i:i + w])
                             for i in range(0, len(tk), w)])
             return pd.Series(out)

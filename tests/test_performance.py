@@ -24,19 +24,11 @@ import time
 
 import pytest
 
+from bench import _steal_sec, _steal_ticks
+
 _HERE = os.path.dirname(os.path.abspath(__file__))
 with open(os.path.join(_HERE, "perf_baseline.json")) as _fh:
     BASELINE = json.load(_fh)
-
-_CLK_TCK = os.sysconf("SC_CLK_TCK")
-
-
-def _steal_ticks() -> int:
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
 
 
 def gate_verdict(best_sec: float, best_steal_sec: float,
@@ -58,7 +50,7 @@ def _best_of_3(fn) -> tuple[float, float]:
         t0, s0 = time.time(), _steal_ticks()
         fn()
         el = time.time() - t0
-        st = (_steal_ticks() - s0) / _CLK_TCK
+        st = _steal_sec(s0)
         if best is None or el < best:
             best, best_steal = el, st
     return best, best_steal

@@ -10,12 +10,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from validatelite_spark.functions.textquality import ngrams, ngrams_arrow
 from validatelite_spark.operators.repetition import (
     contaminated_docs,
     dup_ngram_fraction,
     dup_ngram_fraction_arrow,
-    ngrams_all,
-    ngrams_all_arrow,
     repetition_signals,
 )
 
@@ -35,10 +34,11 @@ def test_repetition_signals_known_values(spark):
     assert rows[2].top_ngram_frac == 0.5  # 1/2 occurrences
 
 
-def test_ngrams_all_column_vs_arrow_parity(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    a = df.select("doc_id", ngrams_all(F.col("text"), 3).alias("ng"))
-    b = df.select("doc_id", ngrams_all_arrow(3)(F.col("text")).alias("ng"))
+def test_ngrams_all_column_vs_arrow_parity(spark, sf_dir, edge_ws_docs):
+    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+          .select("doc_id", "text").limit(50).unionByName(edge_ws_docs))
+    a = df.select("doc_id", ngrams(F.col("text"), 3).alias("ng"))
+    b = df.select("doc_id", ngrams_arrow(3)(F.col("text")).alias("ng"))
     assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0
 
 
@@ -56,8 +56,9 @@ def test_contaminated_docs_plants_hit(spark):
     assert hit.overlap_frac == round(1 / 3 + 1e-9, 6)
 
 
-def test_dup_fraction_column_vs_arrow_parity(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
+def test_dup_fraction_column_vs_arrow_parity(spark, sf_dir, edge_ws_docs):
+    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+          .select("doc_id", "text").limit(100).unionByName(edge_ws_docs))
     rows = df.select(
         dup_ngram_fraction(F.col("text"), 3).alias("a"),
         dup_ngram_fraction_arrow(3)(F.col("text")).alias("b")).collect()

@@ -95,7 +95,30 @@ def test_span_merge_overlapping(spark):
     assert out[30] == 15
 
 
-def test_arrow_column_parity(docs):
+def test_arrow_column_parity(docs, edge_ws_docs):
+    docs = docs.unionByName(edge_ws_docs)
     a = set(map(tuple, positional_grams(docs, n=4, arrow=True).collect()))
     c = set(map(tuple, positional_grams(docs, n=4, arrow=False).collect()))
     assert a == c and a
+
+
+@pytest.mark.parametrize("tail1, want", [
+    # doc 1 also has "tail" after the shared words: a 21-word run
+    ("tail one", ("zeta eta theta two", 21)),
+    ("end one", ("zeta eta theta tail two", 20)),
+])
+def test_scrub_cuts_the_right_words_after_edge_whitespace(spark, tail1,
+                                                          want):
+    # the span positions come from the Arrow gram kernel and are cut
+    # out of the Column token sequence: a leading newline must not
+    # shift one against the other
+    shared = " ".join(f"w{i}" for i in range(20))
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma " + shared + " " + tail1),
+         (2, "\nzeta eta theta " + shared + " tail two"),
+         (3, "nothing in common with the others")],
+        "doc_id long, text string")
+    out = {r.doc_id: (r.scrubbed_text, r.words_cut)
+           for r in substring_scrub(df, n=8, min_words=15).collect()}
+    assert out[2] == want
+    assert out[1][1] == 0 and out[3][1] == 0

@@ -3,6 +3,7 @@ pure-Python implementation of the Schleimer et al. algorithm, plus the
 local-overlap matching guarantee and pair candidacy."""
 
 import hashlib
+import re
 
 import pytest
 
@@ -12,7 +13,9 @@ def h32(gram: str) -> int:
 
 
 def ref_winnow(text, n=2, window=4):
-    toks = text.lower().split()
+    # words are runs of non-Java-\s characters (str.split() would also
+    # split on U+00A0 and other Unicode spaces)
+    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text.lower()) if t]
     grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
     if not grams:
         return set()
@@ -39,20 +42,25 @@ TEXTS = {
 
 
 @pytest.fixture(scope="module")
-def docs(spark):
+def texts(edge_ws_texts):
+    return {**TEXTS, **{10 + i: t for i, t in enumerate(edge_ws_texts)}}
+
+
+@pytest.fixture(scope="module")
+def docs(spark, texts):
     return spark.createDataFrame(
-        list(TEXTS.items()), "doc_id long, text string")
+        list(texts.items()), "doc_id long, text string")
 
 
 class TestFingerprints:
     @pytest.mark.parametrize("arrow", [True, False])
-    def test_matches_reference(self, spark, docs, arrow):
+    def test_matches_reference(self, spark, docs, texts, arrow):
         from validatelite_spark.operators.winnowing import \
             winnow_fingerprints
         got = {}
         for r in winnow_fingerprints(docs, arrow=arrow).collect():
             got.setdefault(r["k"], set()).add((r["fp"], r["pos"]))
-        want = {k: ref_winnow(t) for k, t in TEXTS.items() if ref_winnow(t)}
+        want = {k: ref_winnow(t) for k, t in texts.items() if ref_winnow(t)}
         assert got == want
 
     def test_short_doc_selects_one(self, spark):

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from validatelite_spark.functions.textquality import tokens, words
+
 #: end-of-word marker symbol (never a space — symbols are
 #: space-separated)
 EOW = "</w>"
@@ -51,16 +53,11 @@ def _java_quote(sym: str) -> str:
     return "\\Q" + sym.replace("\\E", "\\\\E") + "\\E"
 
 
-def word_frequencies(df: DataFrame, text_col: str,
-                     lowercase: bool = True) -> DataFrame:
-    """(word, freq) from one corpus scan: whitespace-split, empties
-    dropped. The ONLY corpus-wide pass in BPE training."""
-    t = F.col(text_col)
-    if lowercase:
-        t = F.lower(t)
-    w = F.explode(F.split(t, r"\s+")).alias("word")
-    return (df.select(w).filter(F.col("word") != "")
-            .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
+def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
+    """(word, freq) over ``textquality.tokens`` from one corpus scan.
+    The ONLY corpus-wide pass in BPE training."""
+    w = F.explode(tokens(F.col(text_col))).alias("word")
+    return df.select(w).groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
 
 
 def _initial_seq(word: Column) -> Column:
@@ -101,7 +98,6 @@ def train_bpe(
     df: DataFrame,
     text_col: str,
     num_merges: int,
-    lowercase: bool = True,
     min_count: int = 1,
     checkpoint_every: int = 8,
 ) -> list[tuple[str, str, int]]:
@@ -110,7 +106,7 @@ def train_bpe(
     Driver traffic per iteration: ONE row (the argmax pair)."""
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
-    words = (word_frequencies(df, text_col, lowercase)
+    words = (word_frequencies(df, text_col)
              .withColumn("seq", _initial_seq(F.col("word"))))
     words = words.cache()
     merges: list[tuple[str, str, int]] = []
@@ -136,11 +132,11 @@ def train_bpe(
     return merges
 
 
-def bpe_encode(text: Column, merges: list[tuple[str, str, int]],
-               lowercase: bool = True) -> Column:
+def bpe_encode(text: Column, merges: list[tuple[str, str, int]]) -> Column:
     """array<string> of BPE tokens for ``text`` under ``merges`` —
     the standard rank-priority encoder in one Arrow-batched pandas
-    UDF with per-batch word memoization."""
+    UDF with per-batch word memoization. Words are ``textquality.words``,
+    the same split ``word_frequencies`` trains on."""
     ranks = {(left_, r): i for i, (left_, r, _) in enumerate(merges)}
 
     def encode_word(word: str, cache: dict) -> list:
@@ -168,10 +164,8 @@ def bpe_encode(text: Column, merges: list[tuple[str, str, int]],
             if t is None:
                 out.append(None)
                 continue
-            if lowercase:
-                t = t.lower()
             toks: list = []
-            for w in t.split():
+            for w in words(t):
                 toks.extend(encode_word(w, cache))
             out.append(toks)
         return pd.Series(out)

@@ -43,8 +43,7 @@ def lang_id_series(s: pd.Series) -> pd.Series:
     Exact parity with the Column chain (pinned on the generated corpus
     in tests/test_pipeline.py): marker scores count whole tokens equal
     to a marker word, where tokens are maximal non-\\s runs of the
-    lowercased text (``_WS_ASCII`` == Java ``\\s`` — the
-    ``shingles_arrow`` convention, so Python counting == the
+    lowercased text (``textquality.words``, so Python counting == the
     ``(?<![^\\s])(?:w|…)(?![^\\s])`` regexp_count); the zh score counts
     U+4E00-U+9FFF code points (== regexp_count of the class — Spark
     lengths are code points too); the winner is the first language in
@@ -52,8 +51,8 @@ def lang_id_series(s: pd.Series) -> pd.Series:
     score is 0), which is exactly the CASE chain's
     argmax-with-priority-tie-break invariant."""
     from validatelite_spark.functions.textquality import (LANG_MARKERS,
-                                                          LANG_PRIORITY)
-    from validatelite_spark.operators.dedup import _WS_ASCII
+                                                          LANG_PRIORITY,
+                                                          words)
 
     word_lang = {w: lg for lg, ws in LANG_MARKERS.items() for w in ws}
     out = []
@@ -64,7 +63,7 @@ def lang_id_series(s: pd.Series) -> pd.Series:
             out.append("und")
             continue
         scores = dict.fromkeys(LANG_PRIORITY, 0)
-        for tok in _WS_ASCII.split(t.lower()):
+        for tok in words(t):
             lg = word_lang.get(tok)
             if lg is not None:
                 scores[lg] += 1

@@ -5,7 +5,9 @@ identification via stopword-marker scoring, Gopher/C4-style quality
 heuristics (doc length, symbol ratio, stopword fraction, repetition via
 distinct-token ratio), token counting, quality scoring, and document
 fingerprinting. Every function here is also expressible in ANSI SQL so the
-DuckDB oracle can verify it bit-for-bit.
+DuckDB oracle can verify it bit-for-bit. The module also owns the
+package's one word tokenizer, with its Python twins for Arrow kernels
+(see the tokenize section).
 
 These realize the reference's rule types re-targeted for web text
 (BASELINE.json north_star): LENGTH→doc-length, RANGE→ratio thresholds,
@@ -14,31 +16,86 @@ ENUM→language allowlist after langid.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------- tokenize
+# ONE token rule for the whole package: a word is a maximal run of
+# non-\s characters of the lowercased text, \s being the Java set
+# below (NOT Python's Unicode whitespace, NOT Spark trim's U+0020), and
+# there are no empty tokens. ``tokens``/``ngrams`` are the Column side,
+# ``words``/``word_ngrams`` the Python side (Arrow kernels); every word
+# split and n-gram builder in the package goes through them.
+
+#: Java \s whitespace set (space \t \n \x0b \f \r)
+_WS = " \t\n\x0b\f\r"
+_WS_ASCII = re.compile("[" + re.escape(_WS) + "]+")
+_ALNUM = ("abcdefghijklmnopqrstuvwxyz"
+          "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789")
+
 
 def tokens(col: Column) -> Column:
-    """Whitespace tokens of lowercased text; empty text → empty array."""
-    t = F.trim(F.lower(col))
-    return F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, "\\s+"))
+    """Whitespace tokens of lowercased text; empty text → empty array.
+    Empty strings can only sit at the edges of the split (a leading or
+    trailing \\s run — ``trim`` strips only U+0020); ``array_remove``
+    drops them, codegen'd and cheaper than trimming first (noop
+    projection of 80k documents on 4 vCPUs: 0.36 s, vs 0.41 s with
+    ``trim`` and 0.54 s with ``btrim(col, _WS)``)."""
+    return F.array_remove(F.split(F.lower(col), "\\s+"), "")
 
 
 def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
+def ngrams(col: Column, n: int = 3) -> Column:
+    """ALL word n-gram occurrences of ``tokens(col)`` in order,
+    duplicates preserved; docs with < n tokens give an empty array.
+    transform/slice are CodegenFallback (CLAUDE.md rule 3) — this is
+    the no-Python reference form; hot paths use ``ngrams_arrow``."""
+    toks = tokens(col)
+    k = F.size(toks) - F.lit(n - 1)
+    return F.when(k <= 0, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), k),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+    )
 
 
-#: Java \s whitespace set (space \t \n \x0b \f \r)
-_WS = " \t\n\x0b\f\r"
-_ALNUM = ("abcdefghijklmnopqrstuvwxyz"
-          "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789")
+def words(text: str) -> list[str]:
+    """Python twin of ``tokens``: the same words for any string.
+    Stripping the \\s set first is cheaper than filtering the empty
+    edge strings out of a raw split."""
+    t = text.lower().strip(_WS)
+    return _WS_ASCII.split(t) if t else []
+
+
+def word_ngrams(text: str, n: int) -> list[str]:
+    """Python twin of ``ngrams``."""
+    toks = words(text)
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
+def ngrams_arrow(n: int = 3):
+    """Arrow-batched ``ngrams`` — same values, built per batch in tight
+    Python instead of the per-row interpreted HOF chain. NULL → [].
+
+    Marked nondeterministic although it is a pure function: that stops
+    Catalyst from copying the call into a filter pushed below the
+    projection (``size(g) > 0``, or the one it infers for an explode),
+    which evaluated the UDF twice per document."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("array<string>")
+    def ng(texts: pd.Series) -> pd.Series:
+        return pd.Series([[] if t is None else word_ngrams(t, n)
+                          for t in texts])
+
+    return ng.asNondeterministic()
 
 
 def non_space_char_count(col: Column) -> Column:
@@ -63,12 +120,6 @@ def symbol_ratio(col: Column) -> Column:
     n = F.length(col)
     symbols = F.length(F.translate(col, _ALNUM + _WS, ""))
     return F.when(n > 0, symbols / n).otherwise(F.lit(0.0))
-
-
-def digit_ratio(col: Column) -> Column:
-    n = F.length(col)
-    digits = n - F.length(F.regexp_replace(col, "[0-9]", ""))
-    return F.when(n > 0, digits / n).otherwise(F.lit(0.0))
 
 
 def distinct_token_ratio(col: Column) -> Column:
@@ -223,19 +274,9 @@ def gopher_fail(col: Column, params: dict | None = None) -> Column:
 # pipeline/quality.py; the plain versions stay for ad-hoc single rules
 # and the DuckDB-oracle-checked query surface.
 
-def token_count_t(toks: Column) -> Column:
-    return F.size(toks)
-
-
 def mean_word_length_t(col: Column, toks: Column) -> Column:
     n = F.size(toks)
     return F.when(n > 0, non_space_char_count(col) / n).otherwise(F.lit(0.0))
-
-
-def stopword_count_t(col: Column, words: list[str] | None = None) -> Column:
-    # regexp_count over the raw text is codegen'd; the token-array HOF
-    # form is CodegenFallback (see _word_set_pattern)
-    return stopword_count(col, words)
 
 
 def distinct_token_ratio_t(toks: Column) -> Column:

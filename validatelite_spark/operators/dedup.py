@@ -34,14 +34,18 @@ both deterministic (min-key representative, sorted pair ids).
 from __future__ import annotations
 
 import logging
-import re as _re
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, ShortType
 
-from validatelite_spark.functions.textquality import fingerprint, tokens
+from validatelite_spark.functions.textquality import (
+    fingerprint,
+    ngrams,
+    tokens,
+    word_ngrams,
+)
 from validatelite_spark.session import checkpoint
 from validatelite_spark.sources.reader import spread
 
@@ -183,51 +187,23 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text",
 
 # --------------------------------------------------------------- shingles
 def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (lowercased, whitespace-tokenized).
-    Docs with < n tokens produce an empty array."""
-    toks = tokens(col)
-    k = F.size(toks) - F.lit(n - 1)
-    return F.when(k <= 0, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        )
-    )
-
-
-_WS_ASCII = _re.compile(r"\s+", _re.ASCII)  # = Java/RE2 \s on this data
+    """Distinct word n-gram shingles (``textquality.ngrams``, first-
+    occurrence order). Docs with < n tokens produce an empty array."""
+    return F.array_distinct(ngrams(col, n))
 
 
 def shingles_arrow(n: int = 3):
-    """Arrow-batched shingle UDF — same values as ``shingles`` (word
-    n-grams of lowercased ASCII-whitespace tokens, distinct, first-
-    occurrence order) but built in tight Python per batch instead of a
-    CodegenFallback higher-order-function chain interpreted per row
-    (BENCH.md lesson 2: transform/slice/concat_ws don't codegen).
-
-    Marked nondeterministic although it is a pure function: that is
-    what stops Catalyst from copying the call into a filter pushed
-    below the projection (``size(sh) > 0``, or the one it infers for
-    an explode), which evaluated the UDF twice per document."""
+    """Arrow-batched shingle UDF — same values as ``shingles`` but
+    built in tight Python per batch instead of a CodegenFallback
+    higher-order-function chain interpreted per row (BENCH.md lesson
+    2). Nondeterministic for the reason given on ``ngrams_arrow``."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
     def sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            toks = [x for x in _WS_ASCII.split(t.lower()) if x]
-            if len(toks) < n:
-                out.append([])
-                continue
-            out.append(list(dict.fromkeys(
-                " ".join(toks[i:i + n])
-                for i in range(len(toks) - n + 1))))
-        return pd.Series(out)
+        return pd.Series([[] if t is None
+                          else list(dict.fromkeys(word_ngrams(t, n)))
+                          for t in texts])
 
     return sh.asNondeterministic()
 
@@ -501,23 +477,6 @@ def _band_table(ex: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     ])
     return sig.select(F.col("k"),
                       F.posexplode(band_sigs).alias("band", "sig"))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 96,
-) -> DataFrame:
-    """(k, h0..h{H-1}) min-hash signature per doc: explode distinct
-    shingles once, take the min of xxhash64(shingle, seed_i) per seed —
-    one partial-aggregating groupBy, no Python."""
-    t = _shingle_table(df, text_col, key_col, n)
-    ex = t.select("k", F.explode("sh").alias("s"))
-    aggs = [F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)]
-    return ex.groupBy("k").agg(*aggs)
 
 
 def minhash_lsh_pairs(

@@ -18,7 +18,7 @@ Spark-first shape, 100 TB notes:
 
 - Gram extraction is ONE fused Arrow UDF per pass emitting the
   uni+bigram occurrence list (byte-identical to concatenating
-  ``repetition.ngrams_all_arrow(1)`` and ``(2)``, at one tokenizer
+  ``textquality.ngrams_arrow(1)`` and ``(2)``, at one tokenizer
   pass and one JVM↔Python round trip), and the raw-side gram-bucket
   table is persisted so the model fit and the scorer share one pass. Bucketing is a pure-Column
   ``conv(substr(md5(g),1,8),16,10) % B`` — the repo's engine-portable
@@ -50,6 +50,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from validatelite_spark.functions.textquality import words
+
 
 DEFAULT_BUCKETS = 4096
 _DENOM = 1_000_000
@@ -59,12 +61,10 @@ def _doc_grams(text: Column) -> Column:
     """Word unigram + bigram occurrences (duplicates preserved —
     DSIR's features are counts, not sets). ONE Arrow round trip: the
     fused builder emits the concatenated uni+bigram list per doc —
-    byte-identical to concat(ngrams_all_arrow(1), ngrams_all_arrow(2))
+    byte-identical to concat(ngrams_arrow(1), ngrams_arrow(2))
     (same tokens, same order) at half the JVM↔Python traffic and one
     tokenizer pass instead of two."""
     from pyspark.sql.functions import pandas_udf
-
-    from validatelite_spark.operators.dedup import _WS_ASCII
 
     @pandas_udf("array<string>")
     def uni_bi(texts: pd.Series) -> pd.Series:
@@ -73,7 +73,7 @@ def _doc_grams(text: Column) -> Column:
             if t is None:
                 out.append([])
                 continue
-            toks = [x for x in _WS_ASCII.split(t.lower()) if x]
+            toks = words(t)
             out.append(toks + [toks[i] + " " + toks[i + 1]
                                for i in range(len(toks) - 1)])
         return pd.Series(out)

@@ -32,23 +32,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from validatelite_spark.functions.textquality import tokens
+
 
 def domain_term_counts(
     df: DataFrame,
     text_col: str = "text",
     by: str = "source",
-    lowercase: bool = True,
 ) -> DataFrame:
-    """(domain, term, tf): whitespace tokens, empties dropped — the
-    one corpus-wide pass (same tokenization contract as
-    functions/bpe.py word_frequencies)."""
-    t = F.col(text_col)
-    if lowercase:
-        t = F.lower(t)
-    return (df.filter(F.col(text_col).isNotNull())
-            .select(F.col(by).alias("domain"),
-                    F.explode(F.split(t, r"\s+")).alias("term"))
-            .filter(F.col("term") != "")
+    """(domain, term, tf) over ``textquality.tokens`` — the one
+    corpus-wide pass (same tokenization as functions/bpe.py
+    word_frequencies)."""
+    return (df.select(F.col(by).alias("domain"),
+                      F.explode(tokens(F.col(text_col))).alias("term"))
             .groupBy("domain", "term")
             .agg(F.count(F.lit(1)).alias("tf")))
 
@@ -119,12 +115,7 @@ def vocab_coverage(
     those ≤ ``top_k`` rows — bounded by construction, never by corpus
     or vocab size. Deterministic at any partitioning: the (count DESC,
     term ASC) order is total."""
-    from pyspark.sql import Window
-
-    from validatelite_spark.functions.textquality import tokens
-
     tf = (df.select(F.explode(tokens(F.col(text_col))).alias("term"))
-          .filter(F.col("term") != "")
           .groupBy("term").count()
           .withColumnRenamed("count", "n"))
     total = tf.agg(F.sum("n").alias("__tot"))

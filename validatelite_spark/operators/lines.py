@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from validatelite_spark.functions.textquality import tokens
+from validatelite_spark.functions.textquality import words
 
 
 def _first_occurrence_rebuild(df, units, dedupable, join_sep,
@@ -142,8 +142,6 @@ def chunk_dedup(
     equality pinned in tests/test_lines.py)."""
     from pyspark.sql.functions import pandas_udf
 
-    from validatelite_spark.operators.dedup import _WS_ASCII
-
     w = window_tokens
 
     @pandas_udf("array<string>")
@@ -153,7 +151,7 @@ def chunk_dedup(
             if t is None:
                 out.append([])
                 continue
-            tk = [x for x in _WS_ASCII.split(t.lower()) if x]
+            tk = words(t)
             out.append([" ".join(tk[i:i + w])
                         for i in range(0, len(tk), w)])
         return pd.Series(out)

@@ -35,48 +35,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from validatelite_spark.functions.textquality import tokens
+from validatelite_spark.functions.textquality import (
+    ngrams,
+    ngrams_arrow,
+    word_ngrams,
+)
 from validatelite_spark.operators.dedup import _shingle_table
-
-
-def ngrams_all(col: Column, n: int = 3) -> Column:
-    """ALL word n-gram occurrences (lowercased, whitespace-tokenized),
-    duplicates preserved — unlike ``dedup.shingles`` which is a distinct
-    set.  Docs with < n tokens produce an empty array."""
-    toks = tokens(col)
-    k = F.size(toks) - F.lit(n - 1)
-    return F.when(k <= 0, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
-
-
-def ngrams_all_arrow(n: int = 3):
-    """Arrow-batched variant of ``ngrams_all`` — same values, built in
-    tight Python per batch instead of a CodegenFallback HOF chain
-    (BENCH.md lesson 2).  Default path for the DataFrame operators."""
-    from pyspark.sql.functions import pandas_udf
-
-    from validatelite_spark.operators.dedup import _WS_ASCII
-
-    @pandas_udf("array<string>")
-    def ng(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            toks = [x for x in _WS_ASCII.split(t.lower()) if x]
-            if len(toks) < n:
-                out.append([])
-                continue
-            out.append([" ".join(toks[i:i + n])
-                        for i in range(len(toks) - n + 1)])
-        return pd.Series(out)
-
-    return ng
 
 
 def dup_ngram_fraction(col: Column, n: int = 3) -> Column:
@@ -88,7 +52,7 @@ def dup_ngram_fraction(col: Column, n: int = 3) -> Column:
     (CodegenFallback, BENCH.md lesson 2) — fine in a merged metrics
     scan, but keep it out of per-row hot projections; bulk annotation
     should go through ``repetition_signals``."""
-    ng = ngrams_all(col, n)
+    ng = ngrams(col, n)
     t = F.size(ng)
     return F.when(t <= 0, F.lit(0.0)).otherwise(
         F.lit(1.0) - F.size(F.array_distinct(ng)) / t)
@@ -103,8 +67,6 @@ def dup_ngram_fraction_arrow(n: int = 3):
     measured ~40× slower on the metrics scan."""
     from pyspark.sql.functions import pandas_udf
 
-    from validatelite_spark.operators.dedup import _WS_ASCII
-
     @pandas_udf("double")
     def frac(texts: pd.Series) -> pd.Series:
         out = []
@@ -112,14 +74,8 @@ def dup_ngram_fraction_arrow(n: int = 3):
             if t is None:
                 out.append(None)
                 continue
-            toks = [x for x in _WS_ASCII.split(t.lower()) if x]
-            total = len(toks) - n + 1
-            if total <= 0:
-                out.append(0.0)
-                continue
-            distinct = len({" ".join(toks[i:i + n])
-                            for i in range(total)})
-            out.append(1.0 - distinct / total)
+            ng = word_ngrams(t, n)
+            out.append(1.0 - len(set(ng)) / len(ng) if ng else 0.0)
         return pd.Series(out)
 
     return frac
@@ -164,8 +120,8 @@ def repetition_signals(
     Two-level aggregation: count per (doc, ngram), then roll up per doc —
     both partial-agg map-side; see module docstring for the scale story.
     """
-    ng = (ngrams_all_arrow(n)(F.col(text_col)) if arrow
-          else ngrams_all(F.col(text_col), n))
+    ng = (ngrams_arrow(n)(F.col(text_col)) if arrow
+          else ngrams(F.col(text_col), n))
     ex = df.select(F.col(id_col), F.explode(ng).alias("s"))
     per = ex.groupBy(id_col, "s").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -209,7 +165,7 @@ def top_ngrams(
     (deterministic). ``min_docs`` drops the singleton tail before the
     top-k (the overwhelming majority of n-grams — they can never be
     boilerplate)."""
-    ng = ngrams_all_arrow(n)(F.col(text_col))
+    ng = ngrams_arrow(n)(F.col(text_col))
     # occurrences + containing-doc count in one pass: count per
     # (doc, ngram) first, then roll up — both aggs partial map-side
     per_doc = (docs.select(F.col(id_col).alias("__d"),

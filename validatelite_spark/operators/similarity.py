@@ -18,8 +18,6 @@
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -34,10 +32,6 @@ def _dot(a: Column, b: Column) -> Column:
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
                               F.lit(0.0), lambda acc, v: acc + v))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _cosine_udf():
@@ -99,8 +93,8 @@ def brute_force_topk(
 
     Output: (query_id, neighbor_id, score, rank), rank 1..k, ties broken
     by neighbor_id for determinism. Self-matches excluded."""
-    # norms are precomputed per vector (not per pair) — identical
-    # arithmetic to cosine(), ~3x fewer array reductions in the join
+    # norms are precomputed per vector (not per pair) — the same
+    # dot / (norm * norm) arithmetic, ~3x fewer array reductions
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("qv"),
                        _norm(F.col(vec_col)).alias("qn"))

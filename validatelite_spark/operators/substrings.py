@@ -40,9 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from validatelite_spark.functions.textquality import tokens
+from validatelite_spark.functions.textquality import (
+    ngrams,
+    ngrams_arrow,
+    tokens,
+)
 from validatelite_spark.operators.dedup import DEFAULT_DF_CAP, _cooccurrence
-from validatelite_spark.operators.winnowing import _grams_arrow
 from validatelite_spark.sources.reader import spread
 
 
@@ -54,16 +57,8 @@ def positional_grams(df: DataFrame, text_col: str = "text",
     batch (hot path — CLAUDE.md rule 3 keeps higher-order functions out
     of corpus-wide projections); False keeps a pure-Column expression
     for no-Python contexts."""
-    if arrow:
-        gs = _grams_arrow(n)(F.col(text_col))
-    else:
-        w = tokens(F.col(text_col))
-        gs = F.when(
-            F.size(w) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - n + 1),
-                lambda i: F.array_join(F.slice(w, i, F.lit(n)), " ")),
-        ).otherwise(F.array().cast("array<string>"))
+    gs = (ngrams_arrow(n)(F.col(text_col)) if arrow
+          else ngrams(F.col(text_col), n))
     return (spread(df).select(F.col(key_col).alias("k"), gs.alias("gs"))
             .filter(F.size("gs") > 0)
             .select("k", F.posexplode("gs").alias("pos0", "g"))

@@ -32,10 +32,10 @@ the shared counts use the packed-key ``dedup._pair_counts``.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from validatelite_spark.functions.textquality import ngrams, ngrams_arrow
 from validatelite_spark.operators.dedup import (
     DEFAULT_DF_CAP,
     _cooccurrence,
@@ -44,35 +44,6 @@ from validatelite_spark.operators.dedup import (
 )
 
 _POS_MOD = 1 << 20  # max supported n-grams per document
-
-
-def _grams_arrow(n: int):
-    """ORDERED word n-grams with duplicates (winnowing needs the
-    sequence, unlike the deduped shingle SET) — one Arrow batch,
-    keeping the higher-order-function chain out of the corpus-wide
-    projection (CLAUDE.md rule 3).
-
-    Tokenizer is ``_WS_ASCII`` (= Java ``\\s``), NOT ``str.split()``
-    (Unicode whitespace): the positions this builder emits are
-    consumed by ``substring_scrub``, which cuts spans out of the
-    Column-path ``tokens()`` sequence — a Unicode-only separator
-    (U+00A0 etc.) would shift every later position and scrub the wrong
-    words (ADVICE r05 #1). Matches ``shingles_arrow``'s convention,
-    including the nondeterministic marking."""
-    from validatelite_spark.operators.dedup import _WS_ASCII
-
-    @F.pandas_udf("array<string>")
-    def g(s: pd.Series) -> pd.Series:
-        out = []
-        for t in s:
-            if t is None:
-                out.append([])
-                continue
-            toks = [x for x in _WS_ASCII.split(t.lower()) if x]
-            out.append([" ".join(toks[i:i + n])
-                        for i in range(len(toks) - n + 1)])
-        return pd.Series(out)
-    return g.asNondeterministic()
 
 
 def winnow_fingerprints(
@@ -89,18 +60,8 @@ def winnow_fingerprints(
     contexts / the oracle-anchor plan); both produce identical rows."""
     if window < 1 or n < 1:
         raise ValueError("n and window must be >= 1")
-    if arrow:
-        grams = _grams_arrow(n)(F.col(text_col))
-    else:
-        toks = F.split(F.lower(F.col(text_col)), r"\s+")
-        toks = F.filter(toks, lambda t: t != "")
-        # sequence(0, negative) DESCENDS in Spark — guard short docs
-        grams = F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-        ).otherwise(F.array().cast("array<string>"))
+    grams = (ngrams_arrow(n)(F.col(text_col)) if arrow
+             else ngrams(F.col(text_col), n))
     base = (df.filter(F.col(text_col).isNotNull())
             .select(F.col(key_col).alias("k"), grams.alias("g"))
             .filter(F.size("g") >= 1)

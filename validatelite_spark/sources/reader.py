@@ -133,15 +133,6 @@ def read_iceberg(spark: SparkSession, table: str) -> DataFrame:
             f"read parquet instead ({e})") from e
 
 
-def write_sink(df: DataFrame, path: str, fmt: str = "parquet",
-               mode: str = "overwrite",
-               partition_by: Optional[list[str]] = None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    getattr(writer, fmt)(path)
-
-
 def _sheet_to_df(spark: SparkSession, header: list[str],
                  rows: list[list]) -> DataFrame:
     import pandas as pd

@@ -6,11 +6,10 @@ is its Spark realization: the SAME compiled rule predicates run over
 ``readStream`` micro-batches — the rule compiler is execution-mode
 agnostic, so batch and streaming cannot drift apart.
 
-Two shapes:
-- ``streaming_annotate``  — per-document flags + keep + scrubbed text on
-  an unbounded stream (append mode, stateless → scales linearly).
-- ``windowed_keep_metrics`` — event-time tumbling-window keep/drop
-  counts with a watermark for late data (stateful windowed agg).
+``windowed_keep_metrics`` gives event-time tumbling-window keep/drop
+counts with a watermark for late data (stateful windowed agg); plain
+per-document annotation of a stream is ``QualityPipeline.annotate``
+itself (a pure projection).
 """
 
 from __future__ import annotations
@@ -19,12 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from validatelite_spark.pipeline.quality import QualityPipeline
-
-
-def streaming_annotate(pipe: QualityPipeline, stream: DataFrame) -> DataFrame:
-    """Stateless per-row annotation — valid on a streaming DataFrame
-    because ``annotate`` is a pure projection (no agg, no sort)."""
-    return pipe.annotate(stream)
 
 
 def windowed_keep_metrics(
