@@ -419,8 +419,8 @@ def _q_repetition_rule(spark, sf_dir):
     from validatelite_spark.plans.compiler import compile_rule
     df = _read(spark, sf_dir, "documents")
     fail = compile_rule(
-        Rule("REPETITION", "text", {"n": 3, "max_dup_ngram_frac": 0.2})
-    ).fail_predicate
+        Rule("REPETITION", "text", {"n": 3, "max_dup_ngram_frac": 0.2}),
+        df.schema).fail_predicate
     return df.agg(
         F.count(F.lit(1)).alias("total_records"),
         F.sum(F.when(fail, 1).otherwise(0)).alias("failed_records"))
@@ -3052,8 +3052,8 @@ def _q_boilerplate_rule(spark, sf_dir):
     mined = [r["line"]
              for r in top_lines(df, k=25, min_docs=2).collect()]
     fail = compile_rule(
-        Rule("BOILERPLATE", "text", {"lines": mined, "max_frac": 0.5})
-    ).fail_predicate
+        Rule("BOILERPLATE", "text", {"lines": mined, "max_frac": 0.5}),
+        df.schema).fail_predicate
     return df.agg(
         F.count(F.lit(1)).alias("total_records"),
         F.sum(F.when(fail, 1).otherwise(0)).alias("failed_records"))
@@ -3150,7 +3150,7 @@ def _q_classifier_rule(spark, sf_dir):
     fail = compile_rule(
         Rule("CLASSIFIER", "text",
              {"weights": _clf_weights(), "bias": 0.25,
-              "min_score": 0.5})).fail_predicate
+              "min_score": 0.5}), df.schema).fail_predicate
     return df.agg(
         F.count(F.lit(1)).alias("total_records"),
         F.sum(F.when(fail, 1).otherwise(0)).alias("failed_records"))

@@ -119,12 +119,6 @@ class TestFusedExecution:
         assert r1.total_records == 6
         assert r2.total_records == 3 and r2.failed_records == 0
 
-    def test_merge_disabled_still_correct(self, spark, people):
-        eng = RuleEngine(spark, EngineConfig(merge_execution_enabled=False))
-        results = eng.execute(people, [not_null("name"),
-                                       range_rule("age", min=0, max=120)])
-        assert [r.failed_records for r in results] == [1, 3]
-
 
 class TestSamplesAndErrors:
     def test_lazy_samples_deterministic(self, engine, people):
@@ -167,3 +161,110 @@ class TestSchemaRule:
             {"id": "integer"}, strict_mode=True))
         # 5 extra columns fail in strict mode
         assert res.failed_records == 5
+
+
+STATUS = ["active", "inactive", "pending", "unknown", None]
+
+
+def _pinned_row(i):
+    code = '{"k": %d}' % ((i * 13) % 50)
+    if i % 10 == 7:
+        code += "\r\n"  # re's `$` does not match before "\r\n"
+    elif i % 8 == 5:
+        code += "\n"  # ... but does before a final "\n"
+    return (i, None if i % 7 == 3 else f"n{i % 11}",
+            None if i % 9 == 4 else float((i * 37) % 130) - 10.0,
+            STATUS[i % 5], code,
+            None if i % 6 == 1
+            else f"2023-{i % 14 + 1:02d}-{(i * 3) % 31 + 1:02d}")
+
+
+@pytest.fixture(scope="module")
+def pinned(spark):
+    """30 deterministic rows; ``id`` (first column) is unique, so the
+    sample order has no ties."""
+    return spark.createDataFrame(
+        [_pinned_row(i) for i in range(30)],
+        "id long, name string, score double, status string, code string, "
+        "day string")
+
+
+def _pinned_rules():
+    """All 7 rule types (REGEX once native, once on the ``re`` tier), and
+    a filtered rule in its own merge group."""
+    return [
+        not_null("name"), unique("name"),
+        range_rule("score", min=0, max=100),
+        enum("status", ["active", "pending"]),
+        regex("code", r'^\{"k": [1-9]?[0-3]\}$'),
+        regex("code", r'^\{"k": \d+\}$', name="regex_code_digits"),
+        length("name", min_length=3, max_length=10),
+        date_format("day", "YYYY-MM-DD"),
+        not_null("score", filter_condition="id % 2 = 0"),
+    ]
+
+
+#: (rule, failed_records, sample_data) as the engine gave them when each
+#: failing rule took its samples in its own filter → orderBy → limit scan.
+PINNED = [
+    ("not_null_name", 4,
+     [(3, None, 101.0, "unknown", '{"k": 39}', "2023-04-10"),
+      (10, None, 100.0, "active", '{"k": 30}', "2023-11-31"),
+      (17, None, 99.0, "pending", '{"k": 21}\r\n', "2023-04-21")]),
+    ("unique_name", 15,
+     [("n0", 3), ("n1", 3), ("n2", 2), ("n3", 2), ("n4", 3), ("n5", 3)]),
+    ("range_score", 9,
+     [(0, "n0", -10.0, "active", '{"k": 0}', "2023-01-01"),
+      (3, None, 101.0, "unknown", '{"k": 39}', "2023-04-10"),
+      (4, "n4", None, None, '{"k": 2}', "2023-05-13")]),
+    ("enum_status", 12,
+     [(1, "n1", 27.0, "inactive", '{"k": 13}', None),
+      (3, None, 101.0, "unknown", '{"k": 39}', "2023-04-10"),
+      (6, "n6", 82.0, "inactive", '{"k": 28}', "2023-07-19")]),
+    ("regex_code", 21,
+     [(2, "n2", 64.0, "pending", '{"k": 26}', "2023-03-07"),
+      (3, None, 101.0, "unknown", '{"k": 39}', "2023-04-10"),
+      (5, "n5", 45.0, "active", '{"k": 15}\n', "2023-06-16")]),
+    ("regex_code_digits", 3,
+     [(7, "n7", 119.0, "pending", '{"k": 41}\r\n', None),
+      (17, None, 99.0, "pending", '{"k": 21}\r\n', "2023-04-21"),
+      (27, "n5", 79.0, "pending", '{"k": 1}\r\n', "2023-14-20")]),
+    ("length_name", 29,
+     [(0, "n0", -10.0, "active", '{"k": 0}', "2023-01-01"),
+      (1, "n1", 27.0, "inactive", '{"k": 13}', None),
+      (2, "n2", 64.0, "pending", '{"k": 26}', "2023-03-07")]),
+    ("date_format_day", 4,
+     [(10, None, 100.0, "active", '{"k": 30}', "2023-11-31"),
+      (12, "n1", 44.0, "pending", '{"k": 6}', "2023-13-06"),
+      (26, "n4", 42.0, "inactive", '{"k": 38}', "2023-13-17")]),
+    ("not_null_score", 2,
+     [(4, "n4", None, None, '{"k": 2}', "2023-05-13"),
+      (22, "n0", None, "pending", '{"k": 36}', "2023-09-05")]),
+]
+
+
+class TestFusedSamples:
+    def test_samples_pinned(self, spark, pinned):
+        eng = RuleEngine(spark, EngineConfig(sample_data_max_records=3))
+        got = [(r.rule_name, r.failed_records,
+                [tuple(s.values()) for s in r.sample_data])
+               for r in eng.execute(pinned, _pinned_rules())]
+        assert got == PINNED
+
+    def test_merged_samples_cost_at_most_two_jobs(self, spark, pinned):
+        sc = spark.sparkContext
+        eng = RuleEngine(spark, EngineConfig(sample_data_max_records=3))
+        rules = [r for r in _pinned_rules() if r.type is not RuleType.UNIQUE]
+        jobs = {}
+        for samples in (False, True):
+            group = f"pinned-samples-{samples}"
+            sc.setJobGroup(group, group)
+            try:
+                results = eng.execute(pinned, rules, collect_samples=samples)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[samples] = len(sc.statusTracker().getJobIdsForGroup(group))
+        # 8 failing rules in 2 filter groups, one sampling job pair
+        assert sum(r.failed_records > 0 for r in results) == 8
+        assert all(r.sample_data for r in results)
+        assert jobs[True] - jobs[False] <= 2, jobs

@@ -52,7 +52,8 @@ class TestPlanShape:
         df = spark.read.parquet(f"{sf_dir}/documents.parquet")
         rules = [not_null("text"), range_rule("n_chars", 0, 400),
                  enum("lang", ["en"]), length("text", 1, 10_000)]
-        [group] = build_merge_groups([compile_rule(r) for r in rules])
+        [group] = build_merge_groups([compile_rule(r, df.schema)
+                                       for r in rules])
         agg = df.agg(*group.agg_columns())
         plan = plan_of(agg)
         assert plan.count("FileScan") == 1, "merged rules must scan once"

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from validatelite_spark.core import registry
 from validatelite_spark.core.rule_parser import RuleParseError, parse_rule
@@ -18,6 +19,8 @@ from validatelite_spark.core.rules import (
     RuleValidationError,
 )
 from validatelite_spark.plans.compiler import Tier, compile_rule
+
+TEXT = T.StructType([T.StructField("text", T.StringType())])
 
 
 @pytest.fixture
@@ -56,9 +59,9 @@ class TestRegistry:
         for name in ("LANG_ID", "GOPHER", "PERPLEXITY", "PII_SCRUB"):
             assert registry.get_rule_type(name) is not None
         r = Rule(RuleType.GOPHER, "text")
-        assert compile_rule(r).tier is Tier.NATIVE
+        assert compile_rule(r, TEXT).tier is Tier.NATIVE
         r = Rule(RuleType.PERPLEXITY, "text", {"max_ppl": 10.0})
-        assert compile_rule(r).tier is Tier.UDF
+        assert compile_rule(r, TEXT).tier is Tier.UDF
 
     def test_rule_model_accepts_registered_type(self, all_caps_type):
         r = Rule("all_caps", "title")
@@ -123,7 +126,7 @@ class TestRegistry:
             "GOPHER", lambda rule: F.lit(True), tier="NATIVE",
             replace=True)
         try:
-            compiled = compile_rule(Rule(RuleType.GOPHER, "text"))
+            compiled = compile_rule(Rule(RuleType.GOPHER, "text"), TEXT)
             assert compiled.tier is Tier.NATIVE
             # the override's constant-true predicate, not gopher_fail
             assert "true" in str(compiled.fail_predicate).lower()

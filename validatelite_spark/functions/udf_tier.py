@@ -1,4 +1,4 @@
-"""Vectorized (Arrow/pandas) UDF tier — the slow-path predicates.
+"""Vectorized (Arrow/pandas) UDF tier — the Python-exact predicates.
 
 The reference extends SQLite with registered Python scalar functions
 (reference: shared/database/sqlite_functions.py:11-244). Here the same
@@ -10,20 +10,16 @@ Semantics preserved exactly:
 
 - ``regex_fail``      — Python ``re`` engine parity (reference dialects are
   MySQL REGEXP / PG ~ / Python re; we standardize on ``re``, SURVEY §2.2).
-  NULL does NOT fail (SQL ``NOT REGEXP`` on NULL is unknown).
+  NULL does NOT fail (SQL ``NOT REGEXP`` on NULL is unknown). The
+  parity reference of the ``rlike`` tier (``plans.compiler.java_regex``).
 - ``date_format_fail`` — strptime *round-trip* check rejecting 2023-02-31;
   NULL/empty string passes (reference: sqlite_functions.py:177-213).
-- ``invalid_integer_digits`` / ``invalid_float_precision`` /
-  ``invalid_string_length`` — ports of the reference's DETECT_* functions
-  (reference: sqlite_functions.py:11-132); NULL passes.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Optional
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -49,13 +45,6 @@ def regex_fail(col: Column, pattern: str) -> Column:
     return _fail(col)
 
 
-def regex_fail_native(col: Column, pattern: str) -> Column:
-    """JVM fast path via ``rlike`` (Java regex). Only safe when the pattern
-    uses the common subset where Java and Python agree; used as an opt-in
-    performance prefilter."""
-    return col.isNotNull() & ~col.rlike(pattern)
-
-
 def date_format_fail(col: Column, fmt: str) -> Column:
     """Failure predicate: string fails the strptime round-trip for ``fmt``
     (``YYYY-MM-DD`` token style). NULL/blank passes. Vectorized via
@@ -74,62 +63,5 @@ def date_format_fail(col: Column, fmt: str) -> Column:
         ok = parsed.notna() & (rendered == vals)
         fail = ~(ok | blank)
         return fail.fillna(True).astype(bool)
-
-    return _fail(col)
-
-
-def invalid_string_length(col: Column, max_len: int) -> Column:
-    """len(str(v)) > max_len; NULL passes (reference: sqlite_functions.py:49-67).
-    Native — no UDF needed."""
-    return col.isNotNull() & (F.length(col.cast("string")) > max_len)
-
-
-def invalid_integer_digits(col: Column, max_digits: int) -> Column:
-    """Failure: value is not numeric-integral, or digits(abs(int)) > max_digits;
-    NULL passes (reference: sqlite_functions.py:11-46)."""
-
-    @F.pandas_udf(T.BooleanType())
-    def _fail(s: pd.Series) -> pd.Series:
-        vals = s.astype("string")
-        out = pd.Series(False, index=s.index)
-        nn = vals.notna()
-        num = pd.to_numeric(vals[nn], errors="coerce")
-        # non-numeric → fail
-        bad = num.isna()
-        # numeric but fractional → fail
-        frac = ~bad & (num != np.floor(num))
-        # integral: digit count of abs value
-        ints = num[~bad & ~frac].abs().astype("int64").astype(str)
-        too_many = ints.str.len() > max_digits
-        out.loc[bad[bad].index] = True
-        out.loc[frac[frac].index] = True
-        out.loc[too_many[too_many].index] = True
-        return out.astype(bool)
-
-    return _fail(col)
-
-
-def invalid_float_precision(col: Column, precision: int, scale: int) -> Column:
-    """Failure: decimal decomposition violates (precision, scale):
-    integer digits > precision - scale, or decimal digits > scale.
-    NULL passes (reference: sqlite_functions.py:70-132)."""
-
-    @F.pandas_udf(T.BooleanType())
-    def _fail(s: pd.Series) -> pd.Series:
-        vals = s.astype("string").str.strip()
-        out = pd.Series(False, index=s.index)
-        nn = vals.notna() & (vals != "")
-        if not nn.any():
-            return out.astype(bool)
-        v = vals[nn].str.lstrip("+-")
-        num = pd.to_numeric(vals[nn], errors="coerce")
-        bad = num.isna()
-        int_part = v.str.split(".", n=1).str[0].str.lstrip("0").fillna("")
-        dec_part = v.str.split(".", n=1).str[1].fillna("").str.rstrip("0")
-        max_int = precision - scale
-        viol = (int_part.str.len() > max_int) | (dec_part.str.len() > scale)
-        out.loc[bad[bad].index] = True
-        out.loc[viol[viol & ~bad].index] = True
-        return out.astype(bool)
 
     return _fail(col)

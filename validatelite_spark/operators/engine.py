@@ -5,16 +5,17 @@ The Spark-native analogue of the reference's RuleEngine
 
 1. **prevalidation** (driver-side over df.schema — no job; reference
    rule_engine.py:609-735) → invalid rules short-circuit to ERROR results;
-2. **compile** every valid rule to its tier (plans/compiler.py);
+2. **compile** every valid rule to its tier against ``df.schema``
+   (plans/compiler.py; REGEX's pattern and column type pick the tier);
 3. **merge** all NATIVE+UDF rules with the same filter into ONE fused
    ``df.agg()`` scan per filter group (plans/merger.py) — this also folds
    in the total row count, so K mergeable rules cost exactly one scan;
 4. **UNIQUE** rules run one aggregate job each (operators/uniqueness.py);
 5. **SCHEMA** rules run metadata-only (operators/schema_check.py);
-6. **lazy failure sampling** — only for rules with failed > 0, a
-   ``filter(pred).orderBy(key).limit(k)`` job (reference O7:
-   base_executor.py:292-347), deterministically ordered so resumed or
-   re-partitioned runs produce identical samples (SURVEY §7 determinism).
+6. **lazy failure sampling** — all merged rules with failed > 0 share
+   ONE windowed query (plans/merger.py ``failure_samples``; reference
+   O7: base_executor.py:292-347), deterministically ordered so resumed
+   or re-partitioned runs produce identical samples (SURVEY §7).
 
 Error taxonomy preserved: per-rule exceptions become ERROR results and the
 run continues (reference: rule_engine.py:230-256) — mandatory isolation at
@@ -25,10 +26,9 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Any, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from validatelite_spark.core.results import (
     DatasetMetrics,
@@ -41,27 +41,23 @@ from validatelite_spark.operators import uniqueness
 from validatelite_spark.operators.schema_check import check_schema
 from validatelite_spark.plans.compiler import CompiledRule, Tier, compile_rule
 from validatelite_spark.plans.merger import (
-    DEFAULT_MAX_RULES_PER_MERGE,
     TOTAL_ALIAS,
     build_merge_groups,
+    failure_samples,
 )
 from validatelite_spark.plans.prevalidation import prevalidate
 
 
 @dataclass
 class EngineConfig:
-    """Mirrors the reference's core config surface
-    (reference: core/config.py:14-55, config/core.toml)."""
+    """The sample settings of the reference's core config (reference:
+    core/config.py:14-55); the rules alone choose the plan."""
 
-    merge_execution_enabled: bool = True
-    max_rules_per_merge: int = DEFAULT_MAX_RULES_PER_MERGE
     sample_data_max_records: int = 5
-    # deterministic sample ordering column; default = first df column
+    # deterministic sample ordering column; default = first kept column
     sample_order_column: Optional[str] = None
     # exclude wide/binary columns from collected samples
     sample_exclude_columns: tuple[str, ...] = ("html",)
-    use_native_regex: bool = False
-    approx_unique: bool = False
 
 
 class RuleEngine:
@@ -79,7 +75,6 @@ class RuleEngine:
         collect_samples: bool = True,
     ) -> list[RuleResult]:
         rules = [r for r in rules if r.is_active]
-        t0 = time.time()
         errors = prevalidate(df, rules)
         results: dict[str, RuleResult] = {}
 
@@ -90,8 +85,7 @@ class RuleEngine:
                     rule, table_name, errors[rule.id])
                 continue
             try:
-                compiled.append(
-                    compile_rule(rule, self.config.use_native_regex))
+                compiled.append(compile_rule(rule, df.schema))
             except Exception as e:  # per-rule isolation
                 results[rule.id] = self._error_result(rule, table_name, str(e))
 
@@ -100,38 +94,46 @@ class RuleEngine:
         schema_rules = [c for c in compiled if c.tier == Tier.METADATA]
 
         # ---- fused single-scan aggregates (O1) ----
-        if mergeable:
-            cap = (self.config.max_rules_per_merge
-                   if self.config.merge_execution_enabled else 1)
-            for group in build_merge_groups(mergeable, cap):
-                g0 = time.time()
-                try:
-                    counts = group.run(df)
-                except Exception as e:
-                    for cr in group.rules:
-                        results[cr.rule.id] = self._error_result(
-                            cr.rule, table_name, str(e))
-                    continue
-                elapsed = time.time() - g0
-                total = counts[TOTAL_ALIAS]
+        failing: list[CompiledRule] = []
+        for group in build_merge_groups(mergeable):
+            g0 = time.time()
+            try:
+                counts = group.run(df)
+            except Exception as e:
                 for cr in group.rules:
-                    failed = counts[cr.rule.id]
-                    results[cr.rule.id] = self._data_result(
-                        cr.rule, table_name, total, failed, elapsed,
-                        plan={"execution_type": "merged_agg",
-                              "group_size": len(group.rules),
-                              "filter": group.filter_condition})
-                    if collect_samples and failed > 0:
-                        results[cr.rule.id].sample_data = self._samples(
-                            df, cr)
+                    results[cr.rule.id] = self._error_result(
+                        cr.rule, table_name, str(e))
+                continue
+            elapsed = time.time() - g0
+            total = counts[TOTAL_ALIAS]
+            for cr in group.rules:
+                failed = counts[cr.rule.id]
+                results[cr.rule.id] = self._data_result(
+                    cr.rule, table_name, total, failed, elapsed,
+                    plan={"execution_type": "merged_agg",
+                          "group_size": len(group.rules),
+                          "filter": group.filter_condition})
+                if failed > 0:
+                    failing.append(cr)
+
+        # ---- failure samples of every failing merged rule (one query) ----
+        if collect_samples and failing:
+            cfg = self.config
+            keep_cols = [c for c in df.columns
+                         if c not in cfg.sample_exclude_columns]
+            samples = failure_samples(
+                df, failing, keep_cols,
+                cfg.sample_order_column or keep_cols[0],
+                cfg.sample_data_max_records)
+            for cr, rows in zip(failing, samples):
+                results[cr.rule.id].sample_data = rows
 
         # ---- UNIQUE (one agg job each) ----
         for cr in unique_rules:
             g0 = time.time()
             try:
                 counts = uniqueness.unique_counts(
-                    df, cr.rule.column, cr.rule.filter_condition,
-                    approximate=self.config.approx_unique)
+                    df, cr.rule.column, cr.rule.filter_condition)
             except Exception as e:
                 results[cr.rule.id] = self._error_result(
                     cr.rule, table_name, str(e))
@@ -169,28 +171,9 @@ class RuleEngine:
             ]
             results[cr.rule.id] = res
 
-        out = [results[r.id] for r in rules if r.id in results]
-        _ = time.time() - t0
-        return out
+        return [results[r.id] for r in rules if r.id in results]
 
     # ------------------------------------------------------------ helpers
-    def _samples(self, df: DataFrame, cr: CompiledRule) -> list[dict[str, Any]]:
-        """Deterministic failure samples (lazy, reference O7)."""
-        scoped = df
-        if cr.rule.filter_condition:
-            scoped = scoped.filter(F.expr(cr.rule.filter_condition))
-        keep_cols = [c for c in df.columns
-                     if c not in self.config.sample_exclude_columns]
-        order = self.config.sample_order_column or keep_cols[0]
-        rows = (
-            scoped.filter(cr.fail_predicate)
-            .select(*keep_cols)
-            .orderBy(order)
-            .limit(self.config.sample_data_max_records)
-            .collect()
-        )
-        return [r.asDict() for r in rows]
-
     def _data_result(self, rule: Rule, table: str, total: int, failed: int,
                      elapsed: float, plan: dict) -> RuleResult:
         status = status_for(failed, total, rule.threshold)

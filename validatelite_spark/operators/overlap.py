@@ -36,28 +36,7 @@ from validatelite_spark.plans.compiler import compile_rule
 MAX_OVERLAP_RULES = 20
 
 
-def _compiled_predicates(rules: list[Rule], use_native_regex: bool):
-    if not rules:
-        raise ValueError("rule_overlap needs at least one rule")
-    if len(rules) > MAX_OVERLAP_RULES:
-        raise ValueError(
-            f"rule_overlap supports at most {MAX_OVERLAP_RULES} rules "
-            f"(got {len(rules)}) — 2^n mask cardinality must stay tiny")
-    compiled = [compile_rule(r, use_native_regex) for r in rules]
-    bad = [c.rule.name for c in compiled if c.fail_predicate is None]
-    if bad:
-        raise ValueError(
-            "rule_overlap needs row-level fail predicates; these rules "
-            f"compile to non-mergeable tiers: {bad} (UNIQUE/SCHEMA "
-            "have no per-row verdict)")
-    return compiled
-
-
-def rule_overlap(
-    df: DataFrame,
-    rules: list[Rule],
-    use_native_regex: bool = False,
-) -> DataFrame:
+def rule_overlap(df: DataFrame, rules: list[Rule]) -> DataFrame:
     """One row per OBSERVED failure combination: ``fail_mask`` (bit i
     set = rules[i] fails the row), ``failed_rules`` (comma-joined rule
     names in rules order; ``""`` for the all-pass row), ``n_rows``.
@@ -66,7 +45,19 @@ def rule_overlap(
     fail predicate is never NULL — the compiler folds the NULL
     verdict into it), so the mask is total: every row lands in exactly
     one combination and ``sum(n_rows)`` is the corpus size."""
-    compiled = _compiled_predicates(rules, use_native_regex)
+    if not rules:
+        raise ValueError("rule_overlap needs at least one rule")
+    if len(rules) > MAX_OVERLAP_RULES:
+        raise ValueError(
+            f"rule_overlap supports at most {MAX_OVERLAP_RULES} rules "
+            f"(got {len(rules)}) — 2^n mask cardinality must stay tiny")
+    compiled = [compile_rule(r, df.schema) for r in rules]
+    bad = [c.rule.name for c in compiled if c.fail_predicate is None]
+    if bad:
+        raise ValueError(
+            "rule_overlap needs row-level fail predicates; these rules "
+            f"compile to non-mergeable tiers: {bad} (UNIQUE/SCHEMA "
+            "have no per-row verdict)")
     mask = F.lit(0).cast("long")
     for i, c in enumerate(compiled):
         mask = mask + F.when(c.fail_predicate, F.lit(1 << i)) \
@@ -81,28 +72,22 @@ def rule_overlap(
                       "n_rows")
 
 
-def rule_marginals(
-    df: DataFrame,
-    rules: list[Rule],
-    use_native_regex: bool = False,
-) -> DataFrame:
+def rule_marginals(df: DataFrame, rules: list[Rule]) -> DataFrame:
     """Per-rule ablation summary derived from the mask table (still
     one corpus scan): ``rule_name``, ``fail_count`` (rows the rule
     fails), ``unique_fail_count`` (rows ONLY this rule fails — its
     irreplaceable contribution: dropping the rule admits exactly these
     rows into the kept set)."""
-    compiled = _compiled_predicates(rules, use_native_regex)
-    masks = rule_overlap(df, rules, use_native_regex)
+    masks = rule_overlap(df, rules)
     # cross the TINY mask table with the rule indices (explode of a
     # literal array — n × 2^n rows at most) instead of unioning n
     # aggregates: a union of n legs would re-evaluate the corpus scan
     # once per rule; this shape keeps exactly one scan in the plan
     idx = F.explode(F.array(*[F.lit(i) for i in
-                              range(len(compiled))])).alias("i")
+                              range(len(rules))])).alias("i")
     name = F.lit(None).cast("string")
-    for i, c in enumerate(compiled):
-        name = F.when(F.col("i") == i, F.lit(c.rule.name)) \
-            .otherwise(name)
+    for i, r in enumerate(rules):
+        name = F.when(F.col("i") == i, F.lit(r.name)).otherwise(name)
     # F.shiftleft's numBits arg is python-int-only — go through expr
     bit = F.expr("shiftleft(CAST(1 AS BIGINT), i)")
     return (masks.select(idx, "fail_mask", "n_rows")

@@ -13,9 +13,7 @@ GROUP BY … HAVING subquery literally, we use the identity
 so ONE aggregate job — ``agg(count(*), sum(isNotNull), count_distinct)``
 — answers total, nonnull, and failed at once, with partial aggregation
 map-side. Exact ``count_distinct`` is a two-phase hash aggregate (one
-shuffle on the column); at 100 TB scale an ``approx_count_distinct``
-pre-check can skip the exact pass when clearly unique (opt-in
-``approximate=True``).
+shuffle on the column).
 
 Duplicate samples (the reference's ``ORDER BY col LIMIT 2k``,
 uniqueness_executor.py:228-253) run lazily, only when failed > 0.
@@ -33,19 +31,14 @@ def unique_counts(
     df: DataFrame,
     column: str,
     filter_condition: Optional[str] = None,
-    approximate: bool = False,
 ) -> dict[str, int]:
     """One-job counts: {'total': …, 'nonnull': …, 'failed': …}."""
     scoped = df.filter(F.expr(filter_condition)) if filter_condition else df
     col = F.col(column)
-    distinct_expr = (
-        F.approx_count_distinct(column) if approximate
-        else F.count_distinct(col)
-    )
     row = scoped.agg(
         F.count(F.lit(1)).alias("total"),
         F.sum(col.isNotNull().cast("long")).alias("nonnull"),
-        distinct_expr.alias("distinct"),
+        F.count_distinct(col).alias("distinct"),
     ).collect()[0]
     total = int(row["total"] or 0)
     nonnull = int(row["nonnull"] or 0)

@@ -151,7 +151,7 @@ class QualityPipeline:
                 pii_rule = rule
                 flags[name] = None
             else:
-                flags[name] = compile_rule(rule).fail_predicate
+                flags[name] = compile_rule(rule, df.schema).fail_predicate
 
         # native flags first (one projection)
         for name, pred in flags.items():

@@ -14,17 +14,22 @@ predicate in one of four tiers:
 
 NATIVE and UDF predicates both fuse into ONE ``df.agg()`` scan downstream
 (plans/merger.py). NULL semantics per rule type are the reference's
-(see core/rules.py table and SURVEY.md §2.2).
+(see core/rules.py table and SURVEY.md §2.2). REGEX takes NATIVE
+``rlike`` only when its column is a string and ``java_regex`` can
+rebuild its pattern with the same meaning (CLAUDE.md rule 19).
 """
 
 from __future__ import annotations
 
+import re._constants as sre
+import re._parser as sre_parse
 from dataclasses import dataclass
 from enum import Enum
 from typing import Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from validatelite_spark.core import builtin_rule_types  # noqa: F401 (registers)
 from validatelite_spark.core.registry import get_rule_type
@@ -54,9 +59,72 @@ class CompiledRule:
         return self.tier in (Tier.NATIVE, Tier.UDF)
 
 
-def compile_rule(rule: Rule, use_native_regex: bool = False) -> CompiledRule:
-    """Compile one rule. Raises RuleExecutionError for unsupported shapes
-    (per-rule isolation: the engine turns it into an ERROR result).
+#: ``re`` anchors that mean the same in Java (``\Z`` is Java's ``\z``)
+_ANCHORS = {sre.AT_BEGINNING: "^", sre.AT_BEGINNING_STRING: r"\A",
+            sre.AT_END: "$", sre.AT_END_STRING: r"\z"}
+
+
+def _cp(c: int) -> str:
+    return f"\\x{{{c:x}}}"
+
+
+def _java(nodes) -> str:
+    """Java source of an ``re`` parse (sub)tree; ValueError for any node
+    outside the subset both engines read alike."""
+    out = []
+    for op, av in nodes:
+        if op is sre.LITERAL:
+            out.append(_cp(av))
+        elif op is sre.NOT_LITERAL:
+            out.append(f"[^{_cp(av)}]")
+        elif op is sre.ANY:
+            out.append(".")
+        elif op is sre.IN:
+            neg = av[0][0] is sre.NEGATE
+            out.append("[^" if neg else "[")
+            for o, a in av[neg:]:
+                if o is sre.LITERAL:
+                    out.append(_cp(a))
+                elif o is sre.RANGE:
+                    out.append(f"{_cp(a[0])}-{_cp(a[1])}")
+                else:  # CATEGORY: \d \s \w are Unicode-aware in re
+                    raise ValueError(o)
+            out.append("]")
+        elif op in (sre.MAX_REPEAT, sre.MIN_REPEAT):
+            lo, hi, sub = av
+            if max(lo, hi % sre.MAXREPEAT) >= 2**31:  # Java's int bounds
+                raise ValueError(av)
+            hi = "" if hi == sre.MAXREPEAT else hi
+            lazy = "?" if op is sre.MIN_REPEAT else ""
+            out.append(f"(?:{_java(sub)}){{{lo},{hi}}}{lazy}")
+        elif op is sre.SUBPATTERN and av[1] == av[2] == 0:
+            out.append(f"(?:{_java(av[3])})")
+        elif op is sre.BRANCH:
+            out.append(f"(?:{'|'.join(_java(b) for b in av[1])})")
+        elif op is sre.AT and av in _ANCHORS:
+            out.append(_ANCHORS[av])
+        else:
+            raise ValueError(op)
+    return "".join(out)
+
+
+def java_regex(pattern: str) -> Optional[str]:
+    r"""The ``rlike`` pattern that finds what ``re.search(pattern)`` finds,
+    or None if only ``re`` can run it (CLAUDE.md rule 19): rebuilt from
+    the parse tree under UNIX_LINES ``(?d)``, every code point ``\x{…}``."""
+    parsed = sre_parse.parse(pattern)
+    if parsed.state.flags & ~sre.SRE_FLAG_UNICODE:
+        return None
+    try:
+        return "(?d)" + _java(parsed)
+    except ValueError:
+        return None
+
+
+def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
+    """Compile one rule against the frame's ``schema``. Raises
+    RuleExecutionError for unsupported shapes (per-rule isolation: the
+    engine turns it into an ERROR result).
 
     Runtime-registered rule types (core/registry.py) dispatch FIRST —
     the quality-filter builtins (LANG_ID/GOPHER/PERPLEXITY/PII_SCRUB)
@@ -115,11 +183,14 @@ def compile_rule(rule: Rule, use_native_regex: bool = False) -> CompiledRule:
         return CompiledRule(rule, Tier.NATIVE, pred)
 
     if t == RuleType.REGEX:
-        pattern = p["pattern"]
-        if use_native_regex or p.get("engine") == "java":
+        # the UDF renders other types through pandas (1e+20, +00:00)
+        java = (java_regex(p["pattern"]) if rule.column in schema.names
+                and schema[rule.column].dataType == T.StringType() else None)
+        if java is None:
             return CompiledRule(
-                rule, Tier.NATIVE, udf_tier.regex_fail_native(col, pattern))
-        return CompiledRule(rule, Tier.UDF, udf_tier.regex_fail(col, pattern))
+                rule, Tier.UDF, udf_tier.regex_fail(col, p["pattern"]))
+        return CompiledRule(rule, Tier.NATIVE,
+                            col.isNotNull() & ~col.rlike(java))
 
     if t == RuleType.DATE_FORMAT:
         return CompiledRule(

@@ -19,15 +19,15 @@ Rules with different ``filter_condition``s land in different groups
 (reference requires identical filters to merge, rule_merger.py:135-139).
 The reference's width cap of 10 rules/query bounds SQL complexity
 (rule_merger.py:876-901); Spark handles hundreds of agg columns fine, so
-the default cap here is much higher and exists only to bound codegen size.
+the cap here is much higher and exists only to bound codegen size.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import Any, Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from validatelite_spark.plans.compiler import CompiledRule
@@ -35,7 +35,7 @@ from validatelite_spark.plans.compiler import CompiledRule
 TOTAL_ALIAS = "__total"
 
 #: codegen-size guard, not a SQL-complexity guard like the reference's 10.
-DEFAULT_MAX_RULES_PER_MERGE = 200
+MAX_RULES_PER_MERGE = 200
 
 
 @dataclass
@@ -68,10 +68,7 @@ class MergeGroup:
         return out
 
 
-def build_merge_groups(
-    compiled: list[CompiledRule],
-    max_rules_per_merge: int = DEFAULT_MAX_RULES_PER_MERGE,
-) -> list[MergeGroup]:
+def build_merge_groups(compiled: list[CompiledRule]) -> list[MergeGroup]:
     """Group mergeable rules by filter_condition, splitting groups wider
     than the cap. Non-mergeable tiers (GROUPBY/METADATA) are not accepted
     here — the engine routes them separately."""
@@ -81,6 +78,38 @@ def build_merge_groups(
         by_filter.setdefault(cr.rule.filter_condition, []).append(cr)
     groups: list[MergeGroup] = []
     for filt, rules in by_filter.items():
-        for i in range(0, len(rules), max_rules_per_merge):
-            groups.append(MergeGroup(filt, rules[i:i + max_rules_per_merge]))
+        for i in range(0, len(rules), MAX_RULES_PER_MERGE):
+            groups.append(MergeGroup(filt, rules[i:i + MAX_RULES_PER_MERGE]))
     return groups
+
+
+def failure_samples(
+    df: DataFrame,
+    rules: list[CompiledRule],
+    columns: list[str],
+    order: str,
+    limit: int,
+) -> list[list[dict[str, Any]]]:
+    """The first ``limit`` failing rows of each rule by ``order``, as
+    ``columns`` dicts, from ONE scan: each row carries the ids of the
+    rules it fails (``when(filter & fail_i, i)``, so every UDF runs
+    once), exploded, then ``row_number() <= limit`` per rule — planned
+    with a partial WindowGroupLimit before the one shuffle."""
+    flags = []
+    for i, cr in enumerate(rules):
+        fail = cr.fail_predicate
+        if cr.rule.filter_condition:
+            fail = F.coalesce(F.expr(cr.rule.filter_condition),
+                              F.lit(False)) & fail
+        flags.append(F.when(fail, F.lit(i)))
+    scan = columns if order in columns else [*columns, order]
+    rank = F.row_number().over(Window.partitionBy("__rule").orderBy(order))
+    rows = (df.select(*scan, F.explode(F.array(*flags)).alias("__rule"))
+            .filter(F.col("__rule").isNotNull())
+            .withColumn("__rank", rank)
+            .filter(F.col("__rank") <= limit)
+            .collect())
+    out: list[list[dict[str, Any]]] = [[] for _ in rules]
+    for r in sorted(rows, key=lambda r: (r["__rule"], r["__rank"])):
+        out[r["__rule"]].append({c: r[c] for c in columns})
+    return out
