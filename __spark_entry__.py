@@ -411,19 +411,25 @@ def _q_repetition(spark, sf_dir):
     return repetition_signals(df, "text", "doc_id", n=3)
 
 
+def _rule_metrics(df: DataFrame, rule) -> DataFrame:
+    """(total_records, failed_records) of one rule from the engine's
+    merged scan (plans/merger.py)."""
+    from validatelite_spark.plans.compiler import compile_rule
+    from validatelite_spark.plans.merger import TOTAL_ALIAS, MergeGroup
+    group = MergeGroup(None, [compile_rule(rule, df.schema)])
+    return group.scan(df).select(
+        F.col(TOTAL_ALIAS).alias("total_records"),
+        F.col(group.alias_for(0)).alias("failed_records"))
+
+
 def _q_repetition_rule(spark, sf_dir):
     """REPETITION as an ENGINE rule: a registered-only type (no enum
     member, core/builtin_rule_types.py) compiled through the registry
     dispatch into the standard metrics aggregate."""
     from validatelite_spark.core.rules import Rule
-    from validatelite_spark.plans.compiler import compile_rule
     df = _read(spark, sf_dir, "documents")
-    fail = compile_rule(
-        Rule("REPETITION", "text", {"n": 3, "max_dup_ngram_frac": 0.2}),
-        df.schema).fail_predicate
-    return df.agg(
-        F.count(F.lit(1)).alias("total_records"),
-        F.sum(F.when(fail, 1).otherwise(0)).alias("failed_records"))
+    return _rule_metrics(
+        df, Rule("REPETITION", "text", {"n": 3, "max_dup_ngram_frac": 0.2}))
 
 
 def _q_decontaminate(spark, sf_dir):
@@ -3047,16 +3053,11 @@ def _q_boilerplate_rule(spark, sf_dir):
     # compiled through the registry into the standard metrics aggregate
     from validatelite_spark.core.rules import Rule
     from validatelite_spark.operators.lines import top_lines
-    from validatelite_spark.plans.compiler import compile_rule
     df = _lines_corpus(spark, sf_dir)
     mined = [r["line"]
              for r in top_lines(df, k=25, min_docs=2).collect()]
-    fail = compile_rule(
-        Rule("BOILERPLATE", "text", {"lines": mined, "max_frac": 0.5}),
-        df.schema).fail_predicate
-    return df.agg(
-        F.count(F.lit(1)).alias("total_records"),
-        F.sum(F.when(fail, 1).otherwise(0)).alias("failed_records"))
+    return _rule_metrics(
+        df, Rule("BOILERPLATE", "text", {"lines": mined, "max_frac": 0.5}))
 
 
 def _messy_urls(spark, sf_dir):
@@ -3145,15 +3146,11 @@ def _q_classifier_scores(spark, sf_dir):
 def _q_classifier_rule(spark, sf_dir):
     # CLASSIFIER as an ENGINE rule (registered type, scalar HOF form)
     from validatelite_spark.core.rules import Rule
-    from validatelite_spark.plans.compiler import compile_rule
     df = _read(spark, sf_dir, "documents")
-    fail = compile_rule(
-        Rule("CLASSIFIER", "text",
-             {"weights": _clf_weights(), "bias": 0.25,
-              "min_score": 0.5}), df.schema).fail_predicate
-    return df.agg(
-        F.count(F.lit(1)).alias("total_records"),
-        F.sum(F.when(fail, 1).otherwise(0)).alias("failed_records"))
+    return _rule_metrics(
+        df, Rule("CLASSIFIER", "text",
+                 {"weights": _clf_weights(), "bias": 0.25,
+                  "min_score": 0.5}))
 
 
 def _q_url_decontaminate(spark, sf_dir):

@@ -83,7 +83,7 @@ class TestKeepDropParity:
         assert "<EMAIL>" in sample and "<PHONE>" in sample
 
     def test_non_dropping_perplexity_still_scrubs(self, spark, pages):
-        """A PERPLEXITY rule outside drop_severities must NOT gate the
+        """A PERPLEXITY rule outside DROP_SEVERITIES must NOT gate the
         scrub: a kept doc with ppl > max_ppl still gets text_scrubbed
         (ADVICE r1 — the fused UDF used to fold the ppl threshold into
         its internal keep unconditionally)."""

@@ -54,7 +54,7 @@ class TestPlanShape:
                  enum("lang", ["en"]), length("text", 1, 10_000)]
         [group] = build_merge_groups([compile_rule(r, df.schema)
                                        for r in rules])
-        agg = df.agg(*group.agg_columns())
+        agg = group.scan(df)
         plan = plan_of(agg)
         assert plan.count("FileScan") == 1, "merged rules must scan once"
         assert plan.count("HashAggregate") == 2, "partial+final agg expected"

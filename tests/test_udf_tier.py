@@ -17,6 +17,7 @@ from validatelite_spark.core.rules import regex
 from validatelite_spark.functions import udf_tier
 from validatelite_spark.plans.compiler import Tier, compile_rule
 from validatelite_spark.plans.desired_type import _INT_REGEX
+from validatelite_spark.plans.planner import plan_rules
 
 BENCH_REGEX = r'^\{"k": [1-9]?[0-3]\}$'
 
@@ -47,8 +48,11 @@ def strings(spark):
                                  "id long, s string")
 
 
-def _failed(df, pred_a, pred_b):
-    rows = df.select("id", pred_a.alias("a"), pred_b.alias("b")).collect()
+def _failed(df, compiled, column, pattern):
+    """Failed ids of the planned rule and of ``regex_fail``."""
+    rows = (plan_rules(df, {"a": compiled})
+            .select("id", "a", udf_tier.regex_fail(F.col(column), pattern)
+                    .alias("b")).collect())
     return ([r["id"] for r in rows if r["a"]],
             [r["id"] for r in rows if r["b"]])
 
@@ -65,8 +69,7 @@ def _executed_plan(df) -> str:
 def test_tier_fails_what_re_fails(strings, pattern, tier):
     compiled = compile_rule(regex("s", pattern), strings.schema)
     assert compiled.tier is tier
-    got, want = _failed(strings, compiled.fail_predicate,
-                        udf_tier.regex_fail(F.col("s"), pattern))
+    got, want = _failed(strings, compiled, "s", pattern)
     assert got == want
 
 
@@ -86,6 +89,5 @@ def test_non_string_columns_keep_the_udf(spark, column, pattern):
                    "TIMESTAMP'2024-01-02 03:04:05' AS t")
     compiled = compile_rule(regex(column, pattern), df.schema)
     assert compiled.tier is Tier.UDF
-    got, want = _failed(df, compiled.fail_predicate,
-                        udf_tier.regex_fail(F.col(column), pattern))
+    got, want = _failed(df, compiled, column, pattern)
     assert got == want

@@ -15,10 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from validatelite_spark.core.registry import register_rule_type
-from validatelite_spark.functions.perplexity import perplexity_fail
-from validatelite_spark.functions.pii import pii_fail
-from validatelite_spark.functions.textquality import gopher_fail, lang_id
+from validatelite_spark.core.registry import BatchKernel, register_rule_type
+from validatelite_spark.functions.perplexity import perplexity_kernel
+from validatelite_spark.functions.pii import PII_KERNEL
+from validatelite_spark.functions.textquality import (gopher_fail_t, lang_id,
+                                                      lang_id_series)
+from validatelite_spark.plans.planner import tokens_of
 
 
 def _compile_lang_id(rule):
@@ -27,29 +29,31 @@ def _compile_lang_id(rule):
     # language, not its characters.
     allowed = rule.parameters["allowed_langs"]
     allowed = [allowed] if isinstance(allowed, str) else list(allowed)
-    return ~lang_id(F.col(rule.column)).isin(allowed)
+    return BatchKernel(
+        lang_id_series, lambda langs: ~langs.isin(allowed),
+        native=lambda: ~lang_id(F.col(rule.column)).isin(allowed))
 
 
 def _compile_gopher(rule):
-    return gopher_fail(F.col(rule.column), rule.parameters)
+    return gopher_fail_t(F.col(rule.column), tokens_of(rule.column),
+                         rule.parameters)
 
 
 def _compile_perplexity(rule):
     p = rule.parameters
-    return perplexity_fail(F.col(rule.column), p.get("min_ppl"),
-                           p.get("max_ppl"))
+    return perplexity_kernel(p.get("min_ppl"), p.get("max_ppl"))
 
 
 def _compile_pii_scrub(rule):
-    return pii_fail(F.col(rule.column))
+    return PII_KERNEL
 
 
 def _compile_repetition(rule):
     # Deliberately NOT a RuleType enum member: REPETITION exists only
     # through this registration, proving registered-only types are
     # first-class across Rule validation, the compiler, and the merger.
-    from validatelite_spark.operators.repetition import repetition_fail
-    return repetition_fail(F.col(rule.column), rule.parameters)
+    from validatelite_spark.operators.repetition import repetition_kernel
+    return repetition_kernel(rule.parameters)
 
 
 def _compile_boilerplate(rule):

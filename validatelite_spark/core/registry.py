@@ -18,9 +18,13 @@ PII_SCRUB) are themselves registered through this seam — see
 core/builtin_rule_types.py — proving the extension point is the real
 dispatch path, not a parallel one.
 
-The registry stores a *compile function returning a Spark failure
-predicate Column*, not a SQL-string generator: the Spark-native analogue
-of the reference's per-dialect SQL builders.
+The registry stores a *compile function*, not a SQL-string generator
+(the Spark-native analogue of the reference's per-dialect SQL builders).
+A NATIVE type's function returns a failure-predicate ``Column``; a UDF
+type's returns a ``BatchKernel``, never its own UDF: ``plans/planner.py`` runs
+every kernel of a scan in one pandas UDF, calling each distinct
+(column, signal) once per batch — so build a parameterized signal with
+a cached factory (same parameters → same function object).
 """
 
 from __future__ import annotations
@@ -33,9 +37,26 @@ class RuleTypeRegistrationError(ValueError):
     pass
 
 
-#: compile function: Rule -> Column failure predicate (None only for
-#: tiers that have no row predicate, i.e. GROUPBY/METADATA shapes).
+#: compile function: Rule -> Column failure predicate or BatchKernel
+#: (None only for tiers that have no row predicate, i.e.
+#: GROUPBY/METADATA shapes).
 CompileFn = Callable[[Any], Any]
+
+
+@dataclass(frozen=True)
+class BatchKernel:
+    """A UDF-tier rule over its column's Arrow batch (a pandas Series):
+    ``signal`` maps it to a per-row signal Series, ``fail`` that signal
+    to a non-NULL boolean Series. ``native``, if set, builds an
+    equivalent failure-predicate Column; the planner calls it unless
+    another rule kernel reads the same column in the scan."""
+
+    signal: Callable[[Any], Any]
+    fail: Callable[[Any], Any]
+    native: Optional[Callable[[], Any]] = None
+
+    def verdict(self, values: Any) -> Any:
+        return self.fail(self.signal(values))
 
 
 @dataclass(frozen=True)
@@ -85,10 +106,6 @@ def get_rule_type(name: Any) -> Optional[RuleTypeSpec]:
     """Spec for an enum member or string name; None when unregistered."""
     key = getattr(name, "value", name)
     return _REGISTRY.get(str(key).upper())
-
-
-def registered_rule_types() -> list[str]:
-    return sorted(_REGISTRY)
 
 
 def validate_params(spec: RuleTypeSpec, params: dict[str, Any]) -> None:

@@ -1,5 +1,5 @@
 """Character-bigram perplexity scorer (KenLM-style n-gram LM, degenerate
-n=2 character case) as a vectorized pandas UDF.
+n=2 character case), vectorized over Arrow batches.
 
 The model is trained at import time from a small embedded English corpus
 (original text, written for this repo), giving a deterministic scorer with
@@ -18,8 +18,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from validatelite_spark.core.registry import BatchKernel
+from validatelite_spark.plans.planner import batch_udf
 
 #: alphabet: a-z + space + "other"; common punctuation normalizes to
 #: space, every remaining char to "other" — so symbol junk lands on the
@@ -141,22 +142,14 @@ def perplexity_series(s: pd.Series) -> pd.Series:
 
 
 def perplexity(col: Column) -> Column:
-    """Perplexity column (vectorized pandas UDF)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def _ppl(s: pd.Series) -> pd.Series:
-        return perplexity_series(s)
-
-    return _ppl(col)
+    """Perplexity column (the signal alone, as its own pandas UDF)."""
+    return batch_udf(perplexity_series, "double")(col)
 
 
-def perplexity_fail(col: Column, min_ppl: float | None, max_ppl: float | None) -> Column:
-    """RANGE-style failure predicate over the perplexity score: NULL text
+def perplexity_kernel(min_ppl: float | None,
+                      max_ppl: float | None) -> BatchKernel:
+    """PERPLEXITY rule kernel, RANGE-style over the score: NULL text
     fails (scores MAX_PPL, which exceeds any sane max_ppl)."""
-    p = perplexity(col)
-    cond = F.lit(False)
-    if min_ppl is not None:
-        cond = cond | (p < F.lit(float(min_ppl)))
-    if max_ppl is not None:
-        cond = cond | (p > F.lit(float(max_ppl)))
-    return cond
+    lo = -np.inf if min_ppl is None else float(min_ppl)
+    hi = np.inf if max_ppl is None else float(max_ppl)
+    return BatchKernel(perplexity_series, lambda ppl: (ppl < lo) | (ppl > hi))

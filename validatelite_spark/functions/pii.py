@@ -16,9 +16,8 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from validatelite_spark.core.registry import BatchKernel
 
 #: (name, pattern, replacement) — applied in this exact order.
 PII_PATTERNS: list[tuple[str, str, str]] = [
@@ -59,25 +58,10 @@ def hit_series(s: pd.Series) -> pd.Series:
     return vals.str.contains(_ANY_PATTERN, regex=True).fillna(False).astype(bool)
 
 
-def scrub(col: Column) -> Column:
-    """Scrubbed-text column (NULL stays NULL)."""
-
-    @F.pandas_udf(T.StringType())
-    def _scrub(s: pd.Series) -> pd.Series:
-        return scrub_series(s)
-
-    return _scrub(col)
-
-
-def pii_fail(col: Column) -> Column:
-    """Failure predicate for the PII_SCRUB rule: document contained at
-    least one PII/toxic match (it is 'dirty'); NULL does not fail."""
-
-    @F.pandas_udf(T.BooleanType())
-    def _hit(s: pd.Series) -> pd.Series:
-        return hit_series(s)
-
-    return _hit(col)
+#: PII_SCRUB rule kernel: the document has at least one PII/toxic match
+#: (it is 'dirty'); NULL does not fail. The planner's scrub shares its
+#: ``hit_series`` pass.
+PII_KERNEL = BatchKernel(hit_series, lambda hits: hits)
 
 
 def duckdb_scrub_sql(expr: str) -> str:

@@ -106,8 +106,7 @@ def non_space_char_count(col: Column) -> Column:
 
 
 def mean_word_length(col: Column) -> Column:
-    n = token_count(col)
-    return F.when(n > 0, non_space_char_count(col) / n).otherwise(F.lit(0.0))
+    return mean_word_length_t(col, tokens(col))
 
 
 # ---------------------------------------------------------------- ratios
@@ -125,9 +124,7 @@ def symbol_ratio(col: Column) -> Column:
 def distinct_token_ratio(col: Column) -> Column:
     """Type/token ratio — a cheap, shuffle-free repetition signal
     (low ratio = heavy boilerplate repetition)."""
-    toks = tokens(col)
-    n = F.size(toks)
-    return F.when(n > 0, F.size(F.array_distinct(toks)) / n).otherwise(F.lit(1.0))
+    return distinct_token_ratio_t(tokens(col))
 
 
 # ---------------------------------------------------------------- stopwords
@@ -250,29 +247,14 @@ def gopher_fail(col: Column, params: dict | None = None) -> Column:
     """Composite Gopher failure predicate: NULL text fails (completeness
     semantics, like NOT_NULL/RANGE in the reference); otherwise fails when
     any heuristic is violated."""
-    p = dict(GOPHER_DEFAULTS)
-    if params:
-        p.update({k: v for k, v in params.items() if v is not None})
-    n_words = token_count(col)
-    mwl = mean_word_length(col)
-    viol = (
-        (n_words < p["min_words"])
-        | (n_words > p["max_words"])
-        | (mwl < p["min_mean_word_len"])
-        | (mwl > p["max_mean_word_len"])
-        | (symbol_ratio(col) > p["max_symbol_ratio"])
-        | (stopword_count(col) < p["min_stopword_count"])
-        | (distinct_token_ratio(col) < p["min_distinct_ratio"])
-    )
-    return F.when(col.isNull(), F.lit(True)).otherwise(viol)
+    return gopher_fail_t(col, tokens(col), params)
 
 
 # ------------------------------------------------- token-reuse variants
-# Same semantics as the column versions above, but over a PRE-COMPUTED
-# tokens column, so a multi-rule projection (the pipeline's annotate)
-# splits the text ONCE instead of once per signal. Used by
-# pipeline/quality.py; the plain versions stay for ad-hoc single rules
-# and the DuckDB-oracle-checked query surface.
+# The one body of each token signal, over a PRE-COMPUTED tokens column,
+# so a multi-rule projection splits the text ONCE instead of once per
+# signal (the planner's shared ``tokens_of`` input); the plain forms
+# above pass ``tokens(col)``.
 
 def mean_word_length_t(col: Column, toks: Column) -> Column:
     n = F.size(toks)
@@ -285,9 +267,48 @@ def distinct_token_ratio_t(toks: Column) -> Column:
 
 
 def lang_id_t(col: Column, toks: Column) -> Column:
-    # marker scores are regexp_count over the text (codegen'd); toks is
-    # unused here but kept in the signature for call-site symmetry
+    """Alias of ``lang_id`` kept only for the benchmark's native probe
+    (``perfbench/run.py::probes`` calls it): the marker scores are
+    regexp_counts over the text, so ``toks`` is unused."""
     return lang_id(col)
+
+
+def lang_id_series(s: pd.Series) -> pd.Series:
+    """Python twin of ``lang_id`` — the detected language per doc, the
+    LANG_ID kernel's signal when the scan already crosses into Python
+    for that column (its native form is 4 marker regexes + a CJK scan,
+    the most expensive native signal; here it reuses the text batch).
+
+    Exact parity with the Column chain (pinned on the generated corpus
+    in tests/test_pipeline.py): marker scores count whole tokens equal
+    to a marker word (``words``, so Python counting == the
+    ``(?<![^\\s])(?:w|…)(?![^\\s])`` regexp_count); the zh score counts
+    U+4E00-U+9FFF code points (== regexp_count of the class — Spark
+    lengths are code points too); the winner is the first language in
+    LANG_PRIORITY holding the maximum positive score ('und' when every
+    score is 0), which is exactly the CASE chain's
+    argmax-with-priority-tie-break invariant."""
+    word_lang = {w: lg for lg, ws in LANG_MARKERS.items() for w in ws}
+    out = []
+    for t in s:
+        if t is None:
+            # the Column CASE chain's NULL conditions all skip,
+            # falling through to the 'und' default — mirror it
+            out.append("und")
+            continue
+        scores = dict.fromkeys(LANG_PRIORITY, 0)
+        for tok in words(t):
+            lg = word_lang.get(tok)
+            if lg is not None:
+                scores[lg] += 1
+        scores["zh"] = sum("一" <= ch <= "鿿" for ch in t)
+        best = max(scores.values())
+        if best <= 0:
+            out.append("und")
+        else:
+            out.append(next(lg for lg in LANG_PRIORITY
+                            if scores[lg] == best))
+    return pd.Series(out, index=s.index, dtype="object")
 
 
 def gopher_fail_t(col: Column, toks: Column,

@@ -9,7 +9,9 @@ The Spark-native analogue of the reference's RuleEngine
    (plans/compiler.py; REGEX's pattern and column type pick the tier);
 3. **merge** all NATIVE+UDF rules with the same filter into ONE fused
    ``df.agg()`` scan per filter group (plans/merger.py) — this also folds
-   in the total row count, so K mergeable rules cost exactly one scan;
+   in the total row count, so K mergeable rules cost exactly one scan,
+   and the planner (plans/planner.py) runs all their kernels in one
+   Arrow pass;
 4. **UNIQUE** rules run one aggregate job each (operators/uniqueness.py);
 5. **SCHEMA** rules run metadata-only (operators/schema_check.py);
 6. **lazy failure sampling** — all merged rules with failed > 0 share

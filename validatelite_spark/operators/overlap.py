@@ -5,19 +5,19 @@ needs more than per-rule failure counts — it needs the JOINT failure
 structure: how many documents fail exactly {length}, how many fail
 {length, repetition} together, which rule uniquely removes documents
 nothing else would catch. ``rule_overlap`` computes the full Venn
-decomposition in ONE corpus scan: each rule's compiled fail predicate
-(the same Column the engine's merged aggregate uses —
-plans/compiler.py, so the analysis can never drift from the engine's
-verdicts) becomes one bit of a failure bitmask, and a single groupBy
+decomposition in ONE corpus scan: each rule's flag (planned exactly
+as the engine's merged aggregate plans it — plans/planner.py, so the
+analysis can never drift from the engine's verdicts) becomes one bit
+of a failure bitmask, and a single groupBy
 on the mask counts every observed combination. ``rule_marginals``
 derives the per-rule summary (total fails, unique fails, docs it
 alone would remove) from that tiny mask table.
 
 Scale shape: one FileScan → one partial+final aggregate on an
 integer key with at most 2^|rules| distinct values (rules ≤ ~20 by
-contract) — the same shape as the fused rule scan, no UDFs, no second
-pass. The decode of mask → rule-name list happens AFTER the
-aggregation, on the tiny result.
+contract) — the same shape as the fused rule scan (at most the
+planner's one Arrow pass), no second pass. The decode of mask →
+rule-name list happens AFTER the aggregation, on the tiny result.
 
 Reference: the reference reports per-rule results independently
 (core/executors/*, one row per rule); the joint decomposition has no
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from validatelite_spark.core.rules import Rule
 from validatelite_spark.plans.compiler import compile_rule
+from validatelite_spark.plans.planner import plan_rules
 
 #: bitmask width guard: 2^n groups must stay a "tiny" aggregate
 MAX_OVERLAP_RULES = 20
@@ -52,17 +53,18 @@ def rule_overlap(df: DataFrame, rules: list[Rule]) -> DataFrame:
             f"rule_overlap supports at most {MAX_OVERLAP_RULES} rules "
             f"(got {len(rules)}) — 2^n mask cardinality must stay tiny")
     compiled = [compile_rule(r, df.schema) for r in rules]
-    bad = [c.rule.name for c in compiled if c.fail_predicate is None]
+    bad = [c.rule.name for c in compiled if not c.mergeable]
     if bad:
         raise ValueError(
             "rule_overlap needs row-level fail predicates; these rules "
             f"compile to non-mergeable tiers: {bad} (UNIQUE/SCHEMA "
             "have no per-row verdict)")
+    flagged = plan_rules(df, {f"__b{i}": c for i, c in enumerate(compiled)})
     mask = F.lit(0).cast("long")
-    for i, c in enumerate(compiled):
-        mask = mask + F.when(c.fail_predicate, F.lit(1 << i)) \
+    for i in range(len(compiled)):
+        mask = mask + F.when(F.col(f"__b{i}"), F.lit(1 << i)) \
             .otherwise(F.lit(0)).cast("long")
-    agg = (df.groupBy(mask.alias("fail_mask"))
+    agg = (flagged.groupBy(mask.alias("fail_mask"))
            .agg(F.count(F.lit(1)).alias("n_rows")))
     label = F.concat_ws(",", *[
         F.when(F.col("fail_mask").bitwiseAND(F.lit(1 << i)) != 0,

@@ -31,16 +31,20 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from validatelite_spark.core.registry import BatchKernel
 from validatelite_spark.functions.textquality import (
     ngrams,
     ngrams_arrow,
     word_ngrams,
 )
 from validatelite_spark.operators.dedup import _shingle_table
+from validatelite_spark.plans.planner import batch_udf
 
 
 def dup_ngram_fraction(col: Column, n: int = 3) -> Column:
@@ -58,16 +62,13 @@ def dup_ngram_fraction(col: Column, n: int = 3) -> Column:
         F.lit(1.0) - F.size(F.array_distinct(ng)) / t)
 
 
-def dup_ngram_fraction_arrow(n: int = 3):
-    """Arrow-batched ``dup_ngram_fraction`` — identical values (both
-    sides are IEEE-double ``1 − distinct/total``), built per batch in
-    tight Python.  This is the rule-predicate hot path: the pure-Column
-    version's transform/slice chain is CodegenFallback and re-evaluates
-    the tokenizer per array element (~interpreted O(tokens²) per row) —
-    measured ~40× slower on the metrics scan."""
-    from pyspark.sql.functions import pandas_udf
+@functools.cache
+def dup_ngram_series(n: int = 3):
+    """Signal: ``dup_ngram_fraction`` per document of an Arrow batch —
+    identical values (both sides are IEEE-double ``1 − distinct/total``),
+    built in tight Python; NULL text → NaN (NULL in Spark). Cached: one
+    function object per ``n``, one pass per batch."""
 
-    @pandas_udf("double")
     def frac(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
@@ -76,9 +77,18 @@ def dup_ngram_fraction_arrow(n: int = 3):
                 continue
             ng = word_ngrams(t, n)
             out.append(1.0 - len(set(ng)) / len(ng) if ng else 0.0)
-        return pd.Series(out)
+        return pd.Series(out, index=texts.index, dtype="float64")
 
     return frac
+
+
+def dup_ngram_fraction_arrow(n: int = 3):
+    """``dup_ngram_series`` as a pandas UDF — the rule-predicate hot
+    path's Column form: the pure-Column version's transform/slice chain
+    is CodegenFallback and re-evaluates the tokenizer per array element
+    (~interpreted O(tokens²) per row) — measured ~40× slower on the
+    metrics scan."""
+    return batch_udf(dup_ngram_series(n), "double")
 
 
 #: REPETITION rule defaults (Gopher A1.1 uses per-n thresholds; one
@@ -86,19 +96,16 @@ def dup_ngram_fraction_arrow(n: int = 3):
 REPETITION_DEFAULTS = {"n": 3, "max_dup_ngram_frac": 0.2}
 
 
-def repetition_fail(col: Column, params: dict | None = None) -> Column:
-    """REPETITION rule failure predicate: NULL text fails (completeness
-    semantics, like GOPHER/NOT_NULL — see core/rules.py NULL table);
-    otherwise fails when the duplicate-n-gram fraction exceeds
-    ``max_dup_ngram_frac``.  Registered UDF-tier (Arrow predicate, see
-    ``dup_ngram_fraction_arrow``); fuses into the merged single-scan
-    aggregate like every UDF-tier rule."""
+def repetition_kernel(params: dict | None = None) -> BatchKernel:
+    """REPETITION rule kernel: NULL text fails (completeness semantics,
+    like GOPHER/NOT_NULL — see core/rules.py NULL table); otherwise fails
+    when the duplicate-n-gram fraction exceeds ``max_dup_ngram_frac``."""
     p = dict(REPETITION_DEFAULTS)
     if params:
         p.update({k: v for k, v in params.items() if v is not None})
-    viol = (dup_ngram_fraction_arrow(int(p["n"]))(col)
-            > float(p["max_dup_ngram_frac"]))
-    return F.when(col.isNull(), F.lit(True)).otherwise(viol)
+    limit = float(p["max_dup_ngram_frac"])
+    return BatchKernel(dup_ngram_series(int(p["n"])),
+                       lambda frac: frac.isna() | (frac > limit))
 
 
 def repetition_signals(

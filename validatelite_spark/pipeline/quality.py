@@ -3,12 +3,15 @@
 Runs ValidateLite-shaped rules over a pages table
 (url, warc_ts, html, text, lang) and produces, in ONE scan:
 
-- per-rule boolean failure flags (``fail_<rule_name>``)
+- per-rule boolean failure flags (``fail_<rule_name>``), planned by the
+  engine's own compiler and planner (plans/compiler.py,
+  plans/planner.py) — the pipeline has no per-rule-type code, so its
+  counts are the engine's by construction;
 - the keep/drop decision (``keep``): a document is dropped when any
   *dropping* rule fails (severity >= HIGH; the reference's
   severity/action fields decide consequence, shared/schema/base.py:229-231)
 - byte-stable scrubbed text (``text_scrubbed``) via the compiled-regex
-  PII/toxicity pass
+  PII/toxicity pass, inside the planner's one Arrow pass
 - per-rule metrics via ``pyspark.sql.Observation`` — collected DURING the
   output write, so metrics cost zero extra scans (Spark-native upgrade of
   the reference's separate COUNT queries, rule_engine.py:440-484)
@@ -24,7 +27,7 @@ from __future__ import annotations
 
 import re
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -36,20 +39,19 @@ from validatelite_spark.core.results import (
     status_for,
 )
 from validatelite_spark.core.rules import Rule, RuleType, SeverityLevel
-from validatelite_spark.functions import textquality
-from validatelite_spark.functions.fused_text import fused_text_eval
-from validatelite_spark.functions.pii import scrub
-from validatelite_spark.plans.compiler import compile_rule
+from validatelite_spark.plans.compiler import CompiledRule, compile_rule
+from validatelite_spark.plans.planner import plan_rules
+
+
+#: severities of the rules that drop a document
+DROP_SEVERITIES = ("HIGH", "CRITICAL")
 
 
 @dataclass
 class PipelineConfig:
     allowed_langs: tuple[str, ...] = ("en",)
     max_ppl: float = 13.5  # calibrated: clean en<=12, pii 12.4 | fr 14.6, boiler 16.7, de 17.6, junk 38.7
-    gopher_params: Optional[dict] = None
     text_column: str = "text"
-    scrub_output_column: str = "text_scrubbed"
-    drop_severities: tuple[str, ...] = ("HIGH", "CRITICAL")
 
 
 def default_rules(cfg: PipelineConfig) -> list[Rule]:
@@ -59,8 +61,8 @@ def default_rules(cfg: PipelineConfig) -> list[Rule]:
     return [
         Rule(RuleType.NOT_NULL, c, name="not_null_text",
              severity=SeverityLevel.CRITICAL),
-        Rule(RuleType.GOPHER, c, dict(cfg.gopher_params or {}),
-             name="gopher_text", severity=SeverityLevel.HIGH),
+        Rule(RuleType.GOPHER, c, name="gopher_text",
+             severity=SeverityLevel.HIGH),
         Rule(RuleType.LANG_ID, c, {"allowed_langs": list(cfg.allowed_langs)},
              name="lang_id_text", severity=SeverityLevel.HIGH),
         Rule(RuleType.PERPLEXITY, c, {"max_ppl": cfg.max_ppl},
@@ -85,126 +87,30 @@ class QualityPipeline:
 
     # ----------------------------------------------------------- annotate
     def annotate(self, df: DataFrame) -> DataFrame:
-        """One-projection annotation: fail flags + keep + scrubbed text.
-
-        Physical shape (the fused fast path, SURVEY.md §7 step 4):
-        - text is tokenized ONCE into a hidden column shared by every
-          native rule (gopher + langid would otherwise re-split per
-          signal);
-        - ALL Python-side signals (perplexity, PII hit, scrub) ride ONE
-          pandas UDF → one Arrow round-trip instead of three, and the
-          scrub regexes only run on docs the native rules + perplexity
-          kept.
-        Rules outside the standard shapes fall back to the generic
-        compiler — semantics never change, only the physical plan."""
-        cfg = self.config
-        text = F.col(cfg.text_column)
-        toks = "__toks"
-        out = df.withColumn(toks, textquality.tokens(text))
-
-        # a LANG_ID rule rides the fused Arrow pass when one exists
-        # (PERPLEXITY/PII present): the language signal is 4 marker
-        # regexes + a CJK scan natively — the single most expensive
-        # native signal — while in the fused UDF it reuses the text
-        # batch already crossing the boundary (lang_id_series parity
-        # pinned in tests). Without a fused pass it stays native.
-        fused_exists = any(
-            r.column == cfg.text_column
-            and ((r.type == RuleType.PERPLEXITY
-                  and r.parameters.get("min_ppl") is None
-                  and r.parameters.get("max_ppl") is not None)
-                 or r.type == RuleType.PII_SCRUB)
-            for r in self.rules)
-
-        flags: dict[str, Column] = {}
-        drop_names: list[str] = []
-        ppl_rule = None
-        pii_rule = None
-        lang_rule = None
+        """One-projection annotation through the engine's planner
+        (plans/planner.py): a ``fail_<rule>`` flag per rule, ``keep`` (no
+        HIGH/CRITICAL rule fails) and ``text_scrubbed`` (kept documents
+        scrubbed, NULL for dropped ones) — all Python-tier rules and the
+        scrub ride ONE pandas UDF. It is nondeterministic, so
+        ``annotate(df).filter("keep")`` runs it once per row, but a filter
+        on an INPUT column stays above it too: filter ``df`` first
+        (curation and ``run_checkpointed`` do)."""
+        flags: dict[str, CompiledRule] = {}
         for rule in self.rules:
             name = _flag_name(rule)
-            if rule.severity.value in cfg.drop_severities:
-                drop_names.append(name)
-            # fast paths on the shared tokens column / fused UDF
-            if (rule.type == RuleType.GOPHER
-                    and rule.column == cfg.text_column):
-                flags[name] = textquality.gopher_fail_t(
-                    text, F.col(toks), rule.parameters)
-            elif (rule.type == RuleType.LANG_ID
-                    and rule.column == cfg.text_column
-                    and fused_exists):
-                lang_rule = rule
-                flags[name] = None  # filled from the fused struct below
-            elif (rule.type == RuleType.LANG_ID
-                    and rule.column == cfg.text_column):
-                allowed = list(rule.parameters["allowed_langs"])
-                flags[name] = ~textquality.lang_id_t(
-                    text, F.col(toks)).isin(allowed)
-            elif (rule.type == RuleType.PERPLEXITY
-                    and rule.column == cfg.text_column
-                    and rule.parameters.get("min_ppl") is None
-                    and rule.parameters.get("max_ppl") is not None):
-                ppl_rule = rule
-                flags[name] = None  # filled from the fused struct below
-            elif (rule.type == RuleType.PII_SCRUB
-                    and rule.column == cfg.text_column):
-                pii_rule = rule
-                flags[name] = None
-            else:
-                flags[name] = compile_rule(rule, df.schema).fail_predicate
-
-        # native flags first (one projection)
-        for name, pred in flags.items():
-            if pred is not None:
-                out = out.withColumn(name, pred)
-
-        native_drop = F.lit(False)
-        for name in drop_names:
-            if flags[name] is not None:
-                native_drop = native_drop | F.coalesce(F.col(name),
-                                                       F.lit(False))
-
-        fused_scrub = None
-        if ppl_rule is not None or pii_rule is not None:
-            max_ppl = (float(ppl_rule.parameters["max_ppl"])
-                       if ppl_rule else float("inf"))
-            # only fold the ppl threshold into the fused keep when the
-            # PERPLEXITY rule actually drops (its severity is in
-            # drop_severities) — otherwise a kept doc with ppl > max_ppl
-            # would silently lose its scrub output (ADVICE r1)
-            ppl_drops = (ppl_rule is not None
-                         and ppl_rule.severity.value in cfg.drop_severities)
-            lang_allowed = (list(lang_rule.parameters["allowed_langs"])
-                            if lang_rule is not None else None)
-            lang_drops = (lang_rule is not None
-                          and lang_rule.severity.value
-                          in cfg.drop_severities)
-            out = out.withColumn(
-                "__fx", fused_text_eval(text, native_drop, max_ppl,
-                                        ppl_drops=ppl_drops,
-                                        lang_allowed=lang_allowed,
-                                        lang_drops=lang_drops))
-            if ppl_rule is not None:
-                out = out.withColumn(_flag_name(ppl_rule),
-                                     F.col("__fx.ppl") > max_ppl)
-            if pii_rule is not None:
-                out = out.withColumn(_flag_name(pii_rule), F.col("__fx.pii"))
-            if lang_rule is not None:
-                out = out.withColumn(
-                    _flag_name(lang_rule),
-                    ~F.col("__fx.lang").isin(lang_allowed))
-            fused_scrub = F.col("__fx.scrubbed")
-
+            if name in flags:
+                raise ValueError(
+                    f"rules {flags[name].rule.name!r} and {rule.name!r} "
+                    f"share the flag column {name!r}; rename one")
+            flags[name] = compile_rule(rule, df.schema)
+        drop = [name for name, cr in flags.items()
+                if cr.rule.severity.value in DROP_SEVERITIES]
+        out = plan_rules(df, flags, scrub=self.config.text_column,
+                         drop=drop)
         keep = F.lit(True)
-        for name in drop_names:
+        for name in drop:
             keep = keep & ~F.coalesce(F.col(name), F.lit(False))
-        out = out.withColumn("keep", keep)
-        out = out.withColumn(
-            cfg.scrub_output_column,
-            F.when(F.col("keep"),
-                   fused_scrub if fused_scrub is not None
-                   else scrub(text)).otherwise(F.lit(None)))
-        return out.drop(toks, "__fx")
+        return out.withColumn("keep", keep)
 
     def metric_exprs(self) -> list[Column]:
         cols = [F.count(F.lit(1)).alias("__total"),
@@ -256,17 +162,6 @@ class QualityPipeline:
                                 if output_path else "merged_agg"},
             ))
         return annotated, results
-
-    def metrics_df(self, results: list[RuleResult]) -> DataFrame:
-        """Results as a DataFrame, writable to a metrics table mirroring
-        the reference's validation-report schema
-        (reference: docs/schemas/schema_results.schema.json)."""
-        from validatelite_spark.core.results import (
-            METRICS_TABLE_SCHEMA,
-            results_to_rows,
-        )
-        return self.spark.createDataFrame(
-            results_to_rows(results), METRICS_TABLE_SCHEMA)
 
 
 # ------------------------------------------------------------- skew path

@@ -2,17 +2,18 @@
 
 The analogue of the reference's executor dispatch
 (reference: core/executors/__init__.py:19-79) — but instead of generating
-dialect SQL strings, each rule type compiles to a Spark ``Column`` failure
-predicate in one of four tiers:
+dialect SQL strings, each rule type compiles, in one of four tiers, to
+what ``plans/planner.plan_rules`` turns into its per-row flag:
 
-- NATIVE   — pure built-in ``pyspark.sql.functions`` (whole-stage codegen)
-- UDF      — vectorized pandas/Arrow UDF (Python-exact semantics: ``re``
-             regex parity, strptime round-trip, perplexity)
+- NATIVE   — a ``Column`` failure predicate (whole-stage codegen)
+- UDF      — a ``BatchKernel`` (core/registry.py) for Python-exact
+             semantics: ``re`` regex parity, strptime round-trip,
+             perplexity — all of a scan's kernels share one pandas UDF
 - GROUPBY  — needs its own aggregation shape (UNIQUE)
 - METADATA — no data scan at all (SCHEMA, reference
              schema_executor.py:120-134 ``execution_type="metadata"``)
 
-NATIVE and UDF predicates both fuse into ONE ``df.agg()`` scan downstream
+NATIVE and UDF rules both fuse into ONE ``df.agg()`` scan downstream
 (plans/merger.py). NULL semantics per rule type are the reference's
 (see core/rules.py table and SURVEY.md §2.2). REGEX takes NATIVE
 ``rlike`` only when its column is a string and ``java_regex`` can
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from validatelite_spark.core import builtin_rule_types  # noqa: F401 (registers)
-from validatelite_spark.core.registry import get_rule_type
+from validatelite_spark.core.registry import BatchKernel, get_rule_type
 from validatelite_spark.core.results import RuleExecutionError
 from validatelite_spark.core.rules import Rule, RuleType
 from validatelite_spark.functions import udf_tier
@@ -49,7 +50,8 @@ class Tier(str, Enum):
 class CompiledRule:
     rule: Rule
     tier: Tier
-    fail_predicate: Optional[Column] = None  # NATIVE / UDF tiers only
+    fail_predicate: Optional[Column] = None  # NATIVE tier
+    kernel: Optional[BatchKernel] = None  # UDF tier (and LANG_ID)
 
     @property
     def mergeable(self) -> bool:
@@ -137,14 +139,16 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
     spec = get_rule_type(t)
     if spec is not None:
         try:
-            pred = spec.compile_fn(rule) if spec.compile_fn else None
+            out = spec.compile_fn(rule) if spec.compile_fn else None
         except RuleExecutionError:
             raise
         except Exception as e:
             raise RuleExecutionError(
                 f"registered rule type {spec.name} failed to compile "
                 f"{rule.name}: {e}") from e
-        return CompiledRule(rule, Tier(spec.tier), pred)
+        if isinstance(out, BatchKernel):
+            return CompiledRule(rule, Tier(spec.tier), kernel=out)
+        return CompiledRule(rule, Tier(spec.tier), out)
 
     if t == RuleType.NOT_NULL:
         return CompiledRule(rule, Tier.NATIVE, col.isNull())
@@ -187,14 +191,14 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
         java = (java_regex(p["pattern"]) if rule.column in schema.names
                 and schema[rule.column].dataType == T.StringType() else None)
         if java is None:
-            return CompiledRule(
-                rule, Tier.UDF, udf_tier.regex_fail(col, p["pattern"]))
+            return CompiledRule(rule, Tier.UDF,
+                                kernel=udf_tier.regex_kernel(p["pattern"]))
         return CompiledRule(rule, Tier.NATIVE,
                             col.isNotNull() & ~col.rlike(java))
 
     if t == RuleType.DATE_FORMAT:
-        return CompiledRule(
-            rule, Tier.UDF, udf_tier.date_format_fail(col, p["format"]))
+        return CompiledRule(rule, Tier.UDF,
+                            kernel=udf_tier.date_kernel(p["format"]))
 
     # LANG_ID / GOPHER / PERPLEXITY / PII_SCRUB compile via the registry
     # dispatch above (core/builtin_rule_types.py) — no branches here.

@@ -4,10 +4,11 @@ The Spark-native realization of the reference's flagship optimization O1
 (reference: core/engine/rule_merger.py:142-299): N rules over the same
 table and same filter become one
 
-    df.agg(F.count(lit(1)).alias("__total"),
-           F.sum(when(fail_1, 1)).alias("r0"),
+    plan_rules(df, {"__r0": rule_1, ..., "__rN-1": rule_N})
+      .agg(F.count(lit(1)).alias("__total"),
+           F.count_if(__r0).alias("__r0"),
            ...,
-           F.sum(when(fail_N, 1)).alias("rN-1"))
+           F.count_if(__rN-1).alias("__rN-1"))
 
 — one table scan, one job, partial (map-side) aggregation for free, with
 Catalyst pruning the scan down to exactly the referenced columns. Unlike
@@ -31,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from validatelite_spark.plans.compiler import CompiledRule
+from validatelite_spark.plans.planner import plan_rules
 
 TOTAL_ALIAS = "__total"
 
@@ -47,21 +49,21 @@ class MergeGroup:
     rules: list[CompiledRule] = field(default_factory=list)
 
     def alias_for(self, i: int) -> str:
-        return f"r{i}"
+        return f"__r{i}"
 
-    def agg_columns(self) -> list[Column]:
-        cols = [F.count(F.lit(1)).alias(TOTAL_ALIAS)]
-        for i, cr in enumerate(self.rules):
-            cols.append(
-                F.sum(F.when(cr.fail_predicate, 1).otherwise(0))
-                .alias(self.alias_for(i))
-            )
-        return cols
+    def scan(self, df: DataFrame) -> DataFrame:
+        """The fused aggregate: the rules' flags planned over the
+        filtered frame (plans/planner.py), summed in one ``agg``."""
+        scoped = df.filter(F.expr(self.filter_condition)) if self.filter_condition else df
+        flagged = plan_rules(scoped, {self.alias_for(i): cr
+                                      for i, cr in enumerate(self.rules)})
+        return flagged.agg(F.count(F.lit(1)).alias(TOTAL_ALIAS), *[
+            F.count_if(F.col(a)).alias(a)
+            for a in map(self.alias_for, range(len(self.rules)))])
 
     def run(self, df: DataFrame) -> dict[str, int]:
         """Execute the fused scan; returns {rule_id: failed} + total."""
-        scoped = df.filter(F.expr(self.filter_condition)) if self.filter_condition else df
-        row = scoped.agg(*self.agg_columns()).collect()[0]
+        row = self.scan(df).collect()[0]
         out = {TOTAL_ALIAS: int(row[TOTAL_ALIAS] or 0)}
         for i, cr in enumerate(self.rules):
             out[cr.rule.id] = int(row[self.alias_for(i)] or 0)
@@ -92,19 +94,22 @@ def failure_samples(
 ) -> list[list[dict[str, Any]]]:
     """The first ``limit`` failing rows of each rule by ``order``, as
     ``columns`` dicts, from ONE scan: each row carries the ids of the
-    rules it fails (``when(filter & fail_i, i)``, so every UDF runs
-    once), exploded, then ``row_number() <= limit`` per rule — planned
+    rules it fails (``when(filter & fail_i, i)``, so every kernel runs
+    once: the flags are planned, plans/planner.py), exploded, then
+    ``row_number() <= limit`` per rule — planned
     with a partial WindowGroupLimit before the one shuffle."""
+    flagged = plan_rules(df, {f"__r{i}": cr for i, cr in enumerate(rules)})
     flags = []
     for i, cr in enumerate(rules):
-        fail = cr.fail_predicate
+        fail = F.col(f"__r{i}")
         if cr.rule.filter_condition:
             fail = F.coalesce(F.expr(cr.rule.filter_condition),
                               F.lit(False)) & fail
         flags.append(F.when(fail, F.lit(i)))
     scan = columns if order in columns else [*columns, order]
     rank = F.row_number().over(Window.partitionBy("__rule").orderBy(order))
-    rows = (df.select(*scan, F.explode(F.array(*flags)).alias("__rule"))
+    rows = (flagged.select(*scan,
+                           F.explode(F.array(*flags)).alias("__rule"))
             .filter(F.col("__rule").isNotNull())
             .withColumn("__rank", rank)
             .filter(F.col("__rank") <= limit)

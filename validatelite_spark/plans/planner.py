@@ -1,0 +1,155 @@
+"""Rule planner: compiled rules → one flag column per rule, in ONE
+projection with at most ONE Arrow pass (SURVEY §7 step 4).
+
+The engine's merged scan and failure samples, ``rule_overlap``, the
+registered-rule queries of ``__spark_entry__`` and
+``QualityPipeline.annotate`` all plan their per-row verdicts here. The
+projection holds the shared inputs (the ``tokens`` split of each string
+column a native predicate reads via ``tokens_of``), the native
+predicates, and one pandas UDF for every ``BatchKernel`` rule plus the
+optional scrub. Inside it each distinct (column, signal) pair runs
+once per batch: two PERPLEXITY rules share one perplexity pass, a PII
+rule and the scrub share one hit scan. A dual-form kernel (LANG_ID)
+joins the UDF only when another rule kernel already reads its column.
+
+The UDF is nondeterministic although pure: Catalyst copies a
+deterministic one into any filter pushed below the projection
+(``annotate(df).filter("keep")`` ran every kernel twice per row). The
+price: a filter on an INPUT column stays above the UDF too — filter
+before planning.
+"""
+
+from __future__ import annotations
+
+from functools import reduce
+from typing import TYPE_CHECKING, Callable, Collection, Optional
+
+import pandas as pd
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from validatelite_spark.core.registry import BatchKernel
+from validatelite_spark.functions.pii import hit_series, scrub_series
+from validatelite_spark.functions.textquality import tokens
+
+if TYPE_CHECKING:
+    from validatelite_spark.plans.compiler import CompiledRule
+
+#: the scrubbed text column ``plan_rules(scrub=...)`` adds
+SCRUBBED = "text_scrubbed"
+
+_TOKENS = "__tokens_"
+_FX = "__fx"
+
+
+def tokens_of(column: str) -> Column:
+    """``textquality.tokens(column)``, computed once per row by the
+    planned projection for every predicate that reads it."""
+    return F.col(_TOKENS + column)
+
+
+def batch_udf(fn: Callable[[pd.Series], pd.Series], return_type: str):
+    """``fn`` as a standalone one-column pandas UDF: the Column form of a
+    kernel's signal or verdict, for parity references and one-off
+    columns. Rule scans run their kernels in ``plan_rules``' one UDF."""
+
+    @F.pandas_udf(return_type)
+    def _batch(s: pd.Series) -> pd.Series:
+        return fn(s)
+
+    return _batch
+
+
+def kernel_udf(inputs: list[Column],
+               kernels: dict[str, tuple[int, BatchKernel]],
+               scrub: Optional[int] = None, drop: Optional[Column] = None,
+               drops: Collection[str] = ()) -> Column:
+    """The planner's one pandas UDF: a struct with a boolean field per
+    ``kernels`` entry (field → (index into ``inputs``, kernel)) and, when
+    ``scrub`` indexes a text input, a ``scrubbed`` field — that text
+    scrubbed where neither ``drop`` nor a kernel named in ``drops``
+    fails, NULL elsewhere. A kept row with no pattern hit scrubs to
+    itself, so only hit rows pay the substitution passes."""
+    signals: list[tuple[int, Callable]] = []
+
+    def slot(i: int, signal: Callable) -> int:
+        if (i, signal) not in signals:
+            signals.append((i, signal))
+        return signals.index((i, signal))
+
+    plan = [(name, slot(i, k.signal), k.fail)
+            for name, (i, k) in kernels.items()]
+    fields = [T.StructField(name, T.BooleanType()) for name in kernels]
+    gates = [name for name in kernels if name in drops]
+    args = list(inputs)
+    if scrub is not None:
+        hit = slot(scrub, hit_series)
+        fields.append(T.StructField("scrubbed", T.StringType()))
+        args.append(drop)
+    schema = T.StructType(fields)
+
+    def rule_kernels(*cols: pd.Series) -> pd.DataFrame:
+        sig = [signal(cols[i]) for i, signal in signals]
+        out = {name: fail(sig[j]) for name, j, fail in plan}
+        if scrub is not None:
+            text, keep = cols[scrub], ~cols[-1].astype(bool)
+            for name in gates:
+                keep &= ~out[name]
+            clean, dirty = keep & ~sig[hit], keep & sig[hit]
+            out["scrubbed"] = text.where(clean, None).astype("object")
+            if dirty.any():
+                out["scrubbed"][dirty] = scrub_series(text[dirty])
+        return pd.DataFrame(out, columns=schema.fieldNames())
+
+    return F.pandas_udf(rule_kernels, schema).asNondeterministic()(*args)
+
+
+def plan_rules(df: DataFrame, flags: dict[str, CompiledRule],
+               scrub: Optional[str] = None,
+               drop: Collection[str] = ()) -> DataFrame:
+    """``df`` plus one boolean column per ``flags`` entry (column name →
+    NATIVE/UDF-tier compiled rule), and with ``scrub`` naming a text
+    column, ``SCRUBBED``: that text scrubbed on the rows no rule named
+    in ``drop`` fails (a NULL native flag does not fail), NULL on the
+    others. A native flag keeps its predicate's NULLs; kernel flags are
+    never NULL."""
+    strings = {f.name for f in df.schema.fields
+               if isinstance(f.dataType, T.StringType)}
+    kernel_cols = {cr.rule.column for cr in flags.values()
+                   if cr.kernel is not None and cr.kernel.native is None}
+    native: dict[str, Column] = {}
+    kernels: dict[str, CompiledRule] = {}
+    for name, cr in flags.items():
+        if cr.kernel is None:
+            native[name] = cr.fail_predicate
+        elif cr.kernel.native is None or cr.rule.column in kernel_cols:
+            kernels[name] = cr
+        else:
+            native[name] = cr.kernel.native()
+    # a predicate reading ``tokens_of(c)`` names the hidden column
+    texts = [str(pred) for pred in native.values()]
+    split = [c for c in sorted(strings)
+             if any(_TOKENS + c in text for text in texts)]
+    out = df.withColumns({_TOKENS + c: tokens(F.col(c)) for c in split})
+    if not kernels and scrub is None:
+        return out.withColumns(native).drop(*[_TOKENS + c for c in split])
+    inputs = sorted({cr.rule.column for cr in kernels.values()}
+                    | {scrub} - {None})
+    at = {c: i for i, c in enumerate(inputs)}
+    fx = {n: (at[cr.rule.column], cr.kernel) for n, cr in kernels.items()}
+    if scrub is None:
+        out = out.withColumns(
+            {**native, _FX: kernel_udf([F.col(c) for c in inputs], fx)})
+    else:
+        native_drop = reduce(
+            Column.__or__,
+            [F.coalesce(F.col(n), F.lit(False)) for n in native if n in drop],
+            F.lit(False))
+        out = out.withColumns(native).withColumn(_FX, kernel_udf(
+            [F.col(c) for c in inputs], fx, scrub=at[scrub],
+            drop=native_drop, drops=drop))
+    fields = {n: F.col(_FX).getField(n) for n in kernels}
+    if scrub is not None:
+        fields[SCRUBBED] = F.col(_FX).getField("scrubbed")
+    return out.withColumns(fields).drop(_FX, *[_TOKENS + c for c in split])
