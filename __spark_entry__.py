@@ -885,9 +885,8 @@ def _q_pipeline_keep_sql(spark, sf_dir):
     one genuinely non-SQL rule; its parity lives in tests/test_pipeline
     against the pandas reference impl)."""
     from validatelite_spark.core.rules import Rule, RuleType, SeverityLevel
-    from validatelite_spark.pipeline import PipelineConfig, QualityPipeline
+    from validatelite_spark.pipeline import QualityPipeline
     df = _read(spark, sf_dir, "documents")
-    cfg = PipelineConfig(allowed_langs=("en",))
     rules = [
         Rule(RuleType.NOT_NULL, "text", name="not_null_text",
              severity=SeverityLevel.CRITICAL),
@@ -898,7 +897,7 @@ def _q_pipeline_keep_sql(spark, sf_dir):
         Rule(RuleType.PII_SCRUB, "text", name="pii_text",
              severity=SeverityLevel.LOW),
     ]
-    ann = QualityPipeline(spark, cfg, rules).annotate(df)
+    ann = QualityPipeline(spark, rules=rules).annotate(df)
     return ann.select(
         "doc_id", "keep",
         F.coalesce(F.col("fail_pii_text"), F.lit(False)).alias("pii_hit"),

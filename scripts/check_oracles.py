@@ -14,10 +14,17 @@ entries, not just the subset the driver happens to record
 
 from __future__ import annotations
 
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# this checkout's entry module and package, wherever it is run from —
+# in the driver and in the Python workers the session starts
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb  # noqa: E402
 

@@ -7,15 +7,18 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 CLI = [sys.executable, "-m", "validatelite_spark.cli"]
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def run_cli(*args: str, timeout: int = 300):
+    # `-m` imports the package from the working directory: this checkout
     return subprocess.run([*CLI, *args], capture_output=True, text=True,
-                          timeout=timeout, cwd="/root/repo")
+                          timeout=timeout, cwd=ROOT)
 
 
 class TestUsageErrors:
@@ -82,6 +85,46 @@ class TestEndToEnd:
         line = p.stdout.strip().splitlines()[-1]
         assert line.startswith("✓ 1 passed, 0 failed")
         assert "% error rate" in line
+
+
+@pytest.mark.slow
+class TestFilter:
+    """``filter --langs/--max-ppl`` shape the default rule set the CLI
+    hands the pipeline (they are ``default_rules`` parameters)."""
+
+    @pytest.fixture(scope="class")
+    def pages_path(self, spark, tmp_path_factory):
+        from validatelite_spark.pipeline import synthesize_pages
+        p = str(tmp_path_factory.mktemp("cli_filter") / "pages.parquet")
+        synthesize_pages(spark, 2000).write.parquet(p)
+        return p
+
+    def _filter(self, spark, src, out, *flags):
+        p = run_cli("--cpus", "2", "filter", src, "--output", out,
+                    "--json", *flags)
+        assert p.returncode in (0, 1), p.stderr[-2000:]
+        payload = json.loads(p.stdout.strip().splitlines()[-1])
+        failed = {r["rule_name"]: r["failed_records"]
+                  for r in payload["results"]}
+        return spark.read.parquet(out).filter("keep").count(), failed
+
+    def test_langs_and_max_ppl_reach_the_rules(self, spark, pages_path,
+                                               tmp_path):
+        kept, failed = self._filter(spark, pages_path,
+                                    str(tmp_path / "default"))
+        kept_ppl, failed_ppl = self._filter(spark, pages_path,
+                                            str(tmp_path / "ppl"),
+                                            "--max-ppl", "10")
+        kept_fr, failed_fr = self._filter(spark, pages_path,
+                                          str(tmp_path / "fr"),
+                                          "--langs", "en,fr")
+        assert kept > 0
+        assert kept_ppl < kept
+        assert failed_ppl["perplexity_text"] > failed["perplexity_text"]
+        # French pages stop failing LANG_ID; they still fail GOPHER (its
+        # stopword test is English), so the kept count does not move
+        assert failed_fr["lang_id_text"] < failed["lang_id_text"]
+        assert kept_fr >= kept
 
 
 class TestJdbcContract:

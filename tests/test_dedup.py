@@ -94,14 +94,15 @@ print(json.dumps(out))
             spark.createDataFrame(edges, "src string, dst string"))
         assert got["ranks"] == sorted(map(list, local_ranks.collect()))
 
-    def test_keep_representatives_no_broadcast_over_threshold(self, docs):
+    def test_keep_representatives_no_broadcast_over_threshold(
+            self, docs, monkeypatch):
         # Round-3 verdict #2: above the size gate the groups side must
         # NOT broadcast (billions of group rows at web scale).
         pairs = dedup.minhash_lsh_pairs(docs, threshold=0.7)
         groups = dedup.dedup_groups(pairs)
-        kept_b = dedup.keep_representatives(docs, groups, broadcast=True)
-        kept_s = dedup.keep_representatives(docs, groups,
-                                            broadcast_threshold=0)
+        kept_b = dedup.keep_representatives(docs, groups)
+        monkeypatch.setattr(dedup, "KEEP_BROADCAST_THRESHOLD", 0)
+        kept_s = dedup.keep_representatives(docs, groups)
         plan_b = kept_b._jdf.queryExecution().executedPlan().toString()
         plan_s = kept_s._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" in plan_b
@@ -140,16 +141,18 @@ print(json.dumps(out))
             df, groups, "score").collect())
         assert kept == [4]
 
-    def test_keep_best_no_broadcast_over_threshold(self, spark):
+    def test_keep_best_no_broadcast_over_threshold(self, spark,
+                                                   monkeypatch):
         groups = spark.createDataFrame(
             [(1, 1), (2, 1)], "doc_id long, group_id long")
         df = spark.createDataFrame(
             [(1, 1.0), (2, 2.0), (3, 3.0)], "doc_id long, score double")
-        kept_b = dedup.keep_best_representatives(
-            df, groups, "score", broadcast=True)
-        kept_s = dedup.keep_best_representatives(
-            df, groups, "score", broadcast_threshold=0)
+        kept_b = dedup.keep_best_representatives(df, groups, "score")
+        monkeypatch.setattr(dedup, "KEEP_BROADCAST_THRESHOLD", 0)
+        kept_s = dedup.keep_best_representatives(df, groups, "score")
+        plan_b = kept_b._jdf.queryExecution().executedPlan().toString()
         plan_s = kept_s._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" in plan_b
         assert "BroadcastExchange" not in plan_s
         assert (sorted(r.doc_id for r in kept_b.collect())
                 == sorted(r.doc_id for r in kept_s.collect()) == [2, 3])

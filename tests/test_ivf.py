@@ -3,6 +3,8 @@ behavior."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -110,18 +112,20 @@ class TestIVFIndex:
         assert sorted(map(tuple, inline)) == sorted(map(tuple, persisted))
 
     def test_large_query_side_never_collects(self, spark, emb,
-                                             index_path):
+                                             index_path, monkeypatch):
         """VERDICT r4 #6: corpus-vs-corpus retrieval (query set ≈
-        corpus) must not round-trip the probe through the driver. The
-        no-collect path joins the lazy probe plan on bucket — same
-        results, and the executed plan holds no LocalTableScan of
-        collected query rows (the collect path's signature)."""
-        from validatelite_spark.operators.similarity import ivf_index_probe
+        corpus) must not round-trip the probe through the driver. Above
+        ``IVF_PROBE_COLLECT_THRESHOLD`` query rows the probe joins the
+        lazy probe plan on bucket — same results, and the executed plan
+        holds no LocalTableScan of collected query rows (the collect
+        path's signature)."""
+        from validatelite_spark.operators import similarity
         q = emb  # the whole corpus queries itself
-        small = ivf_index_probe(spark, index_path, q, k=3, n_probe=8,
-                                collect_probe=True)
-        big = ivf_index_probe(spark, index_path, q, k=3, n_probe=8,
-                              collect_probe=False)
+        small = similarity.ivf_index_probe(spark, index_path, q, k=3,
+                                           n_probe=8)
+        monkeypatch.setattr(similarity, "IVF_PROBE_COLLECT_THRESHOLD", 2)
+        big = similarity.ivf_index_probe(spark, index_path, q, k=3,
+                                         n_probe=8)
         assert sorted(map(tuple, small.collect())) == \
             sorted(map(tuple, big.collect()))
         # collected query rows surface as a driver-built leaf
@@ -131,31 +135,25 @@ class TestIVFIndex:
         small_plan = small._jdf.queryExecution().executedPlan().toString()
         assert not any(s in big_plan for s in driver_leaves)
         assert any(s in small_plan for s in driver_leaves)
-        # the threshold gate picks the distributed path on its own
-        auto = ivf_index_probe(spark, index_path, q, k=3, n_probe=8,
-                               collect_threshold=2)
-        assert not any(
-            s in auto._jdf.queryExecution().executedPlan().toString()
-            for s in driver_leaves)
 
-    def test_arrow_scoring_matches_column_anchor(self, spark, emb,
-                                                 index_path):
-        # Round-3 verdict #5: the production probe scores candidates
-        # with the Arrow einsum; the pure-Column expression stays as the
-        # DuckDB-oracle anchor. Both must agree at round_to=6 — ranks,
-        # neighbors, and rounded scores identical.
-        from validatelite_spark.operators.similarity import ivf_index_probe
-        q = emb.filter("vec_id < 5")
-        col = ivf_index_probe(spark, index_path, q, k=5, n_probe=8,
-                              arrow=False)
-        arw = ivf_index_probe(spark, index_path, q, k=5, n_probe=8,
-                              arrow=True)
-        assert sorted(map(tuple, col.collect())) == \
-            sorted(map(tuple, arw.collect()))
-        # the Arrow plan actually runs the pandas UDF; the Column plan
-        # must not
-        assert "ArrowEvalPython" in \
-            arw._jdf.queryExecution().executedPlan().toString()
+    def test_arrow_scoring_matches_column_anchor(self, spark, sf_dir):
+        """Both IVF entry points score candidates with the Arrow
+        ``_dot_udf``; it must equal the ``_dot`` Column fold the exact
+        paths and the DuckDB oracles use EXACTLY — unrounded doubles,
+        on every pair of the sf0.01 embeddings × 5 query vectors (an
+        einsum differs in the last bits on about two pairs in three)."""
+        from validatelite_spark.operators.similarity import _dot, _dot_udf
+        path = Path(sf_dir).parent / "sf0.01" / "embeddings.parquet"
+        emb = (spark.read.parquet(str(path))
+               .select(F.col("vec_id"), F.col("embedding")
+                       .cast("array<double>").alias("cv")))
+        q = emb.filter("vec_id < 5").select(F.col("cv").alias("qv"))
+        rows = (emb.crossJoin(q)
+                .select(_dot(F.col("cv"), F.col("qv")).alias("col"),
+                        _dot_udf()(F.col("cv"), F.col("qv")).alias("arw"))
+                .collect())
+        assert len(rows) == 5 * emb.count() > 0
+        assert [r for r in rows if r.col != r.arw] == []
 
 
 class TestBpeTokens:

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pandas as pd
-
 from validatelite_spark.operators.lines import line_dedup
 
 
@@ -260,6 +258,27 @@ class TestChunkDedup:
             assert got == ref(rows, w), f"trial {trial} w={w}"
 
 
+def _ref_intra_doc(rows, min_chars):
+    """Per-document first-occurrence reference: a line of >= min_chars
+    characters survives only its first occurrence in its own document;
+    shorter lines always survive. NULL text → (None, 0)."""
+    out = {}
+    for doc_id, text in rows:
+        if text is None:
+            out[doc_id] = (None, 0)
+            continue
+        lines = text.split("\n")
+        seen, kept = set(), []
+        for line in lines:
+            if len(line) < min_chars:
+                kept.append(line)
+            elif line not in seen:
+                seen.add(line)
+                kept.append(line)
+        out[doc_id] = ("\n".join(kept), len(lines) - len(kept))
+    return out
+
+
 class TestIntraDocLineDedup:
     ROWS = [
         (1, "nav menu\ncontent one\nnav menu\ncontent two\nnav menu"),
@@ -290,25 +309,32 @@ class TestIntraDocLineDedup:
         assert out.text == "ab\nlong line here\nab"
         assert out.lines_removed == 1
 
-    def test_arrow_column_parity(self, spark):
+    def test_matches_python_reference(self, spark):
         from validatelite_spark.operators.lines import intra_doc_line_dedup
-        df = self._df(spark)
-        a = sorted(map(tuple,
-                       intra_doc_line_dedup(df, arrow=True).collect()))
-        c = sorted(map(tuple,
-                       intra_doc_line_dedup(df, arrow=False).collect()))
-        assert a == c
+        rows = self.ROWS + [
+            (5, "ab\nlong line here\nab\nlong line here"),
+            (6, "x\nx\n\n\nx"),
+            (7, "\n"),
+            (8, None),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        for min_chars in (0, 1, 5):
+            got = {r.doc_id: (r.text, r.lines_removed) for r in
+                   intra_doc_line_dedup(df, min_chars=min_chars).collect()}
+            assert got == _ref_intra_doc(rows, min_chars), min_chars
 
 
 class TestChunkBuilderParity:
-    """r06 optimization pin: the Arrow chunk builder must produce the
-    same chunk strings as the pure-Column transform/slice/concat_ws
-    chain it replaced, on the real documents corpus."""
+    """r06 optimization pin: ``chunk_dedup``'s Arrow chunk builder
+    (``lines.word_chunks``) must produce the same chunk strings as the
+    pure-Column transform/slice/concat_ws chain it replaced, on the real
+    documents corpus."""
 
     def test_chunks_match_column_chain(self, spark, edge_ws_docs):
         from pyspark.sql import functions as F
 
-        from validatelite_spark.functions.textquality import tokens, words
+        from validatelite_spark.functions.textquality import tokens
+        from validatelite_spark.operators.lines import word_chunks
 
         docs = (spark.read.parquet(
             "/root/testdata/sf0.01/documents.parquet")
@@ -325,22 +351,8 @@ class TestChunkBuilderParity:
                docs.filter(F.col("text").isNotNull())
                .select("doc_id", col_chunks.alias("c")).collect()}
 
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("array<string>")
-        def chunks_arrow(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append([])
-                    continue
-                tk = words(t)
-                out.append([" ".join(tk[i:i + w])
-                            for i in range(0, len(tk), w)])
-            return pd.Series(out)
-
         got = {r["doc_id"]: r["c"] for r in
                docs.filter(F.col("text").isNotNull())
-               .select("doc_id", chunks_arrow(F.col("text")).alias("c"))
+               .select("doc_id", word_chunks(w)(F.col("text")).alias("c"))
                .collect()}
         assert got == ref

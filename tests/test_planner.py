@@ -61,7 +61,7 @@ def pages(spark):
 
 @pytest.fixture(scope="module")
 def mixed_rules():
-    return default_rules(PipelineConfig()) + extra_rules()
+    return default_rules() + extra_rules()
 
 
 def flag_sums(spark, df, rules) -> dict[str, int]:

@@ -98,31 +98,32 @@ def test_contaminated_docs_broadcasts_benchmark(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_contaminated_docs_size_gated_shuffle_branch(spark, sf_dir):
+def test_contaminated_docs_size_gated_shuffle_branch(spark, sf_dir,
+                                                     monkeypatch):
     """Over-threshold benchmarks must NOT broadcast (VERDICT r2 #4: the
     corpus-vs-corpus configuration would broadcast ~TBs at scale).
-    broadcast=False and an auto-gate miss both fall back to a shuffled
-    sort-merge join — and the results are identical to the broadcast
-    branch."""
+    Above ``BROADCAST_NGRAM_THRESHOLD`` distinct n-grams the join falls
+    back to a shuffled sort-merge join — and the results are identical
+    to the broadcast branch."""
+    from validatelite_spark.operators import repetition
+
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     is_bench = F.substring(
         F.md5(F.col("doc_id").cast("string")), 1, 1) == "0"
     docs, bench = df.filter(~is_bench), df.filter(is_bench)
 
-    forced = contaminated_docs(docs, bench, n=4, broadcast=False)
-    plan = forced._jdf.queryExecution().executedPlan().toString()
+    bcast = contaminated_docs(docs, bench, n=4)
+    # a 1-n-gram threshold must pick the shuffled branch
+    monkeypatch.setattr(repetition, "BROADCAST_NGRAM_THRESHOLD", 1)
+    shuffled = contaminated_docs(docs, bench, n=4)
+    plan = shuffled._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
     assert "BroadcastExchange" not in plan
+    assert "BroadcastExchange" in \
+        bcast._jdf.queryExecution().executedPlan().toString()
 
-    # auto mode with a 1-n-gram threshold must pick the shuffled branch
-    auto = contaminated_docs(docs, bench, n=4, broadcast=None,
-                             broadcast_threshold=1)
-    plan2 = auto._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan2
-
-    a = sorted(map(tuple, contaminated_docs(docs, bench, n=4,
-                                            broadcast=True).collect()))
-    b = sorted(map(tuple, forced.collect()))
+    a = sorted(map(tuple, bcast.collect()))
+    b = sorted(map(tuple, shuffled.collect()))
     assert a == b
 
 

@@ -1,9 +1,11 @@
 """ExactSubstr family (operators/substrings.py): planted-duplicate
-semantics, keep-first scrub policy, span merging, and arrow/pure-Column
-parity — independent of the synthetic testdata corpus."""
+semantics, keep-first scrub policy, span merging, and the positional
+gram table against ``word_ngrams`` — independent of the synthetic
+testdata corpus."""
 
 import pytest
 
+from validatelite_spark.functions.textquality import word_ngrams
 from validatelite_spark.operators.substrings import (
     duplicate_spans,
     exact_substring_pairs,
@@ -95,11 +97,14 @@ def test_span_merge_overlapping(spark):
     assert out[30] == 15
 
 
-def test_arrow_column_parity(docs, edge_ws_docs):
+def test_positional_grams_match_word_ngrams(docs, edge_ws_docs,
+                                            edge_ws_texts):
     docs = docs.unionByName(edge_ws_docs)
-    a = set(map(tuple, positional_grams(docs, n=4, arrow=True).collect()))
-    c = set(map(tuple, positional_grams(docs, n=4, arrow=False).collect()))
-    assert a == c and a
+    got = set(map(tuple, positional_grams(docs, n=4).collect()))
+    rows = DOCS + [(9001 + i, t) for i, t in enumerate(edge_ws_texts)]
+    want = {(k, pos, g) for k, t in rows if t is not None
+            for pos, g in enumerate(word_ngrams(t, 4), 1)}
+    assert got == want and got
 
 
 @pytest.mark.parametrize("tail1, want", [

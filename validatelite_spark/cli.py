@@ -313,13 +313,14 @@ def main(argv: Optional[list[str]] = None) -> int:
 
         if args.command == "filter":
             from validatelite_spark.pipeline.quality import (
-                PipelineConfig,
                 QualityPipeline,
+                default_rules,
             )
-            cfg_kwargs = {"allowed_langs": tuple(args.langs.split(","))}
+            rule_kwargs = {"allowed_langs": tuple(args.langs.split(","))}
             if args.max_ppl is not None:
-                cfg_kwargs["max_ppl"] = args.max_ppl
-            pipe = QualityPipeline(spark, PipelineConfig(**cfg_kwargs))
+                rule_kwargs["max_ppl"] = args.max_ppl
+            pipe = QualityPipeline(spark,
+                                   rules=default_rules(**rule_kwargs))
             if args.checkpoint:
                 from validatelite_spark.pipeline.checkpoint import (
                     run_checkpointed,

@@ -42,7 +42,6 @@ from pyspark.sql.types import IntegerType, LongType, ShortType
 
 from validatelite_spark.functions.textquality import (
     fingerprint,
-    ngrams,
     tokens,
     word_ngrams,
 )
@@ -186,17 +185,14 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text",
 
 
 # --------------------------------------------------------------- shingles
-def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (``textquality.ngrams``, first-
-    occurrence order). Docs with < n tokens produce an empty array."""
-    return F.array_distinct(ngrams(col, n))
-
-
 def shingles_arrow(n: int = 3):
-    """Arrow-batched shingle UDF — same values as ``shingles`` but
-    built in tight Python per batch instead of a CodegenFallback
+    """Arrow-batched shingle UDF: each document's distinct word n-grams
+    (``textquality.word_ngrams``) in first-occurrence order — the
+    values of ``F.array_distinct(textquality.ngrams(col, n))``, built in
+    tight Python per batch instead of a CodegenFallback
     higher-order-function chain interpreted per row (BENCH.md lesson
-    2). Nondeterministic for the reason given on ``ngrams_arrow``."""
+    2). Docs with < n tokens produce an empty array. Nondeterministic
+    for the reason given on ``ngrams_arrow``."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
@@ -209,12 +205,10 @@ def shingles_arrow(n: int = 3):
 
 
 def _shingle_table(df: DataFrame, text_col: str, key_col: str,
-                   n: int, arrow: bool = True) -> DataFrame:
-    """(key, shingle_set, set_size) for docs with at least one shingle.
-    ``arrow=True`` uses the batched UDF (hot path); False keeps the
-    pure-Column expression (no-Python contexts)."""
-    sh = (shingles_arrow(n)(F.col(text_col)) if arrow
-          else shingles(F.col(text_col), n))
+                   n: int) -> DataFrame:
+    """(key, shingle_set, set_size) for docs with at least one shingle,
+    shingled by the batched ``shingles_arrow`` UDF."""
+    sh = shingles_arrow(n)(F.col(text_col))
     # the (expensive) shingling projection is spread when the source is
     # under-parallel (downstream aggs shuffle regardless)
     return (
@@ -1010,8 +1004,6 @@ def keep_representatives(
     df: DataFrame,
     groups: DataFrame,
     key_col: str = "doc_id",
-    broadcast: bool | None = None,
-    broadcast_threshold: int = KEEP_BROADCAST_THRESHOLD,
 ) -> DataFrame:
     """Drop all but one doc per near-dup group: keep the doc whose id IS
     the group label (the min id — deterministic), plus every doc in no
@@ -1022,14 +1014,13 @@ def keep_representatives(
     (operators/repetition.py): at typical small-corpus dup rates the
     groups table broadcasts, but at web scale 30-50% of docs carry a
     near-dup — billions of group rows — and an unconditional broadcast
-    is a driver/executor OOM (round-3 verdict #2). ``broadcast=None``
-    counts the groups table once at plan-construction time and
-    broadcasts only under ``broadcast_threshold``; above it a plain
-    shuffled equi-join on the doc key (uniform — ids, not content)
-    carries identical semantics."""
+    is a driver/executor OOM (round-3 verdict #2). The groups table is
+    counted once at plan-construction time and broadcasts only up to
+    ``KEEP_BROADCAST_THRESHOLD`` rows; above it a plain shuffled
+    equi-join on the doc key (uniform — ids, not content) carries
+    identical semantics."""
     g = groups.withColumnRenamed("doc_id", key_col)
-    if broadcast is None:
-        broadcast = g.count() <= broadcast_threshold
+    broadcast = g.count() <= KEEP_BROADCAST_THRESHOLD
     g_side = F.broadcast(g) if broadcast else g.hint("merge")
     return (df.join(g_side, key_col, "left")
             .filter(F.col("group_id").isNull()
@@ -1042,8 +1033,6 @@ def keep_best_representatives(
     groups: DataFrame,
     score_col: str,
     key_col: str = "doc_id",
-    broadcast: bool | None = None,
-    broadcast_threshold: int = KEEP_BROADCAST_THRESHOLD,
 ) -> DataFrame:
     """Quality-priority keep-one: per near-dup group keep the member
     with the HIGHEST ``score_col`` (tie → min key; NULL score sorts
@@ -1060,8 +1049,7 @@ def keep_best_representatives(
     on uniform ids. The winner table (≤ one row per group) re-enters
     via the same size-gated broadcast as ``keep_representatives``."""
     g = groups.withColumnRenamed("doc_id", key_col)
-    if broadcast is None:
-        broadcast = g.count() <= broadcast_threshold
+    broadcast = g.count() <= KEEP_BROADCAST_THRESHOLD
     g_side = F.broadcast(g) if broadcast else g.hint("merge")
     # NULL score → -inf so a scored member always beats an unscored one
     neg = -F.coalesce(F.col(score_col).cast("double"),

@@ -106,6 +106,30 @@ def line_dedup(
                                      f"{text_col}_dedup")
 
 
+def word_chunks(window_tokens: int):
+    """Arrow-batched chunk builder of ``chunk_dedup``: each document's
+    tokens (``textquality.words``) cut into aligned non-overlapping
+    ``window_tokens``-token chunks, space-joined; NULL text → no
+    chunks."""
+    from pyspark.sql.functions import pandas_udf
+
+    w = window_tokens
+
+    @pandas_udf("array<string>")
+    def chunks(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            if t is None:
+                out.append([])
+                continue
+            tk = words(t)
+            out.append([" ".join(tk[i:i + w])
+                        for i in range(0, len(tk), w)])
+        return pd.Series(out)
+
+    return chunks
+
+
 def chunk_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -140,23 +164,7 @@ def chunk_dedup(
     tokenizer per element, CLAUDE.md rule 3 / BENCH.md lesson 2;
     measured 16.9 s → 4.7 s for the sf1.0 query before the kernel,
     equality pinned in tests/test_lines.py)."""
-    from pyspark.sql.functions import pandas_udf
-
-    w = window_tokens
-
-    @pandas_udf("array<string>")
-    def chunks_arrow(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            tk = words(t)
-            out.append([" ".join(tk[i:i + w])
-                        for i in range(0, len(tk), w)])
-        return pd.Series(out)
-
-    chunks = chunks_arrow(F.col(text_col))
+    chunks = word_chunks(window_tokens)(F.col(text_col))
     nn = df.filter(F.col(text_col).isNotNull())
     units = nn.select(
         F.col(key_col).alias("k"),
@@ -270,7 +278,6 @@ def intra_doc_line_dedup(
     text_col: str = "text",
     key_col: str = "doc_id",
     min_chars: int = 1,
-    arrow: bool = True,
 ) -> DataFrame:
     """Strip REPEATED lines within each document (the intra-document
     sibling of the corpus-wide C4 ``line_dedup`` above): keep the first
@@ -286,52 +293,31 @@ def intra_doc_line_dedup(
     that a template happens to repeat inside the page.
 
     Scale shape: embarrassingly parallel — one projection, no shuffle,
-    no state beyond a per-document seen-set. ``arrow=True`` is one
-    Arrow-batched UDF (O(lines) per doc, CLAUDE.md rule 4); False is
-    the pure-Column oracle anchor (index lambda + array_position —
-    O(lines^2) per doc, CodegenFallback, exact same semantics as the
-    DuckDB replay)."""
-    if arrow:
-        from pyspark.sql.functions import pandas_udf
+    no state beyond a per-document seen-set: one Arrow-batched UDF,
+    O(lines) per doc (CLAUDE.md rule 4)."""
+    from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("struct<text:string,removed:long>")
-        def dedup(s: pd.Series) -> pd.DataFrame:
-            texts, removed = [], []
-            for t in s:
-                if t is None:
-                    texts.append(None)
-                    removed.append(0)
-                    continue
-                seen: set[str] = set()
-                out = []
-                for ln in t.split("\n"):
-                    if len(ln) < min_chars:
-                        out.append(ln)
-                    elif ln not in seen:
-                        seen.add(ln)
-                        out.append(ln)
-                texts.append("\n".join(out))
-                removed.append(t.count("\n") + 1 - len(out))
-            return pd.DataFrame({"text": texts, "removed": removed})
+    @pandas_udf("struct<text:string,removed:long>")
+    def dedup(s: pd.Series) -> pd.DataFrame:
+        texts, removed = [], []
+        for t in s:
+            if t is None:
+                texts.append(None)
+                removed.append(0)
+                continue
+            seen: set[str] = set()
+            out = []
+            for ln in t.split("\n"):
+                if len(ln) < min_chars:
+                    out.append(ln)
+                elif ln not in seen:
+                    seen.add(ln)
+                    out.append(ln)
+            texts.append("\n".join(out))
+            removed.append(t.count("\n") + 1 - len(out))
+        return pd.DataFrame({"text": texts, "removed": removed})
 
-        res = dedup(F.col(text_col))
-        return df.select(F.col(key_col),
-                         res["text"].alias(text_col),
-                         res["removed"].alias("lines_removed"))
-    lines = F.split(F.col(text_col), "\n")
-    kept = F.filter(
-        lines,
-        lambda x, i: (F.length(x) < min_chars)
-        | (F.array_position(lines, x) == i + 1))
-    # the scrubbed text gets a TEMP name first: aliasing it straight to
-    # text_col in the same select makes Spark resolve the sibling
-    # expression's array_position against the NEW (deduped) array —
-    # the self-referencing-alias hazard (removed counts went wrong)
-    return (df.select(
-        F.col(key_col),
-        F.when(F.col(text_col).isNull(), F.lit(None).cast("string"))
-        .otherwise(F.array_join(kept, "\n")).alias("__dedup_text"),
-        F.when(F.col(text_col).isNull(), F.lit(0))
-        .otherwise(F.size(lines) - F.size(kept))
-        .cast("long").alias("lines_removed"))
-        .withColumnRenamed("__dedup_text", text_col))
+    res = dedup(F.col(text_col))
+    return df.select(F.col(key_col),
+                     res["text"].alias(text_col),
+                     res["removed"].alias("lines_removed"))

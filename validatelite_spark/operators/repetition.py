@@ -22,11 +22,12 @@ Scale shape (100 TB):
 * decontamination: benchmark n-gram sets are MBs (eval suites), the
   corpus is the 100 TB side — so the benchmark set is broadcast and the
   corpus-side exploded n-grams join map-side without ever shuffling.
-  The broadcast is SIZE-GATED (``contaminated_docs(broadcast=None)``
-  counts the benchmark's distinct n-grams first): a corpus-sized
-  "benchmark" (e.g. corpus-vs-corpus overlap checks) would otherwise
-  broadcast terabytes — above the threshold the join falls back to a
-  shuffled sort-merge join, which scales with both sides.
+  The broadcast is SIZE-GATED (``contaminated_docs`` counts the
+  benchmark's distinct n-grams against ``BROADCAST_NGRAM_THRESHOLD``
+  first): a corpus-sized "benchmark" (e.g. corpus-vs-corpus overlap
+  checks) would otherwise broadcast terabytes — above the threshold the
+  join falls back to a shuffled sort-merge join, which scales with both
+  sides.
 """
 
 from __future__ import annotations
@@ -113,7 +114,6 @@ def repetition_signals(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    arrow: bool = True,
 ) -> DataFrame:
     """Per-document n-gram repetition metrics:
 
@@ -127,8 +127,7 @@ def repetition_signals(
     Two-level aggregation: count per (doc, ngram), then roll up per doc —
     both partial-agg map-side; see module docstring for the scale story.
     """
-    ng = (ngrams_arrow(n)(F.col(text_col)) if arrow
-          else ngrams(F.col(text_col), n))
+    ng = ngrams_arrow(n)(F.col(text_col))
     ex = df.select(F.col(id_col), F.explode(ng).alias("s"))
     per = ex.groupBy(id_col, "s").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -147,9 +146,9 @@ def repetition_signals(
     )
 
 
-#: auto mode broadcasts the benchmark n-gram set only below this many
-#: distinct n-grams (~8M 8-gram strings ≈ 500 MB serialized — the edge
-#: of sane broadcast territory on big executors)
+#: the decontamination joins broadcast the benchmark n-gram set only up
+#: to this many distinct n-grams (~8M 8-gram strings ≈ 500 MB serialized
+#: — the edge of sane broadcast territory on big executors)
 BROADCAST_NGRAM_THRESHOLD = 8_000_000
 
 
@@ -195,44 +194,39 @@ def contaminated_docs(
     n: int = 8,
     min_hits: int = 1,
     bench_text_col: str | None = None,
-    arrow: bool = True,
-    broadcast: bool | None = None,
-    broadcast_threshold: int = BROADCAST_NGRAM_THRESHOLD,
 ) -> DataFrame:
     """Documents sharing ≥ ``min_hits`` distinct word n-grams with a
     benchmark corpus → ``(doc_id, hit_ngrams, overlap_frac)`` where
     ``overlap_frac`` is the share of the doc's distinct n-grams found in
     the benchmark.
 
-    Join strategy is size-gated. ``broadcast=True`` broadcasts the
-    benchmark's distinct n-gram set (eval suites are MBs; the corpus
-    side joins map-side and never shuffles its n-grams — only per-doc
-    hit counts move). ``broadcast=False`` forces a shuffled sort-merge
-    join — the right shape when the "benchmark" is itself corpus-sized
-    (corpus-vs-corpus overlap), where a broadcast would ship terabytes
-    to every executor. ``broadcast=None`` (default) counts the distinct
-    benchmark n-grams first (one cheap aggregate over the small side)
-    and broadcasts only under ``broadcast_threshold``.
+    Join strategy is size-gated: the distinct benchmark n-grams are
+    counted first (one cheap aggregate over the small side). Up to
+    ``BROADCAST_NGRAM_THRESHOLD`` the set broadcasts (eval suites are
+    MBs; the corpus side joins map-side and never shuffles its n-grams
+    — only per-doc hit counts move); above it the join is a shuffled
+    sort-merge join — the right shape when the "benchmark" is itself
+    corpus-sized (corpus-vs-corpus overlap), where a broadcast would
+    ship terabytes to every executor.
     """
     bcol = bench_text_col or text_col
+    # the gate runs one small-side job at plan-construction time (the
+    # benchmark is the small side by contract). The distinct n-gram set
+    # is CACHED across the gate count and the join — without it the
+    # benchmark-side Arrow shingling + distinct ran twice per call; the
+    # footprint is benchmark-bounded (MBs by contract, and the gate
+    # itself refuses to broadcast past the threshold).
     b_sh = (
-        _shingle_table(benchmark, bcol, id_col, n, arrow=arrow)
+        _shingle_table(benchmark, bcol, id_col, n)
         .select(F.explode("sh").alias("s"))
         .distinct()
+        .cache()
     )
-    if broadcast is None:
-        # auto-gating runs one small-side job at plan-construction time
-        # (the benchmark is the small side by contract; callers that
-        # need full laziness pass broadcast= explicitly). The distinct
-        # n-gram set is CACHED across the gate count and the join —
-        # without it the benchmark-side Arrow shingling + distinct ran
-        # twice per call; the footprint is benchmark-bounded (MBs by
-        # contract, and the gate itself refuses to broadcast past
-        # ``broadcast_threshold``).
-        b_sh = b_sh.cache()
-        broadcast = b_sh.count() <= broadcast_threshold
-    bench_side = F.broadcast(b_sh) if broadcast else b_sh.hint("merge")
-    d_tab = _shingle_table(docs, text_col, id_col, n, arrow=arrow)
+    if b_sh.count() <= BROADCAST_NGRAM_THRESHOLD:
+        bench_side = F.broadcast(b_sh)
+    else:
+        bench_side = b_sh.hint("merge")
+    d_tab = _shingle_table(docs, text_col, id_col, n)
     ex = d_tab.select("k", "sz", F.explode("sh").alias("s"))
     return (
         ex.join(bench_side, "s")
@@ -258,9 +252,6 @@ def contamination_provenance(
     min_hits: int = 1,
     bench_text_col: str | None = None,
     bench_id_col: str | None = None,
-    arrow: bool = True,
-    broadcast: bool | None = None,
-    broadcast_threshold: int = BROADCAST_NGRAM_THRESHOLD,
 ) -> DataFrame:
     """Which benchmark item leaked into which corpus doc:
     ``(doc_id, bench_id, hit_ngrams)`` — distinct word ``n``-grams
@@ -283,21 +274,20 @@ def contamination_provenance(
     ``n`` when the benchmark itself carries template text. The heavy
     aggregate groups on (doc, bench) pairs — map-side combinable,
     never a window."""
-    from validatelite_spark.operators.dedup import _shingle_table
-
     bcol = bench_text_col or text_col
     bid = bench_id_col or id_col
-    b_tab = (_shingle_table(benchmark, bcol, bid, n, arrow=arrow)
+    # cached across the gate count and the join — same rationale (and
+    # bound) as contaminated_docs above
+    b_tab = (_shingle_table(benchmark, bcol, bid, n)
              .select(F.col("k").alias("__bid"),
                      F.explode("sh").alias("s"))
-             .distinct())
-    if broadcast is None:
-        # cached across the gate count and the join — same rationale
-        # (and bound) as contaminated_docs above
-        b_tab = b_tab.cache()
-        broadcast = b_tab.count() <= broadcast_threshold
-    bench_side = F.broadcast(b_tab) if broadcast else b_tab.hint("merge")
-    ex = (_shingle_table(docs, text_col, id_col, n, arrow=arrow)
+             .distinct()
+             .cache())
+    if b_tab.count() <= BROADCAST_NGRAM_THRESHOLD:
+        bench_side = F.broadcast(b_tab)
+    else:
+        bench_side = b_tab.hint("merge")
+    ex = (_shingle_table(docs, text_col, id_col, n)
           .select("k", F.explode("sh").alias("s")))
     return (ex.join(bench_side, "s")
             .groupBy("k", "__bid")

@@ -191,7 +191,6 @@ def semdedup_flags(
     vec_col: str = "embedding",
     round_to: int = 6,
     max_cluster_size: int | None = None,
-    arrow: bool = False,
 ) -> DataFrame:
     """Per-document verdict: (id, bucket, centroid_sim, kept).
 
@@ -199,11 +198,9 @@ def semdedup_flags(
     (centroid_sim ASC, id ASC) rank has round(cosine, round_to) >= eps.
     Buckets larger than ``max_cluster_size`` are kept whole (the skew
     guard — conservative, never wrong, only under-deduped; the count
-    of such buckets is observable via ``bucket_sizes``). ``arrow`` is
-    retained for API compatibility and ignored: dominance now always
-    runs in the ``_max_prior_cos`` bucket kernel, which is bit-identical
-    to the pure-Column fold it replaced (and to the einsum variant's
-    intent) — see its docstring.
+    of such buckets is observable via ``bucket_sizes``). Dominance runs
+    in the ``_max_prior_cos`` bucket kernel, bit-identical to the
+    pure-Column fold — see its docstring.
     """
     assigned = semdedup_assign(df, mode=mode, n_clusters=n_clusters,
                                iters=iters, n_planes=n_planes, seed=seed,

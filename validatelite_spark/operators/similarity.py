@@ -55,29 +55,34 @@ def _cosine_udf():
 
 
 def _dot_udf():
-    """Arrow-batched pairwise dot product (einsum per batch) — the
-    stored-norm scoring companion to ``_cosine_udf``: callers divide by
-    precomputed norms, so only the dot crosses into Python."""
+    """Arrow-batched pairwise dot product — the stored-norm scoring
+    companion to ``_cosine_udf``: callers divide by precomputed norms,
+    so only the dot crosses into Python. The products are accumulated
+    dimension by dimension, left to right — the order of the ``_dot``
+    Column fold — so each value equals ``_dot``'s bit for bit (an
+    ``einsum`` sums in another order and differs in the last bits;
+    ``semdedup._max_prior_cos`` uses the same accumulation)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def dot(v1: pd.Series, v2: pd.Series) -> pd.Series:
         a = np.array(v1.tolist(), dtype=np.float64)
         b = np.array(v2.tolist(), dtype=np.float64)
-        return pd.Series(np.einsum("ij,ij->i", a, b))
+        acc = np.zeros(len(a))
+        for d in range(a.shape[1]):
+            acc += a[:, d] * b[:, d]
+        return pd.Series(acc)
 
     return dot
 
 
-def _candidate_score(round_to: int, arrow: bool):
-    """score = round(dot(cv, qv) / (cn · qn), round_to) — pure-Column
-    (``F.aggregate`` — CodegenFallback, interpreted per candidate row,
-    but expressible in DuckDB, so it anchors the oracles) or
-    Arrow-batched (one einsum per batch — the production path; round-3
-    verdict #4a). Both round identically, so results agree at round_to
-    decimals (pinned by tests/test_ivf.py)."""
-    d = _dot_udf()(F.col("cv"), F.col("qv")) if arrow \
-        else _dot(F.col("cv"), F.col("qv"))
+def _candidate_score(round_to: int):
+    """score = round(dot(cv, qv) / (cn · qn), round_to), the dot from
+    the Arrow-batched ``_dot_udf`` (one pass per batch instead of the
+    ``F.aggregate`` fold, a CodegenFallback interpreted per candidate
+    row — CLAUDE.md rule 3), equal to the fold bit for bit, so the
+    DuckDB oracles still anchor it (pinned by tests/test_ivf.py)."""
+    d = _dot_udf()(F.col("cv"), F.col("qv"))
     return F.round(d / (F.col("cn") * F.col("qn")), round_to)
 
 
@@ -399,7 +404,6 @@ def ivf_topk(
     round_to: int = 6,
     refine_iters: int = 0,
     centroids: list[list[float]] | None = None,
-    arrow: bool = False,
 ) -> DataFrame:
     """IVF-style ANN: corpus vectors are assigned to their
     nearest-centroid bucket ONCE (argmax of centroid dots — pure Column
@@ -440,7 +444,7 @@ def ivf_topk(
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", _candidate_score(round_to, arrow))
+        .withColumn("score", _candidate_score(round_to))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.col("neighbor_id"))
@@ -509,38 +513,32 @@ def ivf_index_probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 6,
-    arrow: bool = True,
-    collect_probe: bool | None = None,
-    collect_threshold: int = IVF_PROBE_COLLECT_THRESHOLD,
 ) -> DataFrame:
     """Top-k ANN against a persisted ``ivf_index_write`` index.
 
     Two physical shapes, same results (size-gated like
     ``keep_representatives`` — VERDICT r4 #6):
 
-    - **small query side** (≤ ``collect_threshold`` rows, or
-      ``collect_probe=True``): probe buckets are collected
-      (≤ |queries|·n_probe ints) and applied as a LITERAL
-      ``bucket IN (...)`` predicate, so Catalyst prunes the non-probed
-      bucket partitions at planning time (``PartitionFilters`` on the
-      scan — pinned by tests/test_ivf.py), and the rebuilt query rows
-      broadcast into the scoring join.
-    - **large query side** (``collect_probe=False`` or count above the
-      threshold): NOTHING is collected — the probe projection stays a
-      lazy plan evaluated exactly once inside a shuffled join on
-      ``bucket``. Corpus-vs-corpus retrieval probes essentially every
-      bucket anyway, so the literal pruning the collect path buys is
+    - **small query side** (≤ ``IVF_PROBE_COLLECT_THRESHOLD`` rows):
+      probe buckets are collected (≤ |queries|·n_probe ints) and
+      applied as a LITERAL ``bucket IN (...)`` predicate, so Catalyst
+      prunes the non-probed bucket partitions at planning time
+      (``PartitionFilters`` on the scan — pinned by tests/test_ivf.py),
+      and the rebuilt query rows broadcast into the scoring join.
+    - **large query side** (count above the threshold): NOTHING is
+      collected — the probe projection stays a lazy plan evaluated
+      exactly once inside a shuffled join on ``bucket``.
+      Corpus-vs-corpus retrieval probes essentially every bucket
+      anyway, so the literal pruning the collect path buys is
       worthless there; the join key's cardinality is ``n_centroids``,
       so at that scale build the index with n_centroids ≈ √corpus
       (the standard IVF sizing) to keep per-bucket candidate sets —
       and the bucket-join partitions AQE splits — bounded.
 
-    ``collect_probe=None`` counts the query side once to pick the path.
-    Scoring is identical either way: stored norms, same rounding, same
-    tie-break. ``arrow=True`` (default — the production path) scores
-    candidates with the Arrow-batched einsum dot; ``arrow=False`` keeps
-    the pure-Column expression the DuckDB oracle anchors on. Parity at
-    ``round_to`` decimals is pinned by tests/test_ivf.py."""
+    The query side is counted once to pick the path. Scoring is
+    identical either way and identical to ``ivf_topk``'s: stored norms,
+    the fold-order Arrow dot (``_candidate_score``), same rounding, same
+    tie-break."""
     import json
 
     from validatelite_spark.sources import fsutil
@@ -554,13 +552,10 @@ def ivf_index_probe(
         _norm(F.col(vec_col)).alias("qn"),
         F.explode(_probe_udf(cents, n_probe)(F.col(vec_col)))
         .alias("bucket"))
-    if collect_probe is None:
-        collect_probe = queries.count() <= collect_threshold
-
     c_all = spark.read.parquet(path).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
         F.col("__norm").alias("cn"), "bucket")
-    if collect_probe:
+    if queries.count() <= IVF_PROBE_COLLECT_THRESHOLD:
         # materialize the probe ONCE driver-side and rebuild — no
         # second UDF evaluation and, unlike .cache(), nothing pinned
         # in executor storage for the session lifetime
@@ -575,7 +570,7 @@ def ivf_index_probe(
         scored = c_all.join(q_plan, "bucket")
     scored = (scored
               .filter(F.col("neighbor_id") != F.col("query_id"))
-              .withColumn("score", _candidate_score(round_to, arrow)))
+              .withColumn("score", _candidate_score(round_to)))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.col("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))

@@ -40,25 +40,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from validatelite_spark.functions.textquality import (
-    ngrams,
-    ngrams_arrow,
-    tokens,
-)
+from validatelite_spark.functions.textquality import ngrams_arrow, tokens
 from validatelite_spark.operators.dedup import DEFAULT_DF_CAP, _cooccurrence
 from validatelite_spark.sources.reader import spread
 
 
 def positional_grams(df: DataFrame, text_col: str = "text",
-                     key_col: str = "doc_id", n: int = 8,
-                     arrow: bool = True) -> DataFrame:
+                     key_col: str = "doc_id", n: int = 8) -> DataFrame:
     """(k, pos, g): every word n-gram of every document at its 1-based
-    word position. ``arrow=True`` builds the gram array in one Arrow
-    batch (hot path — CLAUDE.md rule 3 keeps higher-order functions out
-    of corpus-wide projections); False keeps a pure-Column expression
-    for no-Python contexts."""
-    gs = (ngrams_arrow(n)(F.col(text_col)) if arrow
-          else ngrams(F.col(text_col), n))
+    word position. The gram array is built in one Arrow batch
+    (CLAUDE.md rule 3 keeps higher-order functions out of corpus-wide
+    projections)."""
+    gs = ngrams_arrow(n)(F.col(text_col))
     return (spread(df).select(F.col(key_col).alias("k"), gs.alias("gs"))
             .filter(F.size("gs") > 0)
             .select("k", F.posexplode("gs").alias("pos0", "g"))
@@ -104,7 +97,6 @@ def exact_substring_pairs(
     n: int = 8,
     min_words: int = 15,
     df_cap: int | None = DEFAULT_DF_CAP,
-    arrow: bool = True,
 ) -> DataFrame:
     """Document pairs sharing an exact word run of >= ``min_words``
     words: (id1, id2, overlap_words, n_runs) with id1 < id2,
@@ -115,7 +107,7 @@ def exact_substring_pairs(
     plays the role of Lee et al.'s 50-token report threshold — at web
     scale raise both (n=15, min_words=50) so the seed table carries
     fewer, longer grams."""
-    pg = positional_grams(df, text_col, key_col, n, arrow=arrow)
+    pg = positional_grams(df, text_col, key_col, n)
     runs = _diagonal_runs(
         _seed_pairs(pg, df_cap, "exact_substring_pairs"), n)
     return (runs.groupBy("id1", "id2")
@@ -133,7 +125,6 @@ def duplicate_spans(
     n: int = 8,
     min_words: int = 15,
     df_cap: int | None = DEFAULT_DF_CAP,
-    arrow: bool = True,
 ) -> DataFrame:
     """Merged word spans to CUT per document: (k, start, end) 1-based
     inclusive word ranges duplicated verbatim elsewhere in the corpus.
@@ -145,7 +136,7 @@ def duplicate_spans(
     keeps its id1-side span (it is the earlier doc there). Overlapping
     or adjacent spans within a document are merged (gaps-and-islands on
     the running max end) so the scrub step cuts each word once."""
-    pg = positional_grams(df, text_col, key_col, n, arrow=arrow)
+    pg = positional_grams(df, text_col, key_col, n)
     runs = _diagonal_runs(_seed_pairs(pg, df_cap, "duplicate_spans"), n)
     spans = (runs.filter(F.col("run_words") >= min_words)
              .select(F.col("id2").alias("k"),
@@ -176,7 +167,6 @@ def substring_scrub(
     n: int = 8,
     min_words: int = 15,
     df_cap: int | None = DEFAULT_DF_CAP,
-    arrow: bool = True,
 ) -> DataFrame:
     """Cut every duplicated span (keep-first policy of
     ``duplicate_spans``) out of each document's TOKEN stream:
@@ -191,8 +181,7 @@ def substring_scrub(
     bounded per doc), re-aggregate in position order. Only documents
     WITH spans pay the explode; the rest is a broadcast-size anti-join
     at typical duplication rates (spans exist for a few % of docs)."""
-    spans = duplicate_spans(df, text_col, key_col, n, min_words, df_cap,
-                            arrow=arrow)
+    spans = duplicate_spans(df, text_col, key_col, n, min_words, df_cap)
     toks = tokens(F.col(text_col))
     base = df.select(F.col(key_col).alias("k"),
                      toks.alias("w"),

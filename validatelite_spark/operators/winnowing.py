@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from validatelite_spark.functions.textquality import ngrams, ngrams_arrow
+from validatelite_spark.functions.textquality import ngrams_arrow
 from validatelite_spark.operators.dedup import (
     DEFAULT_DF_CAP,
     _cooccurrence,
@@ -52,16 +52,12 @@ def winnow_fingerprints(
     key_col: str = "doc_id",
     n: int = 2,
     window: int = 4,
-    arrow: bool = True,
 ) -> DataFrame:
     """(k, fp, pos): the winnowed fingerprint set per document —
-    fp the selected 32-bit n-gram hash, pos its n-gram index.
-    ``arrow=False`` keeps the pure-Column gram chain (no-Python
-    contexts / the oracle-anchor plan); both produce identical rows."""
+    fp the selected 32-bit n-gram hash, pos its n-gram index."""
     if window < 1 or n < 1:
         raise ValueError("n and window must be >= 1")
-    grams = (ngrams_arrow(n)(F.col(text_col)) if arrow
-             else ngrams(F.col(text_col), n))
+    grams = ngrams_arrow(n)(F.col(text_col))
     base = (df.filter(F.col(text_col).isNotNull())
             .select(F.col(key_col).alias("k"), grams.alias("g"))
             .filter(F.size("g") >= 1)

@@ -102,7 +102,7 @@ def curate(
 
     The kept survivors (and, with ``benchmark_texts``, the deduped
     frame) stay cached; ``spark.catalog.clearCache()`` releases them."""
-    cfg = PipelineConfig(allowed_langs=allowed_langs, text_column=text_col)
+    cfg = PipelineConfig(text_column=text_col)
     rules = _standard_rules(text_col, allowed_langs)
     d = docs
     if benchmark_urls is not None:
@@ -171,7 +171,7 @@ def curate_with_funnel(
     obs = {"1_input": Observation("funnel_input"),
            "2_dedup": Observation("funnel_dedup"),
            "3_kept": Observation("funnel_kept")}
-    cfg = PipelineConfig(allowed_langs=allowed_langs, text_column=text_col)
+    cfg = PipelineConfig(text_column=text_col)
     rules = _standard_rules(text_col, allowed_langs)
     d = docs.observe(obs["1_input"], cnt)
     uniq = (exact_dedup(d, text_col, key_col)

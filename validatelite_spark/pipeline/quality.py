@@ -49,23 +49,32 @@ DROP_SEVERITIES = ("HIGH", "CRITICAL")
 
 @dataclass
 class PipelineConfig:
-    allowed_langs: tuple[str, ...] = ("en",)
-    max_ppl: float = 13.5  # calibrated: clean en<=12, pii 12.4 | fr 14.6, boiler 16.7, de 17.6, junk 38.7
+    #: the column ``annotate`` scrubs into ``text_scrubbed``
     text_column: str = "text"
 
 
-def default_rules(cfg: PipelineConfig) -> list[Rule]:
+def default_rules(
+    text_column: str = "text",
+    *,
+    allowed_langs: tuple[str, ...] = ("en",),
+    # calibrated: clean en<=12, pii 12.4 | fr 14.6, boiler 16.7,
+    # de 17.6, junk 38.7
+    max_ppl: float = 13.5,
+) -> list[Rule]:
     """The standard web-text rule set: each is an ordinary engine rule —
-    a user can add/remove/override exactly like reference rules."""
-    c = cfg.text_column
+    a user can add/remove/override exactly like reference rules. The
+    language list and the perplexity ceiling are parameters of this
+    set, not of the pipeline: a caller passing its own ``rules`` sets
+    them in those rules."""
+    c = text_column
     return [
         Rule(RuleType.NOT_NULL, c, name="not_null_text",
              severity=SeverityLevel.CRITICAL),
         Rule(RuleType.GOPHER, c, name="gopher_text",
              severity=SeverityLevel.HIGH),
-        Rule(RuleType.LANG_ID, c, {"allowed_langs": list(cfg.allowed_langs)},
+        Rule(RuleType.LANG_ID, c, {"allowed_langs": list(allowed_langs)},
              name="lang_id_text", severity=SeverityLevel.HIGH),
-        Rule(RuleType.PERPLEXITY, c, {"max_ppl": cfg.max_ppl},
+        Rule(RuleType.PERPLEXITY, c, {"max_ppl": max_ppl},
              name="perplexity_text", severity=SeverityLevel.HIGH),
         # PII is scrubbed, not dropped: LOW severity
         Rule(RuleType.PII_SCRUB, c, name="pii_text",
@@ -83,7 +92,8 @@ class QualityPipeline:
                  rules: Optional[list[Rule]] = None) -> None:
         self.spark = spark
         self.config = config or PipelineConfig()
-        self.rules = rules if rules is not None else default_rules(self.config)
+        self.rules = (rules if rules is not None
+                      else default_rules(self.config.text_column))
 
     # ----------------------------------------------------------- annotate
     def annotate(self, df: DataFrame) -> DataFrame:
