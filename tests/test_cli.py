@@ -202,7 +202,7 @@ class TestConnAlias:
         in a subprocess since no jar ships."""
         script = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql.readwriter import DataFrameReader
 
 def fake_jdbc(self, url, table, **kw):
@@ -218,8 +218,8 @@ rc = main(["--cpus", "2", "check", "--conn", "mysql://host:3306/db",
            "--table", "t1", "--rule", "not_null(c)", "--quiet"])
 print("RC", rc)
 """
-        p = subprocess.run([sys.executable, "-c", script],
+        p = subprocess.run([sys.executable, "-c", script, str(ROOT)],
                            capture_output=True, text=True, timeout=300,
-                           cwd="/root/repo")
+                           cwd=ROOT)
         assert "RC 1" in p.stdout, (p.stdout, p.stderr[-2000:])
         assert "0 passed, 1 failed" in p.stdout  # one NULL fails

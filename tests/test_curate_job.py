@@ -5,9 +5,12 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
+
+JOB = str(Path(__file__).resolve().parents[1] / "jobs" / "curate_job.py")
 
 
 @pytest.mark.slow
@@ -20,8 +23,7 @@ def test_curate_job_end_to_end(spark, tmp_path):
         .write.parquet(inp)
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/curate_job.py", inp, out,
-         "30000", "en"],
+        [sys.executable, JOB, inp, out, "30000", "en"],
         capture_output=True, text=True, timeout=240)
     assert r.returncode == 0, r.stderr[-2000:]
     assert "[curate] kept" in r.stdout
@@ -62,8 +64,7 @@ def test_exact_refetches_do_not_survive(spark, tmp_path):
     pages.unionAll(pages).unionAll(pages).write.parquet(inp)
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/curate_job.py", inp, out,
-         "30000", "en"],
+        [sys.executable, JOB, inp, out, "30000", "en"],
         capture_output=True, text=True, timeout=240)
     assert r.returncode == 0, r.stderr[-2000:]
 
@@ -93,7 +94,7 @@ def test_sharded_delivery(spark, tmp_path):
         .write.parquet(inp)
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/curate_job.py", inp, out,
+        [sys.executable, JOB, inp, out,
          "50000", "en", "-", "lang", "-", "-", "-", "5000"],
         capture_output=True, text=True, timeout=240)
     assert r.returncode == 0, r.stderr[-2000:]

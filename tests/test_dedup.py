@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import logging
 import os
 import subprocess
 import sys
@@ -317,6 +318,29 @@ class TestIncrementalMinhash:
         # no duplicate rows for any pair (the fan-out the fix removes)
         assert all(len(v) == 1 for v in by_pair.values())
         assert (0, 9) in by_pair and by_pair[(0, 9)] == [1.0]
+
+    def test_index_bucket_over_cap_warned(self, docs, tmp_path, caplog):
+        """Three copies of one text share every band bucket of the index;
+        past ``bucket_cap=2`` each bucket keeps only its min id, and the
+        truncation is reported once (not silently dropped)."""
+        path = str(tmp_path / "mh_hot")
+        base = docs.filter("doc_id = 0").collect()[0]["text"]
+        spark = docs.sparkSession
+        dedup.minhash_index_write(spark.createDataFrame(
+            [(i, base) for i in (10, 11, 12)], "doc_id long, text string"),
+            path, bands=8)
+        with caplog.at_level(logging.WARNING, logger="validatelite_spark"):
+            got = dedup.incremental_minhash_pairs(
+                docs.filter("doc_id = 1"), path, threshold=0.5,
+                bucket_cap=2).collect()
+        warned = [r.getMessage() for r in caplog.records
+                  if r.name.startswith("validatelite_spark")
+                  and r.levelno == logging.WARNING]
+        assert len(warned) == 1, warned
+        assert warned[0].startswith("incremental_minhash_pairs: 8 candidate "
+                                    "buckets exceed bucket_cap=2")
+        assert [(r["id1"], r["id2"], r["jaccard"]) for r in got] == [
+            (10, 1, 1.0)]
 
     def test_params_sidecar_respected(self, docs, tmp_path):
         path = str(tmp_path / "mh_n4")

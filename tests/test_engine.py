@@ -7,8 +7,10 @@ over a deterministic inline dataset.
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
+from validatelite_spark.core import registry
 from validatelite_spark.core.rules import (
     Rule,
     RuleType,
@@ -243,6 +245,17 @@ PINNED = [
 ]
 
 
+def _job_count(spark, group, fn):
+    """Spark jobs ``fn()`` starts, counted by its job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestFusedSamples:
     def test_samples_pinned(self, spark, pinned):
         eng = RuleEngine(spark, EngineConfig(sample_data_max_records=3))
@@ -252,19 +265,128 @@ class TestFusedSamples:
         assert got == PINNED
 
     def test_merged_samples_cost_at_most_two_jobs(self, spark, pinned):
-        sc = spark.sparkContext
         eng = RuleEngine(spark, EngineConfig(sample_data_max_records=3))
         rules = [r for r in _pinned_rules() if r.type is not RuleType.UNIQUE]
         jobs = {}
         for samples in (False, True):
-            group = f"pinned-samples-{samples}"
-            sc.setJobGroup(group, group)
-            try:
-                results = eng.execute(pinned, rules, collect_samples=samples)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs[samples] = len(sc.statusTracker().getJobIdsForGroup(group))
+            results, jobs[samples] = _job_count(
+                spark, f"pinned-samples-{samples}",
+                lambda s=samples: eng.execute(pinned, rules,
+                                              collect_samples=s))
         # 8 failing rules in 2 filter groups, one sampling job pair
         assert sum(r.failed_records > 0 for r in results) == 8
         assert all(r.sample_data for r in results)
         assert jobs[True] - jobs[False] <= 2, jobs
+
+
+#: (a, b, c, day): NULLs and duplicates in a and b, c all distinct
+DUPS = [(i % 4 if i % 5 else None, f"v{i % 7}" if i % 3 else None, i,
+         f"2023-{i % 14 + 1:02d}-01") for i in range(40)]
+
+
+@pytest.fixture(scope="module")
+def dups(spark):
+    return spark.createDataFrame(DUPS, "a long, b string, c long, day string")
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (a BIGINT, b VARCHAR, c BIGINT, day VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", DUPS)
+    return con
+
+
+class TestMergedUnique:
+    """UNIQUE is one ``count(c) - count_distinct(c)`` column of its filter
+    group's merged aggregate."""
+
+    RULES = [
+        (unique("a"), "a", None),
+        (unique("b"), "b", None),
+        (unique("c"), "c", None),
+        (unique("b", filter_condition="c % 2 = 0", name="unique_b_even"),
+         "b", "c % 2 = 0"),
+        (unique("a", filter_condition="c % 2 = 0", name="unique_a_even"),
+         "a", "c % 2 = 0"),
+    ]
+
+    def test_counts_equal_duckdb(self, spark, dups, duck):
+        rules = [r for r, _, _ in self.RULES] + [
+            date_format("day", "YYYY-MM-DD")]
+        results = RuleEngine(spark).execute(dups, rules)
+        for res, (_, col, where) in zip(results, self.RULES):
+            total, failed = duck.sql(
+                f"SELECT count(*), count({col}) - count(DISTINCT {col}) "
+                f"FROM t WHERE {where or 'true'}").fetchone()
+            assert (res.total_records, res.failed_records) == (
+                total, failed), res.rule_name
+            plan = res.execution_plan
+            assert plan["execution_type"] == "merged_agg"
+            assert plan["filter"] == where
+            # 3 UNIQUE + the DATE_FORMAT kernel share one agg; 2 filtered
+            assert plan["group_size"] == (4 if where is None else 2)
+        assert results[-1].failed_records == 4  # months 13 and 14
+
+    def test_duplicate_samples_equal_duckdb(self, spark, dups, duck):
+        eng = RuleEngine(spark, EngineConfig(sample_data_max_records=2))
+        for res, (_, col, where) in zip(
+                eng.execute(dups, [r for r, _, _ in self.RULES]),
+                self.RULES):
+            want = duck.sql(
+                f"SELECT {col}, count(*) FROM t WHERE {col} IS NOT NULL "
+                f"AND {where or 'true'} GROUP BY {col} "
+                f"HAVING count(*) > 1 ORDER BY {col} LIMIT 4").fetchall()
+            assert [tuple(s.values()) for s in res.sample_data] == want
+
+    def test_unique_adds_at_most_one_job(self, spark, pinned):
+        eng = RuleEngine(spark)
+        rules = [r for r in _pinned_rules() if r.type is not RuleType.UNIQUE]
+        jobs = {}
+        for with_unique in (False, True):
+            run = rules + [unique("name")] if with_unique else rules
+            results, jobs[with_unique] = _job_count(
+                spark, f"unique-in-group-{with_unique}",
+                lambda run=run: eng.execute(pinned, run,
+                                            collect_samples=False))
+        assert results[-1].failed_records == 15
+        assert results[-1].execution_plan["group_size"] == 8
+        assert jobs[True] - jobs[False] <= 1, jobs
+
+    def test_sample_query_failure_keeps_counts(self, spark):
+        # a map column counts distinct but cannot be ordered: the
+        # duplicate-sample query fails, the counts and other rules stand
+        df = spark.createDataFrame(
+            [(i, {"k": i % 2}) for i in range(20)],
+            "id long, m map<string,bigint>")
+        u, nn, r = RuleEngine(spark).execute(df, [
+            unique("m"), not_null("id"), range_rule("id", max=9)])
+        assert (u.status.value, u.total_records, u.failed_records,
+                u.sample_data) == ("FAILED", 20, 18, [])
+        assert nn.status.value == "PASSED"
+        assert r.failed_records == 10 and len(r.sample_data) == 5
+
+    def test_variant_column_is_an_error_for_that_rule_only(self, spark):
+        # count_distinct fails on VARIANT in a task, which would take the
+        # whole merged scan down: the compiler refuses the rule instead
+        df = spark.sql("SELECT id, parse_json(CAST(id % 3 AS STRING)) AS v,"
+                       " array(named_struct('v', parse_json('1'))) AS av"
+                       " FROM range(10)")
+        uv, uav, nn = RuleEngine(spark).execute(
+            df, [unique("v"), unique("av"), not_null("id")])
+        assert uv.status.value == uav.status.value == "ERROR"
+        assert "VARIANT" in uv.error_message
+        assert nn.status.value == "PASSED" and nn.total_records == 10
+
+    def test_registered_type_without_a_form_is_an_error(self, spark, people):
+        registry.register_rule_type("NO_FORM", lambda rule: None,
+                                    replace=True)
+        try:
+            bad, ok = RuleEngine(spark).execute(
+                people, [Rule("NO_FORM", "name"), not_null("name")])
+        finally:
+            registry.unregister_rule_type("NO_FORM")
+        assert bad.status.value == "ERROR"
+        assert "not a Column or a BatchKernel" in bad.error_message
+        assert ok.failed_records == 1
+        assert ok.execution_plan["execution_type"] == "merged_agg"

@@ -4,15 +4,22 @@
 their thresholds). A size gate reads its module constant when it is
 called; tests reach its other side by monkeypatching that constant.
 Like ``test_tokenizer.py``'s copy guard, this stops a deleted fork from
-coming back."""
+coming back.
+
+The rule compiler has one path too: a rule's physical form is what its
+compile function returns (a predicate, a kernel or an aggregate count),
+so no tier label rides beside it."""
 
 from __future__ import annotations
 
 import importlib
 import inspect
 import pkgutil
+from dataclasses import fields
 
 import validatelite_spark.operators as ops
+from validatelite_spark.core import registry
+from validatelite_spark.plans import compiler
 
 FORBIDDEN = {"arrow", "broadcast", "broadcast_threshold", "collect_probe",
              "collect_threshold"}
@@ -39,3 +46,11 @@ def test_no_implementation_switch_or_gate_override():
     found = {name: sorted(FORBIDDEN & set(inspect.signature(fn).parameters))
              for name, fn in walked.items()}
     assert {k: v for k, v in found.items() if v} == {}
+
+
+def test_no_tier_label():
+    assert "tier" not in inspect.signature(
+        registry.register_rule_type).parameters
+    assert not hasattr(compiler, "Tier")
+    assert {f.name for f in fields(compiler.CompiledRule)} == {
+        "rule", "fail_predicate", "kernel", "count"}

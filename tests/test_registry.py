@@ -18,7 +18,7 @@ from validatelite_spark.core.rules import (
     RuleType,
     RuleValidationError,
 )
-from validatelite_spark.plans.compiler import Tier, compile_rule
+from validatelite_spark.plans.compiler import compile_rule
 
 TEXT = T.StructType([T.StructField("text", T.StringType())])
 
@@ -30,7 +30,6 @@ def all_caps_type():
         "ALL_CAPS",
         lambda rule: F.col(rule.column).isNotNull()
         & (F.col(rule.column) != F.upper(F.col(rule.column))),
-        tier="NATIVE",
         param_schema={"required": []},
         description="text must be fully upper-case",
         replace=True)
@@ -51,17 +50,15 @@ class TestRegistry:
     def test_bad_registrations(self):
         with pytest.raises(registry.RuleTypeRegistrationError):
             registry.register_rule_type("no spaces", lambda r: None)
-        with pytest.raises(registry.RuleTypeRegistrationError):
-            registry.register_rule_type("X", lambda r: None, tier="BOGUS")
 
     def test_builtins_are_registry_backed(self, spark):
         # the quality-filter builtins dispatch through the same seam
         for name in ("LANG_ID", "GOPHER", "PERPLEXITY", "PII_SCRUB"):
             assert registry.get_rule_type(name) is not None
         r = Rule(RuleType.GOPHER, "text")
-        assert compile_rule(r, TEXT).tier is Tier.NATIVE
+        assert compile_rule(r, TEXT).kernel is None  # a Column predicate
         r = Rule(RuleType.PERPLEXITY, "text", {"max_ppl": 10.0})
-        assert compile_rule(r, TEXT).tier is Tier.UDF
+        assert compile_rule(r, TEXT).kernel is not None
 
     def test_rule_model_accepts_registered_type(self, all_caps_type):
         r = Rule("all_caps", "title")
@@ -92,8 +89,9 @@ class TestRegistry:
     def test_engine_merges_registered_rule(self, spark, sf_dir,
                                            all_caps_type):
         """The registered rule fuses into the shared single-scan agg
-        beside builtin rules — the merger is tier-driven, so a NATIVE
-        registered type costs zero extra scans."""
+        beside builtin rules — the merger counts whatever form the
+        compile function returns, so a registered type costs zero extra
+        scans."""
         from validatelite_spark.operators.engine import RuleEngine
         df = spark.read.parquet(f"{sf_dir}/documents.parquet")
         results = RuleEngine(spark).execute(df, [
@@ -123,11 +121,10 @@ class TestRegistry:
             register_builtins,
         )
         registry.register_rule_type(
-            "GOPHER", lambda rule: F.lit(True), tier="NATIVE",
-            replace=True)
+            "GOPHER", lambda rule: F.lit(True), replace=True)
         try:
             compiled = compile_rule(Rule(RuleType.GOPHER, "text"), TEXT)
-            assert compiled.tier is Tier.NATIVE
+            assert compiled.kernel is None
             # the override's constant-true predicate, not gopher_fail
             assert "true" in str(compiled.fail_predicate).lower()
         finally:

@@ -15,8 +15,8 @@ Design (see SURVEY.md for the full mapping to the reference):
 
 - Rules are a *logical plan*; the compiler (`plans.compiler`) turns each
   rule into a Spark ``Column`` failure predicate; the merger
-  (`plans.merger`) fuses every mergeable rule into ONE
-  ``df.agg(F.count("*"), F.sum(F.when(pred_i, 1)), ...)`` scan — the
+  (`plans.merger`) fuses every rule of a filter group into ONE
+  ``df.agg(F.count("*"), F.count_if(pred_i), ...)`` scan — the
   Spark-native analogue of the reference's fused
   ``COUNT(CASE WHEN ...)`` query (reference:
   core/engine/rule_merger.py:142-299).
@@ -24,8 +24,9 @@ Design (see SURVEY.md for the full mapping to the reference):
   round-trip date checks, langid, perplexity) compile to *vectorized*
   pandas/Arrow UDF predicates — never per-row Python — and still fuse
   into the same single-scan agg.
-- UNIQUE compiles to a groupBy/HAVING job (reference:
-  core/executors/uniqueness_executor.py:95-200); SCHEMA is a
+- UNIQUE compiles to ``count(c) - count_distinct(c)``, one more column
+  of that same agg (reference: core/executors/uniqueness_executor.py:
+  95-200 runs a separate GROUP BY … HAVING); SCHEMA is a
   metadata-only check over ``df.schema`` (reference:
   core/executors/schema_executor.py:120-455).
 """

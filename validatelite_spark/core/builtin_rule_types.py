@@ -84,41 +84,41 @@ def _ppl_params(params: dict) -> None:
 
 def register_builtins(replace: bool = True) -> None:
     register_rule_type(
-        "LANG_ID", _compile_lang_id, tier="NATIVE",
+        "LANG_ID", _compile_lang_id,
         param_schema={"required": ["allowed_langs"]},
         description="detected language must be in allowed_langs",
         replace=replace)
     register_rule_type(
-        "GOPHER", _compile_gopher, tier="NATIVE",
+        "GOPHER", _compile_gopher,
         description="Gopher/C4-style heuristic quality gates",
         replace=replace)
     register_rule_type(
-        "PERPLEXITY", _compile_perplexity, tier="UDF",
+        "PERPLEXITY", _compile_perplexity,
         param_schema={"validator": _ppl_params},
         description="char-bigram LM perplexity within [min_ppl, max_ppl]",
         replace=replace)
     register_rule_type(
-        "PII_SCRUB", _compile_pii_scrub, tier="UDF",
+        "PII_SCRUB", _compile_pii_scrub,
         description="document contains a PII/toxicity pattern",
         replace=replace)
     register_rule_type(
-        "REPETITION", _compile_repetition, tier="UDF",
+        "REPETITION", _compile_repetition,
         description=("duplicate-n-gram fraction must not exceed "
                      "max_dup_ngram_frac (Gopher repetition gate)"),
         replace=replace)
     register_rule_type(
-        "CLASSIFIER", _compile_classifier, tier="NATIVE",
+        "CLASSIFIER", _compile_classifier,
         param_schema={"required": ["weights"]},
         description=("hashed-linear quality score must reach "
                      "min_score (fastText-style, weights as params)"),
         replace=replace)
     register_rule_type(
-        "LINE_QUALITY", _compile_line_quality, tier="NATIVE",
+        "LINE_QUALITY", _compile_line_quality,
         description=("FineWeb/C4 line-level gates: punctuation-ending, "
                      "short, bullet, and all-caps line fractions"),
         replace=replace)
     register_rule_type(
-        "BOILERPLATE", _compile_boilerplate, tier="NATIVE",
+        "BOILERPLATE", _compile_boilerplate,
         param_schema={"required": ["lines"]},
         description=("fraction of lines in the mined boilerplate "
                      "blocklist must not exceed max_frac"),

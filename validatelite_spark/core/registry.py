@@ -10,8 +10,8 @@ function — and the whole engine picks it up with no compiler changes:
   parameters against the registered schema;
 - ``plans/compiler.compile_rule`` dispatches to the registered compile
   function (checked FIRST, so ``replace=True`` can override a builtin);
-- NATIVE/UDF-tier registered rules fuse into the shared single-scan
-  aggregate exactly like builtins (plans/merger.py is tier-driven).
+- registered rules fuse into the shared single-scan aggregate exactly
+  like builtins (plans/merger.py counts every compiled form).
 
 The quality-filter rule types (LANG_ID / GOPHER / PERPLEXITY /
 PII_SCRUB) are themselves registered through this seam — see
@@ -20,8 +20,9 @@ dispatch path, not a parallel one.
 
 The registry stores a *compile function*, not a SQL-string generator
 (the Spark-native analogue of the reference's per-dialect SQL builders).
-A NATIVE type's function returns a failure-predicate ``Column``; a UDF
-type's returns a ``BatchKernel``, never its own UDF: ``plans/planner.py`` runs
+It returns what the type is: a failure-predicate ``Column``, or a
+``BatchKernel``, never its own UDF — anything else is an ERROR result
+for the rule. ``plans/planner.py`` runs
 every kernel of a scan in one pandas UDF, calling each distinct
 (column, signal) once per batch — so build a parameterized signal with
 a cached factory (same parameters → same function object).
@@ -38,14 +39,12 @@ class RuleTypeRegistrationError(ValueError):
 
 
 #: compile function: Rule -> Column failure predicate or BatchKernel
-#: (None only for tiers that have no row predicate, i.e.
-#: GROUPBY/METADATA shapes).
 CompileFn = Callable[[Any], Any]
 
 
 @dataclass(frozen=True)
 class BatchKernel:
-    """A UDF-tier rule over its column's Arrow batch (a pandas Series):
+    """A Python-exact rule over its column's Arrow batch (a pandas Series):
     ``signal`` maps it to a per-row signal Series, ``fail`` that signal
     to a non-NULL boolean Series. ``native``, if set, builds an
     equivalent failure-predicate Column; the planner calls it unless
@@ -62,8 +61,7 @@ class BatchKernel:
 @dataclass(frozen=True)
 class RuleTypeSpec:
     name: str
-    compile_fn: Optional[CompileFn]
-    tier: str = "NATIVE"  # NATIVE | UDF | GROUPBY | METADATA
+    compile_fn: CompileFn
     #: {"required": [names...], "validator": callable(params) -> None}
     param_schema: dict[str, Any] = field(default_factory=dict)
     needs_column: bool = True
@@ -75,8 +73,8 @@ _REGISTRY: dict[str, RuleTypeSpec] = {}
 
 def register_rule_type(
     name: str,
-    compile_fn: Optional[CompileFn],
-    tier: str = "NATIVE",
+    compile_fn: CompileFn,
+    *,
     param_schema: Optional[dict[str, Any]] = None,
     needs_column: bool = True,
     description: str = "",
@@ -90,9 +88,7 @@ def register_rule_type(
     if key in _REGISTRY and not replace:
         raise RuleTypeRegistrationError(
             f"rule type {key} already registered (pass replace=True)")
-    if tier not in ("NATIVE", "UDF", "GROUPBY", "METADATA"):
-        raise RuleTypeRegistrationError(f"unknown tier {tier!r}")
-    spec = RuleTypeSpec(key, compile_fn, tier, dict(param_schema or {}),
+    spec = RuleTypeSpec(key, compile_fn, dict(param_schema or {}),
                         needs_column, description)
     _REGISTRY[key] = spec
     return spec

@@ -341,21 +341,21 @@ def _expand_pairs(groups: DataFrame, star_over: int | None = None,
         .alias("id2"))
 
 
-def _log_oversized_buckets(per_bucket: DataFrame, cap: int,
-                           op: str) -> DataFrame:
-    """Count buckets past ``bucket_cap`` (star-edge mode) and warn —
-    a reduced candidate-pair list must never be silent. Caches the
-    per-bucket frame so the logging count and the pair expansion share
-    one aggregation pass."""
-    per_bucket = per_bucket.cache()
+_STAR_EDGES = ("emitting star edges (min-member hub) instead of all "
+               "pairs; connectivity (dedup groups) is preserved, the raw "
+               "pair list is reduced")
+
+
+def _log_oversized_buckets(per_bucket: DataFrame, cap: int, op: str,
+                           effect: str = _STAR_EDGES) -> None:
+    """Count buckets past ``bucket_cap`` and warn with what the cap does
+    to them (``effect``) — a reduced candidate-pair list must never be
+    silent. The caller materializes ``per_bucket`` first, so the count
+    and the pair expansion share one aggregation pass."""
     n_big = per_bucket.filter(F.size("ks") > cap).count()
     if n_big:
-        logger.warning(
-            "%s: %d candidate buckets exceed bucket_cap=%d — emitting "
-            "star edges (min-member hub) instead of all pairs; "
-            "connectivity (dedup groups) is preserved, the raw pair "
-            "list is reduced", op, n_big, cap)
-    return per_bucket
+        logger.warning("%s: %d candidate buckets exceed bucket_cap=%d — %s",
+                       op, n_big, cap, effect)
 
 
 def _jaccard() -> Column:
@@ -511,8 +511,8 @@ def minhash_lsh_pairs(
                   .agg(F.sort_array(F.collect_list("k")).alias("ks"))
                   .filter(F.size("ks") > 1))
     if bucket_cap is not None:
-        per_bucket = _log_oversized_buckets(per_bucket, bucket_cap,
-                                            "minhash_lsh_pairs")
+        per_bucket = per_bucket.cache()
+        _log_oversized_buckets(per_bucket, bucket_cap, "minhash_lsh_pairs")
     candidates = _expand_pairs(per_bucket, bucket_cap,
                                respread=False).distinct()
     # exact verification of candidates only: common-shingle counts are
@@ -705,6 +705,14 @@ def incremental_minhash_pairs(
     old_pb = (old_bands.groupBy("band", "sig")
               .agg(F.sort_array(F.collect_list("k")).alias("ks")))
     if bucket_cap is not None:
+        # a checkpoint, not a cache(): index_dedup_batch appends to the
+        # index this reads, and an append re-caches every cached plan
+        # over that path
+        old_pb = checkpoint(old_pb)
+        _log_oversized_buckets(
+            old_pb, bucket_cap, "incremental_minhash_pairs",
+            "each index bucket past the cap contributes only its min-id "
+            "member as a candidate target")
         old_pb = old_pb.withColumn(
             "ks", F.when(F.size("ks") > bucket_cap,
                          F.slice("ks", 1, 1)).otherwise(F.col("ks")))
@@ -871,8 +879,8 @@ def simhash_candidates(
                   .agg(F.sort_array(F.collect_list("e")).alias("ks"))
                   .filter(F.size("ks") > 1))
     if bucket_cap is not None:
-        per_bucket = _log_oversized_buckets(per_bucket, bucket_cap,
-                                            "simhash_candidates")
+        per_bucket = per_bucket.cache()
+        _log_oversized_buckets(per_bucket, bucket_cap, "simhash_candidates")
     pairs = _expand_pairs(per_bucket, bucket_cap, respread=False)
     out = (pairs.select(
         F.col("id1.k").alias("id1"), F.col("id2.k").alias("id2"),

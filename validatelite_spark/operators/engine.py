@@ -5,19 +5,23 @@ The Spark-native analogue of the reference's RuleEngine
 
 1. **prevalidation** (driver-side over df.schema — no job; reference
    rule_engine.py:609-735) → invalid rules short-circuit to ERROR results;
-2. **compile** every valid rule to its tier against ``df.schema``
-   (plans/compiler.py; REGEX's pattern and column type pick the tier);
-3. **merge** all NATIVE+UDF rules with the same filter into ONE fused
-   ``df.agg()`` scan per filter group (plans/merger.py) — this also folds
-   in the total row count, so K mergeable rules cost exactly one scan,
-   and the planner (plans/planner.py) runs all their kernels in one
-   Arrow pass;
-4. **UNIQUE** rules run one aggregate job each (operators/uniqueness.py);
-5. **SCHEMA** rules run metadata-only (operators/schema_check.py);
-6. **lazy failure sampling** — all merged rules with failed > 0 share
+2. **compile** every valid data rule to its form against ``df.schema``
+   (plans/compiler.py; REGEX's pattern and column type pick the form);
+3. **merge** all rules with the same filter into ONE fused ``df.agg()``
+   scan per filter group (plans/merger.py) — row-level rules as
+   ``count_if`` of their flags (the planner, plans/planner.py, runs all
+   their kernels in one Arrow pass), UNIQUE as ``count(c) -
+   count_distinct(c)``, and the total row count beside them, so K rules
+   cost exactly one scan;
+4. **SCHEMA** rules run metadata-only (operators/schema_check.py);
+5. **lazy failure sampling** — all row-level rules with failed > 0 share
    ONE windowed query (plans/merger.py ``failure_samples``; reference
    O7: base_executor.py:292-347), deterministically ordered so resumed
-   or re-partitioned runs produce identical samples (SURVEY §7).
+   or re-partitioned runs produce identical samples (SURVEY §7); a
+   failing UNIQUE rule samples its duplicate groups
+   (operators/uniqueness.py). Samples never cost a rule its counts: a
+   sample query that fails leaves ``sample_data`` empty, with a
+   warning.
 
 Error taxonomy preserved: per-rule exceptions become ERROR results and the
 run continues (reference: rule_engine.py:230-256) — mandatory isolation at
@@ -26,6 +30,7 @@ run continues (reference: rule_engine.py:230-256) — mandatory isolation at
 
 from __future__ import annotations
 
+import logging
 import time
 from dataclasses import dataclass
 from typing import Optional
@@ -41,13 +46,15 @@ from validatelite_spark.core.results import (
 from validatelite_spark.core.rules import Rule, RuleType
 from validatelite_spark.operators import uniqueness
 from validatelite_spark.operators.schema_check import check_schema
-from validatelite_spark.plans.compiler import CompiledRule, Tier, compile_rule
+from validatelite_spark.plans.compiler import CompiledRule, compile_rule
 from validatelite_spark.plans.merger import (
     TOTAL_ALIAS,
     build_merge_groups,
     failure_samples,
 )
 from validatelite_spark.plans.prevalidation import prevalidate
+
+logger = logging.getLogger(__name__)
 
 
 @dataclass
@@ -81,23 +88,23 @@ class RuleEngine:
         results: dict[str, RuleResult] = {}
 
         compiled: list[CompiledRule] = []
+        schema_rules: list[Rule] = []
         for rule in rules:
             if errors.get(rule.id):
                 results[rule.id] = self._error_result(
                     rule, table_name, errors[rule.id])
-                continue
-            try:
-                compiled.append(compile_rule(rule, df.schema))
-            except Exception as e:  # per-rule isolation
-                results[rule.id] = self._error_result(rule, table_name, str(e))
+            elif rule.type == RuleType.SCHEMA:
+                schema_rules.append(rule)
+            else:
+                try:
+                    compiled.append(compile_rule(rule, df.schema))
+                except Exception as e:  # per-rule isolation
+                    results[rule.id] = self._error_result(
+                        rule, table_name, str(e))
 
-        mergeable = [c for c in compiled if c.mergeable]
-        unique_rules = [c for c in compiled if c.tier == Tier.GROUPBY]
-        schema_rules = [c for c in compiled if c.tier == Tier.METADATA]
-
-        # ---- fused single-scan aggregates (O1) ----
+        # ---- one fused aggregate per filter group (O1) ----
         failing: list[CompiledRule] = []
-        for group in build_merge_groups(mergeable):
+        for group in build_merge_groups(compiled):
             g0 = time.time()
             try:
                 counts = group.run(df)
@@ -118,52 +125,23 @@ class RuleEngine:
                 if failed > 0:
                     failing.append(cr)
 
-        # ---- failure samples of every failing merged rule (one query) ----
         if collect_samples and failing:
-            cfg = self.config
-            keep_cols = [c for c in df.columns
-                         if c not in cfg.sample_exclude_columns]
-            samples = failure_samples(
-                df, failing, keep_cols,
-                cfg.sample_order_column or keep_cols[0],
-                cfg.sample_data_max_records)
-            for cr, rows in zip(failing, samples):
-                results[cr.rule.id].sample_data = rows
-
-        # ---- UNIQUE (one agg job each) ----
-        for cr in unique_rules:
-            g0 = time.time()
-            try:
-                counts = uniqueness.unique_counts(
-                    df, cr.rule.column, cr.rule.filter_condition)
-            except Exception as e:
-                results[cr.rule.id] = self._error_result(
-                    cr.rule, table_name, str(e))
-                continue
-            elapsed = time.time() - g0
-            res = self._data_result(
-                cr.rule, table_name, counts["total"], counts["failed"],
-                elapsed, plan={"execution_type": "groupby_unique"})
-            if collect_samples and counts["failed"] > 0:
-                res.sample_data = uniqueness.duplicate_samples(
-                    df, cr.rule.column, cr.rule.filter_condition,
-                    limit=2 * self.config.sample_data_max_records)
-            results[cr.rule.id] = res
+            self._samples(df, failing, results)
 
         # ---- SCHEMA (metadata only, no scan) ----
-        for cr in schema_rules:
+        for rule in schema_rules:
             g0 = time.time()
-            p = cr.rule.parameters
+            p = rule.parameters
             try:
                 sc = check_schema(
                     df, p["columns"], bool(p.get("strict_mode")),
                     bool(p.get("case_insensitive")))
             except Exception as e:
-                results[cr.rule.id] = self._error_result(
-                    cr.rule, table_name, str(e))
+                results[rule.id] = self._error_result(
+                    rule, table_name, str(e))
                 continue
             res = self._data_result(
-                cr.rule, table_name, sc.total, sc.failed,
+                rule, table_name, sc.total, sc.failed,
                 time.time() - g0, plan={"execution_type": "metadata"})
             res.sample_data = [
                 {"column": fc.column, "status": fc.status,
@@ -171,11 +149,40 @@ class RuleEngine:
                  "native_type": fc.native_type}
                 for fc in sc.field_checks if fc.status != "PASSED"
             ]
-            results[cr.rule.id] = res
+            results[rule.id] = res
 
         return [results[r.id] for r in rules if r.id in results]
 
     # ------------------------------------------------------------ helpers
+    def _samples(self, df: DataFrame, failing: list[CompiledRule],
+                 results: dict[str, RuleResult]) -> None:
+        """``sample_data`` of the failing rules: one windowed query for
+        every row-level rule, one duplicate-group query per UNIQUE."""
+        cfg = self.config
+        keep_cols = [c for c in df.columns
+                     if c not in cfg.sample_exclude_columns]
+        rows = [cr for cr in failing if cr.count is None]
+        queries = [(rows, lambda: failure_samples(
+            df, rows, keep_cols, cfg.sample_order_column or keep_cols[0],
+            cfg.sample_data_max_records))] if rows else []
+        for cr in failing:
+            if cr.count is not None:
+                queries.append(([cr], lambda r=cr.rule: [
+                    uniqueness.duplicate_samples(
+                        df, r.column, r.filter_condition,
+                        limit=2 * cfg.sample_data_max_records)]))
+        for crs, query in queries:
+            try:
+                samples = query()
+            except Exception as e:  # the counts stand without samples
+                logger.warning("sample query for %s failed, their "
+                               "sample_data stays empty: %s",
+                               [cr.rule.name for cr in crs], e,
+                               exc_info=True)
+                continue
+            for cr, sample in zip(crs, samples):
+                results[cr.rule.id].sample_data = sample
+
     def _data_result(self, rule: Rule, table: str, total: int, failed: int,
                      elapsed: float, plan: dict) -> RuleResult:
         status = status_for(failed, total, rule.threshold)

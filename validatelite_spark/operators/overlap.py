@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from validatelite_spark.core.rules import Rule
+from validatelite_spark.core.rules import Rule, RuleType
 from validatelite_spark.plans.compiler import compile_rule
 from validatelite_spark.plans.planner import plan_rules
 
@@ -52,13 +52,15 @@ def rule_overlap(df: DataFrame, rules: list[Rule]) -> DataFrame:
         raise ValueError(
             f"rule_overlap supports at most {MAX_OVERLAP_RULES} rules "
             f"(got {len(rules)}) — 2^n mask cardinality must stay tiny")
-    compiled = [compile_rule(r, df.schema) for r in rules]
-    bad = [c.rule.name for c in compiled if not c.mergeable]
+    compiled = [None if r.type == RuleType.SCHEMA
+                else compile_rule(r, df.schema) for r in rules]
+    bad = [r.name for r, c in zip(rules, compiled)
+           if c is None or c.count is not None]
     if bad:
         raise ValueError(
             "rule_overlap needs row-level fail predicates; these rules "
-            f"compile to non-mergeable tiers: {bad} (UNIQUE/SCHEMA "
-            "have no per-row verdict)")
+            f"have no per-row verdict: {bad} (UNIQUE counts per table, "
+            "SCHEMA reads the schema)")
     flagged = plan_rules(df, {f"__b{i}": c for i, c in enumerate(compiled)})
     mask = F.lit(0).cast("long")
     for i in range(len(compiled)):

@@ -1,23 +1,26 @@
-"""Rule compiler: Rule (logical) → Spark failure predicate (physical).
+"""Rule compiler: Rule (logical) → its physical form against a schema.
 
 The analogue of the reference's executor dispatch
 (reference: core/executors/__init__.py:19-79) — but instead of generating
-dialect SQL strings, each rule type compiles, in one of four tiers, to
-what ``plans/planner.plan_rules`` turns into its per-row flag:
+dialect SQL strings, each rule compiles to one of three forms, all
+answered by the ONE ``df.agg()`` of its filter group (plans/merger.py):
 
-- NATIVE   — a ``Column`` failure predicate (whole-stage codegen)
-- UDF      — a ``BatchKernel`` (core/registry.py) for Python-exact
-             semantics: ``re`` regex parity, strptime round-trip,
-             perplexity — all of a scan's kernels share one pandas UDF
-- GROUPBY  — needs its own aggregation shape (UNIQUE)
-- METADATA — no data scan at all (SCHEMA, reference
-             schema_executor.py:120-134 ``execution_type="metadata"``)
+- ``fail_predicate`` — a per-row failure ``Column`` (whole-stage codegen);
+- ``kernel`` — a ``BatchKernel`` (core/registry.py) for Python-exact
+  semantics: ``re`` regex parity, strptime round-trip, perplexity — all
+  of a scan's kernels share one pandas UDF;
+- ``count`` — an aggregate Column that IS the failed-record count:
+  UNIQUE's ``count(c) - count_distinct(c)``.
 
-NATIVE and UDF rules both fuse into ONE ``df.agg()`` scan downstream
-(plans/merger.py). NULL semantics per rule type are the reference's
-(see core/rules.py table and SURVEY.md §2.2). REGEX takes NATIVE
-``rlike`` only when its column is a string and ``java_regex`` can
-rebuild its pattern with the same meaning (CLAUDE.md rule 19).
+The first two are row-level: ``plans/planner.plan_rules`` turns each
+into a per-row flag, which the merger sums with ``count_if``.
+
+SCHEMA is the one rule with no data form: it reads ``df.schema`` only
+(reference schema_executor.py:120-134 ``execution_type="metadata"``),
+and the engine checks it by its rule type without compiling it. NULL
+semantics per rule type are the reference's (see core/rules.py table
+and SURVEY.md §2.2). REGEX takes ``rlike`` only when its column is a
+string and ``java_regex`` can rebuild its pattern with the same meaning.
 """
 
 from __future__ import annotations
@@ -25,7 +28,6 @@ from __future__ import annotations
 import re._constants as sre
 import re._parser as sre_parse
 from dataclasses import dataclass
-from enum import Enum
 from typing import Optional
 
 from pyspark.sql import Column
@@ -39,26 +41,16 @@ from validatelite_spark.core.rules import Rule, RuleType
 from validatelite_spark.functions import udf_tier
 
 
-class Tier(str, Enum):
-    NATIVE = "NATIVE"
-    UDF = "UDF"
-    GROUPBY = "GROUPBY"
-    METADATA = "METADATA"
-
-
 @dataclass
 class CompiledRule:
-    rule: Rule
-    tier: Tier
-    fail_predicate: Optional[Column] = None  # NATIVE tier
-    kernel: Optional[BatchKernel] = None  # UDF tier (and LANG_ID)
+    """Exactly one form is set: ``fail_predicate`` or ``kernel`` (a
+    row-level failure flag) or ``count`` (the failed count as an
+    aggregate)."""
 
-    @property
-    def mergeable(self) -> bool:
-        """Can fuse into the shared single-scan agg (reference analogue:
-        rule_merger.py:813-914 MERGED strategy; UNIQUE/SCHEMA are always
-        INDIVIDUAL there too)."""
-        return self.tier in (Tier.NATIVE, Tier.UDF)
+    rule: Rule
+    fail_predicate: Optional[Column] = None
+    kernel: Optional[BatchKernel] = None
+    count: Optional[Column] = None
 
 
 #: ``re`` anchors that mean the same in Java (``\Z`` is Java's ``\z``)
@@ -123,6 +115,19 @@ def java_regex(pattern: str) -> Optional[str]:
         return None
 
 
+def _has_variant(dt: T.DataType) -> bool:
+    """Whether ``dt`` holds a VARIANT: Spark's ``count_distinct`` fails
+    on one in a task (a ``MatchError``, not an analysis error), which
+    would take down every rule of the merged scan."""
+    if isinstance(dt, T.ArrayType):
+        return _has_variant(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _has_variant(dt.keyType) or _has_variant(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_has_variant(f.dataType) for f in dt.fields)
+    return isinstance(dt, T.VariantType)
+
+
 def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
     """Compile one rule against the frame's ``schema``. Raises
     RuleExecutionError for unsupported shapes (per-rule isolation: the
@@ -139,7 +144,7 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
     spec = get_rule_type(t)
     if spec is not None:
         try:
-            out = spec.compile_fn(rule) if spec.compile_fn else None
+            out = spec.compile_fn(rule)
         except RuleExecutionError:
             raise
         except Exception as e:
@@ -147,11 +152,15 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
                 f"registered rule type {spec.name} failed to compile "
                 f"{rule.name}: {e}") from e
         if isinstance(out, BatchKernel):
-            return CompiledRule(rule, Tier(spec.tier), kernel=out)
-        return CompiledRule(rule, Tier(spec.tier), out)
+            return CompiledRule(rule, kernel=out)
+        if isinstance(out, Column):
+            return CompiledRule(rule, out)
+        raise RuleExecutionError(
+            f"registered rule type {spec.name} compiled {rule.name} to "
+            f"{type(out).__name__}, not a Column or a BatchKernel")
 
     if t == RuleType.NOT_NULL:
-        return CompiledRule(rule, Tier.NATIVE, col.isNull())
+        return CompiledRule(rule, col.isNull())
 
     if t == RuleType.LENGTH:
         # individual-path semantics are canonical: NULL counts as failure
@@ -164,7 +173,7 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
             pred = pred | (ln < int(p["min_length"]))
         if p.get("max_length") is not None:
             pred = pred | (ln > int(p["max_length"]))
-        return CompiledRule(rule, Tier.NATIVE, pred)
+        return CompiledRule(rule, pred)
 
     if t == RuleType.RANGE:
         # NULL is a failure (reference: validity_executor.py:398-471)
@@ -173,7 +182,7 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
             pred = pred | (col < F.lit(p["min"]))
         if p.get("max") is not None:
             pred = pred | (col > F.lit(p["max"]))
-        return CompiledRule(rule, Tier.NATIVE, pred)
+        return CompiledRule(rule, pred)
 
     if t == RuleType.ENUM:
         vals = list(p["allowed_values"])
@@ -184,36 +193,40 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
         else:
             # SQL NOT IN: NULL does not fail — replicate explicitly
             pred = col.isNotNull() & ~col.isin(vals)
-        return CompiledRule(rule, Tier.NATIVE, pred)
+        return CompiledRule(rule, pred)
 
     if t == RuleType.REGEX:
         # the UDF renders other types through pandas (1e+20, +00:00)
         java = (java_regex(p["pattern"]) if rule.column in schema.names
                 and schema[rule.column].dataType == T.StringType() else None)
         if java is None:
-            return CompiledRule(rule, Tier.UDF,
+            return CompiledRule(rule,
                                 kernel=udf_tier.regex_kernel(p["pattern"]))
-        return CompiledRule(rule, Tier.NATIVE,
-                            col.isNotNull() & ~col.rlike(java))
+        return CompiledRule(rule, col.isNotNull() & ~col.rlike(java))
 
     if t == RuleType.DATE_FORMAT:
-        return CompiledRule(rule, Tier.UDF,
-                            kernel=udf_tier.date_kernel(p["format"]))
+        return CompiledRule(rule, kernel=udf_tier.date_kernel(p["format"]))
 
     # LANG_ID / GOPHER / PERPLEXITY / PII_SCRUB compile via the registry
     # dispatch above (core/builtin_rule_types.py) — no branches here.
 
     if t == RuleType.UNIQUE:
-        return CompiledRule(rule, Tier.GROUPBY)
-
-    if t == RuleType.SCHEMA:
-        return CompiledRule(rule, Tier.METADATA)
+        # NULLs excluded; failed = Σ(cnt − 1 | cnt > 1) over duplicate
+        # groups = N_nonnull − N_distinct (reference:
+        # uniqueness_executor.py:95-200 runs it as GROUP BY … HAVING)
+        if rule.column in schema.names and _has_variant(
+                schema[rule.column].dataType):
+            raise RuleExecutionError(
+                f"UNIQUE rule {rule.name}: VARIANT values cannot be "
+                "compared")
+        return CompiledRule(rule, count=F.count(col) - F.count_distinct(col))
 
     if t == RuleType.CUSTOM:
         expr = p.get("fail_expr")
         if not expr:
             raise RuleExecutionError(
                 f"CUSTOM rule {rule.name} needs parameters.fail_expr")
-        return CompiledRule(rule, Tier.NATIVE, F.expr(expr))
+        return CompiledRule(rule, F.expr(expr))
 
+    # SCHEMA has no data form: the engine checks it by type, uncompiled
     raise RuleExecutionError(f"unsupported rule type: {t}")

@@ -1,4 +1,4 @@
-"""Rule merger: fuse N mergeable rules into ONE single-scan aggregate.
+"""Rule merger: answer N rules with ONE aggregate scan per filter group.
 
 The Spark-native realization of the reference's flagship optimization O1
 (reference: core/engine/rule_merger.py:142-299): N rules over the same
@@ -8,13 +8,17 @@ table and same filter become one
       .agg(F.count(lit(1)).alias("__total"),
            F.count_if(__r0).alias("__r0"),
            ...,
-           F.count_if(__rN-1).alias("__rN-1"))
+           (F.count(c) - F.count_distinct(c)).alias("__rN-1"))
 
-— one table scan, one job, partial (map-side) aggregation for free, with
-Catalyst pruning the scan down to exactly the referenced columns. Unlike
-the reference we also fold the total-row-count query into the SAME scan
-(the reference runs COUNT(*) separately, rule_engine.py:440-484 — a second
-full scan we don't pay).
+— one table scan, partial (map-side) aggregation for free, with
+Catalyst pruning the scan down to exactly the referenced columns. A
+row-level rule (predicate or kernel, plans/compiler.py) is a
+``count_if`` of its planned flag; an aggregate rule (UNIQUE) is its
+``count`` column itself. The reference keeps UNIQUE out of its merged
+query (rule_merger.py:813-914 runs it INDIVIDUAL); here it costs one
+more column of the same ``agg``. Unlike the reference we also fold the
+total-row-count query into the SAME scan (the reference runs COUNT(*)
+separately, rule_engine.py:440-484 — a second full scan we don't pay).
 
 Rules with different ``filter_condition``s land in different groups
 (reference requires identical filters to merge, rule_merger.py:135-139).
@@ -52,14 +56,16 @@ class MergeGroup:
         return f"__r{i}"
 
     def scan(self, df: DataFrame) -> DataFrame:
-        """The fused aggregate: the rules' flags planned over the
-        filtered frame (plans/planner.py), summed in one ``agg``."""
+        """The fused aggregate over the filtered frame: the row-level
+        rules' flags planned (plans/planner.py) and counted, beside the
+        aggregate rules' counts, in one ``agg``."""
         scoped = df.filter(F.expr(self.filter_condition)) if self.filter_condition else df
-        flagged = plan_rules(scoped, {self.alias_for(i): cr
-                                      for i, cr in enumerate(self.rules)})
+        aliased = {self.alias_for(i): cr for i, cr in enumerate(self.rules)}
+        flagged = plan_rules(scoped, {a: cr for a, cr in aliased.items()
+                                      if cr.count is None})
         return flagged.agg(F.count(F.lit(1)).alias(TOTAL_ALIAS), *[
-            F.count_if(F.col(a)).alias(a)
-            for a in map(self.alias_for, range(len(self.rules)))])
+            (F.count_if(F.col(a)) if cr.count is None else cr.count).alias(a)
+            for a, cr in aliased.items()])
 
     def run(self, df: DataFrame) -> dict[str, int]:
         """Execute the fused scan; returns {rule_id: failed} + total."""
@@ -71,12 +77,10 @@ class MergeGroup:
 
 
 def build_merge_groups(compiled: list[CompiledRule]) -> list[MergeGroup]:
-    """Group mergeable rules by filter_condition, splitting groups wider
-    than the cap. Non-mergeable tiers (GROUPBY/METADATA) are not accepted
-    here — the engine routes them separately."""
+    """Group rules by filter_condition, splitting groups wider than the
+    cap."""
     by_filter: dict[Optional[str], list[CompiledRule]] = {}
     for cr in compiled:
-        assert cr.mergeable, f"non-mergeable rule routed to merger: {cr.rule.name}"
         by_filter.setdefault(cr.rule.filter_condition, []).append(cr)
     groups: list[MergeGroup] = []
     for filt, rules in by_filter.items():
@@ -92,12 +96,12 @@ def failure_samples(
     order: str,
     limit: int,
 ) -> list[list[dict[str, Any]]]:
-    """The first ``limit`` failing rows of each rule by ``order``, as
-    ``columns`` dicts, from ONE scan: each row carries the ids of the
-    rules it fails (``when(filter & fail_i, i)``, so every kernel runs
-    once: the flags are planned, plans/planner.py), exploded, then
-    ``row_number() <= limit`` per rule — planned
-    with a partial WindowGroupLimit before the one shuffle."""
+    """The first ``limit`` failing rows of each row-level rule by
+    ``order``, as ``columns`` dicts, from ONE scan: each row carries the
+    ids of the rules it fails (``when(filter & fail_i, i)``, so every
+    kernel runs once: the flags are planned, plans/planner.py),
+    exploded, then ``row_number() <= limit`` per rule — planned with a
+    partial WindowGroupLimit before the one shuffle."""
     flagged = plan_rules(df, {f"__r{i}": cr for i, cr in enumerate(rules)})
     flags = []
     for i, cr in enumerate(rules):

@@ -109,7 +109,7 @@ def plan_rules(df: DataFrame, flags: dict[str, CompiledRule],
                scrub: Optional[str] = None,
                drop: Collection[str] = ()) -> DataFrame:
     """``df`` plus one boolean column per ``flags`` entry (column name →
-    NATIVE/UDF-tier compiled rule), and with ``scrub`` naming a text
+    row-level compiled rule), and with ``scrub`` naming a text
     column, ``SCRUBBED``: that text scrubbed on the rows no rule named
     in ``drop`` fails (a NULL native flag does not fail), NULL on the
     others. A native flag keeps its predicate's NULLs; kernel flags are
