@@ -909,7 +909,7 @@ def _pipeline_keep_sql_oracle() -> str:
     t = "text"
     keep = (f"({t} IS NOT NULL AND NOT {_d_gopher_fail(t)} "
             f"AND {_d_lang_id(t)} = 'en')")
-    hit = _ANY_PATTERN.pattern.replace("'", "''")
+    hit = _ANY_PATTERN.replace("'", "''")
     return f"""
         SELECT doc_id, {keep} AS keep,
                coalesce(regexp_matches({t}, '{hit}'), FALSE) AS pii_hit,

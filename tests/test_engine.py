@@ -366,6 +366,18 @@ class TestMergedUnique:
         assert nn.status.value == "PASSED"
         assert r.failed_records == 10 and len(r.sample_data) == 5
 
+    @pytest.mark.parametrize("first", ["map<string,bigint>",
+                                       "array<map<string,bigint>>"])
+    def test_row_samples_skip_an_unorderable_first_column(self, spark,
+                                                          first):
+        # the samples order by the first kept column Spark can sort by
+        value = {"k": 1} if first.startswith("map") else [{"k": 1}]
+        df = spark.createDataFrame([(value, i) for i in range(20)],
+                                   f"m {first}, id long")
+        [r] = RuleEngine(spark).execute(df, [range_rule("id", max=9)])
+        assert r.failed_records == 10
+        assert [s["id"] for s in r.sample_data] == [10, 11, 12, 13, 14]
+
     def test_variant_column_is_an_error_for_that_rule_only(self, spark):
         # count_distinct fails on VARIANT in a task, which would take the
         # whole merged scan down: the compiler refuses the rule instead

@@ -8,18 +8,24 @@ coming back.
 
 The rule compiler has one path too: a rule's physical form is what its
 compile function returns (a predicate, a kernel or an aggregate count),
-so no tier label rides beside it."""
+so no tier label rides beside it. Its kernels run in one Arrow pass
+per scan, with no pandas UDF beside it."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import inspect
 import pkgutil
 from dataclasses import fields
 
+from pyspark.util import PythonEvalType
+
 import validatelite_spark.operators as ops
 from validatelite_spark.core import registry
-from validatelite_spark.plans import compiler
+from validatelite_spark.pipeline.pages import synthesize_pages
+from validatelite_spark.pipeline.quality import QualityPipeline
+from validatelite_spark.plans import compiler, planner
 
 FORBIDDEN = {"arrow", "broadcast", "broadcast_threshold", "collect_probe",
              "collect_threshold"}
@@ -54,3 +60,22 @@ def test_no_tier_label():
     assert not hasattr(compiler, "Tier")
     assert {f.name for f in fields(compiler.CompiledRule)} == {
         "rule", "fail_predicate", "kernel", "count"}
+
+
+def test_planner_imports_no_pandas():
+    tree = ast.parse(inspect.getsource(planner))
+    modules = {alias.name for node in ast.walk(tree)
+               if isinstance(node, ast.Import) for alias in node.names}
+    modules |= {node.module for node in ast.walk(tree)
+                if isinstance(node, ast.ImportFrom) and node.module}
+    assert not {m for m in modules if m.split(".")[0] == "pandas"}
+
+
+def test_one_scalar_arrow_udf_per_annotated_scan(spark):
+    ann = QualityPipeline(spark).annotate(synthesize_pages(spark, 200))
+    plan = ann._jdf.queryExecution().executedPlan().toString()
+    [node] = [line for line in plan.splitlines()
+              if "ArrowEvalPython" in line]
+    # the node's last field is the UDF's eval type: a pandas UDF is 200
+    assert node.rstrip().endswith(
+        f", {PythonEvalType.SQL_SCALAR_ARROW_UDF}")

@@ -326,7 +326,7 @@ class TestCuration:
 
 class TestFusedLangParity:
     """r06 optimization pin: when LANG_ID rides the fused Arrow pass
-    (PERPLEXITY/PII present), the Python lang_id_series must reproduce
+    (PERPLEXITY/PII present), the Arrow lang_id_array must reproduce
     the native lang_id CASE chain exactly — detected language, fail
     flag, keep decision, and scrubbed bytes — on both the synthesized
     pages corpus and the real documents corpus."""
@@ -389,10 +389,11 @@ class TestFusedLangParity:
         rules with LANG_ID forced onto the native path (no ppl/pii →
         no fused UDF, lang stays native) — keep sets must agree with
         the fused pipeline's native_drop+lang+ppl composition."""
+        import pyarrow as pa
         from pyspark.sql import functions as F
 
         from validatelite_spark.functions.perplexity import \
-            perplexity_series
+            perplexity_array
         from validatelite_spark.pipeline import (QualityPipeline,
                                                  synthesize_pages)
 
@@ -402,19 +403,17 @@ class TestFusedLangParity:
         got = sorted((r["url"], bool(r["keep"]), r["text_scrubbed"])
                      for r in pipe.annotate(pages)
                      .select("url", "keep", "text_scrubbed").collect())
-        # independent reference: native flags + pandas perplexity
-        import pandas as pd
+        # independent reference: native flags + Arrow perplexity
         from validatelite_spark.functions import textquality
-        from validatelite_spark.functions.pii import (hit_series,
-                                                      scrub_series)
+        from validatelite_spark.functions.pii import hit_array, scrub_array
         ref_rows = pages.select(
             "url", "text",
             textquality.gopher_fail(F.col("text")).alias("gf"),
             textquality.lang_id(F.col("text")).alias("lg")).collect()
-        texts = pd.Series([r["text"] for r in ref_rows])
-        ppl = perplexity_series(texts)
-        pii = hit_series(texts)
-        scr = scrub_series(texts)
+        texts = pa.array([r["text"] for r in ref_rows], pa.string())
+        ppl = perplexity_array(texts)
+        pii = hit_array(texts)
+        scr = scrub_array(texts).to_pylist()
         ref = []
         for i, r in enumerate(ref_rows):
             keep = bool(r["text"] is not None and not r["gf"]

@@ -5,7 +5,7 @@ idempotence, perplexity determinism. Pure Python — no Spark session."""
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,8 +13,8 @@ from validatelite_spark.core.results import status_for
 from validatelite_spark.core.rule_parser import parse_rule
 from validatelite_spark.core.rules import Rule, RuleType, SeverityLevel
 from validatelite_spark.core.types import format_to_strptime, parse_type
-from validatelite_spark.functions.perplexity import MAX_PPL, perplexity_series
-from validatelite_spark.functions.pii import scrub_series
+from validatelite_spark.functions.perplexity import MAX_PPL, perplexity_array
+from validatelite_spark.functions.pii import scrub_array
 
 _col = st.text(alphabet="abcdefgh_", min_size=1, max_size=12)
 
@@ -97,16 +97,14 @@ class TestScrubProperties:
     @given(st.text(max_size=300))
     @settings(max_examples=200, deadline=None)
     def test_scrub_idempotent(self, text):
-        s = pd.Series([text], dtype="object")
-        once = scrub_series(s)
-        twice = scrub_series(once)
-        assert once[0] == twice[0]
+        once = scrub_array(pa.array([text]))
+        twice = scrub_array(once)
+        assert once == twice
 
     @given(st.text(alphabet="abc def", max_size=100))
     @settings(max_examples=50, deadline=None)
     def test_scrub_noop_on_clean_text(self, text):
-        s = pd.Series([text], dtype="object")
-        assert scrub_series(s)[0] == text
+        assert scrub_array(pa.array([text], pa.string()))[0].as_py() == text
 
 
 class TestPerplexityProperties:
@@ -115,16 +113,16 @@ class TestPerplexityProperties:
     @settings(max_examples=100, deadline=None)
     def test_batch_equals_rowwise(self, texts):
         """Vectorized batch scoring == one-at-a-time scoring (the
-        reduceat segmentation introduces no cross-doc leakage)."""
-        batch = perplexity_series(pd.Series(texts, dtype="object"))
-        single = [perplexity_series(pd.Series([t], dtype="object"))[0]
+        doc-index segmentation introduces no cross-doc leakage)."""
+        batch = perplexity_array(pa.array(texts, pa.string()))
+        single = [perplexity_array(pa.array([t], pa.string()))[0]
                   for t in texts]
         for got, want in zip(batch, single):
             assert abs(got - want) < 1e-9
 
     @given(st.one_of(st.none(), st.just(""), st.just("x")))
     def test_degenerate_docs_score_max(self, t):
-        assert perplexity_series(pd.Series([t], dtype="object"))[0] == MAX_PPL
+        assert perplexity_array(pa.array([t], pa.string()))[0] == MAX_PPL
 
 
 class TestCodecProperties:

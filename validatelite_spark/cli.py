@@ -178,7 +178,11 @@ def main(argv: Optional[list[str]] = None) -> int:
     p_filter = sub.add_parser("filter", help="run the quality pipeline")
     p_filter.add_argument("source")
     p_filter.add_argument("--output", required=True)
-    p_filter.add_argument("--langs", default="en")
+    p_filter.add_argument(
+        "--langs", default="en",
+        help=("comma-separated languages LANG_ID keeps (default: en); "
+              "GOPHER's stopword gate is English, so a page in another "
+              "language still fails it and is dropped"))
     p_filter.add_argument("--max-ppl", type=float, default=None)
     p_filter.add_argument("--checkpoint", action="store_true")
     p_filter.add_argument("--buckets", type=int, default=64)

@@ -13,13 +13,15 @@ model stays free of pyspark imports.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from validatelite_spark.core.registry import BatchKernel, register_rule_type
 from validatelite_spark.functions.perplexity import perplexity_kernel
 from validatelite_spark.functions.pii import PII_KERNEL
 from validatelite_spark.functions.textquality import (gopher_fail_t, lang_id,
-                                                      lang_id_series)
+                                                      lang_id_array)
 from validatelite_spark.plans.planner import tokens_of
 
 
@@ -29,8 +31,9 @@ def _compile_lang_id(rule):
     # language, not its characters.
     allowed = rule.parameters["allowed_langs"]
     allowed = [allowed] if isinstance(allowed, str) else list(allowed)
+    known = pa.array(allowed, pa.string())
     return BatchKernel(
-        lang_id_series, lambda langs: ~langs.isin(allowed),
+        lang_id_array, lambda langs: pc.invert(pc.is_in(langs, known)),
         native=lambda: ~lang_id(F.col(rule.column)).isin(allowed))
 
 

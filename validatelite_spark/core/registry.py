@@ -23,7 +23,7 @@ The registry stores a *compile function*, not a SQL-string generator
 It returns what the type is: a failure-predicate ``Column``, or a
 ``BatchKernel``, never its own UDF — anything else is an ERROR result
 for the rule. ``plans/planner.py`` runs
-every kernel of a scan in one pandas UDF, calling each distinct
+every kernel of a scan in one Arrow UDF, calling each distinct
 (column, signal) once per batch — so build a parameterized signal with
 a cached factory (same parameters → same function object).
 """
@@ -44,11 +44,12 @@ CompileFn = Callable[[Any], Any]
 
 @dataclass(frozen=True)
 class BatchKernel:
-    """A Python-exact rule over its column's Arrow batch (a pandas Series):
-    ``signal`` maps it to a per-row signal Series, ``fail`` that signal
-    to a non-NULL boolean Series. ``native``, if set, builds an
-    equivalent failure-predicate Column; the planner calls it unless
-    another rule kernel reads the same column in the scan."""
+    """A Python-exact rule over its column's Arrow batch (a
+    ``pyarrow.Array``): ``signal`` maps it to a per-row signal (an Arrow
+    or numpy array), ``fail`` that signal to a non-NULL boolean Arrow or
+    numpy array. ``native``, if set, builds an equivalent
+    failure-predicate Column; the planner calls it unless another rule
+    kernel reads the same column in the scan."""
 
     signal: Callable[[Any], Any]
     fail: Callable[[Any], Any]

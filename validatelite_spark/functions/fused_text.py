@@ -1,6 +1,6 @@
 """``fused_text_eval``: the default rules' Python-tier pass as one Column.
 
-Rule scans get their one pandas UDF from ``plans/planner.py``. This
+Rule scans get their one Arrow UDF from ``plans/planner.py``. This
 Column-level entry point stays for the benchmark's UDF probe
 (``perfbench/run.py::probes``), so the probe measures the pass the
 pipeline runs. GOPHER stays out of the pass (native gopher runs on the

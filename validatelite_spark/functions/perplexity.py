@@ -8,15 +8,17 @@ and non-English text score high — the RANGE-style PERPLEXITY rule then
 thresholds the score (reference RANGE semantics: NULL fails,
 reference: core/executors/validity_executor.py:398-471).
 
-Vectorization: the whole Arrow batch is normalized, concatenated into one
-numpy uint8 array, bigram log-probs are gathered with one fancy-index, and
-per-document means come from ``np.add.reduceat`` — no per-row Python loop.
+Vectorization: the Arrow batch's UTF-8 value buffer is coded in place
+(one byte per code point kept), bigram log-probs are gathered with one
+fancy-index, and per-document means come from ``np.bincount`` over a
+doc-index vector — no per-row Python, no re-encoding of the text.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 
 from validatelite_spark.core.registry import BatchKernel
@@ -94,56 +96,82 @@ def _build_byte_lut() -> np.ndarray:
 
 _BYTE_CODE_LUT = _build_byte_lut()
 
+#: the code of each byte of RAW UTF-8 text, as ``str.lower`` then
+#: ``encode("ascii", "replace")`` codes it: A-Z lower to a-z, and a
+#: code point outside ASCII becomes one ``?`` (a space code) — indexed
+#: by its lead byte, its continuation bytes dropped
+_UTF8_CODE_LUT = _BYTE_CODE_LUT.copy()
+_UTF8_CODE_LUT[65:91] = np.arange(26)
+_UTF8_CODE_LUT[128:] = _BYTE_CODE_LUT[ord("?")]
+
 #: Perplexity assigned to NULL / empty / single-char docs (worst case —
 #: RANGE semantics make NULL a failure).
 MAX_PPL = float(2.0 ** (-_LOGPROBS.min()))
 
 
-def perplexity_series(s: pd.Series) -> pd.Series:
-    """Vectorized char-bigram perplexity for a pandas Series of strings.
+def _code_points(buf: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(codes, keep) of a UTF-8 byte buffer: ``keep`` marks one byte per
+    code point of the lowered text. The two code points whose
+    ``str.lower`` holds ASCII: U+212A KELVIN SIGN (E2 84 AA) lowers to
+    ``k``, U+0130 (C4 B0) to ``i`` + U+0307, so its continuation byte
+    stands for the U+0307."""
+    codes = _UTF8_CODE_LUT[buf]
+    keep = (buf & 0xC0) != 0x80
+    kelvin = np.flatnonzero((buf[:-2] == 0xE2) & (buf[1:-1] == 0x84)
+                            & (buf[2:] == 0xAA))
+    codes[kelvin] = ord("k") - 97
+    dotted = np.flatnonzero((buf[:-1] == 0xC4) & (buf[1:] == 0xB0))
+    codes[dotted] = ord("i") - 97
+    keep[dotted + 1] = True
+    return codes, keep
 
-    The whole Arrow batch is encoded doc-by-doc (C-level) but every
+
+def perplexity_array(texts: pa.Array) -> np.ndarray:
+    """Vectorized char-bigram perplexity of an Arrow string array.
+
+    Reads the array's UTF-8 value buffer and offsets directly: every
     numeric step — code mapping, space-run collapse, bigram gather,
-    per-doc mean — runs ONCE over the concatenated byte buffer with a
-    doc-index vector, so per-doc Python overhead is a single .encode()."""
-    vals = s.astype("string")
-    n = len(vals)
+    per-doc mean — runs ONCE over the whole buffer with a doc-index
+    vector, with no per-doc Python. Equal bit for bit to scoring each
+    ``text.lower().encode("ascii", "replace")``."""
+    n = len(texts)
     out = np.full(n, MAX_PPL, dtype=np.float64)
-    notna = vals.notna().to_numpy()
-    texts = vals[notna].tolist()
-    if not texts:
-        return pd.Series(out, index=s.index)
-    enc = [t.lower().encode("ascii", "replace") for t in texts]
-    lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=len(enc))
-    if lens.sum() == 0:
-        return pd.Series(out, index=s.index)
-    buf = np.frombuffer(b"".join(enc), dtype=np.uint8)
-    doc_idx = np.repeat(np.arange(len(enc), dtype=np.int32), lens)
-    # map to codes via a 256-entry LUT (single gather, no boolean temps)
-    codes = _BYTE_CODE_LUT[buf]
+    if n == 0:
+        return out
+    if texts.type != pa.string():
+        texts = texts.cast(pa.string())
+    if texts.null_count:
+        texts = pc.fill_null(texts, "")  # scores MAX_PPL, like NULL
+    offsets = np.frombuffer(texts.buffers()[1], dtype=np.int32,
+                            count=n + 1, offset=4 * texts.offset)
+    if offsets[-1] == offsets[0]:
+        return out
+    buf = np.frombuffer(texts.buffers()[2], dtype=np.uint8)[
+        offsets[0]:offsets[-1]]
+    doc_idx = np.repeat(np.arange(n, dtype=np.int32), np.diff(offsets))
+    codes, keep = _code_points(buf)
+    codes, doc_idx = codes[keep], doc_idx[keep]
     # collapse runs of spaces WITHIN a doc
-    if codes.size > 1:
-        keep = np.empty(codes.size, dtype=bool)
-        keep[0] = True
-        np.logical_not((codes[1:] == 26) & (codes[:-1] == 26)
-                       & (doc_idx[1:] == doc_idx[:-1]), out=keep[1:])
-        codes, doc_idx = codes[keep], doc_idx[keep]
+    keep = np.empty(codes.size, dtype=bool)
+    keep[0] = True
+    np.logical_not((codes[1:] == 26) & (codes[:-1] == 26)
+                   & (doc_idx[1:] == doc_idx[:-1]), out=keep[1:])
+    codes, doc_idx = codes[keep], doc_idx[keep]
     if codes.size > 1:
         same_doc = doc_idx[:-1] == doc_idx[1:]
         pair_doc = doc_idx[:-1][same_doc]
         pair_lp = _LOGPROBS[codes[:-1][same_doc], codes[1:][same_doc]]
-        sums = np.bincount(pair_doc, weights=pair_lp, minlength=len(enc))
-        counts = np.bincount(pair_doc, minlength=len(enc))
-        res = np.where(counts > 0,
+        sums = np.bincount(pair_doc, weights=pair_lp, minlength=n)
+        counts = np.bincount(pair_doc, minlength=n)
+        out = np.where(counts > 0,
                        np.power(2.0, -(sums / np.maximum(counts, 1))),
                        MAX_PPL)
-        out[notna] = res
-    return pd.Series(out, index=s.index)
+    return out
 
 
 def perplexity(col: Column) -> Column:
-    """Perplexity column (the signal alone, as its own pandas UDF)."""
-    return batch_udf(perplexity_series, "double")(col)
+    """Perplexity column (the signal alone, as its own Arrow UDF)."""
+    return batch_udf(perplexity_array, "double")(col)
 
 
 def perplexity_kernel(min_ppl: float | None,
@@ -152,4 +180,4 @@ def perplexity_kernel(min_ppl: float | None,
     fails (scores MAX_PPL, which exceeds any sane max_ppl)."""
     lo = -np.inf if min_ppl is None else float(min_ppl)
     hi = np.inf if max_ppl is None else float(max_ppl)
-    return BatchKernel(perplexity_series, lambda ppl: (ppl < lo) | (ppl > hi))
+    return BatchKernel(perplexity_array, lambda ppl: (ppl < lo) | (ppl > hi))

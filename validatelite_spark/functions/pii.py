@@ -1,10 +1,15 @@
-"""PII / toxicity scrubbing — compiled-regex substitution, vectorized.
+"""PII / toxicity scrubbing — RE2 regex substitution over Arrow arrays.
 
 The scrub is the REGEX rule family re-targeted (BASELINE.json north_star):
-each pattern is a compiled Python ``re`` applied via pandas ``str.replace``
-over Arrow batches. The patterns deliberately stay inside the regex subset
-where Python ``re``, Java regex, and RE2 (DuckDB) agree — no backrefs, no
-lookaround — so the DuckDB oracle can reproduce the scrub byte-for-byte.
+each pattern runs as ``pyarrow.compute.replace_substring_regex`` over an
+Arrow batch, so the engine is RE2 — the same engine the DuckDB oracle
+(``duckdb_scrub_sql``) uses, which reproduces the scrub byte for byte.
+The patterns avoid backrefs and lookaround, but RE2 is not Python ``re``
+off ASCII: RE2's ``\\b`` is an ASCII word boundary, while ``re``'s is
+Unicode-aware, so ``'é123-45-6789'`` holds an SSN for RE2 and DuckDB
+(``'é<SSN>'``) and none for ``re``; ``'badwordé'`` differs the same way
+(``tests/test_arrow_kernels.py`` pins the Arrow kernels against DuckDB
+on such rows). On ASCII text the two engines agree.
 
 Scrub order is FIXED (email → ssn → phone → ip → profanity): phone before
 ip so a dotted phone can't be half-eaten by the ip pattern; the order is
@@ -13,9 +18,9 @@ part of the per-url byte-identical contract.
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from validatelite_spark.core.registry import BatchKernel
 
@@ -32,36 +37,34 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 TOXIC_TERMS: list[str] = ["badword", "slurword", "curseword"]
 TOXIC_PATTERN = r"\b(?:" + "|".join(TOXIC_TERMS) + r")\b"
 
-_COMPILED: list[tuple[str, re.Pattern[str], str]] = [
-    (name, re.compile(pat), repl) for name, pat, repl in PII_PATTERNS
-] + [("toxic", re.compile(TOXIC_PATTERN, re.IGNORECASE), "<TOXIC>")]
+_SCRUBS: list[tuple[str, str]] = [
+    (pat, repl) for _name, pat, repl in PII_PATTERNS
+] + [(f"(?i){TOXIC_PATTERN}", "<TOXIC>")]
 
 #: one alternation that matches iff ANY pattern matches — a single scan
 #: for hit detection instead of five (toxic folded in case-insensitively)
-_ANY_PATTERN = re.compile(
-    "|".join(f"(?:{pat})" for _n, pat, _r in PII_PATTERNS)
-    + f"|(?i:{TOXIC_PATTERN})")
+_ANY_PATTERN = ("|".join(f"(?:{pat})" for _n, pat, _r in PII_PATTERNS)
+                + f"|(?i:{TOXIC_PATTERN})")
 
 
-def scrub_series(s: pd.Series) -> pd.Series:
-    """Apply every pattern in order to a pandas string Series."""
-    out = s.astype("string")
-    for _name, pat, repl in _COMPILED:
-        out = out.str.replace(pat, repl, regex=True)
-    return out
+def scrub_array(texts: pa.Array) -> pa.Array:
+    """Apply every pattern in order to an Arrow string array."""
+    for pat, repl in _SCRUBS:
+        texts = pc.replace_substring_regex(texts, pat, repl)
+    return texts
 
 
-def hit_series(s: pd.Series) -> pd.Series:
+def hit_array(texts: pa.Array) -> np.ndarray:
     """True where any PII/toxic pattern matches; NULL → False (REGEX rule
     NULL semantics: NULL does not fail). Single-scan alternation."""
-    vals = s.astype("string")
-    return vals.str.contains(_ANY_PATTERN, regex=True).fillna(False).astype(bool)
+    hits = pc.match_substring_regex(texts, _ANY_PATTERN)
+    return pc.fill_null(hits, False).to_numpy(zero_copy_only=False)
 
 
 #: PII_SCRUB rule kernel: the document has at least one PII/toxic match
 #: (it is 'dirty'); NULL does not fail. The planner's scrub shares its
-#: ``hit_series`` pass.
-PII_KERNEL = BatchKernel(hit_series, lambda hits: hits)
+#: ``hit_array`` pass.
+PII_KERNEL = BatchKernel(hit_array, lambda hits: hits)
 
 
 def duckdb_scrub_sql(expr: str) -> str:

@@ -18,7 +18,10 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -273,42 +276,47 @@ def lang_id_t(col: Column, toks: Column) -> Column:
     return lang_id(col)
 
 
-def lang_id_series(s: pd.Series) -> pd.Series:
-    """Python twin of ``lang_id`` — the detected language per doc, the
+#: the marker words in LANG_PRIORITY order, and each one's language
+_MARKER_WORDS = pa.array([w for lg in LANG_PRIORITY[:-1]
+                          for w in LANG_MARKERS[lg]])
+_MARKER_LANG = np.repeat(
+    np.arange(len(LANG_PRIORITY) - 1),
+    [len(LANG_MARKERS[lg]) for lg in LANG_PRIORITY[:-1]])
+_LANG_LABELS = pa.array([*LANG_PRIORITY, "und"])
+
+
+def lang_id_array(texts: pa.Array) -> pa.Array:
+    """Arrow twin of ``lang_id`` — the detected language per doc, the
     LANG_ID kernel's signal when the scan already crosses into Python
     for that column (its native form is 4 marker regexes + a CJK scan,
     the most expensive native signal; here it reuses the text batch).
 
     Exact parity with the Column chain (pinned on the generated corpus
     in tests/test_pipeline.py): marker scores count whole tokens equal
-    to a marker word (``words``, so Python counting == the
-    ``(?<![^\\s])(?:w|…)(?![^\\s])`` regexp_count); the zh score counts
-    U+4E00-U+9FFF code points (== regexp_count of the class — Spark
-    lengths are code points too); the winner is the first language in
-    LANG_PRIORITY holding the maximum positive score ('und' when every
-    score is 0), which is exactly the CASE chain's
-    argmax-with-priority-tie-break invariant."""
-    word_lang = {w: lg for lg, ws in LANG_MARKERS.items() for w in ws}
-    out = []
-    for t in s:
-        if t is None:
-            # the Column CASE chain's NULL conditions all skip,
-            # falling through to the 'und' default — mirror it
-            out.append("und")
-            continue
-        scores = dict.fromkeys(LANG_PRIORITY, 0)
-        for tok in words(t):
-            lg = word_lang.get(tok)
-            if lg is not None:
-                scores[lg] += 1
-        scores["zh"] = sum("一" <= ch <= "鿿" for ch in t)
-        best = max(scores.values())
-        if best <= 0:
-            out.append("und")
-        else:
-            out.append(next(lg for lg in LANG_PRIORITY
-                            if scores[lg] == best))
-    return pd.Series(out, index=s.index, dtype="object")
+    to a marker word — ``ascii_split_whitespace`` splits on exactly the
+    Java \\s set, so its tokens are ``words``' (plus empty edge strings,
+    which match no marker); the zh score counts U+4E00-U+9FFF code
+    points (== regexp_count of the class — Spark lengths are code points
+    too); the winner is the first language in LANG_PRIORITY holding the
+    maximum positive score ('und' when every score is 0, and for NULL),
+    which is exactly the CASE chain's argmax-with-priority-tie-break
+    invariant. ``ascii_lower`` rather than ``utf8_lower``: a token
+    lowers to an (ASCII, k-free) marker word under ``str.lower`` iff it
+    does under ``ascii_lower`` — the only other code points ``str.lower``
+    maps into ASCII are U+212A (to ``k``) and U+0130 (to ``i`` + U+0307,
+    never a marker), while ``utf8_lower`` maps U+0130 to a bare ``i``."""
+    n, langs = len(texts), len(LANG_PRIORITY)
+    toks = pc.ascii_split_whitespace(pc.ascii_lower(texts))
+    word = pc.index_in(pc.list_flatten(toks), value_set=_MARKER_WORDS)
+    hit = pc.is_valid(word)
+    doc = pc.filter(pc.list_parent_indices(toks), hit).to_numpy()
+    lang = _MARKER_LANG[pc.filter(word, hit).to_numpy()]
+    scores = np.bincount(doc * langs + lang,
+                         minlength=n * langs).reshape(n, langs)
+    cjk = pc.count_substring_regex(texts, "[\u4e00-\u9fff]")
+    scores[:, -1] = pc.fill_null(cjk, 0).to_numpy()
+    best = np.where(scores.max(axis=1) > 0, scores.argmax(axis=1), langs)
+    return _LANG_LABELS.take(best)
 
 
 def gopher_fail_t(col: Column, toks: Column,

@@ -2,10 +2,12 @@
 
 The reference extends SQLite with registered Python scalar functions
 (reference: shared/database/sqlite_functions.py:11-244). Here the same
-semantics become ``BatchKernel``s (core/registry.py): vectorized pandas
-signals over an Arrow batch, which ``plans/planner.plan_rules`` runs in
-the scan's one pandas UDF, so they still fuse into the single-scan
-``df.agg()`` alongside native predicates.
+semantics become ``BatchKernel``s (core/registry.py) over an Arrow
+batch, which ``plans/planner.plan_rules`` runs in the scan's one Arrow
+pass, so they still fuse into the single-scan ``df.agg()`` alongside
+native predicates. Python ``re`` and ``strptime`` have no Arrow form:
+each kernel renders its batch as pandas strings itself (``_strings``,
+the only pandas conversion left in a rule scan).
 
 Semantics preserved exactly:
 
@@ -23,12 +25,24 @@ from __future__ import annotations
 import functools
 import re
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 
 from validatelite_spark.core.registry import BatchKernel
 from validatelite_spark.core.types import format_to_strptime
 from validatelite_spark.plans.planner import batch_udf
+
+
+def _strings(values: pa.Array) -> pd.Series:
+    """``values`` as a pandas string Series, rendered the way Spark's
+    pandas conversion renders them (``1e+20``; a timestamp as its
+    session-zone wall time, with no offset)."""
+    s = values.to_pandas()
+    if pa.types.is_timestamp(values.type) and values.type.tz is not None:
+        s = s.dt.tz_localize(None)
+    return s.astype("string")
 
 
 @functools.cache
@@ -37,9 +51,12 @@ def regex_kernel(pattern: str) -> BatchKernel:
     ``re.search`` (the reference's ``REGEXP`` is a "contains" search);
     NULL is not a failure. Cached, so one pattern is one signal pass."""
     compiled = re.compile(pattern)
-    return BatchKernel(
-        lambda s: s.astype("string").str.contains(compiled, regex=True),
-        lambda found: (~found).fillna(False).astype(bool))
+
+    def found_or_null(values: pa.Array) -> np.ndarray:
+        found = _strings(values).str.contains(compiled, regex=True)
+        return found.fillna(True).to_numpy(bool)
+
+    return BatchKernel(found_or_null, np.logical_not)
 
 
 def regex_fail(col: Column, pattern: str) -> Column:
@@ -57,14 +74,15 @@ def date_kernel(fmt: str) -> BatchKernel:
     the reference (sqlite_functions.py:196-213)."""
     pyfmt = format_to_strptime(fmt)
 
-    def ok(s: pd.Series) -> pd.Series:
-        vals = s.astype("string")
+    def ok(values: pa.Array) -> np.ndarray:
+        vals = _strings(values)
         blank = vals.isna() | (vals.str.strip() == "")
         parsed = pd.to_datetime(vals, format=pyfmt, errors="coerce")
         rendered = parsed.dt.strftime(pyfmt)
-        return (parsed.notna() & (rendered == vals)) | blank
+        passed = (parsed.notna() & (rendered == vals)) | blank
+        return passed.fillna(False).to_numpy(bool)
 
-    return BatchKernel(ok, lambda passed: (~passed).fillna(True).astype(bool))
+    return BatchKernel(ok, np.logical_not)
 
 
 def date_format_fail(col: Column, fmt: str) -> Column:

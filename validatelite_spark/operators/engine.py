@@ -36,6 +36,7 @@ from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from validatelite_spark.core.results import (
     DatasetMetrics,
@@ -57,13 +58,24 @@ from validatelite_spark.plans.prevalidation import prevalidate
 logger = logging.getLogger(__name__)
 
 
+def _orderable(dt: T.DataType) -> bool:
+    """Whether Spark can sort by a column of type ``dt``: a map or a
+    VARIANT anywhere in it makes ``ORDER BY`` fail at analysis."""
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return not isinstance(dt, (T.MapType, T.VariantType))
+
+
 @dataclass
 class EngineConfig:
     """The sample settings of the reference's core config (reference:
     core/config.py:14-55); the rules alone choose the plan."""
 
     sample_data_max_records: int = 5
-    # deterministic sample ordering column; default = first kept column
+    # deterministic sample ordering column; default = the first kept
+    # column Spark can sort by (no map or VARIANT in it)
     sample_order_column: Optional[str] = None
     # exclude wide/binary columns from collected samples
     sample_exclude_columns: tuple[str, ...] = ("html",)
@@ -162,8 +174,11 @@ class RuleEngine:
         keep_cols = [c for c in df.columns
                      if c not in cfg.sample_exclude_columns]
         rows = [cr for cr in failing if cr.count is None]
+        order = cfg.sample_order_column or next(
+            (c for c in keep_cols if _orderable(df.schema[c].dataType)),
+            keep_cols[0])
         queries = [(rows, lambda: failure_samples(
-            df, rows, keep_cols, cfg.sample_order_column or keep_cols[0],
+            df, rows, keep_cols, order,
             cfg.sample_data_max_records))] if rows else []
         for cr in failing:
             if cr.count is not None:

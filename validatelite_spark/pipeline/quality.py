@@ -65,7 +65,13 @@ def default_rules(
     a user can add/remove/override exactly like reference rules. The
     language list and the perplexity ceiling are parameters of this
     set, not of the pipeline: a caller passing its own ``rules`` sets
-    them in those rules."""
+    them in those rules.
+
+    ``allowed_langs`` widens LANG_ID only. GOPHER's stopword gate
+    (``EN_STOPWORDS``) and the perplexity model are English, so a
+    French page that LANG_ID now passes is still dropped by GOPHER
+    (and by ``max_ppl`` below ~14.6): keeping another language needs
+    per-language stopwords, which this set does not have."""
     c = text_column
     return [
         Rule(RuleType.NOT_NULL, c, name="not_null_text",
@@ -101,7 +107,7 @@ class QualityPipeline:
         (plans/planner.py): a ``fail_<rule>`` flag per rule, ``keep`` (no
         HIGH/CRITICAL rule fails) and ``text_scrubbed`` (kept documents
         scrubbed, NULL for dropped ones) — all Python-tier rules and the
-        scrub ride ONE pandas UDF. It is nondeterministic, so
+        scrub ride ONE Arrow UDF. It is nondeterministic, so
         ``annotate(df).filter("keep")`` runs it once per row, but a filter
         on an INPUT column stays above it too: filter ``df`` first
         (curation and ``run_checkpointed`` do)."""

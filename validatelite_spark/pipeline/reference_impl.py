@@ -2,10 +2,16 @@
 
 This is the *oracle* the Spark pipeline is graded against (BASELINE.md:
 keep/drop F1 >= 0.99, byte-identical scrubbed text per url). It shares
-only the CONSTANTS (marker lists, thresholds, regex specs) with the Spark
-path; every computation here is an independently-written pandas/numpy
-implementation, so agreement is evidence of semantic parity rather than
-of running the same code twice.
+only the CONSTANTS (marker lists, thresholds, regex specs) and the
+perplexity scorer with the Spark path; every other computation here is
+an independently-written pandas/Python implementation, so agreement is
+evidence of semantic parity rather than of running the same code twice.
+
+The scrub twin ``_scrub_one`` runs the patterns through Python ``re``;
+the Spark path runs them through RE2 (``functions/pii.py``). The two
+differ only off ASCII (``re``'s ``\b`` is Unicode-aware, RE2's is not),
+so this oracle holds for ASCII text; DuckDB, also RE2, is the scrub's
+oracle for the rest.
 """
 
 from __future__ import annotations
@@ -14,8 +20,9 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from validatelite_spark.functions.perplexity import perplexity_series
+from validatelite_spark.functions.perplexity import perplexity_array
 from validatelite_spark.functions.pii import PII_PATTERNS, TOXIC_PATTERN
 from validatelite_spark.functions.textquality import (
     EN_STOPWORDS,
@@ -86,7 +93,8 @@ def reference_filter(
     params = dict(GOPHER_DEFAULTS)
     if gopher_params:
         params.update(gopher_params)
-    ppl = perplexity_series(pdf["text"]).to_numpy()
+    ppl = perplexity_array(pa.array(pdf["text"], pa.string(),
+                                    from_pandas=True))
 
     keeps: list[bool] = []
     scrubbed: list[str | None] = []

@@ -8,7 +8,7 @@ answered by the ONE ``df.agg()`` of its filter group (plans/merger.py):
 - ``fail_predicate`` — a per-row failure ``Column`` (whole-stage codegen);
 - ``kernel`` — a ``BatchKernel`` (core/registry.py) for Python-exact
   semantics: ``re`` regex parity, strptime round-trip, perplexity — all
-  of a scan's kernels share one pandas UDF;
+  of a scan's kernels share one Arrow UDF;
 - ``count`` — an aggregate Column that IS the failed-record count:
   UNIQUE's ``count(c) - count_distinct(c)``.
 
@@ -196,7 +196,7 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
         return CompiledRule(rule, pred)
 
     if t == RuleType.REGEX:
-        # the UDF renders other types through pandas (1e+20, +00:00)
+        # the re kernel renders other types through pandas (1e+20)
         java = (java_regex(p["pattern"]) if rule.column in schema.names
                 and schema[rule.column].dataType == T.StringType() else None)
         if java is None:

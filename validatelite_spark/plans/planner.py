@@ -6,11 +6,15 @@ registered-rule queries of ``__spark_entry__`` and
 ``QualityPipeline.annotate`` all plan their per-row verdicts here. The
 projection holds the shared inputs (the ``tokens`` split of each string
 column a native predicate reads via ``tokens_of``), the native
-predicates, and one pandas UDF for every ``BatchKernel`` rule plus the
-optional scrub. Inside it each distinct (column, signal) pair runs
-once per batch: two PERPLEXITY rules share one perplexity pass, a PII
-rule and the scrub share one hit scan. A dual-form kernel (LANG_ID)
-joins the UDF only when another rule kernel already reads its column.
+predicates, and one Arrow UDF (``F.arrow_udf``) for every
+``BatchKernel`` rule plus the optional scrub. Inside it each distinct
+(column, signal) pair runs once per batch: two PERPLEXITY rules share
+one perplexity pass, a PII rule and the scrub share one hit scan. A
+dual-form kernel (LANG_ID) joins the UDF only when another rule kernel
+already reads its column. The pass is pyarrow.compute and numpy over
+the batch's Arrow arrays, and builds no pandas object: only a kernel
+that needs Python semantics (``functions/udf_tier.py``, REPETITION)
+converts its own column.
 
 The UDF is nondeterministic although pure: Catalyst copies a
 deterministic one into any filter pushed below the projection
@@ -22,15 +26,17 @@ before planning.
 from __future__ import annotations
 
 from functools import reduce
-from typing import TYPE_CHECKING, Callable, Collection, Optional
+from typing import TYPE_CHECKING, Any, Callable, Collection, Optional
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from validatelite_spark.core.registry import BatchKernel
-from validatelite_spark.functions.pii import hit_series, scrub_series
+from validatelite_spark.functions.pii import hit_array, scrub_array
 from validatelite_spark.functions.textquality import tokens
 
 if TYPE_CHECKING:
@@ -49,23 +55,26 @@ def tokens_of(column: str) -> Column:
     return F.col(_TOKENS + column)
 
 
-def batch_udf(fn: Callable[[pd.Series], pd.Series], return_type: str):
-    """``fn`` as a standalone one-column pandas UDF: the Column form of a
+def _arrow(values) -> pa.Array:
+    """A kernel's output (an Arrow or numpy array) as an Arrow array; a
+    numpy NaN becomes NULL."""
+    if isinstance(values, pa.Array):
+        return values
+    return pa.array(values, from_pandas=True)
+
+
+def batch_udf(fn: Callable[[pa.Array], Any], return_type: str):
+    """``fn`` as a standalone one-column Arrow UDF: the Column form of a
     kernel's signal or verdict, for parity references and one-off
     columns. Rule scans run their kernels in ``plan_rules``' one UDF."""
-
-    @F.pandas_udf(return_type)
-    def _batch(s: pd.Series) -> pd.Series:
-        return fn(s)
-
-    return _batch
+    return F.arrow_udf(lambda values: _arrow(fn(values)), return_type)
 
 
 def kernel_udf(inputs: list[Column],
                kernels: dict[str, tuple[int, BatchKernel]],
                scrub: Optional[int] = None, drop: Optional[Column] = None,
                drops: Collection[str] = ()) -> Column:
-    """The planner's one pandas UDF: a struct with a boolean field per
+    """The planner's one Arrow UDF: a struct with a boolean field per
     ``kernels`` entry (field → (index into ``inputs``, kernel)) and, when
     ``scrub`` indexes a text input, a ``scrubbed`` field — that text
     scrubbed where neither ``drop`` nor a kernel named in ``drops``
@@ -84,25 +93,34 @@ def kernel_udf(inputs: list[Column],
     gates = [name for name in kernels if name in drops]
     args = list(inputs)
     if scrub is not None:
-        hit = slot(scrub, hit_series)
+        hit = slot(scrub, hit_array)
         fields.append(T.StructField("scrubbed", T.StringType()))
         args.append(drop)
     schema = T.StructType(fields)
 
-    def rule_kernels(*cols: pd.Series) -> pd.DataFrame:
+    # no type hints: arrow_udf infers its kind from them, and reads an
+    # Array -> StructArray function as an aggregate
+    def rule_kernels(*cols):
         sig = [signal(cols[i]) for i, signal in signals]
-        out = {name: fail(sig[j]) for name, j, fail in plan}
+        out = {name: np.asarray(fail(sig[j]), dtype=bool)
+               for name, j, fail in plan}
+        arrays = [pa.array(flags) for flags in out.values()]
         if scrub is not None:
-            text, keep = cols[scrub], ~cols[-1].astype(bool)
+            text = cols[scrub]
+            keep = ~pc.fill_null(cols[-1], False).to_numpy(
+                zero_copy_only=False)
             for name in gates:
                 keep &= ~out[name]
-            clean, dirty = keep & ~sig[hit], keep & sig[hit]
-            out["scrubbed"] = text.where(clean, None).astype("object")
-            if dirty.any():
-                out["scrubbed"][dirty] = scrub_series(text[dirty])
-        return pd.DataFrame(out, columns=schema.fieldNames())
+            hits = np.asarray(sig[hit], dtype=bool)
+            clean, dirty = pa.array(keep & ~hits), pa.array(keep & hits)
+            scrubbed = pc.if_else(clean, text, pa.scalar(None, pa.string()))
+            if pc.any(dirty).as_py():
+                scrubbed = pc.replace_with_mask(
+                    scrubbed, dirty, scrub_array(text.filter(dirty)))
+            arrays.append(scrubbed)
+        return pa.StructArray.from_arrays(arrays, schema.fieldNames())
 
-    return F.pandas_udf(rule_kernels, schema).asNondeterministic()(*args)
+    return F.arrow_udf(rule_kernels, schema).asNondeterministic()(*args)
 
 
 def plan_rules(df: DataFrame, flags: dict[str, CompiledRule],
