@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from validatelite_spark.pipeline.pages import synthesize_pages
+from validatelite_spark.pipeline.pages import _SENTENCES, synthesize_pages
 from validatelite_spark.pipeline.quality import (
     PipelineConfig,
     QualityPipeline,
@@ -69,6 +69,26 @@ class TestKeepDropParity:
         kept = got["keep"] & want["keep"]
         assert (got.loc[kept, "text_scrubbed"].to_numpy()
                 == want.loc[kept, "text_scrubbed"].to_numpy()).all()
+
+    @pytest.mark.parametrize("space", ["\u00a0", "\u2028", "\u3000"])
+    def test_oracle_splits_on_java_whitespace_only(self, spark,
+                                                   edge_ws_texts, space):
+        """A Unicode space sits inside a word for Spark (Java \\s), so
+        the oracle agrees row by row on pages where Python's \\s would
+        count more words (four of 53 spaces swapped: 49 < min_words) or
+        fewer symbols (a run of 40)."""
+        clean = " ".join(_SENTENCES[:4])
+        texts = [*edge_ws_texts, clean, clean.replace(" ", space, 1),
+                 clean.replace(" ", space, 4),
+                 clean + " " + space * 40]
+        pdf = pd.DataFrame({"url": [f"u{i}" for i in range(len(texts))],
+                            "text": texts})
+        got = (QualityPipeline(spark)
+               .annotate(spark.createDataFrame(pdf, "url string, text string"))
+               .orderBy("url").toPandas())
+        want = reference_filter(pdf).sort_values("url")
+        assert got["keep"].tolist() == want["keep"].tolist() \
+            == [False] * len(edge_ws_texts) + [True, True, False, False]
 
     def test_scrub_actually_scrubbed(self, annotated):
         ann, _ = annotated

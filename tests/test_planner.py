@@ -28,9 +28,13 @@ def _rule(t, params=None, name=None, severity=HIGH, column="text"):
     return Rule(t, column, params or {}, name=name, severity=severity)
 
 
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def python_passes(df) -> list[int]:
     """UDFs per ``ArrowEvalPython`` node of the executed plan."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     return [line.count("pythonUDF") for line in plan.splitlines()
             if "ArrowEvalPython" in line]
 
@@ -143,7 +147,21 @@ def test_engine_matches_pipeline_rule_by_rule(spark, sf_dir, source,
 
 class TestOneArrowPass:
     def test_default_rules(self, spark, pages):
-        assert python_passes(QualityPipeline(spark).annotate(pages)) == [1]
+        ann = QualityPipeline(spark).annotate(pages)
+        assert python_passes(ann) == [1]
+        # GOPHER's and LANG_ID's Column forms (regexp_count is
+        # size(regexp_extract_all)) stay out: both ride the Arrow pass
+        plan = executed_plan(ann)
+        assert "regexp_extract_all" not in plan
+        assert "array_distinct" not in plan
+
+    def test_gopher_alone_stays_native(self, spark, pages):
+        """No other kernel reads the text: GOPHER takes its Column
+        form, with no Python."""
+        [group] = build_merge_groups(
+            [compile_rule(_rule(RuleType.GOPHER), pages.schema)])
+        plan = executed_plan(group.scan(pages))
+        assert "ArrowEvalPython" not in plan and "array_distinct" in plan
 
     def test_min_ppl_and_pii(self, spark, pages):
         rules = [_rule(RuleType.PERPLEXITY, {"min_ppl": 2.0}, name="ppl"),

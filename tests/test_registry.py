@@ -56,7 +56,8 @@ class TestRegistry:
         for name in ("LANG_ID", "GOPHER", "PERPLEXITY", "PII_SCRUB"):
             assert registry.get_rule_type(name) is not None
         r = Rule(RuleType.GOPHER, "text")
-        assert compile_rule(r, TEXT).kernel is None  # a Column predicate
+        # dual-form: an Arrow kernel with a native Column twin
+        assert compile_rule(r, TEXT).kernel.native is not None
         r = Rule(RuleType.PERPLEXITY, "text", {"max_ppl": 10.0})
         assert compile_rule(r, TEXT).kernel is not None
 

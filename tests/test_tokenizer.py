@@ -40,9 +40,10 @@ def test_tokens_words_and_duckdb_agree(spark, edge_ws_texts):
 
 
 def test_one_copy_of_the_token_rule():
-    """A whitespace split or a Java-\\s regex outside textquality (and
-    the independent pandas reference) is a second tokenizer."""
-    pat = re.compile(r'_WS_ASCII|s\+"')
+    """A whitespace split, a Java-\\s regex or a spelled-out Java \\s
+    set outside textquality (and the independent pandas reference) is a
+    second tokenizer."""
+    pat = re.compile(r'_WS_ASCII|s\+"|\\t\\n\\x0b')
     hits = set()
     for root, _, files in os.walk(_PKG):
         for f in files:

@@ -10,6 +10,8 @@ folds to ``k``)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,15 +82,24 @@ def test_benchmark_pattern_runs_on_the_jvm(strings):
     assert "ArrowEvalPython" not in plan and "RLIKE" in plan
 
 
+#: the one pattern below that both renderings match
+WHOLE_SECOND = "^2024-01-02 03:04:05$"
+
+
 @pytest.mark.parametrize("column, pattern", [
-    ("d", r"e\+20$"), ("d", r"^1\.0E20$"), ("t", r"\+00:00$"),
-    ("t", "^2024-01-02 03:04:05$")])
+    ("d", r"e\+20$"), ("d", r"^1\.0E20$"), ("f", r"\.500$"),
+    ("f", r"05\.5$"), ("t", WHOLE_SECOND)])
 def test_non_string_columns_keep_the_udf(spark, column, pattern):
-    # pandas renders 1e20 as "1e+20" and a timestamp with "+00:00";
-    # Spark's cast gives "1.0E20" and no offset
+    # pandas renders 1e20 as "1e+20" and 5.5 s as "05.500"; Spark's
+    # cast gives "1.0E20" and "05.5" (a timestamp is its session-zone
+    # wall time in both, with no offset)
     df = spark.sql("SELECT 1 AS id, 1e20 AS d, "
-                   "TIMESTAMP'2024-01-02 03:04:05' AS t")
+                   "TIMESTAMP'2024-01-02 03:04:05' AS t, "
+                   "TIMESTAMP'2024-01-02 03:04:05.5' AS f")
     compiled = compile_rule(regex(column, pattern), df.schema)
     assert compiled.kernel is not None
     got, want = _failed(df, compiled, column, pattern)
     assert got == want
+    cast = df.select(F.col(column).cast("string")).first()[0]
+    cast_fails = re.search(pattern, cast) is None
+    assert (cast_fails == bool(want)) == (pattern == WHOLE_SECOND)

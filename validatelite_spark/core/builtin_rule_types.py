@@ -7,6 +7,11 @@ own LANG_ID / GOPHER / PERPLEXITY / PII_SCRUB rule types go through
 registry is the real dispatch path. ``plans/compiler.py`` imports this
 module for its side effect and carries NO per-type branch for these.
 
+LANG_ID and GOPHER compile to dual-form ``BatchKernel``s: an Arrow
+kernel, and a ``native=`` Column form the planner runs instead when no
+other rule kernel reads the column (curation's scan stays all-JVM).
+PERPLEXITY and PII_SCRUB are Arrow kernels only.
+
 Imported lazily by the compiler (not by core/rules.py) so the core rule
 model stays free of pyspark imports.
 """
@@ -20,7 +25,9 @@ from pyspark.sql import functions as F
 from validatelite_spark.core.registry import BatchKernel, register_rule_type
 from validatelite_spark.functions.perplexity import perplexity_kernel
 from validatelite_spark.functions.pii import PII_KERNEL
-from validatelite_spark.functions.textquality import (gopher_fail_t, lang_id,
+from validatelite_spark.functions.textquality import (gopher_counts,
+                                                      gopher_fail_array,
+                                                      gopher_fail_t, lang_id,
                                                       lang_id_array)
 from validatelite_spark.plans.planner import tokens_of
 
@@ -38,8 +45,11 @@ def _compile_lang_id(rule):
 
 
 def _compile_gopher(rule):
-    return gopher_fail_t(F.col(rule.column), tokens_of(rule.column),
-                         rule.parameters)
+    return BatchKernel(
+        gopher_counts, gopher_fail_array(rule.parameters),
+        native=lambda: gopher_fail_t(F.col(rule.column),
+                                     tokens_of(rule.column),
+                                     rule.parameters))
 
 
 def _compile_perplexity(rule):

@@ -3,10 +3,9 @@
 Rule scans get their one Arrow UDF from ``plans/planner.py``. This
 Column-level entry point stays for the benchmark's UDF probe
 (``perfbench/run.py::probes``), so the probe measures the pass the
-pipeline runs. GOPHER stays out of the pass (native gopher runs on the
-JVM thread concurrently with the Python worker: 14.7 s vs 18.3 s per 1M
-docs inside the UDF); LANG_ID joins it (its native form is 4 regex
-scans + a CJK pass, far more than its Python token count).
+pipeline runs: PERPLEXITY and PII, and the dual-form GOPHER and LANG_ID,
+which join the pass when another kernel reads their column (their
+native forms re-lower and re-scan the text the pass already holds).
 """
 
 from __future__ import annotations
@@ -23,10 +22,11 @@ _TEXT = T.StructType([T.StructField("text", T.StringType())])
 
 def fused_text_eval(text: Column, native_drop: Column, max_ppl: float,
                     lang_allowed: list | None = None) -> Column:
-    """Struct (ppl, pii[, lang] failure flags, scrubbed) of ``text`` in
-    the planner's one Arrow pass; perplexity and language gate the
-    scrub like dropping rules."""
-    rules = {"ppl": Rule(RuleType.PERPLEXITY, "text", {"max_ppl": max_ppl}),
+    """Struct (gopher, ppl, pii[, lang] failure flags, scrubbed) of
+    ``text`` in the planner's one Arrow pass; GOPHER, perplexity and
+    language gate the scrub like dropping rules."""
+    rules = {"gopher": Rule(RuleType.GOPHER, "text"),
+             "ppl": Rule(RuleType.PERPLEXITY, "text", {"max_ppl": max_ppl}),
              "pii": Rule(RuleType.PII_SCRUB, "text")}
     if lang_allowed is not None:
         rules["lang"] = Rule(RuleType.LANG_ID, "text",
@@ -34,4 +34,4 @@ def fused_text_eval(text: Column, native_drop: Column, max_ppl: float,
     kernels = {name: (0, compile_rule(rule, _TEXT).kernel)
                for name, rule in rules.items()}
     return kernel_udf([text], kernels, scrub=0, drop=native_drop,
-                      drops=("ppl", "lang"))
+                      drops=("gopher", "ppl", "lang"))

@@ -32,9 +32,13 @@ from validatelite_spark.functions.textquality import (
 )
 
 
+#: Java's \s, which Spark's split and regexes use: not Python's Unicode
+#: whitespace (U+00A0, U+2028 and U+3000 sit inside a word)
+_JAVA_SPACE = "[ \t\n\x0b\f\r]"
+
+
 def _tokens(text: str) -> list[str]:
-    t = text.strip().lower()
-    return re.split(r"\s+", t) if t else []
+    return [t for t in re.split(_JAVA_SPACE, text.lower()) if t]
 
 
 def _lang_of(text: str) -> str:
@@ -59,10 +63,10 @@ def _lang_of(text: str) -> str:
 def _gopher_fails(text: str, params: dict) -> bool:
     toks = _tokens(text)
     n = len(toks)
-    non_space = len(re.sub(r"\s+", "", text))
+    non_space = len(re.sub(_JAVA_SPACE, "", text))
     mwl = (non_space / n) if n else 0.0
     total = len(text)
-    kept = len(re.sub(r"[^a-zA-Z0-9\s]", "", text))
+    kept = len(re.sub(r"[^a-zA-Z0-9 \t\n\x0b\f\r]", "", text))
     sym = ((total - kept) / total) if total else 0.0
     stop = sum(1 for t in toks if t in set(EN_STOPWORDS))
     distinct = (len(set(toks)) / n) if n else 1.0
