@@ -412,14 +412,13 @@ def _q_repetition(spark, sf_dir):
 
 
 def _rule_metrics(df: DataFrame, rule) -> DataFrame:
-    """(total_records, failed_records) of one rule from the engine's
-    merged scan (plans/merger.py)."""
+    """(total_records, failed_records) of one row-level rule, its flag
+    planned as the engine plans it (plans/planner.py)."""
     from validatelite_spark.plans.compiler import compile_rule
-    from validatelite_spark.plans.merger import TOTAL_ALIAS, MergeGroup
-    group = MergeGroup(None, [compile_rule(rule, df.schema)])
-    return group.scan(df).select(
-        F.col(TOTAL_ALIAS).alias("total_records"),
-        F.col(group.alias_for(0)).alias("failed_records"))
+    from validatelite_spark.plans.planner import plan_rules
+    flagged = plan_rules(df, {"__f": compile_rule(rule, df.schema)})
+    return flagged.agg(F.count(F.lit(1)).alias("total_records"),
+                       F.count_if(F.col("__f")).alias("failed_records"))
 
 
 def _q_repetition_rule(spark, sf_dir):

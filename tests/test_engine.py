@@ -8,9 +8,12 @@ over a deterministic inline dataset.
 from __future__ import annotations
 
 import duckdb
+import pyarrow.compute as pc
 import pytest
+from pyspark.sql import functions as F
 
 from validatelite_spark.core import registry
+from validatelite_spark.core.registry import BatchKernel
 from validatelite_spark.core.rules import (
     Rule,
     RuleType,
@@ -121,6 +124,18 @@ class TestFusedExecution:
         assert r1.total_records == 6
         assert r2.total_records == 3 and r2.failed_records == 0
 
+    def test_unresolvable_filter_is_an_error_for_its_rule_only(self, engine,
+                                                               people):
+        # every row-level rule shares one action: the filter is analysed
+        # per rule before it, so a bad one cannot take the others down
+        ok, bad = engine.execute(people, [
+            not_null("name"),
+            not_null("email", filter_condition="no_such_col > 1")])
+        assert (ok.status.value, ok.total_records, ok.failed_records) == (
+            "FAILED", 6, 1)
+        assert bad.status.value == "ERROR"
+        assert "no_such_col" in bad.error_message
+
 
 class TestSamplesAndErrors:
     def test_lazy_samples_deterministic(self, engine, people):
@@ -137,6 +152,20 @@ class TestSamplesAndErrors:
         assert results[0].status.value == "ERROR"
         assert "does not exist" in results[0].error_message
         assert results[1].failed_records == 1  # run continued
+
+    def test_run_time_failure_in_the_sample_query_keeps_exact_counts(
+            self, spark):
+        # the sample query reads ``bad``, which raises at run time; the
+        # counts come from a fresh observation on the pruned noop write
+        df = spark.range(20).withColumn("bad", F.assert_true(F.col("id") < 5))
+        r, d, u = RuleEngine(spark).execute(df, [
+            range_rule("id", 0, 9), date_format("id", "YYYY"), unique("id")])
+        assert (r.status.value, r.total_records, r.failed_records) == (
+            "FAILED", 20, 10)
+        assert (d.status.value, d.total_records, d.failed_records,
+                d.sample_data) == ("FAILED", 20, 20, [])
+        assert (u.status.value, u.total_records, u.failed_records) == (
+            "PASSED", 20, 0)
 
     def test_threshold_rate(self, engine, people):
         r = not_null("name", threshold=0.5)  # 1/6 failure rate <= 0.5
@@ -193,7 +222,7 @@ def pinned(spark):
 
 def _pinned_rules():
     """All 7 rule types (REGEX once native, once on the ``re`` tier), and
-    a filtered rule in its own merge group."""
+    a filtered rule beside them in the one action."""
     return [
         not_null("name"), unique("name"),
         range_rule("score", min=0, max=100),
@@ -273,10 +302,34 @@ class TestFusedSamples:
                 spark, f"pinned-samples-{samples}",
                 lambda s=samples: eng.execute(pinned, rules,
                                               collect_samples=s))
-        # 8 failing rules in 2 filter groups, one sampling job pair
+        # 8 failing rules with 2 filters, one action: the sample query
+        # (shuffle map stage + result) or, without samples, a noop write
         assert sum(r.failed_records > 0 for r in results) == 8
         assert all(r.sample_data for r in results)
-        assert jobs[True] - jobs[False] <= 2, jobs
+        assert jobs[True] <= 2 and jobs[False] == 1, jobs
+
+    def test_every_kernel_runs_once(self, spark, pinned, tmp_path):
+        """A kernel sees each row once per ``execute``: the samples come
+        from the action that counts."""
+        seen = tmp_path / "batch_lengths"
+
+        def signal(values):
+            with open(seen, "a") as f:
+                f.write(f"{len(values)}\n")
+            return pc.is_null(values).to_numpy(zero_copy_only=False)
+
+        registry.register_rule_type(
+            "SEEN", lambda rule: BatchKernel(signal, lambda s: s),
+            replace=True)
+        try:
+            for samples in (False, True):
+                seen.write_text("")
+                [r] = RuleEngine(spark).execute(
+                    pinned, [Rule("SEEN", "name")], collect_samples=samples)
+                assert r.failed_records == 4 and bool(r.sample_data) is samples
+                assert sum(map(int, seen.read_text().split())) == 30, samples
+        finally:
+            registry.unregister_rule_type("SEEN")
 
 
 #: (a, b, c, day): NULLs and duplicates in a and b, c all distinct
@@ -298,8 +351,9 @@ def duck():
 
 
 class TestMergedUnique:
-    """UNIQUE is one ``count(c) - count_distinct(c)`` column of its filter
-    group's merged aggregate."""
+    """UNIQUE is one grouped query: observations count the scoped rows
+    and Σ(n − 1) over the duplicate groups while their samples are
+    taken."""
 
     RULES = [
         (unique("a"), "a", None),
@@ -322,11 +376,22 @@ class TestMergedUnique:
             assert (res.total_records, res.failed_records) == (
                 total, failed), res.rule_name
             plan = res.execution_plan
-            assert plan["execution_type"] == "merged_agg"
+            assert plan["execution_type"] == "unique_groupby"
             assert plan["filter"] == where
-            # 3 UNIQUE + the DATE_FORMAT kernel share one agg; 2 filtered
-            assert plan["group_size"] == (4 if where is None else 2)
         assert results[-1].failed_records == 4  # months 13 and 14
+        assert results[-1].execution_plan["group_size"] == 1
+
+    def test_counts_on_parquet_equal_duckdb(self, spark, dups, duck,
+                                            tmp_path):
+        # no observation may sit below a filter the scan could take
+        path = str(tmp_path / "dups")
+        dups.write.parquet(path)
+        results = RuleEngine(spark).execute(
+            spark.read.parquet(path), [r for r, _, _ in self.RULES])
+        for res, (_, col, where) in zip(results, self.RULES):
+            assert (res.total_records, res.failed_records) == duck.sql(
+                f"SELECT count(*), count({col}) - count(DISTINCT {col}) "
+                f"FROM t WHERE {where or 'true'}").fetchone(), res.rule_name
 
     def test_duplicate_samples_equal_duckdb(self, spark, dups, duck):
         eng = RuleEngine(spark, EngineConfig(sample_data_max_records=2))
@@ -339,23 +404,23 @@ class TestMergedUnique:
                 f"HAVING count(*) > 1 ORDER BY {col} LIMIT 4").fetchall()
             assert [tuple(s.values()) for s in res.sample_data] == want
 
-    def test_unique_adds_at_most_one_job(self, spark, pinned):
+    def test_pinned_rules_job_bounds(self, spark, pinned):
+        # the 8 row-level rules' one action + UNIQUE's grouped query
+        # (shuffle map stage + result)
         eng = RuleEngine(spark)
-        rules = [r for r in _pinned_rules() if r.type is not RuleType.UNIQUE]
         jobs = {}
-        for with_unique in (False, True):
-            run = rules + [unique("name")] if with_unique else rules
-            results, jobs[with_unique] = _job_count(
-                spark, f"unique-in-group-{with_unique}",
-                lambda run=run: eng.execute(pinned, run,
-                                            collect_samples=False))
-        assert results[-1].failed_records == 15
-        assert results[-1].execution_plan["group_size"] == 8
-        assert jobs[True] - jobs[False] <= 1, jobs
+        for samples in (False, True):
+            results, jobs[samples] = _job_count(
+                spark, f"pinned-all-{samples}",
+                lambda s=samples: eng.execute(pinned, _pinned_rules(),
+                                              collect_samples=s))
+            assert results[1].failed_records == 15
+            assert results[0].execution_plan["group_size"] == 8
+        assert jobs[True] <= 4 and jobs[False] <= 3, jobs
 
     def test_sample_query_failure_keeps_counts(self, spark):
-        # a map column counts distinct but cannot be ordered: the
-        # duplicate-sample query fails, the counts and other rules stand
+        # a map column groups but cannot be ordered: the duplicate-sample
+        # query fails, the counts and other rules stand
         df = spark.createDataFrame(
             [(i, {"k": i % 2}) for i in range(20)],
             "id long, m map<string,bigint>")
@@ -379,8 +444,8 @@ class TestMergedUnique:
         assert [s["id"] for s in r.sample_data] == [10, 11, 12, 13, 14]
 
     def test_variant_column_is_an_error_for_that_rule_only(self, spark):
-        # count_distinct fails on VARIANT in a task, which would take the
-        # whole merged scan down: the compiler refuses the rule instead
+        # a VARIANT cannot be grouped: UNIQUE's own query fails at
+        # analysis, and no other rule shares it
         df = spark.sql("SELECT id, parse_json(CAST(id % 3 AS STRING)) AS v,"
                        " array(named_struct('v', parse_json('1'))) AS av"
                        " FROM range(10)")

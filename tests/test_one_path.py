@@ -7,9 +7,10 @@ Like ``test_tokenizer.py``'s copy guard, this stops a deleted fork from
 coming back.
 
 The rule compiler has one path too: a rule's physical form is what its
-compile function returns (a predicate, a kernel or an aggregate count),
-so no tier label rides beside it. Its kernels run in one Arrow pass
-per scan, with no pandas UDF beside it."""
+compile function returns (a predicate or a kernel), so no tier label
+rides beside it. Its kernels run in one Arrow pass per scan, with no
+pandas UDF beside it, and the engine counts them in one action, with no
+merged-aggregate path beside it."""
 
 from __future__ import annotations
 
@@ -25,7 +26,7 @@ import validatelite_spark.operators as ops
 from validatelite_spark.core import registry
 from validatelite_spark.pipeline.pages import synthesize_pages
 from validatelite_spark.pipeline.quality import QualityPipeline
-from validatelite_spark.plans import compiler, planner
+from validatelite_spark.plans import compiler, merger, planner
 
 FORBIDDEN = {"arrow", "broadcast", "broadcast_threshold", "collect_probe",
              "collect_threshold"}
@@ -59,7 +60,14 @@ def test_no_tier_label():
         registry.register_rule_type).parameters
     assert not hasattr(compiler, "Tier")
     assert {f.name for f in fields(compiler.CompiledRule)} == {
-        "rule", "fail_predicate", "kernel", "count"}
+        "rule", "fail_predicate", "kernel"}
+
+
+def test_no_merged_aggregate_path():
+    assert not [name for name in ("MergeGroup", "build_merge_groups",
+                                  "MAX_RULES_PER_MERGE", "TOTAL_ALIAS",
+                                  "failure_samples")
+                if hasattr(merger, name)]
 
 
 def test_planner_imports_no_pandas():

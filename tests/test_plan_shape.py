@@ -3,8 +3,8 @@
 Pins the three plan properties the engine's design depends on:
 column pruning reaches the parquet scan (never read ``html`` unless a
 rule needs it), filters push down to the scan, and N merged rules cost
-exactly ONE scan with map-side partial aggregation; and each text
-operator's gram UDF is evaluated once per document."""
+exactly ONE scan, observed once, whether they take samples or not; and
+each text operator's gram UDF is evaluated once per document."""
 
 from __future__ import annotations
 
@@ -18,7 +18,7 @@ from validatelite_spark.operators.winnowing import winnow_fingerprints
 from validatelite_spark.pipeline.pages import synthesize_pages
 from validatelite_spark.pipeline.quality import QualityPipeline
 from validatelite_spark.plans.compiler import compile_rule
-from validatelite_spark.plans.merger import build_merge_groups
+from validatelite_spark.plans.merger import rule_query
 
 
 def plan_of(df) -> str:
@@ -48,18 +48,20 @@ class TestPlanShape:
         assert "PushedFilters: [IsNotNull(n_chars), GreaterThan(n_chars,300)" \
             in plan
 
-    def test_merged_rules_single_scan_partial_agg(self, spark, sf_dir):
+    def test_merged_rules_single_scan(self, spark, sf_dir):
         df = spark.read.parquet(f"{sf_dir}/documents.parquet")
         rules = [not_null("text"), range_rule("n_chars", 0, 400),
-                 enum("lang", ["en"]), length("text", 1, 10_000)]
-        [group] = build_merge_groups([compile_rule(r, df.schema)
-                                       for r in rules])
-        agg = group.scan(df)
-        plan = plan_of(agg)
-        assert plan.count("FileScan") == 1, "merged rules must scan once"
-        assert plan.count("HashAggregate") == 2, "partial+final agg expected"
-        # scan reads only the rule columns
-        scan = next(l for l in plan.splitlines() if "FileScan" in l)
+                 enum("lang", ["en"]), length("text", 1, 10_000),
+                 not_null("lang", filter_condition="n_chars > 100")]
+        query = rule_query(df, [compile_rule(r, df.schema) for r in rules],
+                           df.columns, "doc_id", 5)
+        for samples in (False, True):
+            plan = plan_of(query(samples)[1])
+            assert plan.count("FileScan") == 1, "merged rules must scan once"
+            assert plan.count("CollectMetrics") == 1, "one observation"
+        # without samples the scan reads only the rule columns
+        scan = next(l for l in plan_of(query(False)[1]).splitlines()
+                    if "FileScan" in l)
         assert "doc_id" not in scan and "source" not in scan
 
     def test_broadcast_join_in_topk(self, spark, sf_dir):

@@ -19,13 +19,21 @@ from validatelite_spark.pipeline.quality import (PipelineConfig,
                                                  QualityPipeline,
                                                  default_rules)
 from validatelite_spark.plans.compiler import compile_rule
-from validatelite_spark.plans.merger import build_merge_groups
+from validatelite_spark.plans.merger import rule_query
 
 HIGH, LOW = SeverityLevel.HIGH, SeverityLevel.LOW
 
 
 def _rule(t, params=None, name=None, severity=HIGH, column="text"):
     return Rule(t, column, params or {}, name=name, severity=severity)
+
+
+def engine_frames(df, rules):
+    """The frames ``RuleEngine.execute`` runs for the row-level
+    ``rules``: the counts-only noop write and the sample query."""
+    query = rule_query(df, [compile_rule(r, df.schema) for r in rules],
+                       df.columns, df.columns[0], 5)
+    return [query(samples)[1] for samples in (False, True)]
 
 
 def executed_plan(df) -> str:
@@ -158,10 +166,9 @@ class TestOneArrowPass:
     def test_gopher_alone_stays_native(self, spark, pages):
         """No other kernel reads the text: GOPHER takes its Column
         form, with no Python."""
-        [group] = build_merge_groups(
-            [compile_rule(_rule(RuleType.GOPHER), pages.schema)])
-        plan = executed_plan(group.scan(pages))
-        assert "ArrowEvalPython" not in plan and "array_distinct" in plan
+        for frame in engine_frames(pages, [_rule(RuleType.GOPHER)]):
+            plan = executed_plan(frame)
+            assert "ArrowEvalPython" not in plan and "array_distinct" in plan
 
     def test_min_ppl_and_pii(self, spark, pages):
         rules = [_rule(RuleType.PERPLEXITY, {"min_ppl": 2.0}, name="ppl"),
@@ -175,9 +182,8 @@ class TestOneArrowPass:
         assert python_passes(kept) == [1]
 
     def test_engine_merged_group(self, spark, pages, mixed_rules):
-        [group] = build_merge_groups([compile_rule(r, pages.schema)
-                                      for r in mixed_rules])
-        assert python_passes(group.scan(pages)) == [1]
+        for frame in engine_frames(pages, mixed_rules):
+            assert python_passes(frame) == [1]
 
     def test_curation_rules_stay_native(self, spark, sf_dir):
         """NOT_NULL + GOPHER + LANG_ID with the scrub pruned away: no

@@ -14,19 +14,20 @@ Public API:
 Design (see SURVEY.md for the full mapping to the reference):
 
 - Rules are a *logical plan*; the compiler (`plans.compiler`) turns each
-  rule into a Spark ``Column`` failure predicate; the merger
-  (`plans.merger`) fuses every rule of a filter group into ONE
-  ``df.agg(F.count("*"), F.count_if(pred_i), ...)`` scan — the
-  Spark-native analogue of the reference's fused
-  ``COUNT(CASE WHEN ...)`` query (reference:
+  row-level rule into a Spark ``Column`` failure predicate or a
+  ``BatchKernel``; the merger (`plans.merger`) plans all their flags
+  once and counts them with ONE ``Observation``
+  (``count(1)``, ``count_if(scope_i & flag_i)``, ...) on the action
+  that takes their failure samples — the Spark-native analogue of the
+  reference's fused ``COUNT(CASE WHEN ...)`` query (reference:
   core/engine/rule_merger.py:142-299).
 - Rules whose semantics need Python (``re`` regex parity, strptime
   round-trip date checks, langid, perplexity) compile to *vectorized*
-  pandas/Arrow UDF predicates — never per-row Python — and still fuse
-  into the same single-scan agg.
-- UNIQUE compiles to ``count(c) - count_distinct(c)``, one more column
-  of that same agg (reference: core/executors/uniqueness_executor.py:
-  95-200 runs a separate GROUP BY … HAVING); SCHEMA is a
+  Arrow kernels — never per-row Python — that all run in the scan's
+  one Arrow UDF.
+- UNIQUE runs one ``GROUP BY … HAVING count > 1`` query that observes
+  its counts and takes its duplicate samples (reference:
+  core/executors/uniqueness_executor.py:95-200); SCHEMA is a
   metadata-only check over ``df.schema`` (reference:
   core/executors/schema_executor.py:120-455).
 """

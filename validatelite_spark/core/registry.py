@@ -10,8 +10,8 @@ function — and the whole engine picks it up with no compiler changes:
   parameters against the registered schema;
 - ``plans/compiler.compile_rule`` dispatches to the registered compile
   function (checked FIRST, so ``replace=True`` can override a builtin);
-- registered rules fuse into the shared single-scan aggregate exactly
-  like builtins (plans/merger.py counts every compiled form).
+- registered rules share the engine's one counting action exactly like
+  builtins (plans/merger.py counts every compiled form).
 
 The quality-filter rule types (LANG_ID / GOPHER / PERPLEXITY /
 PII_SCRUB) are themselves registered through this seam — see

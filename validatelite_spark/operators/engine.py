@@ -7,21 +7,25 @@ The Spark-native analogue of the reference's RuleEngine
    rule_engine.py:609-735) → invalid rules short-circuit to ERROR results;
 2. **compile** every valid data rule to its form against ``df.schema``
    (plans/compiler.py; REGEX's pattern and column type pick the form);
-3. **merge** all rules with the same filter into ONE fused ``df.agg()``
-   scan per filter group (plans/merger.py) — row-level rules as
-   ``count_if`` of their flags (the planner, plans/planner.py, runs all
-   their kernels in one Arrow pass), UNIQUE as ``count(c) -
-   count_distinct(c)``, and the total row count beside them, so K rules
-   cost exactly one scan;
-4. **SCHEMA** rules run metadata-only (operators/schema_check.py);
-5. **lazy failure sampling** — all row-level rules with failed > 0 share
-   ONE windowed query (plans/merger.py ``failure_samples``; reference
-   O7: base_executor.py:292-347), deterministically ordered so resumed
-   or re-partitioned runs produce identical samples (SURVEY §7); a
-   failing UNIQUE rule samples its duplicate groups
-   (operators/uniqueness.py). Samples never cost a rule its counts: a
-   sample query that fails leaves ``sample_data`` empty, with a
-   warning.
+3. **one action** for every row-level rule (plans/merger.py): their
+   flags are planned once (plans/planner.py runs all their kernels in
+   one Arrow pass), and an ``Observation`` on that plan counts the
+   total, each rule's failures and each filtered rule's scope while
+   the sample query runs, so K rules cost one scan and every kernel
+   runs once. A rule's ``filter_condition`` is analysed on the driver
+   at compile time, so one that does not resolve is an ERROR for its
+   rule alone; a predicate that fails at run time makes every
+   row-level rule ERROR;
+4. **UNIQUE** rules run one grouped query each, which counts and
+   samples them (operators/uniqueness.py); **SCHEMA** rules run
+   metadata-only (operators/schema_check.py);
+5. **failure sampling** is that same action (reference O7:
+   base_executor.py:292-347): ``row_number() <= limit`` per failing
+   rule, deterministically ordered so resumed or re-partitioned runs
+   produce identical samples (SURVEY §7). Samples never cost a rule
+   its counts: a sample query that fails leaves ``sample_data`` empty,
+   with a warning, and the counts come from a ``noop`` write of the
+   same observed plan — the write ``collect_samples=False`` runs.
 
 Error taxonomy preserved: per-rule exceptions become ERROR results and the
 run continues (reference: rule_engine.py:230-256) — mandatory isolation at
@@ -30,12 +34,12 @@ run continues (reference: rule_engine.py:230-256) — mandatory isolation at
 
 from __future__ import annotations
 
-import logging
 import time
 from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from validatelite_spark.core.results import (
@@ -48,14 +52,8 @@ from validatelite_spark.core.rules import Rule, RuleType
 from validatelite_spark.operators import uniqueness
 from validatelite_spark.operators.schema_check import check_schema
 from validatelite_spark.plans.compiler import CompiledRule, compile_rule
-from validatelite_spark.plans.merger import (
-    TOTAL_ALIAS,
-    build_merge_groups,
-    failure_samples,
-)
+from validatelite_spark.plans.merger import run_rules
 from validatelite_spark.plans.prevalidation import prevalidate
-
-logger = logging.getLogger(__name__)
 
 
 def _orderable(dt: T.DataType) -> bool:
@@ -100,6 +98,7 @@ class RuleEngine:
         results: dict[str, RuleResult] = {}
 
         compiled: list[CompiledRule] = []
+        unique_rules: list[Rule] = []
         schema_rules: list[Rule] = []
         for rule in rules:
             if errors.get(rule.id):
@@ -109,36 +108,60 @@ class RuleEngine:
                 schema_rules.append(rule)
             else:
                 try:
-                    compiled.append(compile_rule(rule, df.schema))
+                    if rule.filter_condition:  # analysed here, no job
+                        df.filter(F.expr(rule.filter_condition))
+                    if rule.type == RuleType.UNIQUE:
+                        unique_rules.append(rule)
+                    else:
+                        compiled.append(compile_rule(rule, df.schema))
                 except Exception as e:  # per-rule isolation
                     results[rule.id] = self._error_result(
                         rule, table_name, str(e))
 
-        # ---- one fused aggregate per filter group (O1) ----
-        failing: list[CompiledRule] = []
-        for group in build_merge_groups(compiled):
+        # ---- one action for every row-level rule (O1 + O7) ----
+        cfg = self.config
+        if compiled:
             g0 = time.time()
+            keep_cols = [c for c in df.columns
+                         if c not in cfg.sample_exclude_columns]
+            order = cfg.sample_order_column or next(
+                (c for c in keep_cols if _orderable(df.schema[c].dataType)),
+                (keep_cols or df.columns)[0])
             try:
-                counts = group.run(df)
+                counts, samples = run_rules(
+                    df, compiled, keep_cols, order,
+                    cfg.sample_data_max_records, collect_samples)
             except Exception as e:
-                for cr in group.rules:
+                for cr in compiled:
                     results[cr.rule.id] = self._error_result(
                         cr.rule, table_name, str(e))
-                continue
-            elapsed = time.time() - g0
-            total = counts[TOTAL_ALIAS]
-            for cr in group.rules:
-                failed = counts[cr.rule.id]
-                results[cr.rule.id] = self._data_result(
-                    cr.rule, table_name, total, failed, elapsed,
-                    plan={"execution_type": "merged_agg",
-                          "group_size": len(group.rules),
-                          "filter": group.filter_condition})
-                if failed > 0:
-                    failing.append(cr)
+            else:
+                elapsed = time.time() - g0
+                for cr, (total, failed), sample in zip(compiled, counts,
+                                                       samples):
+                    results[cr.rule.id] = self._data_result(
+                        cr.rule, table_name, total, failed, elapsed,
+                        plan={"execution_type": "merged_agg",
+                              "group_size": len(compiled),
+                              "filter": cr.rule.filter_condition},
+                        samples=sample)
 
-        if collect_samples and failing:
-            self._samples(df, failing, results)
+        # ---- UNIQUE: one grouped query each ----
+        for rule in unique_rules:
+            g0 = time.time()
+            try:
+                total, failed, sample = uniqueness.unique_counts(
+                    df, rule.column, rule.filter_condition,
+                    2 * cfg.sample_data_max_records, collect_samples)
+            except Exception as e:
+                results[rule.id] = self._error_result(
+                    rule, table_name, str(e))
+                continue
+            results[rule.id] = self._data_result(
+                rule, table_name, total, failed, time.time() - g0,
+                plan={"execution_type": "unique_groupby",
+                      "filter": rule.filter_condition},
+                samples=sample)
 
         # ---- SCHEMA (metadata only, no scan) ----
         for rule in schema_rules:
@@ -152,54 +175,21 @@ class RuleEngine:
                 results[rule.id] = self._error_result(
                     rule, table_name, str(e))
                 continue
-            res = self._data_result(
+            results[rule.id] = self._data_result(
                 rule, table_name, sc.total, sc.failed,
-                time.time() - g0, plan={"execution_type": "metadata"})
-            res.sample_data = [
-                {"column": fc.column, "status": fc.status,
-                 "declared_type": fc.declared_type,
-                 "native_type": fc.native_type}
-                for fc in sc.field_checks if fc.status != "PASSED"
-            ]
-            results[rule.id] = res
+                time.time() - g0, plan={"execution_type": "metadata"},
+                samples=[{"column": fc.column, "status": fc.status,
+                          "declared_type": fc.declared_type,
+                          "native_type": fc.native_type}
+                         for fc in sc.field_checks
+                         if fc.status != "PASSED"])
 
         return [results[r.id] for r in rules if r.id in results]
 
     # ------------------------------------------------------------ helpers
-    def _samples(self, df: DataFrame, failing: list[CompiledRule],
-                 results: dict[str, RuleResult]) -> None:
-        """``sample_data`` of the failing rules: one windowed query for
-        every row-level rule, one duplicate-group query per UNIQUE."""
-        cfg = self.config
-        keep_cols = [c for c in df.columns
-                     if c not in cfg.sample_exclude_columns]
-        rows = [cr for cr in failing if cr.count is None]
-        order = cfg.sample_order_column or next(
-            (c for c in keep_cols if _orderable(df.schema[c].dataType)),
-            keep_cols[0])
-        queries = [(rows, lambda: failure_samples(
-            df, rows, keep_cols, order,
-            cfg.sample_data_max_records))] if rows else []
-        for cr in failing:
-            if cr.count is not None:
-                queries.append(([cr], lambda r=cr.rule: [
-                    uniqueness.duplicate_samples(
-                        df, r.column, r.filter_condition,
-                        limit=2 * cfg.sample_data_max_records)]))
-        for crs, query in queries:
-            try:
-                samples = query()
-            except Exception as e:  # the counts stand without samples
-                logger.warning("sample query for %s failed, their "
-                               "sample_data stays empty: %s",
-                               [cr.rule.name for cr in crs], e,
-                               exc_info=True)
-                continue
-            for cr, sample in zip(crs, samples):
-                results[cr.rule.id].sample_data = sample
-
     def _data_result(self, rule: Rule, table: str, total: int, failed: int,
-                     elapsed: float, plan: dict) -> RuleResult:
+                     elapsed: float, plan: dict,
+                     samples: list[dict] = ()) -> RuleResult:
         status = status_for(failed, total, rule.threshold)
         msg = (
             f"{rule.type.value} check "
@@ -211,7 +201,7 @@ class RuleEngine:
             status=status,
             dataset_metrics=[DatasetMetrics(table, total, failed, elapsed)],
             execution_time=elapsed, execution_message=msg,
-            execution_plan=plan)
+            execution_plan=plan, sample_data=list(samples))
 
     def _error_result(self, rule: Rule, table: str, msg: str) -> RuleResult:
         return RuleResult(

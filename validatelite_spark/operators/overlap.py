@@ -6,7 +6,7 @@ structure: how many documents fail exactly {length}, how many fail
 {length, repetition} together, which rule uniquely removes documents
 nothing else would catch. ``rule_overlap`` computes the full Venn
 decomposition in ONE corpus scan: each rule's flag (planned exactly
-as the engine's merged aggregate plans it — plans/planner.py, so the
+as the engine plans it — plans/planner.py, so the
 analysis can never drift from the engine's verdicts) becomes one bit
 of a failure bitmask, and a single groupBy
 on the mask counts every observed combination. ``rule_marginals``
@@ -52,10 +52,9 @@ def rule_overlap(df: DataFrame, rules: list[Rule]) -> DataFrame:
         raise ValueError(
             f"rule_overlap supports at most {MAX_OVERLAP_RULES} rules "
             f"(got {len(rules)}) — 2^n mask cardinality must stay tiny")
-    compiled = [None if r.type == RuleType.SCHEMA
+    compiled = [None if r.type in (RuleType.SCHEMA, RuleType.UNIQUE)
                 else compile_rule(r, df.schema) for r in rules]
-    bad = [r.name for r, c in zip(rules, compiled)
-           if c is None or c.count is not None]
+    bad = [r.name for r, c in zip(rules, compiled) if c is None]
     if bad:
         raise ValueError(
             "rule_overlap needs row-level fail predicates; these rules "

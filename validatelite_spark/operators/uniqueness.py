@@ -1,43 +1,53 @@
-"""UNIQUE rule operator.
+"""UNIQUE rule operator: counts and duplicate samples from one grouped
+query.
 
 Reference semantics (core/executors/uniqueness_executor.py:95-200):
 NULLs are excluded entirely (``WHERE col IS NOT NULL``); failed_records =
 Σ(group_count − 1) over duplicate groups — the extras beyond the first
-occurrence.
+occurrence (= N_nonnull − N_distinct).
 
-The counts are one column of the merged scan of the rule's filter group
-(plans/compiler.py compiles UNIQUE to ``count(c) - count_distinct(c)``,
-the identity Σ(cnt − 1 | cnt > 1) = N_nonnull − N_distinct). This
-module holds the duplicate samples (the reference's ``ORDER BY col
-LIMIT 2k``, uniqueness_executor.py:228-253), which the engine runs
-lazily, only when failed > 0.
+One query answers both: an ``Observation`` counts the rule's scoped rows
+(the total), ``GROUP BY col HAVING count > 1`` finds the duplicate
+groups, a second observation sums their extras (the failed count), and
+``ORDER BY col LIMIT 2k`` takes the samples (reference
+uniqueness_executor.py:228-253) in the same action. A column that cannot
+be grouped (a VARIANT) fails at analysis, an ERROR for that rule alone.
 """
 
 from __future__ import annotations
 
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from validatelite_spark.plans.merger import run_observed
 
-def duplicate_samples(
+
+def unique_counts(
     df: DataFrame,
     column: str,
-    filter_condition: Optional[str] = None,
-    limit: int = 10,
-) -> list[dict[str, Any]]:
-    """Duplicate groups, deterministically ordered by the column value
-    (reference: ORDER BY col LIMIT 2k)."""
+    filter_condition: Optional[str],
+    limit: int,
+    collect_samples: bool,
+) -> tuple[int, int, list[dict[str, Any]]]:
+    """(total, failed, the first ``limit`` duplicate groups by the column
+    value) from one action; a map column cannot be ordered, so its
+    counts come from the ``noop`` write (``merger.run_observed``)."""
     scoped = df.filter(F.expr(filter_condition)) if filter_condition else df
-    col = F.col(column)
-    rows = (
-        scoped.filter(col.isNotNull())
-        .groupBy(column)
-        .agg(F.count(F.lit(1)).alias("duplicate_count"))
-        .filter(F.col("duplicate_count") > 1)
-        .orderBy(column)
-        .limit(limit)
-        .collect()
-    )
-    return [r.asDict() for r in rows]
+
+    def query(samples: bool) -> tuple[tuple[Observation, Observation],
+                                      DataFrame]:
+        total, failed = Observation(), Observation()
+        dups = (scoped.observe(total, F.count(F.lit(1)).alias("n"))
+                .filter(F.col(column).isNotNull())
+                .groupBy(column)
+                .agg(F.count(F.lit(1)).alias("duplicate_count"))
+                .filter(F.col("duplicate_count") > 1)
+                .observe(failed, F.sum(F.col("duplicate_count") - 1)
+                         .alias("n")))
+        return (total, failed), (dups.orderBy(column).limit(limit)
+                                 if samples else dups.select())
+
+    (total, failed), rows = run_observed(query, collect_samples, column)
+    return (total.get["n"], failed.get["n"] or 0, [r.asDict() for r in rows])

@@ -1,23 +1,20 @@
-"""Rule compiler: Rule (logical) → its physical form against a schema.
+"""Rule compiler: Rule (logical) → its row-level form against a schema.
 
 The analogue of the reference's executor dispatch
 (reference: core/executors/__init__.py:19-79) — but instead of generating
-dialect SQL strings, each rule compiles to one of three forms, all
-answered by the ONE ``df.agg()`` of its filter group (plans/merger.py):
+dialect SQL strings, each rule compiles to one of two forms, both turned
+into a per-row flag by ``plans/planner.plan_rules`` and counted by the
+engine's one action (plans/merger.py):
 
 - ``fail_predicate`` — a per-row failure ``Column`` (whole-stage codegen);
 - ``kernel`` — a ``BatchKernel`` (core/registry.py) for Python-exact
   semantics: ``re`` regex parity, strptime round-trip, perplexity — all
-  of a scan's kernels share one Arrow UDF;
-- ``count`` — an aggregate Column that IS the failed-record count:
-  UNIQUE's ``count(c) - count_distinct(c)``.
+  of a scan's kernels share one Arrow UDF.
 
-The first two are row-level: ``plans/planner.plan_rules`` turns each
-into a per-row flag, which the merger sums with ``count_if``.
-
-SCHEMA is the one rule with no data form: it reads ``df.schema`` only
-(reference schema_executor.py:120-134 ``execution_type="metadata"``),
-and the engine checks it by its rule type without compiling it. NULL
+UNIQUE and SCHEMA have no row-level form, and the engine runs them by
+their rule type without compiling them: UNIQUE as one grouped query
+(operators/uniqueness.py), SCHEMA over ``df.schema`` only (reference
+schema_executor.py:120-134 ``execution_type="metadata"``). NULL
 semantics per rule type are the reference's (see core/rules.py table
 and SURVEY.md §2.2). REGEX takes ``rlike`` only when its column is a
 string and ``java_regex`` can rebuild its pattern with the same meaning.
@@ -43,14 +40,11 @@ from validatelite_spark.functions import udf_tier
 
 @dataclass
 class CompiledRule:
-    """Exactly one form is set: ``fail_predicate`` or ``kernel`` (a
-    row-level failure flag) or ``count`` (the failed count as an
-    aggregate)."""
+    """Exactly one form is set: ``fail_predicate`` or ``kernel``."""
 
     rule: Rule
     fail_predicate: Optional[Column] = None
     kernel: Optional[BatchKernel] = None
-    count: Optional[Column] = None
 
 
 #: ``re`` anchors that mean the same in Java (``\Z`` is Java's ``\z``)
@@ -113,19 +107,6 @@ def java_regex(pattern: str) -> Optional[str]:
         return "(?d)" + _java(parsed)
     except ValueError:
         return None
-
-
-def _has_variant(dt: T.DataType) -> bool:
-    """Whether ``dt`` holds a VARIANT: Spark's ``count_distinct`` fails
-    on one in a task (a ``MatchError``, not an analysis error), which
-    would take down every rule of the merged scan."""
-    if isinstance(dt, T.ArrayType):
-        return _has_variant(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return _has_variant(dt.keyType) or _has_variant(dt.valueType)
-    if isinstance(dt, T.StructType):
-        return any(_has_variant(f.dataType) for f in dt.fields)
-    return isinstance(dt, T.VariantType)
 
 
 def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
@@ -210,17 +191,6 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
     # LANG_ID / GOPHER / PERPLEXITY / PII_SCRUB compile via the registry
     # dispatch above (core/builtin_rule_types.py) — no branches here.
 
-    if t == RuleType.UNIQUE:
-        # NULLs excluded; failed = Σ(cnt − 1 | cnt > 1) over duplicate
-        # groups = N_nonnull − N_distinct (reference:
-        # uniqueness_executor.py:95-200 runs it as GROUP BY … HAVING)
-        if rule.column in schema.names and _has_variant(
-                schema[rule.column].dataType):
-            raise RuleExecutionError(
-                f"UNIQUE rule {rule.name}: VARIANT values cannot be "
-                "compared")
-        return CompiledRule(rule, count=F.count(col) - F.count_distinct(col))
-
     if t == RuleType.CUSTOM:
         expr = p.get("fail_expr")
         if not expr:
@@ -228,5 +198,6 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
                 f"CUSTOM rule {rule.name} needs parameters.fail_expr")
         return CompiledRule(rule, F.expr(expr))
 
-    # SCHEMA has no data form: the engine checks it by type, uncompiled
+    # UNIQUE and SCHEMA have no row-level form: the engine runs them by
+    # type, uncompiled
     raise RuleExecutionError(f"unsupported rule type: {t}")

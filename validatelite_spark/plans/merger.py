@@ -1,124 +1,126 @@
-"""Rule merger: answer N rules with ONE aggregate scan per filter group.
+"""Rule merger: answer every row-level rule of an ``execute`` with ONE
+action.
 
 The Spark-native realization of the reference's flagship optimization O1
-(reference: core/engine/rule_merger.py:142-299): N rules over the same
-table and same filter become one
+(reference: core/engine/rule_merger.py:142-299) together with its lazy
+failure sampling O7 (base_executor.py:292-347). The rules' flags are
+planned once (plans/planner.py, so every kernel runs once per row), and
+an ``Observation`` on that planned frame counts them:
 
-    plan_rules(df, {"__r0": rule_1, ..., "__rN-1": rule_N})
-      .agg(F.count(lit(1)).alias("__total"),
-           F.count_if(__r0).alias("__r0"),
-           ...,
-           (F.count(c) - F.count_distinct(c)).alias("__rN-1"))
+    plan_rules(df, {"__r0": rule_0, ..., "__rN-1": rule_N-1})
+      .observe(obs, count(1), count_if(scope_0 & __r0), ...,
+               count_if(scope_i) for each filtered rule i)
 
-— one table scan, partial (map-side) aggregation for free, with
-Catalyst pruning the scan down to exactly the referenced columns. A
-row-level rule (predicate or kernel, plans/compiler.py) is a
-``count_if`` of its planned flag; an aggregate rule (UNIQUE) is its
-``count`` column itself. The reference keeps UNIQUE out of its merged
-query (rule_merger.py:813-914 runs it INDIVIDUAL); here it costs one
-more column of the same ``agg``. Unlike the reference we also fold the
-total-row-count query into the SAME scan (the reference runs COUNT(*)
-separately, rule_engine.py:440-484 — a second full scan we don't pay).
+where ``scope = coalesce(filter, false)`` (a flag whose predicate is
+NULL is not counted). The action that fills the observation is the
+sample query: each row carries the ids of the rules it fails, exploded,
+then ``row_number() <= limit`` per rule, planned with a partial
+WindowGroupLimit before its one shuffle. A passing rule's rows never
+reach the explode, so sampling every rule costs nothing extra. Without
+samples (or when the sample query fails) the same observed plan is
+written to the ``noop`` sink instead, pruned to the rule columns.
 
-Rules with different ``filter_condition``s land in different groups
-(reference requires identical filters to merge, rule_merger.py:135-139).
-The reference's width cap of 10 rules/query bounds SQL complexity
-(rule_merger.py:876-901); Spark handles hundreds of agg columns fine, so
-the cap here is much higher and exists only to bound codegen size.
+Rules with different ``filter_condition``s share the one action (the
+reference requires identical filters to merge, rule_merger.py:135-139,
+and caps a query at 10 rules, rule_merger.py:876-901; an observation
+has no such limit). Unlike the reference we also fold the total-row
+count into the SAME action (the reference runs COUNT(*) separately,
+rule_engine.py:440-484).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any, Optional
+import logging
+from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Row, Window
 from pyspark.sql import functions as F
 
 from validatelite_spark.plans.compiler import CompiledRule
 from validatelite_spark.plans.planner import plan_rules
 
-TOTAL_ALIAS = "__total"
-
-#: codegen-size guard, not a SQL-complexity guard like the reference's 10.
-MAX_RULES_PER_MERGE = 200
+logger = logging.getLogger(__name__)
 
 
-@dataclass
-class MergeGroup:
-    """A batch of rules answered by one aggregate scan
-    (reference MergeGroup: core/engine/rule_merger.py:37-72)."""
-
-    filter_condition: Optional[str]
-    rules: list[CompiledRule] = field(default_factory=list)
-
-    def alias_for(self, i: int) -> str:
-        return f"__r{i}"
-
-    def scan(self, df: DataFrame) -> DataFrame:
-        """The fused aggregate over the filtered frame: the row-level
-        rules' flags planned (plans/planner.py) and counted, beside the
-        aggregate rules' counts, in one ``agg``."""
-        scoped = df.filter(F.expr(self.filter_condition)) if self.filter_condition else df
-        aliased = {self.alias_for(i): cr for i, cr in enumerate(self.rules)}
-        flagged = plan_rules(scoped, {a: cr for a, cr in aliased.items()
-                                      if cr.count is None})
-        return flagged.agg(F.count(F.lit(1)).alias(TOTAL_ALIAS), *[
-            (F.count_if(F.col(a)) if cr.count is None else cr.count).alias(a)
-            for a, cr in aliased.items()])
-
-    def run(self, df: DataFrame) -> dict[str, int]:
-        """Execute the fused scan; returns {rule_id: failed} + total."""
-        row = self.scan(df).collect()[0]
-        out = {TOTAL_ALIAS: int(row[TOTAL_ALIAS] or 0)}
-        for i, cr in enumerate(self.rules):
-            out[cr.rule.id] = int(row[self.alias_for(i)] or 0)
-        return out
-
-
-def build_merge_groups(compiled: list[CompiledRule]) -> list[MergeGroup]:
-    """Group rules by filter_condition, splitting groups wider than the
-    cap."""
-    by_filter: dict[Optional[str], list[CompiledRule]] = {}
-    for cr in compiled:
-        by_filter.setdefault(cr.rule.filter_condition, []).append(cr)
-    groups: list[MergeGroup] = []
-    for filt, rules in by_filter.items():
-        for i in range(0, len(rules), MAX_RULES_PER_MERGE):
-            groups.append(MergeGroup(filt, rules[i:i + MAX_RULES_PER_MERGE]))
-    return groups
-
-
-def failure_samples(
+def rule_query(
     df: DataFrame,
     rules: list[CompiledRule],
     columns: list[str],
     order: str,
     limit: int,
-) -> list[list[dict[str, Any]]]:
-    """The first ``limit`` failing rows of each row-level rule by
-    ``order``, as ``columns`` dicts, from ONE scan: each row carries the
-    ids of the rules it fails (``when(filter & fail_i, i)``, so every
-    kernel runs once: the flags are planned, plans/planner.py),
-    exploded, then ``row_number() <= limit`` per rule — planned with a
-    partial WindowGroupLimit before the one shuffle."""
+) -> Callable[[bool], tuple[Observation, DataFrame]]:
+    """Plan the row-level ``rules`` once; the returned ``query(samples)``
+    observes the counts on that plan under a fresh ``Observation`` (one
+    serves one action) and returns it with the frame to run: the sample
+    query (the first ``limit`` failing rows of each rule by ``order``,
+    ``columns`` plus ``__rule`` and ``__rank``) or, without samples,
+    the column-free frame for a ``noop`` write."""
     flagged = plan_rules(df, {f"__r{i}": cr for i, cr in enumerate(rules)})
-    flags = []
+    metrics, flags = [F.count(F.lit(1)).alias("__n")], []
     for i, cr in enumerate(rules):
         fail = F.col(f"__r{i}")
         if cr.rule.filter_condition:
-            fail = F.coalesce(F.expr(cr.rule.filter_condition),
-                              F.lit(False)) & fail
+            scope = F.coalesce(F.expr(cr.rule.filter_condition), F.lit(False))
+            fail = scope & fail
+            metrics.append(F.count_if(scope).alias(f"__t{i}"))
+        metrics.append(F.count_if(fail).alias(f"__f{i}"))
         flags.append(F.when(fail, F.lit(i)))
     scan = columns if order in columns else [*columns, order]
     rank = F.row_number().over(Window.partitionBy("__rule").orderBy(order))
-    rows = (flagged.select(*scan,
-                           F.explode(F.array(*flags)).alias("__rule"))
-            .filter(F.col("__rule").isNotNull())
-            .withColumn("__rank", rank)
-            .filter(F.col("__rank") <= limit)
-            .collect())
-    out: list[list[dict[str, Any]]] = [[] for _ in rules]
+
+    def query(samples: bool) -> tuple[Observation, DataFrame]:
+        obs = Observation()
+        frame = flagged.observe(obs, *metrics)
+        if not samples:
+            return obs, frame.select()
+        return obs, (frame.select(*scan,
+                                  F.explode(F.array(*flags)).alias("__rule"))
+                     .filter(F.col("__rule").isNotNull())
+                     .withColumn("__rank", rank)
+                     .filter(F.col("__rank") <= limit))
+
+    return query
+
+
+def run_observed(
+    query: Callable[[bool], tuple[Any, DataFrame]],
+    collect_samples: bool,
+    label: Any,
+) -> tuple[Any, list[Row]]:
+    """Run ``query(True)`` and collect its rows, or without samples write
+    ``query(False)`` to the ``noop`` sink; returns the observations of
+    the action that ran, with its rows. Samples never cost a rule its
+    counts: a sample query that raises is logged, and the write runs
+    under fresh observations (those of a failed action read zeros)."""
+    if collect_samples:
+        try:
+            obs, frame = query(True)
+            return obs, frame.collect()
+        except Exception as e:
+            logger.warning("sample query for %s failed, its sample_data "
+                           "stays empty: %s", label, e, exc_info=True)
+    obs, frame = query(False)
+    frame.write.format("noop").mode("overwrite").save()
+    return obs, []
+
+
+def run_rules(
+    df: DataFrame,
+    rules: list[CompiledRule],
+    columns: list[str],
+    order: str,
+    limit: int,
+    collect_samples: bool,
+) -> tuple[list[tuple[int, int]], list[list[dict[str, Any]]]]:
+    """``(total, failed)`` of each row-level rule and its samples (as
+    ``columns`` dicts), from one action."""
+    obs, rows = run_observed(rule_query(df, rules, columns, order, limit),
+                             collect_samples,
+                             [cr.rule.name for cr in rules])
+    m = obs.get
+    counts = [(m.get(f"__t{i}", m["__n"]), m[f"__f{i}"])
+              for i in range(len(rules))]
+    samples: list[list[dict[str, Any]]] = [[] for _ in rules]
     for r in sorted(rows, key=lambda r: (r["__rule"], r["__rank"])):
-        out[r["__rule"]].append({c: r[c] for c in columns})
-    return out
+        samples[r["__rule"]].append({c: r[c] for c in columns})
+    return counts, samples

@@ -1,7 +1,7 @@
 """Rule planner: compiled rules → one flag column per rule, in ONE
 projection with at most ONE Arrow pass (SURVEY §7 step 4).
 
-The engine's merged scan and failure samples, ``rule_overlap``, the
+The engine's one counting and sampling action, ``rule_overlap``, the
 registered-rule queries of ``__spark_entry__`` and
 ``QualityPipeline.annotate`` all plan their per-row verdicts here. The
 projection holds the shared inputs (the ``tokens`` split of each string
