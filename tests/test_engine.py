@@ -126,7 +126,7 @@ class TestFusedExecution:
 
     def test_unresolvable_filter_is_an_error_for_its_rule_only(self, engine,
                                                                people):
-        # every row-level rule shares one action: the filter is analysed
+        # every row-level rule shares one pass: the filter is analysed
         # per rule before it, so a bad one cannot take the others down
         ok, bad = engine.execute(people, [
             not_null("name"),
@@ -156,7 +156,7 @@ class TestSamplesAndErrors:
     def test_run_time_failure_in_the_sample_query_keeps_exact_counts(
             self, spark):
         # the sample query reads ``bad``, which raises at run time; the
-        # counts come from a fresh observation on the pruned noop write
+        # counts come from the pruned noop write, which does not read it
         df = spark.range(20).withColumn("bad", F.assert_true(F.col("id") < 5))
         r, d, u = RuleEngine(spark).execute(df, [
             range_rule("id", 0, 9), date_format("id", "YYYY"), unique("id")])
@@ -222,7 +222,7 @@ def pinned(spark):
 
 def _pinned_rules():
     """All 7 rule types (REGEX once native, once on the ``re`` tier), and
-    a filtered rule beside them in the one action."""
+    a filtered rule beside them in the one counting pass."""
     return [
         not_null("name"), unique("name"),
         range_rule("score", min=0, max=100),
@@ -302,15 +302,16 @@ class TestFusedSamples:
                 spark, f"pinned-samples-{samples}",
                 lambda s=samples: eng.execute(pinned, rules,
                                               collect_samples=s))
-        # 8 failing rules with 2 filters, one action: the sample query
-        # (shuffle map stage + result) or, without samples, a noop write
+        # 8 failing rules with 2 filters: one noop write counts them all,
+        # and one sample query (shuffle map stage + result) samples them
         assert sum(r.failed_records > 0 for r in results) == 8
         assert all(r.sample_data for r in results)
-        assert jobs[True] <= 2 and jobs[False] == 1, jobs
+        assert jobs[False] == 1 and jobs[True] - jobs[False] <= 2, jobs
 
-    def test_every_kernel_runs_once(self, spark, pinned, tmp_path):
-        """A kernel sees each row once per ``execute``: the samples come
-        from the action that counts."""
+    def test_a_kernel_reruns_only_to_sample_its_failures(self, spark, pinned,
+                                                          tmp_path):
+        """A kernel sees each row once to count; the sample query runs it
+        again only when its rule failed."""
         seen = tmp_path / "batch_lengths"
 
         def signal(values):
@@ -322,12 +323,19 @@ class TestFusedSamples:
             "SEEN", lambda rule: BatchKernel(signal, lambda s: s),
             replace=True)
         try:
-            for samples in (False, True):
+            for rules, samples, failed, rows in (
+                    ([Rule("SEEN", "name")], False, [4], 30),
+                    ([Rule("SEEN", "name")], True, [4], 60),
+                    ([Rule("SEEN", "id"), not_null("name")], True, [0, 4],
+                     30)):
                 seen.write_text("")
-                [r] = RuleEngine(spark).execute(
-                    pinned, [Rule("SEEN", "name")], collect_samples=samples)
-                assert r.failed_records == 4 and bool(r.sample_data) is samples
-                assert sum(map(int, seen.read_text().split())) == 30, samples
+                results = RuleEngine(spark).execute(
+                    pinned, rules, collect_samples=samples)
+                assert [r.failed_records for r in results] == failed
+                assert all(bool(r.sample_data) is (samples and f > 0)
+                           for r, f in zip(results, failed))
+                assert sum(map(int, seen.read_text().split())) == rows, (
+                    rules, samples)
         finally:
             registry.unregister_rule_type("SEEN")
 
@@ -351,9 +359,9 @@ def duck():
 
 
 class TestMergedUnique:
-    """UNIQUE is one grouped query: observations count the scoped rows
-    and Σ(n − 1) over the duplicate groups while their samples are
-    taken."""
+    """UNIQUE is one grouped query: an observation on its groups counts
+    the scoped rows and Σ(n − 1) over the non-NULL groups while the
+    duplicate samples are taken."""
 
     RULES = [
         (unique("a"), "a", None),
@@ -405,8 +413,8 @@ class TestMergedUnique:
             assert [tuple(s.values()) for s in res.sample_data] == want
 
     def test_pinned_rules_job_bounds(self, spark, pinned):
-        # the 8 row-level rules' one action + UNIQUE's grouped query
-        # (shuffle map stage + result)
+        # the 8 row-level rules' noop write (1 job) and sample query
+        # (shuffle map stage + result), UNIQUE's grouped query (2)
         eng = RuleEngine(spark)
         jobs = {}
         for samples in (False, True):
@@ -416,7 +424,7 @@ class TestMergedUnique:
                                               collect_samples=s))
             assert results[1].failed_records == 15
             assert results[0].execution_plan["group_size"] == 8
-        assert jobs[True] <= 4 and jobs[False] <= 3, jobs
+        assert jobs[True] <= 5 and jobs[False] <= 3, jobs
 
     def test_sample_query_failure_keeps_counts(self, spark):
         # a map column groups but cannot be ordered: the duplicate-sample

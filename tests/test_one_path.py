@@ -65,8 +65,7 @@ def test_no_tier_label():
 
 def test_no_merged_aggregate_path():
     assert not [name for name in ("MergeGroup", "build_merge_groups",
-                                  "MAX_RULES_PER_MERGE", "TOTAL_ALIAS",
-                                  "failure_samples")
+                                  "MAX_RULES_PER_MERGE", "TOTAL_ALIAS")
                 if hasattr(merger, name)]
 
 

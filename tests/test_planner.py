@@ -19,7 +19,7 @@ from validatelite_spark.pipeline.quality import (PipelineConfig,
                                                  QualityPipeline,
                                                  default_rules)
 from validatelite_spark.plans.compiler import compile_rule
-from validatelite_spark.plans.merger import rule_query
+from validatelite_spark.plans.merger import count_query, sample_query
 
 HIGH, LOW = SeverityLevel.HIGH, SeverityLevel.LOW
 
@@ -30,10 +30,10 @@ def _rule(t, params=None, name=None, severity=HIGH, column="text"):
 
 def engine_frames(df, rules):
     """The frames ``RuleEngine.execute`` runs for the row-level
-    ``rules``: the counts-only noop write and the sample query."""
-    query = rule_query(df, [compile_rule(r, df.schema) for r in rules],
-                       df.columns, df.columns[0], 5)
-    return [query(samples)[1] for samples in (False, True)]
+    ``rules``: the counts' noop write and the sample query."""
+    compiled = [compile_rule(r, df.schema) for r in rules]
+    return [count_query(df, compiled)[1],
+            sample_query(df, compiled, df.columns, df.columns[0], 5)]
 
 
 def executed_plan(df) -> str:

@@ -17,16 +17,16 @@ Design (see SURVEY.md for the full mapping to the reference):
   row-level rule into a Spark ``Column`` failure predicate or a
   ``BatchKernel``; the merger (`plans.merger`) plans all their flags
   once and counts them with ONE ``Observation``
-  (``count(1)``, ``count_if(scope_i & flag_i)``, ...) on the action
-  that takes their failure samples — the Spark-native analogue of the
-  reference's fused ``COUNT(CASE WHEN ...)`` query (reference:
-  core/engine/rule_merger.py:142-299).
+  (``count(1)``, ``count_if(scope_i & flag_i)``, ...) on a pruned
+  ``noop`` write, then samples only the rules that failed — the
+  Spark-native analogue of the reference's fused ``COUNT(CASE WHEN
+  ...)`` query (reference: core/engine/rule_merger.py:142-299).
 - Rules whose semantics need Python (``re`` regex parity, strptime
   round-trip date checks, langid, perplexity) compile to *vectorized*
   Arrow kernels — never per-row Python — that all run in the scan's
   one Arrow UDF.
-- UNIQUE runs one ``GROUP BY … HAVING count > 1`` query that observes
-  its counts and takes its duplicate samples (reference:
+- UNIQUE runs one ``GROUP BY`` query that observes its counts above
+  the shuffle and takes its duplicate samples (reference:
   core/executors/uniqueness_executor.py:95-200); SCHEMA is a
   metadata-only check over ``df.schema`` (reference:
   core/executors/schema_executor.py:120-455).

@@ -7,25 +7,27 @@ The Spark-native analogue of the reference's RuleEngine
    rule_engine.py:609-735) → invalid rules short-circuit to ERROR results;
 2. **compile** every valid data rule to its form against ``df.schema``
    (plans/compiler.py; REGEX's pattern and column type pick the form);
-3. **one action** for every row-level rule (plans/merger.py): their
-   flags are planned once (plans/planner.py runs all their kernels in
-   one Arrow pass), and an ``Observation`` on that plan counts the
-   total, each rule's failures and each filtered rule's scope while
-   the sample query runs, so K rules cost one scan and every kernel
-   runs once. A rule's ``filter_condition`` is analysed on the driver
-   at compile time, so one that does not resolve is an ERROR for its
-   rule alone; a predicate that fails at run time makes every
-   row-level rule ERROR;
+3. **one counting pass** for every row-level rule (plans/merger.py):
+   their flags are planned once (plans/planner.py runs all their
+   kernels in one Arrow pass), and an ``Observation`` on that plan
+   counts the total, each rule's failures and each filtered rule's
+   scope during a ``noop`` write pruned to the rule columns, so K rules
+   cost one scan and one job, and the counts stay exact when Spark
+   re-runs a task (the observation is in the write's result stage). A
+   rule's ``filter_condition`` is analysed on the driver at compile
+   time, so one that does not resolve is an ERROR for its rule alone; a
+   predicate that fails at run time makes every row-level rule ERROR;
 4. **UNIQUE** rules run one grouped query each, which counts and
    samples them (operators/uniqueness.py); **SCHEMA** rules run
    metadata-only (operators/schema_check.py);
-5. **failure sampling** is that same action (reference O7:
-   base_executor.py:292-347): ``row_number() <= limit`` per failing
-   rule, deterministically ordered so resumed or re-partitioned runs
-   produce identical samples (SURVEY §7). Samples never cost a rule
-   its counts: a sample query that fails leaves ``sample_data`` empty,
-   with a warning, and the counts come from a ``noop`` write of the
-   same observed plan — the write ``collect_samples=False`` runs.
+5. **lazy failure sampling** (reference O7: base_executor.py:292-347):
+   one query for the row-level rules that failed, ``row_number() <=
+   limit`` per rule, deterministically ordered so resumed or
+   re-partitioned runs produce identical samples (SURVEY §7). Only
+   there do a failing rule's kernels run a second time; a run where
+   every rule passes never reads the wide columns. Samples never cost a
+   rule its counts: a sample query that fails leaves ``sample_data``
+   empty, with a warning.
 
 Error taxonomy preserved: per-rule exceptions become ERROR results and the
 run continues (reference: rule_engine.py:230-256) — mandatory isolation at
@@ -34,6 +36,7 @@ run continues (reference: rule_engine.py:230-256) — mandatory isolation at
 
 from __future__ import annotations
 
+import logging
 import time
 from dataclasses import dataclass
 from typing import Optional
@@ -52,8 +55,10 @@ from validatelite_spark.core.rules import Rule, RuleType
 from validatelite_spark.operators import uniqueness
 from validatelite_spark.operators.schema_check import check_schema
 from validatelite_spark.plans.compiler import CompiledRule, compile_rule
-from validatelite_spark.plans.merger import run_rules
+from validatelite_spark.plans.merger import failure_samples, rule_counts
 from validatelite_spark.plans.prevalidation import prevalidate
+
+logger = logging.getLogger(__name__)
 
 
 def _orderable(dt: T.DataType) -> bool:
@@ -118,33 +123,46 @@ class RuleEngine:
                     results[rule.id] = self._error_result(
                         rule, table_name, str(e))
 
-        # ---- one action for every row-level rule (O1 + O7) ----
+        # ---- one pruned pass counts every row-level rule (O1) ----
         cfg = self.config
+        failing: list[CompiledRule] = []
         if compiled:
             g0 = time.time()
-            keep_cols = [c for c in df.columns
-                         if c not in cfg.sample_exclude_columns]
-            order = cfg.sample_order_column or next(
-                (c for c in keep_cols if _orderable(df.schema[c].dataType)),
-                (keep_cols or df.columns)[0])
             try:
-                counts, samples = run_rules(
-                    df, compiled, keep_cols, order,
-                    cfg.sample_data_max_records, collect_samples)
+                counts = rule_counts(df, compiled)
             except Exception as e:
                 for cr in compiled:
                     results[cr.rule.id] = self._error_result(
                         cr.rule, table_name, str(e))
             else:
                 elapsed = time.time() - g0
-                for cr, (total, failed), sample in zip(compiled, counts,
-                                                       samples):
+                for cr, (total, failed) in zip(compiled, counts):
                     results[cr.rule.id] = self._data_result(
                         cr.rule, table_name, total, failed, elapsed,
                         plan={"execution_type": "merged_agg",
                               "group_size": len(compiled),
-                              "filter": cr.rule.filter_condition},
-                        samples=sample)
+                              "filter": cr.rule.filter_condition})
+                    if failed > 0:
+                        failing.append(cr)
+
+        # ---- one sample query for the failing ones (O7) ----
+        if collect_samples and failing:
+            keep_cols = [c for c in df.columns
+                         if c not in cfg.sample_exclude_columns]
+            order = cfg.sample_order_column or next(
+                (c for c in keep_cols if _orderable(df.schema[c].dataType)),
+                (keep_cols or df.columns)[0])
+            try:
+                samples = failure_samples(df, failing, keep_cols, order,
+                                          cfg.sample_data_max_records)
+            except Exception as e:  # the counts stand without samples
+                logger.warning("sample query for %s failed, their "
+                               "sample_data stays empty: %s",
+                               [cr.rule.name for cr in failing], e,
+                               exc_info=True)
+            else:
+                for cr, sample in zip(failing, samples):
+                    results[cr.rule.id].sample_data = sample
 
         # ---- UNIQUE: one grouped query each ----
         for rule in unique_rules:
@@ -152,7 +170,9 @@ class RuleEngine:
             try:
                 total, failed, sample = uniqueness.unique_counts(
                     df, rule.column, rule.filter_condition,
-                    2 * cfg.sample_data_max_records, collect_samples)
+                    2 * cfg.sample_data_max_records,
+                    collect_samples
+                    and _orderable(df.schema[rule.column].dataType))
             except Exception as e:
                 results[rule.id] = self._error_result(
                     rule, table_name, str(e))

@@ -6,12 +6,16 @@ NULLs are excluded entirely (``WHERE col IS NOT NULL``); failed_records =
 Σ(group_count − 1) over duplicate groups — the extras beyond the first
 occurrence (= N_nonnull − N_distinct).
 
-One query answers both: an ``Observation`` counts the rule's scoped rows
-(the total), ``GROUP BY col HAVING count > 1`` finds the duplicate
-groups, a second observation sums their extras (the failed count), and
-``ORDER BY col LIMIT 2k`` takes the samples (reference
-uniqueness_executor.py:228-253) in the same action. A column that cannot
-be grouped (a VARIANT) fails at analysis, an ERROR for that rule alone.
+One query answers both: ``GROUP BY col`` over the rule's scoped rows
+(the NULL group included), then an ``Observation`` on the groups sums
+every group's count (the total) and Σ(n − 1) over the non-NULL groups
+(the failed count). It sits above the shuffle, in the result stage,
+where Spark merges each task's update once even if a stage re-runs.
+``HAVING count > 1 ORDER BY col LIMIT 2k`` takes the samples (reference
+uniqueness_executor.py:228-253) in the same action; without samples, or
+for a column Spark cannot order (a map), a ``noop`` write of the groups
+runs instead. A column that cannot be grouped (a VARIANT) fails at
+analysis, an ERROR for that rule alone.
 """
 
 from __future__ import annotations
@@ -21,7 +25,21 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from validatelite_spark.plans.merger import run_observed
+
+def unique_query(
+    df: DataFrame, column: str, filter_condition: Optional[str],
+) -> tuple[Observation, DataFrame]:
+    """The rule's groups (``column``, ``duplicate_count``), the NULL group
+    included, and the ``Observation`` of ``total`` and ``failed`` that an
+    action over them fills."""
+    scoped = df.filter(F.expr(filter_condition)) if filter_condition else df
+    n, key = F.col("duplicate_count"), F.col(column)
+    obs = Observation()
+    return obs, (scoped.groupBy(column)
+                 .agg(F.count(F.lit(1)).alias("duplicate_count"))
+                 .observe(obs, F.sum(n).alias("total"),
+                          F.sum(F.when(key.isNotNull(), n - 1))
+                          .alias("failed")))
 
 
 def unique_counts(
@@ -32,22 +50,14 @@ def unique_counts(
     collect_samples: bool,
 ) -> tuple[int, int, list[dict[str, Any]]]:
     """(total, failed, the first ``limit`` duplicate groups by the column
-    value) from one action; a map column cannot be ordered, so its
-    counts come from the ``noop`` write (``merger.run_observed``)."""
-    scoped = df.filter(F.expr(filter_condition)) if filter_condition else df
-
-    def query(samples: bool) -> tuple[tuple[Observation, Observation],
-                                      DataFrame]:
-        total, failed = Observation(), Observation()
-        dups = (scoped.observe(total, F.count(F.lit(1)).alias("n"))
-                .filter(F.col(column).isNotNull())
-                .groupBy(column)
-                .agg(F.count(F.lit(1)).alias("duplicate_count"))
-                .filter(F.col("duplicate_count") > 1)
-                .observe(failed, F.sum(F.col("duplicate_count") - 1)
-                         .alias("n")))
-        return (total, failed), (dups.orderBy(column).limit(limit)
-                                 if samples else dups.select())
-
-    (total, failed), rows = run_observed(query, collect_samples, column)
-    return (total.get["n"], failed.get["n"] or 0, [r.asDict() for r in rows])
+    value, or none without ``collect_samples``) from one action."""
+    obs, groups = unique_query(df, column, filter_condition)
+    rows = []
+    if collect_samples:
+        rows = (groups.filter(F.col(column).isNotNull()
+                              & (F.col("duplicate_count") > 1))
+                .orderBy(column).limit(limit).collect())
+    else:
+        groups.select().write.format("noop").mode("overwrite").save()
+    m = obs.get
+    return m["total"] or 0, m["failed"] or 0, [r.asDict() for r in rows]

@@ -4,7 +4,7 @@ The analogue of the reference's executor dispatch
 (reference: core/executors/__init__.py:19-79) — but instead of generating
 dialect SQL strings, each rule compiles to one of two forms, both turned
 into a per-row flag by ``plans/planner.plan_rules`` and counted by the
-engine's one action (plans/merger.py):
+engine's one counting pass (plans/merger.py):
 
 - ``fail_predicate`` — a per-row failure ``Column`` (whole-stage codegen);
 - ``kernel`` — a ``BatchKernel`` (core/registry.py) for Python-exact

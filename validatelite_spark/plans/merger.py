@@ -1,126 +1,120 @@
-"""Rule merger: answer every row-level rule of an ``execute`` with ONE
-action.
+"""Rule merger: count every row-level rule of an ``execute`` with ONE
+pruned pass, and sample the failing ones with one more.
 
 The Spark-native realization of the reference's flagship optimization O1
-(reference: core/engine/rule_merger.py:142-299) together with its lazy
-failure sampling O7 (base_executor.py:292-347). The rules' flags are
-planned once (plans/planner.py, so every kernel runs once per row), and
-an ``Observation`` on that planned frame counts them:
+(reference: core/engine/rule_merger.py:142-299) and its lazy failure
+sampling O7 (base_executor.py:292-347). The rules' flags are planned
+once (plans/planner.py, so every kernel runs once per row), and an
+``Observation`` on that planned frame counts them:
 
     plan_rules(df, {"__r0": rule_0, ..., "__rN-1": rule_N-1})
       .observe(obs, count(1), count_if(scope_0 & __r0), ...,
                count_if(scope_i) for each filtered rule i)
 
 where ``scope = coalesce(filter, false)`` (a flag whose predicate is
-NULL is not counted). The action that fills the observation is the
-sample query: each row carries the ids of the rules it fails, exploded,
-then ``row_number() <= limit`` per rule, planned with a partial
-WindowGroupLimit before its one shuffle. A passing rule's rows never
-reach the explode, so sampling every rule costs nothing extra. Without
-samples (or when the sample query fails) the same observed plan is
-written to the ``noop`` sink instead, pruned to the rule columns.
+NULL is not counted). A ``noop`` write of that frame with no columns
+fills the observation: one job, one stage, the scan pruned to the rule
+columns. The observation sits in the write's result stage, where Spark
+merges each task's update once however often a task or stage re-runs;
+below a shuffle (a map stage) a re-run would add its rows again.
 
-Rules with different ``filter_condition``s share the one action (the
+``failure_samples`` then runs only for the rules that failed: each row
+carries the ids of the rules it fails, exploded, then ``row_number() <=
+limit`` per rule, planned with a partial WindowGroupLimit before its one
+shuffle. A rule that passes never reaches that query, so its kernel runs
+once; a failing rule's kernel runs again there.
+
+Rules with different ``filter_condition``s share the one pass (the
 reference requires identical filters to merge, rule_merger.py:135-139,
 and caps a query at 10 rules, rule_merger.py:876-901; an observation
 has no such limit). Unlike the reference we also fold the total-row
-count into the SAME action (the reference runs COUNT(*) separately,
+count into the SAME pass (the reference runs COUNT(*) separately,
 rule_engine.py:440-484).
 """
 
 from __future__ import annotations
 
-import logging
-from typing import Any, Callable
+from typing import Any, Optional
 
-from pyspark.sql import DataFrame, Observation, Row, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from validatelite_spark.plans.compiler import CompiledRule
 from validatelite_spark.plans.planner import plan_rules
 
-logger = logging.getLogger(__name__)
 
-
-def rule_query(
-    df: DataFrame,
-    rules: list[CompiledRule],
-    columns: list[str],
-    order: str,
-    limit: int,
-) -> Callable[[bool], tuple[Observation, DataFrame]]:
-    """Plan the row-level ``rules`` once; the returned ``query(samples)``
-    observes the counts on that plan under a fresh ``Observation`` (one
-    serves one action) and returns it with the frame to run: the sample
-    query (the first ``limit`` failing rows of each rule by ``order``,
-    ``columns`` plus ``__rule`` and ``__rank``) or, without samples,
-    the column-free frame for a ``noop`` write."""
-    flagged = plan_rules(df, {f"__r{i}": cr for i, cr in enumerate(rules)})
-    metrics, flags = [F.count(F.lit(1)).alias("__n")], []
+def _fails(
+        rules: list[CompiledRule]) -> list[tuple[Optional[Column], Column]]:
+    """``(scope or None, scope & flag)`` of each rule over the frame
+    ``plan_rules`` gives for ``{"__r<i>": rule_i}``."""
+    out = []
     for i, cr in enumerate(rules):
         fail = F.col(f"__r{i}")
+        scope = None
         if cr.rule.filter_condition:
             scope = F.coalesce(F.expr(cr.rule.filter_condition), F.lit(False))
             fail = scope & fail
+        out.append((scope, fail))
+    return out
+
+
+def count_query(df: DataFrame,
+                rules: list[CompiledRule]) -> tuple[Observation, DataFrame]:
+    """The column-free frame whose ``noop`` write counts ``rules``, with
+    the ``Observation`` it fills: ``__n`` rows, and per rule ``__f<i>``
+    failures and, if filtered, ``__t<i>`` rows in scope."""
+    metrics = [F.count(F.lit(1)).alias("__n")]
+    for i, (scope, fail) in enumerate(_fails(rules)):
+        if scope is not None:
             metrics.append(F.count_if(scope).alias(f"__t{i}"))
         metrics.append(F.count_if(fail).alias(f"__f{i}"))
-        flags.append(F.when(fail, F.lit(i)))
-    scan = columns if order in columns else [*columns, order]
-    rank = F.row_number().over(Window.partitionBy("__rule").orderBy(order))
-
-    def query(samples: bool) -> tuple[Observation, DataFrame]:
-        obs = Observation()
-        frame = flagged.observe(obs, *metrics)
-        if not samples:
-            return obs, frame.select()
-        return obs, (frame.select(*scan,
-                                  F.explode(F.array(*flags)).alias("__rule"))
-                     .filter(F.col("__rule").isNotNull())
-                     .withColumn("__rank", rank)
-                     .filter(F.col("__rank") <= limit))
-
-    return query
+    obs = Observation()
+    flagged = plan_rules(df, {f"__r{i}": cr for i, cr in enumerate(rules)})
+    return obs, flagged.observe(obs, *metrics).select()
 
 
-def run_observed(
-    query: Callable[[bool], tuple[Any, DataFrame]],
-    collect_samples: bool,
-    label: Any,
-) -> tuple[Any, list[Row]]:
-    """Run ``query(True)`` and collect its rows, or without samples write
-    ``query(False)`` to the ``noop`` sink; returns the observations of
-    the action that ran, with its rows. Samples never cost a rule its
-    counts: a sample query that raises is logged, and the write runs
-    under fresh observations (those of a failed action read zeros)."""
-    if collect_samples:
-        try:
-            obs, frame = query(True)
-            return obs, frame.collect()
-        except Exception as e:
-            logger.warning("sample query for %s failed, its sample_data "
-                           "stays empty: %s", label, e, exc_info=True)
-    obs, frame = query(False)
+def rule_counts(df: DataFrame,
+                rules: list[CompiledRule]) -> list[tuple[int, int]]:
+    """``(total, failed)`` of each row-level rule, from one ``noop``
+    write."""
+    obs, frame = count_query(df, rules)
     frame.write.format("noop").mode("overwrite").save()
-    return obs, []
+    m = obs.get
+    return [(m.get(f"__t{i}", m["__n"]), m[f"__f{i}"])
+            for i in range(len(rules))]
 
 
-def run_rules(
+def sample_query(
     df: DataFrame,
     rules: list[CompiledRule],
     columns: list[str],
     order: str,
     limit: int,
-    collect_samples: bool,
-) -> tuple[list[tuple[int, int]], list[list[dict[str, Any]]]]:
-    """``(total, failed)`` of each row-level rule and its samples (as
-    ``columns`` dicts), from one action."""
-    obs, rows = run_observed(rule_query(df, rules, columns, order, limit),
-                             collect_samples,
-                             [cr.rule.name for cr in rules])
-    m = obs.get
-    counts = [(m.get(f"__t{i}", m["__n"]), m[f"__f{i}"])
-              for i in range(len(rules))]
-    samples: list[list[dict[str, Any]]] = [[] for _ in rules]
+) -> DataFrame:
+    """The first ``limit`` failing rows of each rule by ``order``:
+    ``columns`` plus ``__rule`` (the rule's index) and ``__rank``."""
+    flagged = plan_rules(df, {f"__r{i}": cr for i, cr in enumerate(rules)})
+    flags = [F.when(fail, F.lit(i)) for i, (_, fail) in
+             enumerate(_fails(rules))]
+    scan = columns if order in columns else [*columns, order]
+    rank = F.row_number().over(Window.partitionBy("__rule").orderBy(order))
+    return (flagged.select(*scan, F.explode(F.array(*flags)).alias("__rule"))
+            .filter(F.col("__rule").isNotNull())
+            .withColumn("__rank", rank)
+            .filter(F.col("__rank") <= limit))
+
+
+def failure_samples(
+    df: DataFrame,
+    rules: list[CompiledRule],
+    columns: list[str],
+    order: str,
+    limit: int,
+) -> list[list[dict[str, Any]]]:
+    """Each rule's ``sample_query`` rows as ``columns`` dicts, from one
+    action."""
+    out: list[list[dict[str, Any]]] = [[] for _ in rules]
+    rows = sample_query(df, rules, columns, order, limit).collect()
     for r in sorted(rows, key=lambda r: (r["__rule"], r["__rank"])):
-        samples[r["__rule"]].append({c: r[c] for c in columns})
-    return counts, samples
+        out[r["__rule"]].append({c: r[c] for c in columns})
+    return out
