@@ -413,12 +413,16 @@ def _q_repetition(spark, sf_dir):
 
 def _rule_metrics(df: DataFrame, rule) -> DataFrame:
     """(total_records, failed_records) of one row-level rule, its flag
-    planned as the engine plans it (plans/planner.py)."""
+    planned and counted as the engine plans and counts it
+    (plans/planner.py, plans/merger.count_exprs)."""
     from validatelite_spark.plans.compiler import compile_rule
+    from validatelite_spark.plans.merger import count_exprs
     from validatelite_spark.plans.planner import plan_rules
     flagged = plan_rules(df, {"__f": compile_rule(rule, df.schema)})
-    return flagged.agg(F.count(F.lit(1)).alias("total_records"),
-                       F.count_if(F.col("__f")).alias("failed_records"))
+    total = "__t0" if rule.filter_condition else "__n"
+    return flagged.agg(*count_exprs({"__f": rule})).select(
+        F.col(total).alias("total_records"),
+        F.col("__f0").alias("failed_records"))
 
 
 def _q_repetition_rule(spark, sf_dir):

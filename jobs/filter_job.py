@@ -33,8 +33,12 @@ def main() -> int:
     spark = SparkSession.builder.appName("vlite-spark-filter").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    from validatelite_spark.core.results import (
+        METRICS_TABLE_SCHEMA,
+        results_to_rows,
+    )
     from validatelite_spark.pipeline.checkpoint import run_checkpointed
-    from validatelite_spark.pipeline.quality import QualityPipeline, _flag_name
+    from validatelite_spark.pipeline.quality import QualityPipeline
     from validatelite_spark.sources.reader import read_source
 
     df = read_source(spark, input_path)
@@ -48,26 +52,16 @@ def main() -> int:
         progress=lambda m: print(f"[checkpoint] {m}", flush=True))
     print(f"[done] {len(state.done)}/{n_buckets} buckets at {output_path}")
 
-    # per-rule metrics straight from the STORED flags — one cheap
-    # aggregate over the already-annotated output, no recompute
-    annotated = spark.read.parquet(output_path)
-    row = annotated.agg(*pipe.metric_exprs()).collect()[0].asDict()
-    total, kept = int(row["__total"]), int(row["__kept"])
-    print(f"[metrics] kept {kept}/{total}")
-    rows = []
-    for rule in pipe.rules:
-        # the sanitized flag name quality.annotate actually wrote; fail
-        # loudly (KeyError) if absent instead of silently reporting 0
-        flag = _flag_name(rule)
-        failed = int(row[flag] or 0)
-        rows.append((rule.id, rule.name, rule.type.value,
-                     "PASSED" if failed == 0 else "FAILED",
-                     total, failed))
-        print(f"[metrics] {rule.name}: {failed}/{total} failed")
-    spark.createDataFrame(
-        rows, "rule_id string, rule_name string, rule_type string, "
-              "status string, total_records long, failed_records long"
-    ).write.mode("overwrite").parquet(output_path.rstrip("/") + "_metrics")
+    # per-rule metrics counted from the STORED flags: one cheap pass
+    # over the already-annotated output, no rule runs again
+    results = pipe.results(spark.read.parquet(output_path))
+    print(f"[metrics] kept {results[0].execution_plan['kept']}/"
+          f"{results[0].total_records}")
+    for r in results:
+        print(f"[metrics] {r.rule_name}: {r.failed_records}/"
+              f"{r.total_records} failed")
+    spark.createDataFrame(results_to_rows(results), METRICS_TABLE_SCHEMA) \
+        .write.mode("overwrite").parquet(output_path.rstrip("/") + "_metrics")
     spark.stop()
     return 0
 

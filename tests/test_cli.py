@@ -126,6 +126,15 @@ class TestFilter:
         assert failed_fr["lang_id_text"] < failed["lang_id_text"]
         assert kept_fr >= kept
 
+    def test_checkpoint_counts_what_plain_filter_counts(self, spark,
+                                                        pages_path, tmp_path):
+        """``--checkpoint`` counts the flags its buckets stored."""
+        plain = self._filter(spark, pages_path, str(tmp_path / "plain"))
+        stored = self._filter(spark, pages_path, str(tmp_path / "ckpt"),
+                              "--checkpoint", "--buckets", "4")
+        assert stored == plain
+        assert plain[1]["not_null_text"] == 100
+
 
 class TestJdbcContract:
     """JDBC dispatch contract (VERDICT r2 missing #1): no driver jar

@@ -86,3 +86,15 @@ def test_one_scalar_arrow_udf_per_annotated_scan(spark):
     # the node's last field is the UDF's eval type: a pandas UDF is 200
     assert node.rstrip().endswith(
         f", {PythonEvalType.SQL_SCALAR_ARROW_UDF}")
+
+
+def test_one_way_from_flags_to_results():
+    """The planner scopes the flags, ``merger.count_exprs`` counts them
+    for the engine and the pipeline, ``RuleResult`` builds the result."""
+    from validatelite_spark.operators.engine import RuleEngine
+    from validatelite_spark.plans import schema_payload
+    assert not hasattr(merger, "_fails")
+    assert not hasattr(QualityPipeline, "metric_exprs")
+    assert not [name for name in ("_data_result", "_error_result")
+                if hasattr(RuleEngine, name)]
+    assert not hasattr(schema_payload, "_skipped")

@@ -143,6 +143,30 @@ class TestKeepDropParity:
         kept_direct = pipe.annotate(pages).filter("keep").count()
         assert kept_written == kept_direct
 
+    def test_stored_output_is_counted_not_recomputed(self, spark, pages,
+                                                     tmp_path):
+        """``results`` over a written output counts its stored flags:
+        the counts of ``run``, with no rule kernel in the plan."""
+        pipe = QualityPipeline(spark)
+        out = str(tmp_path / "out")
+        _, ran = pipe.run(pages, output_path=out)
+        store = spark._jsparkSession.sharedState().statusStore()
+
+        def executions():
+            ids = store.executionsList()
+            return [ids.apply(i) for i in range(ids.size())]
+
+        seen = {e.executionId() for e in executions()}
+        stored = pipe.results(spark.read.parquet(out))
+        counts = [[(r.rule_name, r.total_records, r.failed_records,
+                    r.status, r.execution_plan["kept"]) for r in rs]
+                  for rs in (ran, stored)]
+        assert counts[0] == counts[1]
+        assert counts[0][0][-1] == 14 * N // 20
+        plans = [e.physicalPlanDescription() for e in executions()
+                 if e.executionId() not in seen]
+        assert plans and not any("ArrowEvalPython" in p for p in plans)
+
     def test_expected_keep_classes(self, spark, pages):
         """Classes 6,7 (PII/toxic) are KEPT and scrubbed; 0-5 dropped;
         8+ kept — checks the calibration holds exactly on this corpus."""

@@ -7,6 +7,7 @@ rules of one type), and every planned scan crosses into Python once: one
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pytest
@@ -192,3 +193,58 @@ class TestOneArrowPass:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         assert python_passes(curate(spark, docs, token_budget=2000)) == []
         spark.catalog.clearCache()
+
+
+#: the scopes of ``scoped_rules``: NOT_NULL is a native flag, GOPHER a
+#: kernel flag in the Arrow pass (PERPLEXITY and PII read its column)
+SCOPES = {"not_null_text": "xxhash64(url) % 4 = 0",
+          "gopher_text": "xxhash64(url) % 2 = 0"}
+
+
+def scoped_rules() -> list[Rule]:
+    return [dataclasses.replace(r, filter_condition=SCOPES.get(r.name))
+            for r in default_rules()]
+
+
+class TestFilteredRule:
+    """A rule's ``filter_condition`` means the same in the engine, the
+    pipeline, ``rule_overlap`` and the scrub gate: the planner ANDs the
+    scope into the rule's flag."""
+
+    @pytest.fixture(scope="class")
+    def engine(self, spark, pages):
+        return {r.rule_name: (r.total_records, r.failed_records)
+                for r in RuleEngine(spark).execute(
+                    pages, scoped_rules(), collect_samples=False)}
+
+    def test_pipeline_counts_equal_engine(self, spark, pages, engine):
+        _, results = QualityPipeline(spark, PipelineConfig(),
+                                     scoped_rules()).run(pages)
+        got = {r.rule_name: (r.total_records, r.failed_records)
+               for r in results}
+        assert got == engine
+        n = pages.count()
+        assert 0 < engine["not_null_text"][0] < engine["gopher_text"][0] < n
+        assert engine["lang_id_text"][0] == n
+
+    def test_marginals_equal_engine(self, spark, pages, engine):
+        from validatelite_spark.operators.overlap import rule_marginals
+        got = {r["rule_name"]: r["fail_count"]
+               for r in rule_marginals(pages, scoped_rules()).collect()}
+        assert got == {name: failed for name, (_, failed) in engine.items()}
+
+    def test_flags_stay_in_scope_and_the_scrub_agrees(self, spark, pages):
+        ann = QualityPipeline(spark, PipelineConfig(),
+                              scoped_rules()).annotate(pages)
+        scrubbed = F.col("text_scrubbed").isNotNull()
+        row = ann.agg(
+            *[F.count_if(F.col(f"fail_{name}") & ~F.expr(cond)).alias(name)
+              for name, cond in SCOPES.items()],
+            F.count_if(F.col("keep") & ~scrubbed
+                       & F.col("text").isNotNull()).alias("kept_unscrubbed"),
+            F.count_if(~F.col("keep") & scrubbed).alias("dropped_scrubbed"),
+            F.count_if(F.col("fail_gopher_text")).alias("gopher"),
+        ).first().asDict()
+        assert row.pop("gopher") > 0
+        assert row == {"not_null_text": 0, "gopher_text": 0,
+                       "kept_unscrubbed": 0, "dropped_scrubbed": 0}

@@ -130,3 +130,20 @@ class TestRegistry:
             assert "true" in str(compiled.fail_predicate).lower()
         finally:
             register_builtins(replace=True)  # restore
+
+    def test_param_schema_of_a_builtin_enum_type_is_enforced(self):
+        """A builtin enum type re-registered with a param schema is held
+        to it, like a registered-only type."""
+        from validatelite_spark.core.builtin_rule_types import (
+            register_builtins,
+        )
+        Rule(RuleType.GOPHER, "text")  # the builtin schema asks nothing
+        registry.register_rule_type(
+            "GOPHER", lambda rule: F.lit(False),
+            param_schema={"required": ["min_words"]}, replace=True)
+        try:
+            with pytest.raises(RuleValidationError, match="min_words"):
+                Rule(RuleType.GOPHER, "text")
+            Rule(RuleType.GOPHER, "text", {"min_words": 50})  # ok
+        finally:
+            register_builtins(replace=True)  # restore

@@ -332,8 +332,7 @@ def main(argv: Optional[list[str]] = None) -> int:
                 run_checkpointed(df, pipe.annotate, args.output,
                                  n_buckets=args.buckets,
                                  progress=lambda m: print(m, file=sys.stderr))
-                _, results = pipe.run(
-                    spark.read.parquet(args.output))
+                results = pipe.results(spark.read.parquet(args.output))
             else:
                 _, results = pipe.run(df, output_path=args.output)
             return _emit(results, args.json)

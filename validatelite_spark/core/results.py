@@ -17,7 +17,10 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import Any, Optional
+from typing import TYPE_CHECKING, Any, Optional
+
+if TYPE_CHECKING:
+    from validatelite_spark.core.rules import Rule
 
 
 class ExecutionStatus(str, Enum):
@@ -44,9 +47,11 @@ class DatasetMetrics:
 
     @property
     def success_rate(self) -> float:
-        if self.total_records == 0:
-            return 1.0
-        return (self.total_records - self.failed_records) / self.total_records
+        return _success_rate(self.total_records, self.failed_records)
+
+
+def _success_rate(total: int, failed: int) -> float:
+    return 1.0 if total == 0 else (total - failed) / total
 
 
 @dataclass
@@ -61,6 +66,44 @@ class RuleResult:
     error_message: Optional[str] = None
     sample_data: list[dict[str, Any]] = field(default_factory=list)
     execution_plan: dict[str, Any] = field(default_factory=dict)
+
+    @classmethod
+    def counted(cls, rule: Rule, table: str, total: int, failed: int,
+                elapsed: float, plan: dict[str, Any],
+                samples: list[dict[str, Any]] = (),
+                note: Optional[str] = None) -> RuleResult:
+        """The result of ``rule`` judged over ``total`` rows of which
+        ``failed`` fail: PASSED iff the failure rate is within the
+        rule's threshold (``status_for``)."""
+        status = status_for(failed, total, rule.threshold)
+        msg = (f"{rule.type.value} check "
+               + ("passed" if status == ExecutionStatus.PASSED
+                  else f"found {failed} failed records"))
+        return cls(
+            rule_id=rule.id, rule_name=rule.name, rule_type=rule.type.value,
+            status=status,
+            dataset_metrics=[DatasetMetrics(table, total, failed, elapsed)],
+            execution_time=elapsed,
+            execution_message=msg if note is None else f"{msg}; {note}",
+            execution_plan=plan, sample_data=list(samples))
+
+    @classmethod
+    def error(cls, rule: Rule, table: str, msg: str) -> RuleResult:
+        """``rule`` could not run: an ERROR result, and the run goes on."""
+        return cls(
+            rule_id=rule.id, rule_name=rule.name, rule_type=rule.type.value,
+            status=ExecutionStatus.ERROR,
+            dataset_metrics=[DatasetMetrics(table, 0, 0)],
+            error_message=msg, execution_plan={"execution_type": "error"})
+
+    @classmethod
+    def skipped(cls, rule: Rule, table: str, why: str) -> RuleResult:
+        """``rule`` was not run, because ``why``."""
+        return cls(
+            rule_id=rule.id, rule_name=rule.name, rule_type=rule.type.value,
+            status=ExecutionStatus.SKIPPED,
+            dataset_metrics=[DatasetMetrics(table, 0, 0)],
+            execution_message=f"skipped: {why}")
 
     @property
     def total_records(self) -> int:
@@ -82,10 +125,8 @@ class RuleResult:
             "status": self.status.value,
             "total_records": self.total_records,
             "failed_records": self.failed_records,
-            "success_rate": (
-                1.0 if self.total_records == 0
-                else (self.total_records - self.failed_records) / self.total_records
-            ),
+            "success_rate": _success_rate(self.total_records,
+                                          self.failed_records),
             "execution_time": self.execution_time,
             "execution_message": self.execution_message,
             "error_message": self.error_message,
@@ -105,8 +146,9 @@ def status_for(failed: int, total: int, threshold: float) -> ExecutionStatus:
     return ExecutionStatus.PASSED if rate <= threshold else ExecutionStatus.FAILED
 
 
-#: Spark schema for the metrics table written by the pipeline — mirrors the
-#: validation-report payload (reference: docs/schemas/schema_results.schema.json).
+#: Spark schema of ``results_to_rows`` (``jobs/filter_job.py``'s metrics
+#: table) — the validation-report payload (reference:
+#: docs/schemas/schema_results.schema.json).
 METRICS_TABLE_SCHEMA = (
     "rule_id string, rule_name string, rule_type string, status string, "
     "total_records long, failed_records long, success_rate double, "
@@ -115,21 +157,7 @@ METRICS_TABLE_SCHEMA = (
 
 
 def results_to_rows(results: list[RuleResult]) -> list[dict[str, Any]]:
-    return [
-        {
-            "rule_id": r.rule_id,
-            "rule_name": r.rule_name,
-            "rule_type": r.rule_type,
-            "status": r.status.value,
-            "total_records": r.total_records,
-            "failed_records": r.failed_records,
-            "success_rate": (
-                1.0 if r.total_records == 0
-                else (r.total_records - r.failed_records) / r.total_records
-            ),
-            "execution_time": r.execution_time,
-            "execution_message": r.execution_message,
-            "error_message": r.error_message,
-        }
-        for r in results
-    ]
+    """``results`` as rows of ``METRICS_TABLE_SCHEMA``: those columns
+    of ``RuleResult.to_dict``."""
+    cols = [c.split()[0] for c in METRICS_TABLE_SCHEMA.split(", ")]
+    return [{c: d[c] for c in cols} for d in map(RuleResult.to_dict, results)]

@@ -111,23 +111,23 @@ class Rule:
     # -- parameter validation (reference: shared/schema/rule_schema.py:255-343)
     def _validate_parameters(self) -> None:
         t, p = self.type, self.parameters
+        if self.threshold < 0.0 or self.threshold > 1.0:
+            raise RuleValidationError("threshold must be a rate in [0, 1]")
+        # a registered type's param schema is its contract, enum or not;
+        # the enum checks below stay: the compiler registers the builtins
+        from validatelite_spark.core.registry import (
+            get_rule_type,
+            validate_params,
+        )
+        spec = get_rule_type(t)
+        if spec is not None:
+            if spec.needs_column and not self.column:
+                raise RuleValidationError(f"{t.value} rule requires a column")
+            try:
+                validate_params(spec, p)
+            except ValueError as e:
+                raise RuleValidationError(str(e)) from e
         if isinstance(t, DynamicRuleType):
-            # registered type: the registry's param schema is the contract
-            from validatelite_spark.core.registry import (
-                get_rule_type,
-                validate_params,
-            )
-            spec = get_rule_type(t)
-            if spec is not None:
-                if spec.needs_column and not self.column:
-                    raise RuleValidationError(
-                        f"{t.value} rule requires a column")
-                try:
-                    validate_params(spec, p)
-                except ValueError as e:
-                    raise RuleValidationError(str(e)) from e
-            if self.threshold < 0.0 or self.threshold > 1.0:
-                raise RuleValidationError("threshold must be a rate in [0, 1]")
             return
         needs_column = t not in (RuleType.SCHEMA, RuleType.CUSTOM)
         if needs_column and not self.column:
@@ -173,8 +173,6 @@ class Rule:
         elif t == RuleType.PERPLEXITY:
             if p.get("max_ppl") is None and p.get("min_ppl") is None:
                 raise RuleValidationError("PERPLEXITY needs min_ppl and/or max_ppl")
-        if self.threshold < 0.0 or self.threshold > 1.0:
-            raise RuleValidationError("threshold must be a rate in [0, 1]")
 
     # -- serialization round-trip (property-tested)
     def to_dict(self) -> dict[str, Any]:

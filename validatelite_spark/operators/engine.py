@@ -9,13 +9,14 @@ The Spark-native analogue of the reference's RuleEngine
    (plans/compiler.py; REGEX's pattern and column type pick the form);
 3. **one counting pass** for every row-level rule (plans/merger.py):
    their flags are planned once (plans/planner.py runs all their
-   kernels in one Arrow pass), and an ``Observation`` on that plan
-   counts the total, each rule's failures and each filtered rule's
-   scope during a ``noop`` write pruned to the rule columns, so K rules
-   cost one scan and one job, and the counts stay exact when Spark
-   re-runs a task (the observation is in the write's result stage). A
-   rule's ``filter_condition`` is analysed on the driver at compile
-   time, so one that does not resolve is an ERROR for its rule alone; a
+   kernels in one Arrow pass and scopes each flag by its rule's
+   ``filter_condition``), and an ``Observation`` on that plan counts the
+   total, each rule's failures and each filtered rule's scope during a
+   ``noop`` write pruned to the rule columns, so K rules cost one scan
+   and one job, and the counts stay exact when Spark re-runs a task
+   (the observation is in the write's result stage). A rule's
+   ``filter_condition`` is analysed on the driver at compile time, so
+   one that does not resolve is an ERROR for its rule alone; a
    predicate that fails at run time makes every row-level rule ERROR;
 4. **UNIQUE** rules run one grouped query each, which counts and
    samples them (operators/uniqueness.py); **SCHEMA** rules run
@@ -45,12 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from validatelite_spark.core.results import (
-    DatasetMetrics,
-    ExecutionStatus,
-    RuleResult,
-    status_for,
-)
+from validatelite_spark.core.results import RuleResult
 from validatelite_spark.core.rules import Rule, RuleType
 from validatelite_spark.operators import uniqueness
 from validatelite_spark.operators.schema_check import check_schema
@@ -107,7 +103,7 @@ class RuleEngine:
         schema_rules: list[Rule] = []
         for rule in rules:
             if errors.get(rule.id):
-                results[rule.id] = self._error_result(
+                results[rule.id] = RuleResult.error(
                     rule, table_name, errors[rule.id])
             elif rule.type == RuleType.SCHEMA:
                 schema_rules.append(rule)
@@ -120,7 +116,7 @@ class RuleEngine:
                     else:
                         compiled.append(compile_rule(rule, df.schema))
                 except Exception as e:  # per-rule isolation
-                    results[rule.id] = self._error_result(
+                    results[rule.id] = RuleResult.error(
                         rule, table_name, str(e))
 
         # ---- one pruned pass counts every row-level rule (O1) ----
@@ -132,12 +128,12 @@ class RuleEngine:
                 counts = rule_counts(df, compiled)
             except Exception as e:
                 for cr in compiled:
-                    results[cr.rule.id] = self._error_result(
+                    results[cr.rule.id] = RuleResult.error(
                         cr.rule, table_name, str(e))
             else:
                 elapsed = time.time() - g0
                 for cr, (total, failed) in zip(compiled, counts):
-                    results[cr.rule.id] = self._data_result(
+                    results[cr.rule.id] = RuleResult.counted(
                         cr.rule, table_name, total, failed, elapsed,
                         plan={"execution_type": "merged_agg",
                               "group_size": len(compiled),
@@ -174,10 +170,10 @@ class RuleEngine:
                     collect_samples
                     and _orderable(df.schema[rule.column].dataType))
             except Exception as e:
-                results[rule.id] = self._error_result(
+                results[rule.id] = RuleResult.error(
                     rule, table_name, str(e))
                 continue
-            results[rule.id] = self._data_result(
+            results[rule.id] = RuleResult.counted(
                 rule, table_name, total, failed, time.time() - g0,
                 plan={"execution_type": "unique_groupby",
                       "filter": rule.filter_condition},
@@ -192,10 +188,10 @@ class RuleEngine:
                     df, p["columns"], bool(p.get("strict_mode")),
                     bool(p.get("case_insensitive")))
             except Exception as e:
-                results[rule.id] = self._error_result(
+                results[rule.id] = RuleResult.error(
                     rule, table_name, str(e))
                 continue
-            results[rule.id] = self._data_result(
+            results[rule.id] = RuleResult.counted(
                 rule, table_name, sc.total, sc.failed,
                 time.time() - g0, plan={"execution_type": "metadata"},
                 samples=[{"column": fc.column, "status": fc.status,
@@ -205,28 +201,3 @@ class RuleEngine:
                          if fc.status != "PASSED"])
 
         return [results[r.id] for r in rules if r.id in results]
-
-    # ------------------------------------------------------------ helpers
-    def _data_result(self, rule: Rule, table: str, total: int, failed: int,
-                     elapsed: float, plan: dict,
-                     samples: list[dict] = ()) -> RuleResult:
-        status = status_for(failed, total, rule.threshold)
-        msg = (
-            f"{rule.type.value} check "
-            + ("passed" if status == ExecutionStatus.PASSED
-               else f"found {failed} failed records")
-        )
-        return RuleResult(
-            rule_id=rule.id, rule_name=rule.name, rule_type=rule.type.value,
-            status=status,
-            dataset_metrics=[DatasetMetrics(table, total, failed, elapsed)],
-            execution_time=elapsed, execution_message=msg,
-            execution_plan=plan, sample_data=list(samples))
-
-    def _error_result(self, rule: Rule, table: str, msg: str) -> RuleResult:
-        return RuleResult(
-            rule_id=rule.id, rule_name=rule.name, rule_type=rule.type.value,
-            status=ExecutionStatus.ERROR,
-            dataset_metrics=[DatasetMetrics(table, 0, 0)],
-            error_message=msg,
-            execution_plan={"execution_type": "error"})

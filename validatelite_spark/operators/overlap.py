@@ -6,9 +6,9 @@ structure: how many documents fail exactly {length}, how many fail
 {length, repetition} together, which rule uniquely removes documents
 nothing else would catch. ``rule_overlap`` computes the full Venn
 decomposition in ONE corpus scan: each rule's flag (planned exactly
-as the engine plans it — plans/planner.py, so the
-analysis can never drift from the engine's verdicts) becomes one bit
-of a failure bitmask, and a single groupBy
+as the engine plans it — plans/planner.py, its ``filter_condition``
+scope included, so the analysis can never drift from the engine's
+verdicts) becomes one bit of a failure bitmask, and a single groupBy
 on the mask counts every observed combination. ``rule_marginals``
 derives the per-rule summary (total fails, unique fails, docs it
 alone would remove) from that tiny mask table.
@@ -42,9 +42,9 @@ def rule_overlap(df: DataFrame, rules: list[Rule]) -> DataFrame:
     set = rules[i] fails the row), ``failed_rules`` (comma-joined rule
     names in rules order; ``""`` for the all-pass row), ``n_rows``.
 
-    NULL semantics per rule type are exactly the engine's (a rule's
-    fail predicate is never NULL — the compiler folds the NULL
-    verdict into it), so the mask is total: every row lands in exactly
+    NULL semantics and ``filter_condition`` scopes are exactly the
+    engine's (a row outside a rule's scope does not fail it; a NULL
+    flag adds no bit), so the mask is total: every row lands in exactly
     one combination and ``sum(n_rows)`` is the corpus size."""
     if not rules:
         raise ValueError("rule_overlap needs at least one rule")

@@ -5,16 +5,18 @@ Runs ValidateLite-shaped rules over a pages table
 
 - per-rule boolean failure flags (``fail_<rule_name>``), planned by the
   engine's own compiler and planner (plans/compiler.py,
-  plans/planner.py) — the pipeline has no per-rule-type code, so its
-  counts are the engine's by construction;
+  plans/planner.py), each the rule's verdict within its
+  ``filter_condition`` scope — the pipeline has no per-rule-type code;
 - the keep/drop decision (``keep``): a document is dropped when any
   *dropping* rule fails (severity >= HIGH; the reference's
   severity/action fields decide consequence, shared/schema/base.py:229-231)
 - byte-stable scrubbed text (``text_scrubbed``) via the compiled-regex
   PII/toxicity pass, inside the planner's one Arrow pass
-- per-rule metrics via ``pyspark.sql.Observation`` — collected DURING the
-  output write, so metrics cost zero extra scans (Spark-native upgrade of
-  the reference's separate COUNT queries, rule_engine.py:440-484)
+- per-rule results (``results``) counted by the engine's own
+  ``count_exprs`` (plans/merger.py), so its counts are the engine's by
+  construction, on an ``Observation`` DURING the output write: zero
+  extra scans (Spark-native upgrade of the reference's separate COUNT
+  queries, rule_engine.py:440-484)
 
 Scale notes (100 TB design point):
 - The whole pipeline is one projection + one write: no shuffle at all.
@@ -33,13 +35,10 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from validatelite_spark.core.results import (
-    DatasetMetrics,
-    RuleResult,
-    status_for,
-)
+from validatelite_spark.core.results import RuleResult
 from validatelite_spark.core.rules import Rule, RuleType, SeverityLevel
 from validatelite_spark.plans.compiler import CompiledRule, compile_rule
+from validatelite_spark.plans.merger import count_exprs, read_counts
 from validatelite_spark.plans.planner import plan_rules
 
 
@@ -128,14 +127,6 @@ class QualityPipeline:
             keep = keep & ~F.coalesce(F.col(name), F.lit(False))
         return out.withColumn("keep", keep)
 
-    def metric_exprs(self) -> list[Column]:
-        cols = [F.count(F.lit(1)).alias("__total"),
-                F.sum(F.col("keep").cast("long")).alias("__kept")]
-        for rule in self.rules:
-            name = _flag_name(rule)
-            cols.append(F.sum(F.col(name).cast("long")).alias(name))
-        return cols
-
     # ---------------------------------------------------------------- run
     def run(
         self,
@@ -143,41 +134,41 @@ class QualityPipeline:
         output_path: Optional[str] = None,
         table_name: str = "pages",
     ) -> tuple[DataFrame, list[RuleResult]]:
-        """Annotate + (optionally) write + per-rule metrics in ONE scan.
-
-        With ``output_path``: metrics ride the write via Observation.
-        Without: a single fused agg (same shape as the engine's merged
-        scan) computes them.
-        """
-        t0 = time.time()
+        """``annotate`` then ``results``: annotation, the optional write
+        and the per-rule counts in ONE scan."""
         annotated = self.annotate(df)
-        if output_path is not None:
-            obs = Observation("rule_metrics")
-            observed = annotated.observe(obs, *self.metric_exprs())
-            (observed.write.mode("overwrite").parquet(output_path))
-            row = obs.get
-        else:
-            row = annotated.agg(*self.metric_exprs()).collect()[0].asDict()
-        elapsed = time.time() - t0
+        return annotated, self.results(annotated, output_path, table_name)
 
-        total = int(row["__total"] or 0)
-        results: list[RuleResult] = []
-        for rule in self.rules:
-            failed = int(row[_flag_name(rule)] or 0)
-            status = status_for(failed, total, rule.threshold)
-            results.append(RuleResult(
-                rule_id=rule.id, rule_name=rule.name,
-                rule_type=rule.type.value, status=status,
-                dataset_metrics=[DatasetMetrics(table_name, total, failed,
-                                                elapsed)],
-                execution_time=elapsed,
-                execution_message=(
-                    f"{rule.type.value}: {failed}/{total} failed; "
-                    f"kept={int(row['__kept'] or 0)}"),
-                execution_plan={"execution_type": "observed_single_scan"
-                                if output_path else "merged_agg"},
-            ))
-        return annotated, results
+    def results(
+        self,
+        annotated: DataFrame,
+        output_path: Optional[str] = None,
+        table_name: str = "pages",
+    ) -> list[RuleResult]:
+        """The rules' results from the flags of ``annotated``, an
+        ``annotate`` output or one stored earlier (no rule runs again):
+        ``count_exprs`` and ``count_if(keep)`` (``execution_plan["kept"]``)
+        are observed on one write, the parquet at ``output_path`` or a
+        column-free ``noop``."""
+        t0 = time.time()
+        flags = {_flag_name(rule): rule for rule in self.rules}
+        obs = Observation()
+        observed = annotated.observe(
+            obs, *count_exprs(flags), F.count_if("keep").alias("__kept"))
+        if output_path is not None:
+            observed.write.mode("overwrite").parquet(output_path)
+        else:
+            observed.select().write.format("noop").mode("overwrite").save()
+        m = obs.get
+        elapsed = time.time() - t0
+        kept = m["__kept"]
+        return [RuleResult.counted(
+                    rule, table_name, total, failed, elapsed,
+                    plan={"execution_type": "observed_single_scan",
+                          "kept": kept},
+                    note=f"kept={kept}")
+                for rule, (total, failed) in zip(
+                    self.rules, read_counts(m, len(flags)))]
 
 
 # ------------------------------------------------------------- skew path

@@ -4,19 +4,22 @@ pruned pass, and sample the failing ones with one more.
 The Spark-native realization of the reference's flagship optimization O1
 (reference: core/engine/rule_merger.py:142-299) and its lazy failure
 sampling O7 (base_executor.py:292-347). The rules' flags are planned
-once (plans/planner.py, so every kernel runs once per row), and an
-``Observation`` on that planned frame counts them:
+once (plans/planner.py, so every kernel runs once per row, and each
+flag is already its rule's verdict within its ``filter_condition``
+scope), and an ``Observation`` on that planned frame counts them:
 
     plan_rules(df, {"__r0": rule_0, ..., "__rN-1": rule_N-1})
-      .observe(obs, count(1), count_if(scope_0 & __r0), ...,
+      .observe(obs, count(1), count_if(__r0), ...,
                count_if(scope_i) for each filtered rule i)
 
-where ``scope = coalesce(filter, false)`` (a flag whose predicate is
-NULL is not counted). A ``noop`` write of that frame with no columns
-fills the observation: one job, one stage, the scan pruned to the rule
-columns. The observation sits in the write's result stage, where Spark
-merges each task's update once however often a task or stage re-runs;
-below a shuffle (a map stage) a re-run would add its rows again.
+``count_exprs`` builds those aggregates and ``read_counts`` reads
+``(total, failed)`` per rule from them; ``QualityPipeline.results``
+counts its flags with the same two. A NULL flag is not counted. A
+``noop`` write of that frame with no columns fills the observation: one
+job, one stage, the scan pruned to the rule columns. The observation
+sits in the write's result stage, where Spark merges each task's update
+once however often a task or stage re-runs; below a shuffle (a map
+stage) a re-run would add its rows again.
 
 ``failure_samples`` then runs only for the rules that failed: each row
 carries the ids of the rules it fails, exploded, then ``row_number() <=
@@ -34,43 +37,44 @@ rule_engine.py:440-484).
 
 from __future__ import annotations
 
-from typing import Any, Optional
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from validatelite_spark.core.rules import Rule
 from validatelite_spark.plans.compiler import CompiledRule
-from validatelite_spark.plans.planner import plan_rules
+from validatelite_spark.plans.planner import plan_rules, scope
 
 
-def _fails(
-        rules: list[CompiledRule]) -> list[tuple[Optional[Column], Column]]:
-    """``(scope or None, scope & flag)`` of each rule over the frame
-    ``plan_rules`` gives for ``{"__r<i>": rule_i}``."""
-    out = []
-    for i, cr in enumerate(rules):
-        fail = F.col(f"__r{i}")
-        scope = None
-        if cr.rule.filter_condition:
-            scope = F.coalesce(F.expr(cr.rule.filter_condition), F.lit(False))
-            fail = scope & fail
-        out.append((scope, fail))
-    return out
+def count_exprs(flags: dict[str, Rule]) -> list[Column]:
+    """The aggregates that count ``flags`` (flag column → rule) over a
+    frame ``plan_rules`` planned them on: ``__n`` rows, and per flag
+    ``__f<i>`` failures and, for a filtered rule, ``__t<i>`` rows in its
+    scope. A NULL flag is not counted."""
+    metrics = [F.count(F.lit(1)).alias("__n")]
+    for i, (flag, rule) in enumerate(flags.items()):
+        if rule.filter_condition:
+            metrics.append(F.count_if(scope(rule)).alias(f"__t{i}"))
+        metrics.append(F.count_if(F.col(flag)).alias(f"__f{i}"))
+    return metrics
+
+
+def read_counts(metrics: dict[str, Any], n: int) -> list[tuple[int, int]]:
+    """``(total, failed)`` of each of ``n`` flags from the values of
+    their ``count_exprs``."""
+    return [(metrics.get(f"__t{i}", metrics["__n"]), metrics[f"__f{i}"])
+            for i in range(n)]
 
 
 def count_query(df: DataFrame,
                 rules: list[CompiledRule]) -> tuple[Observation, DataFrame]:
     """The column-free frame whose ``noop`` write counts ``rules``, with
-    the ``Observation`` it fills: ``__n`` rows, and per rule ``__f<i>``
-    failures and, if filtered, ``__t<i>`` rows in scope."""
-    metrics = [F.count(F.lit(1)).alias("__n")]
-    for i, (scope, fail) in enumerate(_fails(rules)):
-        if scope is not None:
-            metrics.append(F.count_if(scope).alias(f"__t{i}"))
-        metrics.append(F.count_if(fail).alias(f"__f{i}"))
+    the ``Observation`` of their ``count_exprs`` it fills."""
+    flags = {f"__r{i}": cr for i, cr in enumerate(rules)}
     obs = Observation()
-    flagged = plan_rules(df, {f"__r{i}": cr for i, cr in enumerate(rules)})
-    return obs, flagged.observe(obs, *metrics).select()
+    metrics = count_exprs({f: cr.rule for f, cr in flags.items()})
+    return obs, plan_rules(df, flags).observe(obs, *metrics).select()
 
 
 def rule_counts(df: DataFrame,
@@ -79,9 +83,7 @@ def rule_counts(df: DataFrame,
     write."""
     obs, frame = count_query(df, rules)
     frame.write.format("noop").mode("overwrite").save()
-    m = obs.get
-    return [(m.get(f"__t{i}", m["__n"]), m[f"__f{i}"])
-            for i in range(len(rules))]
+    return read_counts(obs.get, len(rules))
 
 
 def sample_query(
@@ -94,8 +96,7 @@ def sample_query(
     """The first ``limit`` failing rows of each rule by ``order``:
     ``columns`` plus ``__rule`` (the rule's index) and ``__rank``."""
     flagged = plan_rules(df, {f"__r{i}": cr for i, cr in enumerate(rules)})
-    flags = [F.when(fail, F.lit(i)) for i, (_, fail) in
-             enumerate(_fails(rules))]
+    flags = [F.when(F.col(f"__r{i}"), F.lit(i)) for i in range(len(rules))]
     scan = columns if order in columns else [*columns, order]
     rank = F.row_number().over(Window.partitionBy("__rule").orderBy(order))
     return (flagged.select(*scan, F.explode(F.array(*flags)).alias("__rule"))

@@ -3,7 +3,10 @@ projection with at most ONE Arrow pass (SURVEY §7 step 4).
 
 The engine's one counting and sampling action, ``rule_overlap``, the
 registered-rule queries of ``__spark_entry__`` and
-``QualityPipeline.annotate`` all plan their per-row verdicts here. The
+``QualityPipeline.annotate`` all plan their per-row verdicts here, and
+here alone a rule's ``filter_condition`` applies: each flag is
+``scope(rule) & verdict``, ANDed inside the Arrow UDF for a kernel (so
+the scrub gate reads it too) and in the projection otherwise. The
 projection holds the shared inputs (the ``tokens`` split of each string
 column a native predicate reads via ``tokens_of``), the native
 predicates, and one Arrow UDF (``F.arrow_udf``) for every
@@ -41,6 +44,7 @@ from validatelite_spark.functions.pii import hit_array, scrub_array
 from validatelite_spark.functions.textquality import tokens
 
 if TYPE_CHECKING:
+    from validatelite_spark.core.rules import Rule
     from validatelite_spark.plans.compiler import CompiledRule
 
 #: the scrubbed text column ``plan_rules(scrub=...)`` adds
@@ -79,13 +83,15 @@ def batch_udf(fn: Callable[[pa.Array], Any], return_type: str):
 def kernel_udf(inputs: list[Column],
                kernels: dict[str, tuple[int, BatchKernel]],
                scrub: Optional[int] = None, drop: Optional[Column] = None,
-               drops: Collection[str] = ()) -> Column:
+               drops: Collection[str] = (),
+               scopes: Optional[dict[str, int]] = None) -> Column:
     """The planner's one Arrow UDF: a struct with a boolean field per
-    ``kernels`` entry (field → (index into ``inputs``, kernel)) and, when
-    ``scrub`` indexes a text input, a ``scrubbed`` field — that text
-    scrubbed where neither ``drop`` nor a kernel named in ``drops``
-    fails, NULL elsewhere. A kept row with no pattern hit scrubs to
-    itself, so only hit rows pay the substitution passes."""
+    ``kernels`` entry (field → (index into ``inputs``, kernel)), ANDed
+    with the boolean input ``scopes`` maps it to, and, when ``scrub``
+    indexes a text input, a ``scrubbed`` field — that text scrubbed
+    where neither ``drop`` nor a kernel named in ``drops`` fails, NULL
+    elsewhere. A kept row with no pattern hit scrubs to itself, so only
+    hit rows pay the substitution passes."""
     signals: list[tuple[int, Callable]] = []
 
     def slot(i: int, signal: Callable) -> int:
@@ -110,6 +116,9 @@ def kernel_udf(inputs: list[Column],
         sig = [signal(cols[i]) for i, signal in signals]
         out = {name: np.asarray(fail(sig[j]), dtype=bool)
                for name, j, fail in plan}
+        for name, i in (scopes or {}).items():
+            out[name] = out[name] & pc.fill_null(cols[i], False).to_numpy(
+                zero_copy_only=False)
         arrays = [pa.array(flags) for flags in out.values()]
         if scrub is not None:
             text = cols[scrub]
@@ -129,15 +138,25 @@ def kernel_udf(inputs: list[Column],
     return F.arrow_udf(rule_kernels, schema).asNondeterministic()(*args)
 
 
+def scope(rule: Rule) -> Optional[Column]:
+    """The rows ``rule`` judges: ``coalesce(filter_condition, false)``
+    (a row whose filter is NULL is out of scope), or None when the rule
+    has no filter and judges every row."""
+    if not rule.filter_condition:
+        return None
+    return F.coalesce(F.expr(rule.filter_condition), F.lit(False))
+
+
 def plan_rules(df: DataFrame, flags: dict[str, CompiledRule],
                scrub: Optional[str] = None,
                drop: Collection[str] = ()) -> DataFrame:
     """``df`` plus one boolean column per ``flags`` entry (column name →
-    row-level compiled rule), and with ``scrub`` naming a text
-    column, ``SCRUBBED``: that text scrubbed on the rows no rule named
-    in ``drop`` fails (a NULL native flag does not fail), NULL on the
-    others. A native flag keeps its predicate's NULLs; kernel flags are
-    never NULL."""
+    row-level compiled rule): the rule's verdict within its ``scope``,
+    false outside it. With ``scrub`` naming a text column, also
+    ``SCRUBBED``: that text scrubbed on the rows no rule named in
+    ``drop`` fails (a NULL native flag does not fail), NULL on the
+    others. A native flag keeps its predicate's NULLs in scope; kernel
+    flags are never NULL."""
     strings = {f.name for f in df.schema.fields
                if isinstance(f.dataType, T.StringType)}
     kernel_cols = {cr.rule.column for cr in flags.values()
@@ -145,12 +164,13 @@ def plan_rules(df: DataFrame, flags: dict[str, CompiledRule],
     native: dict[str, Column] = {}
     kernels: dict[str, CompiledRule] = {}
     for name, cr in flags.items():
-        if cr.kernel is None:
-            native[name] = cr.fail_predicate
-        elif cr.kernel.native is None or cr.rule.column in kernel_cols:
+        if cr.kernel is not None and (cr.kernel.native is None
+                                      or cr.rule.column in kernel_cols):
             kernels[name] = cr
-        else:
-            native[name] = cr.kernel.native()
+            continue
+        pred = cr.fail_predicate if cr.kernel is None else cr.kernel.native()
+        native[name] = (scope(cr.rule) & pred if cr.rule.filter_condition
+                        else pred)
     # a predicate reading ``tokens_of(c)`` names the hidden column
     texts = [str(pred) for pred in native.values()]
     split = [c for c in sorted(strings)
@@ -158,21 +178,25 @@ def plan_rules(df: DataFrame, flags: dict[str, CompiledRule],
     out = df.withColumns({_TOKENS + c: tokens(F.col(c)) for c in split})
     if not kernels and scrub is None:
         return out.withColumns(native).drop(*[_TOKENS + c for c in split])
-    inputs = sorted({cr.rule.column for cr in kernels.values()}
-                    | {scrub} - {None})
-    at = {c: i for i, c in enumerate(inputs)}
+    columns = sorted({cr.rule.column for cr in kernels.values()}
+                     | {scrub} - {None})
+    at = {c: i for i, c in enumerate(columns)}
     fx = {n: (at[cr.rule.column], cr.kernel) for n, cr in kernels.items()}
+    scoped = [n for n, cr in kernels.items() if cr.rule.filter_condition]
+    inputs = ([F.col(c) for c in columns]
+              + [scope(kernels[n].rule) for n in scoped])
+    scopes = {n: len(columns) + i for i, n in enumerate(scoped)}
     if scrub is None:
         out = out.withColumns(
-            {**native, _FX: kernel_udf([F.col(c) for c in inputs], fx)})
+            {**native, _FX: kernel_udf(inputs, fx, scopes=scopes)})
     else:
         native_drop = reduce(
             Column.__or__,
             [F.coalesce(F.col(n), F.lit(False)) for n in native if n in drop],
             F.lit(False))
         out = out.withColumns(native).withColumn(_FX, kernel_udf(
-            [F.col(c) for c in inputs], fx, scrub=at[scrub],
-            drop=native_drop, drops=drop))
+            inputs, fx, scrub=at[scrub], drop=native_drop, drops=drop,
+            scopes=scopes))
     fields = {n: F.col(_FX).getField(n) for n in kernels}
     if scrub is not None:
         fields[SCRUBBED] = F.col(_FX).getField("scrubbed")

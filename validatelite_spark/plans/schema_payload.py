@@ -141,7 +141,7 @@ def run_two_phase_with_plans(
                 rule_type="SCHEMA", status=ExecutionStatus.FAILED,
                 dataset_metrics=[DatasetMetrics(table, 0, 0)],
                 execution_message=f"table {table} does not exist"))
-            results.extend(_skipped(r, table, "table missing")
+            results.extend(RuleResult.skipped(r, table, "table missing")
                            for r in data_rules)
             out[table] = results
             continue
@@ -158,17 +158,10 @@ def run_two_phase_with_plans(
                    if plan.rule_columns[r.id] in missing]
         if runnable:
             results.extend(engine.execute(df, runnable, table_name=table))
-        results.extend(_skipped(r, table, "field missing") for r in skipped)
+        results.extend(RuleResult.skipped(r, table, "field missing")
+                       for r in skipped)
         out[table] = results
     return out, plans
-
-
-def _skipped(rule: Rule, table: str, why: str) -> RuleResult:
-    return RuleResult(
-        rule_id=rule.id, rule_name=rule.name, rule_type=rule.type.value,
-        status=ExecutionStatus.SKIPPED,
-        dataset_metrics=[DatasetMetrics(table, 0, 0)],
-        execution_message=f"skipped: {why}")
 
 
 # ---------------------------------------------------- JSON payload parity
