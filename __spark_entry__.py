@@ -276,14 +276,16 @@ def _q_unique_source(spark, sf_dir):
 
 
 def _q_date_format(spark, sf_dir):
-    from validatelite_spark.functions.udf_tier import date_format_fail
+    from validatelite_spark.core.rules import date_format
+    from validatelite_spark.plans.compiler import compile_rule
     _utc(spark)
     df = _read(spark, sf_dir, "orders").withColumn(
         "ds", F.date_format("o_orderdate", "yyyy-M-d"))
+    fail = compile_rule(date_format("ds", "YYYY-MM-DD"),
+                        df.schema).fail_predicate
     return df.agg(
         F.count(F.lit(1)).alias("total_records"),
-        F.sum(F.when(date_format_fail(F.col("ds"), "YYYY-MM-DD"), 1)
-              .otherwise(0)).alias("failed_records"))
+        F.sum(F.when(fail, 1).otherwise(0)).alias("failed_records"))
 
 
 # ----------------------------------------------- text-analysis queries

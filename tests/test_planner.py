@@ -49,8 +49,9 @@ def python_passes(df) -> list[int]:
 
 
 def extra_rules() -> list[Rule]:
-    """A Python-``re`` REGEX (``\\w`` keeps it off ``rlike``), a
-    DATE_FORMAT and a REPETITION rule: every UDF-tier kernel kind."""
+    """A Python-``re`` REGEX (``\\w`` keeps it off ``rlike``) and a
+    REPETITION rule, every UDF-tier kernel kind, beside a DATE_FORMAT
+    (a native Column)."""
     return [_rule(RuleType.REGEX, {"pattern": r"^\w+://\w+\."},
                   name="url_host", column="url", severity=LOW),
             _rule(RuleType.DATE_FORMAT, {"format": "YYYY-MM-DD"},

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from validatelite_spark.core.rules import regex
 from validatelite_spark.functions import udf_tier
+from validatelite_spark.operators.engine import RuleEngine
 from validatelite_spark.plans.compiler import compile_rule
 from validatelite_spark.plans.desired_type import _INT_REGEX
 from validatelite_spark.plans.planner import plan_rules
@@ -103,3 +104,14 @@ def test_non_string_columns_keep_the_udf(spark, column, pattern):
     cast = df.select(F.col(column).cast("string")).first()[0]
     cast_fails = re.search(pattern, cast) is None
     assert (cast_fails == bool(want)) == (pattern == WHOLE_SECOND)
+
+
+@pytest.mark.parametrize("partitions", [1, 2])
+def test_integer_batch_with_a_null_renders_integers(spark, partitions):
+    # pandas turns an int64 batch holding a NULL into float64: 20240105.0
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(20240105,), (None,)], partitions),
+        "n bigint")
+    [res] = RuleEngine(spark).execute(df, [regex("n", r"^\d+$")])
+    assert (res.status.value, res.total_records, res.failed_records) == (
+        "PASSED", 2, 0)

@@ -21,10 +21,9 @@ Design (see SURVEY.md for the full mapping to the reference):
   ``noop`` write, then samples only the rules that failed — the
   Spark-native analogue of the reference's fused ``COUNT(CASE WHEN
   ...)`` query (reference: core/engine/rule_merger.py:142-299).
-- Rules whose semantics need Python (``re`` regex parity, strptime
-  round-trip date checks, langid, perplexity) compile to *vectorized*
-  Arrow kernels — never per-row Python — that all run in the scan's
-  one Arrow UDF.
+- Rules whose semantics need Python (``re`` regex parity, langid,
+  perplexity) compile to *vectorized* Arrow kernels — never per-row
+  Python — that all run in the scan's one Arrow UDF.
 - UNIQUE runs one ``GROUP BY`` query that observes its counts above
   the shuffle and takes its duplicate samples (reference:
   core/executors/uniqueness_executor.py:95-200); SCHEMA is a

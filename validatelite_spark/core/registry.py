@@ -55,9 +55,6 @@ class BatchKernel:
     fail: Callable[[Any], Any]
     native: Optional[Callable[[], Any]] = None
 
-    def verdict(self, values: Any) -> Any:
-        return self.fail(self.signal(values))
-
 
 @dataclass(frozen=True)
 class RuleTypeSpec:

@@ -17,7 +17,8 @@ LENGTH         len<min OR len>max OR col IS NULL (NULL fails)
 RANGE          col IS NULL OR col<min OR col>max (NULL fails)
 ENUM           col NOT IN (...)                  (NULL does NOT fail)
 REGEX          NOT re.match                      (NULL does NOT fail)
-DATE_FORMAT    strptime round-trip fails         (NULL/empty does NOT fail)
+DATE_FORMAT    strptime round-trip fails         (NULL/blank does NOT fail;
+                                                  blank = str.isspace only)
 UNIQUE         extra rows in duplicate groups    (NULLs excluded entirely)
 SCHEMA         metadata mismatch                 (no data rows scanned)
 =============  =============================================================

@@ -6,10 +6,11 @@ dialect SQL strings, each rule compiles to one of two forms, both turned
 into a per-row flag by ``plans/planner.plan_rules`` and counted by the
 engine's one counting pass (plans/merger.py):
 
-- ``fail_predicate`` — a per-row failure ``Column`` (whole-stage codegen);
+- ``fail_predicate`` — a per-row failure ``Column`` (whole-stage codegen;
+  DATE_FORMAT's strptime round trip too, ``_date_fail``);
 - ``kernel`` — a ``BatchKernel`` (core/registry.py) for Python-exact
-  semantics: ``re`` regex parity, strptime round-trip, perplexity — all
-  of a scan's kernels share one Arrow UDF.
+  semantics: ``re`` regex parity, perplexity — all of a scan's kernels
+  share one Arrow UDF.
 
 UNIQUE and SCHEMA have no row-level form, and the engine runs them by
 their rule type without compiling them: UNIQUE as one grouped query
@@ -22,6 +23,8 @@ string and ``java_regex`` can rebuild its pattern with the same meaning.
 
 from __future__ import annotations
 
+import functools
+import re
 import re._constants as sre
 import re._parser as sre_parse
 from dataclasses import dataclass
@@ -35,6 +38,7 @@ from validatelite_spark.core import builtin_rule_types  # noqa: F401 (registers)
 from validatelite_spark.core.registry import BatchKernel, get_rule_type
 from validatelite_spark.core.results import RuleExecutionError
 from validatelite_spark.core.rules import Rule, RuleType
+from validatelite_spark.core.types import format_to_strptime
 from validatelite_spark.functions import udf_tier
 
 
@@ -107,6 +111,38 @@ def java_regex(pattern: str) -> Optional[str]:
         return "(?d)" + _java(parsed)
     except ValueError:
         return None
+
+
+#: strptime directive → (``strftime``'s rendering as ``rlike``, Java letters)
+_DIRECTIVES = {"%Y": ("[1-9][0-9]{3}", "yyyy"), "%m": ("[0-9]{2}", "MM"),
+               "%d": ("[0-9]{2}", "dd"), "%H": ("[0-9]{2}", "HH"),
+               "%M": ("[0-9]{2}", "mm"), "%S": ("[0-9]{2}", "ss")}
+
+
+@functools.cache
+def _blank() -> str:  # ``rlike``: a value ``str.strip`` empties
+    return r"\A[%s]*\z" % "".join(
+        _cp(c) for c in range(0x110000) if chr(c).isspace())
+
+
+def _date_fail(r: Column, fmt: str) -> Column:
+    """The reference's ``IS_VALID_DATE`` fails on a string ``r``: it is
+    not NULL or blank, nor ``strftime``'s layout (a year below 1000
+    renders unpadded) with fields ``try_to_timestamp`` accepts (no
+    re-render: a wall time in a DST gap keeps its verdict).
+    RuleExecutionError for a repeated directive or another ``%``."""
+    pieces = re.split("(%.?)", format_to_strptime(fmt), flags=re.S)
+    ds = pieces[1::2]
+    if set(ds) - _DIRECTIVES.keys() or len(set(ds)) < len(ds):
+        raise RuleExecutionError(f"DATE_FORMAT {fmt!r}: a directive twice, "
+                                 f"or a % outside YYYY MM DD HH MI SS")
+    shape = "".join(_DIRECTIVES[p][0] if p in _DIRECTIVES
+                    else "".join(_cp(ord(c)) for c in p) for p in pieces)
+    java = "".join(_DIRECTIVES[p][1] if p in _DIRECTIVES
+                   else "'" + p.replace("'", "''") + "'" for p in pieces if p)
+    valid = (r.rlike(rf"\A{shape}\z")
+             & F.try_to_timestamp(r, F.lit(java)).isNotNull())
+    return r.isNotNull() & ~valid & ~r.rlike(_blank())
 
 
 def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
@@ -186,7 +222,7 @@ def compile_rule(rule: Rule, schema: T.StructType) -> CompiledRule:
         return CompiledRule(rule, col.isNotNull() & ~col.rlike(java))
 
     if t == RuleType.DATE_FORMAT:
-        return CompiledRule(rule, kernel=udf_tier.date_kernel(p["format"]))
+        return CompiledRule(rule, _date_fail(col.cast("string"), p["format"]))
 
     # LANG_ID / GOPHER / PERPLEXITY / PII_SCRUB compile via the registry
     # dispatch above (core/builtin_rule_types.py) — no branches here.
